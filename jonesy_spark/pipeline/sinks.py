@@ -68,7 +68,8 @@ def serialize_for_csv(df: DataFrame) -> DataFrame:
     """Apply the CSV contract (``jonesy/jobs.py:164-173``): lowercase
     column names; the Pacific wall-time rendering (F19) applies ONLY to
     the column named ``last_updated`` — every other datetime value is
-    rendered ``%Y-%m-%d %H:%M:%S UTC`` (F18). DateType columns render
+    rendered ``%Y-%m-%d %H:%M:%S UTC`` (F18), TIMESTAMP_NTZ columns
+    included (read as UTC wall time). DateType columns render
     as midnight UTC datetimes because Oracle has no DATE-without-time:
     oracledb returns every DATE as a Python datetime, which the
     reference's _coerce then labels UTC.
@@ -80,11 +81,14 @@ def serialize_for_csv(df: DataFrame) -> DataFrame:
     )
     out = df.toDF(*[c.lower() for c in df.columns])
     for f_ in out.schema.fields:
-        if isinstance(f_.dataType, T.TimestampType):
+        if isinstance(f_.dataType, (T.TimestampType, T.TimestampNTZType)):
+            # NTZ wall time casts exactly to TIMESTAMP under the UTC
+            # session asserted above (a no-op cast for TimestampType)
+            ts = F.col(f_.name).cast("timestamp")
             render = (
-                coerce_timestamp_pacific(F.col(f_.name))
+                coerce_timestamp_pacific(ts)
                 if f_.name == "last_updated"
-                else SC.utc_label(F.col(f_.name))
+                else SC.utc_label(ts)
             )
             out = out.withColumn(f_.name, render)
         elif isinstance(f_.dataType, T.DateType):

@@ -34,268 +34,77 @@ def all_oracle_sql() -> dict[str, str]:
 
 # The driver checks at most 50 queries() entries (round 1 checked exactly
 # the first 50 of 52, silently dropping the tail), so the driver-facing
-# dict is a curated subset of the full registry. Excluded names stay in
-# all_queries() for bench/tests; each exclusion is a strict semantic
-# subset of a retained row (documented in PARITY.md).
+# dict is a fixed subset of the full registry. The roster is plain data
+# and does not rotate: tests/test_queries.py checks EVERY registry row
+# that has an oracle against DuckDB on each run, so which 50 rows the
+# driver also sees adds no correctness coverage.
 DRIVER_QUERY_CAP = 50
-DRIVER_EXCLUDED = {
-    # ---- REGISTRY-ONLY by design (pytest pins more than a driver
-    # slot could; see PYTEST_ONLY_BY_DESIGN) ---------------------------
-    # iterative BPE merge induction is not SQL-expressible; pytest
-    # pins naive-reference equality, trainer equivalence, replay
-    # encode, concat round-trip.
-    "bpe_token_stats",
-    # unigram-LM twin (Kudo 2018): EM over the segmentation lattice;
-    # pytest pins Viterbi == exhaustive argmax, EM monotonicity,
-    # singles retention, exact concat round-trip.
-    "unigram_token_stats",
-    # rows-only training row whose FOLD is oracle-checked as
-    # tokenizer_family_fold (kept on the r14 roster); training keeps
-    # its pytest differentials (merge replay, Viterbi == exhaustive,
-    # concat round-trips).
-    "tokenizer_family_compare",
-    # ---- r14: LIVE ANN tiers whose deterministic scan+rerank halves
-    # are now oracle-checked as ann_int8_rerank / ann_pq_rerank over
-    # the frozen ANN fixture (VERDICT r13 #6 — the
-    # tokenizer_family_fold split). The live rows keep the bench
-    # scan-compression story at sf0.1 and their pytest equalities
-    # (rerank == float scores; recall >= 0.9; code determinism);
-    # their one non-frozen step each (round(x/scale) boundary,
-    # k-means training) is exactly what the split removed from the
-    # cross-engine surface. ------------------------------------------
-    "ann_quantized_topk",
-    "ann_pq_topk",
-    # ---- r14 rotations out (every row below is r13-green; seats went
-    # to the 19-row r10 REVIEW cohort — drained to zero — plus the
-    # three first-witness rows ann_int8_rerank / ann_pq_rerank /
-    # kll_quantiles. Keepers are the family-cover hubs each cover
-    # entry names. Every row keeps its full pytest DuckDB differential
-    # and is due back by r16 per the cadence. -------------------------
-    "bigram_logprob",
-    "bitext_mining_margin",
-    "bloom_membership",
-    "classifier_eval",
-    "cms_frequencies",
-    "current_terms_topk",
-    "event_transitions",
-    "excess_loss_select",
-    "json_props_extract",
-    "kmv_overlap_users",
-    "lsh_recall",
-    "mg_heavy_hitters",
-    "multimodal_audio_codec",
-    "multimodal_features",
-    "multimodal_real_codec",
-    "multimodal_video_codec",
-    "ngram_novelty",
-    "profile_table",
-    "resample_interpolate",
-    "sampled_quantiles",
-    "variant_props_extract",
-    "warc_ingest_roundtrip",
-    # ---- r14 (late): seat swap for the NEW scd2_history row (the
-    # rotation floor gives never-witnessed oracle-ready rows a
-    # first-witness slot immediately, and the roster was at the
-    # 50-row cap). topk_per_group_price is r13-green and its window
-    # family keeps TWO on-roster witnesses. ---------------------------
-    "topk_per_group_price",
-    # ---- r13 rotations (r12-green; within their cover cadence) -----
-    "pivot_event_counts",
-    "quantile_stats",
-    "text_quality_score",
-    "top_tokens_per_lang",
-    "ann_bucketed_topk",
-    "asof_join_last_click",
-    "assemble_sequences",
-    "cdc_upsert",
-    "cube_agg",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_logprob",
-    "funnel_steps",
-    "lang_id_heuristic",
-    "leakage_safe_split",
-    "line_dedup",
-    "local_supplier_volume",
-    "near_dup_contamination",
-    "ngram_containment",
-    "pricing_summary_agg",
-    "repeated_span_removal",
-    "repetition_stats",
-    "resample_gapfill",
-    "snapshot_cdc",
-    "tfidf_top_terms",
-    "train_order",
-    "url_dedup",
-    "dedup_survivors_quality",
-    "mixture_upsample",
-    # ---- r12 rotations (r11-green; within their cover cadence) -----
-    "ann_cosine_topk",
-    "basic_attributes",
-    "c4_line_filter",
-    "corpus_split",
-    "dedup_clusters",
-    "distinct_counts",
-    "diversity_sample",
-    "doc_chunking",
-    "doc_fingerprints",
-    "dsir_select",
-    "embedding_near_dup",
-    "events_session_native",
-    "events_tumbling_window",
-    "gopher_quality_gate",
-    "hash_embeddings",
-    "html_extract",
-    "incremental_classifier",
-    "link_authority",
-    "mixture_sample",
-    "omit_drops_withdrawals",
-    "perplexity_buckets",
-    "phrase_search",
-    "prefix_jaccard_join",
-    "quota_sample",
-    "rollup_agg",
-    "semantic_dedup",
-    "semi_anti_joins",
-    "skew_salted_join",
-    "term_enrollments",
-    "token_budget_prune",
-    "token_counts",
-    "unpivot_event_counts",
-}
-
-#: Excluded rows whose correctness is pinned by pytest ALONE, by
-#: design (iterative training / engine-ulp boundaries — documented on
-#: each row above); the staleness rule's cover check does not apply.
-PYTEST_ONLY_BY_DESIGN = {
-    "bpe_token_stats",
-    "unigram_token_stats",
-}
-
-#: The machine-readable half of each DRIVER_EXCLUDED justification
-#: (r9 verdict #8): for every excluded row, the retained rows whose
-#: driver greens keep its plan family witnessed. The staleness test
-#: (tests/test_rotation.py) asserts each excluded row has at least one
-#: cover that is on the CURRENT roster or driver-green within the
-#: two-round cadence — so a justification silently invalidated by a
-#: later rotation fails a test instead of aging into prose.
-EXCLUSION_COVERS: dict[str, tuple[str, ...]] = {
-    # r14: the live ANN tiers' deterministic halves are driver-checked
-    # as the fixture rows (VERDICT r13 #6); the live rows keep their
-    # pytest equalities + bench witnesses
-    "ann_quantized_topk": ("ann_int8_rerank",),
-    "ann_pq_topk": ("ann_pq_rerank",),
-    # r14 rotations out (every row r13-green; covers name kept hubs /
-    # re-admitted r10-cohort rows back on the roster)
-    "bigram_logprob": ("quality_classifier", "quality_filter"),
-    "bitext_mining_margin": ("hybrid_search", "incremental_near_dup"),
-    "bloom_membership": ("sketch_dashboard", "contamination"),
-    "classifier_eval": ("quality_classifier",),
-    "cms_frequencies": ("sketch_dashboard", "mg_heavy_hitters"),
-    "current_terms_topk": ("topk_per_group_price", "pagination_window"),
-    "event_transitions": ("events_sessionization", "events_rollup"),
-    "excess_loss_select": ("quality_classifier", "temperature_mixture"),
-    "json_props_extract": ("scalar_functions_suite", "pii_stats"),
-    "kmv_overlap_users": ("kmv_distinct_users", "sketch_dashboard"),
-    "lsh_recall": ("dedup_minhash_lsh", "incremental_near_dup"),
-    "mg_heavy_hitters": ("sketch_dashboard", "events_key_skew"),
-    "multimodal_audio_codec": ("audio_near_dup", "media_index_probe"),
-    "multimodal_features": ("image_near_dup", "media_index_probe"),
-    "multimodal_real_codec": ("image_near_dup", "media_index_probe"),
-    "multimodal_video_codec": ("video_near_dup", "media_index_probe"),
-    "ngram_novelty": ("contamination", "dedup_exact"),
-    "profile_table": ("sketch_dashboard", "trailing_range_stats"),
-    "resample_interpolate": ("trailing_range_stats", "resample_gapfill"),
-    "sampled_quantiles": ("kll_quantiles", "sketch_dashboard"),
-    "variant_props_extract": ("scalar_functions_suite", "term_courses"),
-    "warc_ingest_roundtrip": ("crawl_gate_composed",),
-    # r14 (late): rotated out to seat the new scd2_history row —
-    # greatest-n/window ranking stays witnessed by two on-roster rows
-    "topk_per_group_price": ("trailing_range_stats", "running_total"),
-    # r13 rotations out (kept from r13; the mixture family's witness
-    # is the still-on-roster temperature_mixture)
-    "mixture_upsample": ("temperature_mixture", "pack_sequences"),
-    "dedup_survivors_quality": ("dedup_minhash_lsh", "quality_filter"),
-    # r13 rotations out (every row here is r12-green; covers name the
-    # kept hubs / re-admitted rows now back on the roster)
-    "pivot_event_counts": ("events_rollup", "cube_agg"),
-    "quantile_stats": ("sketch_dashboard", "trailing_range_stats"),
-    "text_quality_score": ("quality_filter", "quality_classifier"),
-    "top_tokens_per_lang": ("tfidf_top_terms", "bm25_search"),
-    "ann_bucketed_topk": ("incremental_near_dup", "media_index_probe"),
-    "asof_join_last_click": ("range_join_calendar", "events_sessionization"),
-    "assemble_sequences": ("pack_sequences", "bm25_search"),
-    "cdc_upsert": ("snapshot_cdc", "latest_order_per_customer"),
-    "cube_agg": ("rollup_agg", "pivot_event_counts"),
-    "dedup_ngram_jaccard": ("dedup_minhash_lsh", "ngram_containment"),
-    "dedup_simhash": ("dedup_exact", "dedup_minhash_lsh"),
-    "doc_logprob": ("quality_classifier", "bigram_logprob"),
-    "funnel_steps": ("events_sessionization", "event_transitions"),
-    "lang_id_heuristic": ("text_quality_score", "quality_filter"),
-    "leakage_safe_split": ("mixture_upsample", "train_order"),
-    "line_dedup": ("repeated_span_removal", "dedup_exact"),
-    "local_supplier_volume": ("pricing_summary_agg", "term_courses"),
-    "near_dup_contamination": ("contamination", "incremental_near_dup"),
-    "ngram_containment": ("dedup_ngram_jaccard", "dedup_minhash_lsh"),
-    "pricing_summary_agg": ("local_supplier_volume", "cube_agg"),
-    "repeated_span_removal": ("line_dedup", "dedup_exact"),
-    "repetition_stats": ("text_quality_score", "quality_filter"),
-    "resample_gapfill": ("trailing_range_stats", "resample_interpolate"),
-    "snapshot_cdc": ("cdc_upsert", "sketch_dashboard"),
-    "tfidf_top_terms": ("bm25_search", "top_tokens_per_lang"),
-    "train_order": ("mixture_upsample", "pack_sequences"),
-    "url_dedup": ("dedup_exact", "scalar_functions_suite"),
-    # r12 rotations out (every row here is r11-green; covers name the
-    # kept hubs / re-admitted supersets)
-    "ann_cosine_topk": ("ann_bucketed_topk", "embedding_near_dup"),
-    "basic_attributes": ("recent_instructor_updates", "term_courses"),
-    "c4_line_filter": ("crawl_gate_composed",),
-    "corpus_split": ("leakage_safe_split", "quota_sample"),
-    "dedup_clusters": ("dedup_survivors_quality", "dedup_minhash_lsh"),
-    "distinct_counts": ("cube_agg", "term_enrollments"),
-    "diversity_sample": ("mixture_upsample", "train_order"),
-    "doc_chunking": ("assemble_sequences", "pack_sequences"),
-    "doc_fingerprints": ("dedup_exact", "dedup_simhash"),
-    "dsir_select": ("train_order", "mixture_upsample"),
-    "embedding_near_dup": ("ann_bucketed_topk", "incremental_near_dup"),
-    "events_session_native": ("events_sessionization",),
-    "events_tumbling_window": ("events_sessionization", "trailing_range_stats"),
-    "gopher_quality_gate": ("crawl_gate_composed",),
-    "hash_embeddings": ("bm25_search", "ann_bucketed_topk"),
-    "html_extract": ("crawl_gate_composed",),
-    "incremental_classifier": ("quality_classifier",),
-    "link_authority": ("link_authority_converged",),
-    "mixture_sample": ("mixture_upsample", "quota_sample"),
-    "omit_drops_withdrawals": ("term_courses", "recent_instructor_updates"),
-    "perplexity_buckets": ("doc_logprob", "quality_classifier"),
-    "phrase_search": ("assemble_sequences", "bm25_search"),
-    "prefix_jaccard_join": ("dedup_ngram_jaccard", "dedup_minhash_lsh"),
-    "quota_sample": ("mixture_upsample", "leakage_safe_split"),
-    "rollup_agg": ("cube_agg",),
-    "semantic_dedup": ("ann_bucketed_topk", "dedup_survivors_quality"),
-    "semi_anti_joins": ("contamination", "funnel_steps"),
-    "skew_salted_join": ("local_supplier_volume", "mg_heavy_hitters"),
-    "term_enrollments": ("term_courses",),
-    "token_budget_prune": ("pack_sequences", "token_counts"),
-    "token_counts": ("bm25_search", "tfidf_top_terms"),
-    "unpivot_event_counts": ("pivot_event_counts",),
-    # registry-only / superseded rows
-    "tokenizer_family_compare": ("tokenizer_family_fold",),
-}
+DRIVER_ROSTER: tuple[str, ...] = (
+    "latest_order_per_customer",
+    "term_courses",
+    "recent_instructor_updates",
+    "composite_key_join",
+    "latest_event_version",
+    "scalar_functions_suite",
+    "timestamp_formats",
+    "priority_ordered_extract",
+    "scalar_subquery_filter",
+    "range_join_calendar",
+    "watermark_incremental",
+    "catalog_number_parsing",
+    "active_day_codes",
+    "pagination_window",
+    "set_operations",
+    "running_total",
+    "events_sessionization",
+    "scd2_history",
+    "retention_cohorts",
+    "trailing_range_stats",
+    "quality_psi",
+    "events_key_skew",
+    "anomaly_flags",
+    "events_rollup",
+    "kmv_distinct_users",
+    "sketch_dashboard",
+    "events_sliding_window",
+    "kll_quantiles",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "tokenizer_family_fold",
+    "image_near_dup",
+    "audio_near_dup",
+    "video_near_dup",
+    "pack_sequences",
+    "contamination",
+    "quality_filter",
+    "corpus_card",
+    "pii_stats",
+    "quality_classifier",
+    "incremental_near_dup",
+    "bm25_search",
+    "hybrid_search",
+    "bm25_index_probe",
+    "media_index_probe",
+    "link_authority_converged",
+    "crawl_gate_composed",
+    "temperature_mixture",
+    "ann_int8_rerank",
+    "ann_pq_rerank",
+)
 
 
 def driver_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out = {k: v for k, v in all_queries().items() if k not in DRIVER_EXCLUDED}
+    registry = all_queries()
+    out = {n: registry[n] for n in DRIVER_ROSTER}
     assert len(out) <= DRIVER_QUERY_CAP, (
         f"{len(out)} driver-facing queries exceed the driver's "
-        f"{DRIVER_QUERY_CAP}-query cap; merge or exclude before adding more"
+        f"{DRIVER_QUERY_CAP}-query cap; drop a row before adding more"
     )
     return out
 
 
 def driver_oracle_sql() -> dict[str, str]:
-    names = driver_queries()
-    return {k: v for k, v in all_oracle_sql().items() if k in names}
+    return {k: v for k, v in all_oracle_sql().items() if k in DRIVER_ROSTER}
 
 
 def _modules():

@@ -1,16 +1,23 @@
 """The SURVEY.md §2 / LLM-capability inventory as DATA (VERDICT r12
-#8): PARITY.md's component tables are rendered from this module by
-``scripts/coverage_ledger.py --survey`` and drift-tested line-for-line,
-and every backticked registry-row name cited in them is validated
-against the live registry (``REGISTRY_REFS`` below) — a query rename
-or removal fails the suite instead of stranding the inventory's
-witness claims. Hand-edit the TABLES text here (it is content, not
-derivation — mapping survey ids to implementations is judgment), then
-regenerate both: the doc with ``--survey --write`` and REGISTRY_REFS
-with ``--survey --refs``.
+#8): PARITY.md's component tables are rendered from this module and
+drift-tested line-for-line, and every backticked registry-row name
+cited in them is validated against the live registry
+(``REGISTRY_REFS`` below) — a query rename or removal fails the suite
+instead of stranding the inventory's witness claims. Hand-edit the
+TABLES text here (it is content, not derivation — mapping survey ids
+to implementations is judgment), update REGISTRY_REFS to match, then
+rewrite the committed block with
+``python -m jonesy_spark.plans.survey_map``.
 """
 
 from __future__ import annotations
+
+import pathlib
+import re
+
+PARITY_MD = pathlib.Path(__file__).resolve().parents[2] / "PARITY.md"
+SURVEY_BEGIN = "<!-- SURVEY-MAP-BEGIN (generated) -->"
+SURVEY_END = "<!-- SURVEY-MAP-END -->"
 
 #: The component tables, verbatim markdown lines. Rendered between
 #: PARITY.md's SURVEY-MAP markers; the drift test compares exactly.
@@ -290,3 +297,55 @@ REGISTRY_REFS: frozenset[str] = frozenset({
     "url_dedup",
     "watermark_incremental",
 })
+
+
+def survey_table() -> str:
+    """The exact text committed to PARITY.md between the SURVEY-MAP
+    markers; raises if TABLES cites a row missing from the registry."""
+    from . import all_queries
+
+    missing = sorted(REGISTRY_REFS - set(all_queries()))
+    if missing:
+        raise ValueError(
+            f"survey map cites registry rows that no longer exist: {missing}"
+        )
+    return "\n".join([
+        SURVEY_BEGIN,
+        *TABLES,
+        "",
+        f"{len(REGISTRY_REFS)} registry rows cited across these tables, all "
+        "validated against the live registry at render time "
+        "(jonesy_spark/plans/survey_map.py; drift-tested by "
+        "tests/test_queries.py).",
+        SURVEY_END,
+    ])
+
+
+def survey_refs_from_tables() -> frozenset[str]:
+    """REGISTRY_REFS recomputed from the TABLES text."""
+    from . import all_queries
+
+    registry = set(all_queries())
+    return frozenset(
+        tok
+        for line in TABLES
+        for tok in re.findall(r"`([a-z0-9_]+)`", line)
+        if tok in registry
+    )
+
+
+def committed_survey_table() -> str | None:
+    """PARITY.md's marker-delimited survey block, or None if absent."""
+    text = PARITY_MD.read_text()
+    b, e = text.find(SURVEY_BEGIN), text.find(SURVEY_END)
+    if b < 0 or e < 0:
+        return None
+    return text[b : e + len(SURVEY_END)]
+
+
+if __name__ == "__main__":
+    committed = committed_survey_table()
+    if committed is None:
+        raise SystemExit("PARITY.md lacks the SURVEY-MAP markers")
+    PARITY_MD.write_text(PARITY_MD.read_text().replace(committed, survey_table()))
+    print("PARITY.md survey map rewritten")

@@ -11,7 +11,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jonesy_spark.plans import (  # noqa: E402
-    DRIVER_EXCLUDED,
+    DRIVER_ROSTER,
     all_oracle_sql,
     all_queries,
 )
@@ -35,7 +35,7 @@ def main() -> None:
         "Generated by `scripts/gen_query_catalog.py`; do not edit by hand.",
         "",
         f"{len(queries)} queries; {len(oracles)} with DuckDB oracles; "
-        f"{len(queries) - len(DRIVER_EXCLUDED & set(queries))} on the "
+        f"{len(DRIVER_ROSTER)} on the "
         "driver surface (50-slot cap). Registry-only rows keep full "
         "pytest differentials and were hash-verified at sf0.01 via "
         "driver_sim (PARITY.md).",
@@ -44,7 +44,7 @@ def main() -> None:
         "|---|---|---|---|",
     ]
     for name in sorted(queries):
-        tier = "registry" if name in DRIVER_EXCLUDED else "driver"
+        tier = "driver" if name in DRIVER_ROSTER else "registry"
         orc = "DuckDB" if name in oracles else "pytest-pinned"
         lines.append(
             f"| `{name}` | {tier} | {orc} | "

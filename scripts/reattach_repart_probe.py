@@ -10,7 +10,9 @@ sort-merge re-attach on doc_a; "none" keeps the dedup's own
 
 Times ONLY dedup-output -> repartition -> re-attach -> verify with the
 upstream (candidates, token sets) persisted, arms interleaved in one
-session (ab_test.py methodology).
+session. Interleaving in one JVM shares JIT and cache state between the
+arms, which biases the comparison; confirm a decision with
+``scripts/cold_ab.py`` (one fresh JVM per arm).
 
 Usage: python scripts/reattach_repart_probe.py [-n ROUNDS]
 """

@@ -2,7 +2,9 @@
 """Interleaved same-session A/B of the verify-stage single-evaluation
 guard (``operators.dedup.VERIFY_ONCE`` / ``_eval_once``): times each
 pair-verify bench row alternating guard ON vs OFF in ONE Spark session
-so machine-window drift cancels (the ab_test.py methodology).
+so machine-window drift cancels. The shared JVM biases the comparison
+(JIT and cache state carry over between arms); confirm a decision with
+``scripts/cold_ab.py`` (one fresh JVM per arm).
 
 Usage: python scripts/verify_once_probe.py [-n ROUNDS] [name ...]
 """

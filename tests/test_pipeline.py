@@ -78,6 +78,21 @@ def test_serialize_lowercases_and_formats(spark):
     assert row["start_dt"] == "2024-03-09 00:00:00 UTC"
 
 
+def test_serialize_renders_timestamp_ntz_by_contract(spark):
+    """TIMESTAMP_NTZ columns (what a parquet writer without a zone
+    produces) follow the same contract as TIMESTAMP: Pacific rendering
+    for last_updated, the UTC label everywhere else — never Spark's
+    ISO default text."""
+    df = spark.createDataFrame([(1,)], ["id"]).select(
+        "id",
+        F.lit("2024-01-05 13:14:15").cast("timestamp_ntz").alias("last_updated"),
+        F.lit("1998-12-25 00:00:00").cast("timestamp_ntz").alias("effective_date"),
+    )
+    row = serialize_for_csv(df).first()
+    assert row["last_updated"] == "2024-01-05 05:14:15 -0800"
+    assert row["effective_date"] == "1998-12-25 00:00:00 UTC"
+
+
 def test_write_gzip_csv_headerless_ordered(spark, tmp_path):
     df = Catalog(spark, SF_DIR).customer.select(
         F.col("c_custkey").alias("CUSTKEY"), F.col("c_name").alias("NAME")

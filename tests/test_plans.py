@@ -8,6 +8,7 @@ import contextlib
 import io
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -492,7 +493,69 @@ def test_spread_probes_file_metadata_not_rdd(spark, tmp_path):
     spark.range(0, 10_000).repartition(target).write.parquet(many_path)
     many = spark.read.parquet(many_path)
     assert len(many.inputFiles()) >= target
-    assert spread(many) is many  # no-op before any file is stat'ed
+    assert spread(many) is many  # already planned at >= target partitions
+
+
+def test_spread_packs_small_files_like_spark(spark, tmp_path):
+    """Spark bin-packs small files into shared partitions, so a scan of
+    fewer small files than cores plans fewer partitions than files
+    times splits: spread() must count the packed partitions (the count
+    Spark reports) and add the parallelism floor."""
+    from jonesy_spark.catalog import spread
+
+    target = spark.sparkContext.defaultParallelism
+    if target < 2:
+        pytest.skip("needs >= 2 cores to have fewer files than cores")
+    path = str(tmp_path / "few")
+    spark.range(0, 1_000).repartition(target - 1).write.parquet(path)
+    few = spark.read.parquet(path)
+    assert len(few.inputFiles()) == target - 1
+    assert few.rdd.getNumPartitions() < target
+    # two-letter size suffixes, as a user would write them, must parse
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "128mb")
+    spark.conf.set("spark.sql.files.openCostInBytes", "4mb")
+    try:
+        spread_few = spread(few)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert spread_few is not few
+    assert "RoundRobinPartitioning" in plan_of(spread_few)
+
+
+def test_planned_file_partitions_matches_spark_packing():
+    """FilePartition arithmetic on known layouts (4 cores, default
+    128 MB max partition, 4 MB open cost): small files share
+    partitions, a large file splits."""
+    from jonesy_spark.catalog import planned_file_partitions
+
+    mb = 1024**2
+    # 3 x 1 MB: each file is its own partition, not 2 splits each
+    assert planned_file_partitions([mb] * 3, 4, 128 * mb, 4 * mb) == 3
+    # 6 tiny files pack two to a partition: fewer partitions than cores
+    assert planned_file_partitions([1000] * 6, 4, 128 * mb, 4 * mb) == 3
+    # one 12 MB file splits into max_split = 4 MB chunks
+    assert planned_file_partitions([12 * mb], 4, 128 * mb, 4 * mb) == 3
+    assert planned_file_partitions([], 4, 128 * mb, 4 * mb) == 0
+    assert planned_file_partitions([0], 4, 128 * mb, 0) == 0
+
+
+def test_conf_bytes_parses_spark_size_suffixes():
+    """Spark accepts one- and two-letter binary suffixes on byte-size
+    confs; '128mb' used to match the 'b' suffix first and crash."""
+    from jonesy_spark.catalog import _conf_bytes
+
+    assert _conf_bytes("128mb") == 128 * 1024**2
+    assert _conf_bytes("128m") == 128 * 1024**2
+    assert _conf_bytes("64kb") == 64 * 1024
+    assert _conf_bytes("1GB") == 1024**3
+    assert _conf_bytes("134217728b") == 134217728
+    assert _conf_bytes(" 4194304 ") == 4194304
+    with pytest.raises(ValueError):
+        _conf_bytes("1.5g")
+
+
+def test_verify_guard_keeps_expensive_expr_out_of_join_conditions(spark):
     """r14 verify-stage single-evaluation guard (dedup._eval_once):
     each pair operator's threshold filter used to be pushed into the
     candidate/re-attach join as a residual condition, DUPLICATING the

@@ -38,8 +38,8 @@ def test_every_query_has_oracle_or_is_flagged():
         # independently aggregating the two pinned per-family stats
         # frames (test_tokenize) AND oracle-checked on the roster as
         # tokenizer_family_fold over the pinned stats fixture (r10
-        # verdict #6) — since r11 the roster carries zero rows-only
-        # rows (test_rotation pins that list empty)
+        # verdict #6) — the driver roster carries zero rows-only
+        # rows (test_roster_is_exactly_at_cap_with_oracles below)
         "tokenizer_family_compare",
     }
     assert missing <= allowed_missing, f"queries without oracle: {missing}"
@@ -61,3 +61,35 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert len(df.schema) > 0
+
+
+def test_roster_is_exactly_at_cap_with_oracles():
+    """The fixed driver roster fills the driver's cap with distinct
+    registry rows, every one of them oracle-checked (no rows-only
+    driver rows)."""
+    from jonesy_spark.plans import DRIVER_QUERY_CAP, DRIVER_ROSTER, driver_queries
+
+    assert len(set(DRIVER_ROSTER)) == len(DRIVER_ROSTER) == DRIVER_QUERY_CAP
+    assert list(driver_queries()) == list(DRIVER_ROSTER)
+    rows_only = sorted(set(DRIVER_ROSTER) - set(ORACLE))
+    assert rows_only == [], rows_only
+
+
+def test_survey_map_is_generated_and_cites_live_registry_rows():
+    """PARITY.md's committed survey-map block equals the render of
+    plans/survey_map.py, the frozen REGISTRY_REFS set equals the set
+    recomputed from the tables' text, and every cited row exists in the
+    live registry (a rename fails here, not in stranded prose)."""
+    from jonesy_spark.plans import survey_map
+
+    stranded = sorted(survey_map.REGISTRY_REFS - set(QUERIES))
+    assert not stranded, f"survey map cites rows not in the registry: {stranded}"
+    assert survey_map.survey_refs_from_tables() == survey_map.REGISTRY_REFS, (
+        "REGISTRY_REFS drifted from the TABLES text"
+    )
+    committed = survey_map.committed_survey_table()
+    assert committed is not None, "PARITY.md lacks SURVEY-MAP markers"
+    assert committed == survey_map.survey_table(), (
+        "PARITY.md survey map drifted; regenerate with: "
+        "python -m jonesy_spark.plans.survey_map"
+    )
