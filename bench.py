@@ -276,10 +276,9 @@ def spiky_stretches(
 
 
 def main() -> None:
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.plans import all_queries
     from jonesy_spark.session import get_spark
-
-    from jonesy_spark.operators.dedup import release_caches
 
     spark = get_spark(app_name="jonesy_bench")
     queries = all_queries()
@@ -356,15 +355,15 @@ def main() -> None:
         is pure plan construction (ms), but iterative operators
         (dedup_clusters' connected-components rounds) run real jobs at
         build time and must not escape the measurement. Operators
-        persist() multi-consumer subtrees and hand back release
-        handles; drop them so the next run (and later queries) start
+        persist() multi-consumer subtrees into the run's cache scope,
+        which releases them so the next run (and later queries) start
         from a cache-empty session."""
         spark.catalog.clearCache()
-        t0 = time.time()
-        df = queries[name](spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
-        release_caches(df)
+        with cache_scope():
+            t0 = time.time()
+            df = queries[name](spark, SF_DIR)
+            df.write.mode("overwrite").format("noop").save()
+            dt = time.time() - t0
         return dt
 
     steady: dict[str, float] = {}

@@ -13,6 +13,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 #: The fixture tables materialized by the driver (TESTDATA.md).
@@ -173,18 +174,26 @@ def spread(df: DataFrame, *key_cols) -> DataFrame:
     :func:`planned_file_partitions` over ``df.inputFiles()`` + HDFS
     file status reproduces it without touching the RDD API (one
     metadata call per input file). A frame with NO file source (not a
-    current call site) falls back to the RDD probe.
+    current call site), or one whose file-status call fails over the
+    JVM bridge (a listed file was deleted, the store is unreachable),
+    falls back to the RDD probe, which plans from Spark's cached file
+    index.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
+    sizes = None
     files = df.inputFiles()
     if files:
         jvm = spark._jvm
         hconf = spark._jsc.hadoopConfiguration()
-        sizes = []
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            sizes.append(p.getFileSystem(hconf).getFileStatus(p).getLen())
+        try:
+            sizes = []
+            for f in files:
+                p = jvm.org.apache.hadoop.fs.Path(f)
+                sizes.append(p.getFileSystem(hconf).getFileStatus(p).getLen())
+        except Py4JJavaError:
+            sizes = None
+    if sizes is not None:
         planned = planned_file_partitions(
             sizes,
             target,

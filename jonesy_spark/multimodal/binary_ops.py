@@ -33,6 +33,7 @@ try:  # optional real codec — present in a deployed image, not here
 except ImportError:  # pragma: no cover - exercised in this container
     _PILImage = None
 
+from ..caching import persist
 from . import codecs as _codecs
 
 #: Output schema of the feature extraction step (declared up front so
@@ -324,16 +325,13 @@ def media_near_dup(
     """
     if not 0 <= max_hamming < 8:
         raise ValueError(f"max_hamming must be in [0, 8) for 8 bands, got {max_hamming}")
-    from ..operators.dedup import _track_caches
-
     # persist the hash table: it feeds both band-join sides, and
     # without the persist each side re-runs the Arrow decode of the
-    # whole corpus; released via the house release_caches handle.
-    # A caller that already holds (and owns) the sketch table passes
-    # it in — incremental_media_dedup shares one hash pass this way.
-    own_sketches = sketches is None
-    if own_sketches:
-        sketches = perceptual_hashes(df, fake=fake).persist()
+    # whole corpus. A caller that already holds the sketch table
+    # passes it in — incremental_media_dedup shares one hash pass this
+    # way.
+    if sketches is None:
+        sketches = persist(perceptual_hashes(df, fake=fake))
     banded = sketches.select(
         "doc_id",
         "phash",
@@ -359,7 +357,7 @@ def media_near_dup(
     # the counted pair_density_limit pre-flight below (the PPJoin
     # bounded-tier contract), which refuses quadratic-density corpora
     # and names the bucket_cap collapse.
-    out = (
+    return (
         banded.join(right, ["band_id", "band_key"])
         .filter(F.col("doc_id") < F.col("dup_doc_id"))
         .withColumn(
@@ -370,7 +368,6 @@ def media_near_dup(
         .select("doc_id", "dup_doc_id", "hamming")
         .dropDuplicates(["doc_id", "dup_doc_id"])
     )
-    return _track_caches(out, sketches if own_sketches else None)
 
 
 def _gate_band_density(banded, bucket_cap, pair_density_limit, op):
@@ -590,16 +587,13 @@ def incremental_media_dedup(
     run's own subtree, and ``novel_sink`` runs BEFORE the index write
     — the digest/minhash bridges' crash ordering."""
     from ..operators import graph as G
-    from ..operators.dedup import _track_caches
 
     if run_id is None:
         import uuid
 
         run_id = f"nightly-{uuid.uuid4().hex[:12]}"
-    sketches = perceptual_hashes(new_media, fake=fake).persist()
-    # media_near_dup tracks NO cache deps here (we own `sketches` and
-    # pass it in); the shared sketch table must stay persisted through
-    # the index probe below and is released via the handle on `novel`
+    # one hash pass shared by the pair search and the index probe
+    sketches = persist(perceptual_hashes(new_media, fake=fake))
     pairs = media_near_dup(
         new_media, max_hamming=max_hamming, fake=fake, sketches=sketches
     )
@@ -610,16 +604,16 @@ def incremental_media_dedup(
         )
     )
     surv_sketches = sketches.join(survivors_ids, "doc_id", "left_semi")
-    matches = probe_phash_index(
+    matches = persist(probe_phash_index(
         surv_sketches,
         spark,
         index_path,
         max_hamming=max_hamming,
         exclude_run_id=run_id,
-    ).persist()
-    novel_sketches = surv_sketches.join(
+    ))
+    novel_sketches = persist(surv_sketches.join(
         matches.select("doc_id"), "doc_id", "left_anti"
-    ).persist()
+    ))
     novel = new_media.join(
         novel_sketches.select("doc_id"), "doc_id", "left_semi"
     )
@@ -628,10 +622,7 @@ def incremental_media_dedup(
     write_phash_index(
         novel_sketches, index_path, mode=mode, run_id=run_id
     )
-    return (
-        _track_caches(novel, sketches, matches, novel_sketches),
-        matches,
-    )
+    return novel, matches
 
 
 #: Deterministic 16x16 P6 fixture image: pixel (x, y) of document d is
@@ -1072,17 +1063,14 @@ def video_near_dup(
     :class:`~..operators.dedup.PairBudgetExceeded`, naming the
     ``bucket_cap`` collapse and the incremental phash index as the
     scale paths, instead of launching the quadratic job."""
-    from ..operators.dedup import _track_caches
-
     feats = video_features(df)
     # persist the decoded per-frame hash table: it feeds FOUR plan
     # references (both band-join sides + both verification sides), and
     # without the persist each reference re-runs the Arrow decode of
-    # the whole corpus (plan audit showed 8 MapInPandas). Released via
-    # the house release_caches handle on the returned frame.
-    frames = feats.select(
-        "doc_id", F.posexplode("frame_hashes").alias("f", "fh")
-    ).persist()
+    # the whole corpus (plan audit showed 8 MapInPandas).
+    frames = persist(
+        feats.select("doc_id", F.posexplode("frame_hashes").alias("f", "fh"))
+    )
     banded = frames.select(
         "doc_id",
         "f",
@@ -1116,7 +1104,7 @@ def video_near_dup(
         F.col("fh").alias("fh_b"),
     )
     d = F.bit_count(F.col("fh_a").bitwiseXOR(F.col("fh_b")))
-    out = (
+    return (
         cand.join(fa, "doc_a")
         .join(fb, "doc_b")
         .filter(F.col("f_b") == F.col("f_a") + F.col("shift"))
@@ -1138,7 +1126,6 @@ def video_near_dup(
             F.col("hamming_total").cast("long").alias("hamming_total"),
         )
     )
-    return _track_caches(out, frames)
 
 
 def video_features(df: DataFrame) -> DataFrame:

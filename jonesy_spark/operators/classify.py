@@ -52,9 +52,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import persist
 from ..functions.scalars import micro_units
 
-from .dedup import CPU_PARTITIONS, _track_caches, element_hash
+from .dedup import CPU_PARTITIONS, element_hash
 
 #: Default feature-space size. 32k buckets keeps the model ~1 MB
 #: (bucket int + double) — broadcastable on any executor — while
@@ -174,16 +175,14 @@ def train_log_odds(
     # persist each consumer re-runs the token explode + tf aggregation
     # + label join from the corpus scan (r14 plan audit:
     # quality_classifier's plan carried 86 Exchanges, mostly this
-    # subtree repeated). Bounded to <= n_buckets rows by construction;
-    # released via the _track_caches handle on the returned model.
-    per_bucket = (
+    # subtree repeated). Bounded to <= n_buckets rows by construction.
+    per_bucket = persist(
         tf.join(labeled.select(id_col, "__pos"), id_col)
         .groupBy("bucket")
         .agg(
             F.sum(F.col("tf") * F.col("__pos")).alias("pos_c"),
             F.sum(F.col("tf") * (1 - F.col("__pos"))).alias("neg_c"),
         )
-        .persist()
     )
     doc_counts = labeled.agg(
         F.sum("__pos").alias("n_pos"),
@@ -234,9 +233,7 @@ def train_log_odds(
         )
         .alias("weight"),
     )
-    return _track_caches(
-        weights.unionByName(bias).unionByName(unseen), per_bucket
-    )
+    return weights.unionByName(bias).unionByName(unseen)
 
 
 def eval_report(scored: DataFrame, labels: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -431,7 +428,7 @@ def score_log_odds(
     empty_micro = (F.round(F.col("__bias").cast("decimal(12,9)"), 6) * 1_000_000).cast(
         "long"
     )
-    out = (
+    return (
         docs.select(id_col)
         .join(scored, id_col, "left")
         .crossJoin(F.broadcast(meta))
@@ -442,9 +439,6 @@ def score_log_odds(
             (F.coalesce(F.col("score_micro"), empty_micro) > 0).alias("pred"),
         )
     )
-    # forward the training model's cache handles (train_log_odds
-    # persists its per-bucket counts) so callers can release them
-    return _track_caches(out, *getattr(model, "_jonesy_cached_deps", ()))
 
 
 def write_classifier_counts(

@@ -30,10 +30,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..caching import persist
 from ..functions import text as TX
 from ..functions.scalars import micro_units
-from .dedup import _micro_threshold, _track_caches, carry_caches
-from .dedup import CPU_PARTITIONS, element_hash
+from .dedup import CPU_PARTITIONS, _micro_threshold, element_hash
 
 
 def _hash_unit(salt: str, key: Column) -> Column:
@@ -526,10 +526,8 @@ def unigram_logprob(
     lower/trim/split — and the one ``(raw, c)`` term-frequency table,
     so the corpus is exploded and counted once instead of once per
     scorer. Values are identical by construction (same expressions,
-    order-insensitive aggregates); cache ownership stays with the
-    caller for passed frames.
+    order-insensitive aggregates).
     """
-    own_tf = tf is None
     if stream is not None:
         toks = stream.select(F.col(id_col), F.col("raw").alias("t"))
     else:
@@ -544,9 +542,9 @@ def unigram_logprob(
     # + groupBy (r14 plan audit: the corpus scan appeared 3x per
     # scorer). The frame is the distinct-token table (vocab-scale, far
     # smaller than the stream; MEMORY_AND_DISK spills if a pathological
-    # corpus inflates it). Released via the _track_caches handle.
+    # corpus inflates it).
     if tf is None:
-        tf = toks.groupBy("t").agg(F.count(F.lit(1)).alias("c")).persist()
+        tf = persist(toks.groupBy("t").agg(F.count(F.lit(1)).alias("c")))
     else:
         tf = tf.withColumnsRenamed({"raw": "t"})
     vocab = tf.orderBy(F.col("c").desc(), F.col("t")).limit(vocab_size)
@@ -571,17 +569,14 @@ def unigram_logprob(
             ).alias("lp"),
         )
     )
-    return _track_caches(
-        scored.groupBy(id_col).agg(
-            F.count(F.lit(1)).cast("int").alias("n_tokens"),
-            micro_units(F.sum("is_oov") / F.count(F.lit(1))).alias(
-                "oov_frac_micro"
-            ),
-            micro_units(F.sum("lp") / F.count(F.lit(1))).alias(
-                "avg_logprob_micro"
-            ),
+    return scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("int").alias("n_tokens"),
+        micro_units(F.sum("is_oov") / F.count(F.lit(1))).alias(
+            "oov_frac_micro"
         ),
-        tf if own_tf else None,
+        micro_units(F.sum("lp") / F.count(F.lit(1))).alias(
+            "avg_logprob_micro"
+        ),
     )
 
 
@@ -705,24 +700,19 @@ def token_budget_prune(
     (quality, id) key is total, so the greedy prefix does not depend
     on where the range bounds landed.
     The ranged frame is persisted so both passes read ONE
-    materialization of the sampling-based exchange; release via
-    ``dedup.release_caches`` after the terminal action.
+    materialization of the sampling-based exchange.
 
     ``quality`` must be rounded/deterministic on both engines when
     oracle-compared (the ``quality_filter`` precedent).
     """
-    from .dedup import release_caches as _  # noqa: F401 (documented pairing)
-
     toks = F.greatest(TX.whitespace_token_count(F.col(text_col)), F.lit(1))
     scored = docs.select(
         F.col(id_col), quality.alias("quality"), toks.alias("n_tokens")
     )
-    ranged = (
+    ranged = persist(
         scored.repartitionByRange(
             n_ranges, F.col("quality").desc(), F.col(id_col)
-        )
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
+        ).withColumn("__pid", F.spark_partition_id())
     )
     sums = {
         r["__pid"]: r["s"]
@@ -741,7 +731,7 @@ def token_budget_prune(
         .orderBy(F.col("quality").desc(), F.col(id_col))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = (
+    return (
         ranged.join(F.broadcast(off), "__pid")
         .withColumn(
             "cum_tokens", F.sum("n_tokens").over(w) + F.col("__offset")
@@ -749,8 +739,6 @@ def token_budget_prune(
         .filter(F.col("cum_tokens") <= budget_tokens)
         .select(id_col, "quality", "n_tokens", "cum_tokens")
     )
-    out._jonesy_cached_deps = [ranged]
-    return out
 
 
 def assemble_id_sequences(
@@ -867,7 +855,7 @@ def bigram_logprob(
     # ``stream`` / ``tf`` (r14, guide §1.2): optional caller-prepared
     # token stream and term-frequency table — see
     # :func:`unigram_logprob`'s parameter note; values identical by
-    # construction, cache ownership stays with the caller.
+    # construction.
     if stream is None:
         stream = docs.repartition(CPU_PARTITIONS, F.col(id_col)).select(
             F.col(id_col),
@@ -894,14 +882,13 @@ def bigram_logprob(
     # the explode + vocab join + lag window from the source scan (r14
     # plan audit: the corpus scan appeared ~7x in excess_loss_select's
     # plan). c1 additionally feeds totals/cprev/the per-token join, so
-    # it persists too (<= vocab_size + 1 rows). Both release via the
-    # _track_caches handles.
-    paired = collapsed.withColumn(
+    # it persists too (<= vocab_size + 1 rows).
+    paired = persist(collapsed.withColumn(
         "prev", F.lag("t").over(W.partitionBy(id_col).orderBy("pos"))
-    ).persist()
+    ))
     # same rows as grouping `collapsed` — the lag adds a column, not
     # rows — but reads the persisted frame instead of a fresh subtree
-    c1 = paired.groupBy("t").agg(F.count(F.lit(1)).alias("c1")).persist()
+    c1 = persist(paired.groupBy("t").agg(F.count(F.lit(1)).alias("c1")))
     totals = c1.agg(
         F.sum("c1").alias("n_total"), F.count(F.lit(1)).alias("v1")
     )
@@ -938,18 +925,14 @@ def bigram_logprob(
             ).alias("lp"),
         )
     )
-    return _track_caches(
-        scored.groupBy(id_col).agg(
-            F.count(F.lit(1)).cast("int").alias("n_tokens"),
-            micro_units(F.sum("unseen") / F.count(F.lit(1))).alias(
-                "unseen_bigram_frac_micro"
-            ),
-            micro_units(F.sum("lp") / F.count(F.lit(1))).alias(
-                "avg_logprob_micro"
-            ),
+    return scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("int").alias("n_tokens"),
+        micro_units(F.sum("unseen") / F.count(F.lit(1))).alias(
+            "unseen_bigram_frac_micro"
         ),
-        paired,
-        c1,
+        micro_units(F.sum("lp") / F.count(F.lit(1))).alias(
+            "avg_logprob_micro"
+        ),
     )
 
 
@@ -1062,7 +1045,7 @@ def perplexity_buckets(
         "tk",
         "avg_logprob_micro",
     )
-    return carry_caches(bucketed.groupBy("lang", "bucket").agg(
+    return bucketed.groupBy("lang", "bucket").agg(
         F.sum("nd").cast("int").alias("n_docs"),
         F.sum("tk").cast("bigint").alias("total_tokens"),
         F.sum(F.col("avg_logprob_micro") * F.col("nd"))
@@ -1070,7 +1053,7 @@ def perplexity_buckets(
         .alias("sum_logprob_micro"),
         F.min("avg_logprob_micro").alias("min_score_micro"),
         F.max("avg_logprob_micro").alias("max_score_micro"),
-    ), uni)
+    )
 
 
 def dsir_weights(
@@ -1110,33 +1093,25 @@ def dsir_weights(
     """
     from .classify import token_buckets
 
-    # Cache strategy (re-adjudicated r15 under cold-JVM timing, VERDICT
+    # Cache choice (re-adjudicated r15 under cold-JVM timing, VERDICT
     # r14 #9): tf_r feeds the raw-side bucket counts AND the scoring
     # join; counts feeds the weight projection AND the broadcast
     # totals — without the persists each consumer re-ran the token
     # explode + hash aggregation from its corpus scan (r14 plan audit:
     # 26 Exchanges in dsir_select's plan). tf_r is (doc, bucket, tf)
-    # rows; counts is <= n_buckets rows. Released via _track_caches;
-    # OPTIMIZATION_r15.md has the A/B that picked the default.
-    strategy = set(getattr(dsir_weights, "_cache_strategy", "tfr+counts").split("+"))
-    persisted = []
-    tf_r = token_buckets(
+    # rows; counts is <= n_buckets rows. OPTIMIZATION_r15.md has the
+    # A/B that kept both persists.
+    tf_r = persist(token_buckets(
         raw, text_col=text_col, id_col=id_col, n_buckets=n_buckets
-    )
-    if "tfr" in strategy:
-        tf_r = tf_r.persist()
-        persisted.append(tf_r)
+    ))
     tf_t = token_buckets(target, text_col=text_col, id_col=id_col, n_buckets=n_buckets)
     ct = tf_t.groupBy("bucket").agg(F.sum("tf").alias("ct"))
     cr = tf_r.groupBy("bucket").agg(F.sum("tf").alias("cr"))
-    counts = ct.join(cr, "bucket", "full_outer").select(
+    counts = persist(ct.join(cr, "bucket", "full_outer").select(
         "bucket",
         F.coalesce(F.col("ct"), F.lit(0)).alias("ct"),
         F.coalesce(F.col("cr"), F.lit(0)).alias("cr"),
-    )
-    if "counts" in strategy:
-        counts = counts.persist()
-        persisted.append(counts)
+    ))
     totals = counts.agg(F.sum("ct").alias("tot_t"), F.sum("cr").alias("tot_r"))
     aB = alpha * n_buckets
     w = F.round(
@@ -1171,7 +1146,7 @@ def dsir_weights(
             .alias("log_weight_micro"),
         )
     )
-    return _track_caches(
+    return (
         raw.select(id_col)
         .join(scored, id_col, "left")
         .select(
@@ -1180,8 +1155,7 @@ def dsir_weights(
             F.coalesce(F.col("log_weight_micro"), F.lit(0).cast("long")).alias(
                 "log_weight_micro"
             ),
-        ),
-        *persisted,
+        )
     )
 
 
@@ -1214,9 +1188,6 @@ def dsir_select(
         raw, target, text_col=text_col, id_col=id_col,
         n_buckets=n_buckets, alpha=alpha,
     )
-    # the top-k cut below derives from `weighted`; keep its cache
-    # handles on the returned frame for the caller's release
-    caches = getattr(weighted, "_jonesy_cached_deps", ())
     u = _hash_unit(salt, F.col(id_col))
     # u in [0, 1): guard the u == 0 endpoint (ln(0)) by the half-step
     # below the smallest representable draw — deterministic, oracle-safe.
@@ -1225,11 +1196,10 @@ def dsir_select(
     # the subtraction — and therefore the top-k cut — is exact integer
     # arithmetic on both engines.
     key = F.col("log_weight_micro") - micro_units(F.log(-F.log(safe_u)))
-    return _track_caches(
+    return (
         weighted.withColumn("sample_key_micro", key)
         .orderBy(F.col("sample_key_micro").desc(), F.col(id_col))
-        .limit(k),
-        *caches,
+        .limit(k)
     )
 
 
@@ -1334,39 +1304,34 @@ def excess_loss_select(
     of once per scorer — values unchanged by construction
     (order-insensitive aggregates over the same rows). Both frames
     persist eagerly here (a lazy persist never populates in time for
-    same-job reuse — the r14 interleaved A/B finding) and release via
-    the output's cache handles."""
-    stream = (
-        docs.repartition(CPU_PARTITIONS, F.col(id_col))
-        .select(
+    same-job reuse — the r14 interleaved A/B finding)."""
+    stream = persist(
+        docs.repartition(CPU_PARTITIONS, F.col(id_col)).select(
             F.col(id_col),
             F.posexplode(
                 F.split(F.lower(F.trim(F.col(text_col))), " ")
             ).alias("pos", "raw"),
         )
-        .persist()
     )
-    tf = stream.groupBy("raw").agg(F.count(F.lit(1)).alias("c")).persist()
+    tf = persist(stream.groupBy("raw").agg(F.count(F.lit(1)).alias("c")))
     tf.count()  # one job populates both caches (tf scans stream)
-    uni0 = unigram_logprob(
+    uni = unigram_logprob(
         docs, text_col=text_col, id_col=id_col,
         vocab_size=vocab_size, alpha=alpha, stream=stream, tf=tf,
-    )
-    uni = uni0.select(
+    ).select(
         F.col(id_col),
         "n_tokens",
         F.col("avg_logprob_micro").alias("unigram_lp_micro"),
     )
-    bi0 = bigram_logprob(
+    bi = bigram_logprob(
         docs, text_col=text_col, id_col=id_col,
         vocab_size=vocab_size, bigram_size=bigram_size, alpha=alpha,
         stream=stream, tf=tf,
-    )
-    bi = bi0.select(
+    ).select(
         F.col(id_col),
         F.col("avg_logprob_micro").alias("bigram_lp_micro"),
     )
-    out = (
+    return (
         uni.join(bi, id_col)
         .withColumn(
             "excess_micro",
@@ -1374,7 +1339,4 @@ def excess_loss_select(
         )
         .orderBy(F.col("excess_micro").desc(), F.col(id_col))
         .limit(k)
-    )
-    return _track_caches(
-        carry_caches(carry_caches(out, uni0), bi0), stream, tf
     )

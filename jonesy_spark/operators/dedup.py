@@ -31,6 +31,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# release_caches is re-exported: the benchmark harness imports it from here
+from ..caching import persist, release_caches  # noqa: F401
 from ..functions import text as TX
 from ..functions.scalars import micro_units
 
@@ -51,12 +53,6 @@ def _micro_threshold(threshold: float) -> int:
     — the comparison that decides row membership never touches a
     float."""
     return int(round(threshold * 1_000_000))
-
-
-#: Interleaved-A/B toggle for the verify-stage single-evaluation guard
-#: (scripts/verify_once_probe.py flips it per arm). Default = the
-#: measured winner; see :func:`_eval_once` for the evidence.
-VERIFY_ONCE = True
 
 
 def _eval_once(col: Column) -> Column:
@@ -114,47 +110,6 @@ def _eval_once(col: Column) -> Column:
     schema_match=true), and parquet round-trips store the same
     optional-everywhere schema either way."""
     return F.when(F.monotonically_increasing_id() >= 0, col)
-
-
-def _verify_expr(col: Column) -> Column:
-    """The verify expression as configured: guarded single-evaluation
-    when ``VERIFY_ONCE`` is on, the plain (pushdown-duplicated) form
-    otherwise."""
-    return _eval_once(col) if VERIFY_ONCE else col
-
-
-def _track_caches(df: DataFrame, *deps: DataFrame) -> DataFrame:
-    """Attach the operator's internally-persisted frames to the frame it
-    returns, so callers can release them after the terminal action
-    (:func:`release_caches`). Persist without a release surface leaks:
-    MEMORY_AND_DISK never OOMs, but in a long-lived session (the corpus
-    job, a 50-query driver run) dead cached sketch subtrees accumulate
-    and evict useful blocks."""
-    existing = list(getattr(df, "_jonesy_cached_deps", ()))
-    df._jonesy_cached_deps = existing + [d for d in deps if d is not None]
-    return df
-
-
-def carry_caches(to_df: DataFrame, from_df: DataFrame) -> DataFrame:
-    """Re-attach ``from_df``'s cache handles onto a derived frame —
-    DataFrame transformations return new Python objects, so a plan
-    builder that wraps an operator's output must forward the handles
-    for :func:`release_caches` to see them."""
-    return _track_caches(to_df, *getattr(from_df, "_jonesy_cached_deps", ()))
-
-
-def release_caches(df: DataFrame) -> int:
-    """Unpersist every cache the operator that produced ``df`` left
-    behind; returns how many were released. Call after the terminal
-    action (the bench does, after its noop write; the corpus job after
-    its output writes). Safe to call twice and on frames with no
-    handles."""
-    deps = getattr(df, "_jonesy_cached_deps", ())
-    for d in deps:
-        d.unpersist()
-    n = len(deps)
-    df._jonesy_cached_deps = []
-    return n
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -218,7 +173,7 @@ def _split_by_bucket_size(
     bucket_cap: int | None,
     op: str = "dedup",
     cache_stats: bool = False,
-) -> tuple[DataFrame, DataFrame | None, list[DataFrame]]:
+) -> tuple[DataFrame, DataFrame | None]:
     """Split banded rows into (small, collapsed) by bucket population.
 
     The band self-join emits O(k²) candidate pairs for a bucket of k
@@ -264,7 +219,7 @@ def _split_by_bucket_size(
     ``bucket_cap`` is None.
     """
     if bucket_cap is None:
-        return banded, None, []
+        return banded, None
     from pyspark.sql import Window
 
     w = Window.partitionBy(*keys)
@@ -273,13 +228,11 @@ def _split_by_bucket_size(
         F.count(F.lit(1)).over(w).alias("bkt_n"),
         F.min(F.struct(*carry)).over(w).alias("bkt_rep"),
     )
-    persisted = []
     if cache_stats:
         # One window evaluation shared by all three consumers; the
         # InMemoryRelation keeps the child's hashpartitioning(keys), so
         # the downstream self-join still needs no re-shuffle.
-        stats = stats.persist()
-        persisted.append(stats)
+        stats = persist(stats)
     small = stats.filter(F.col("bkt_n") <= bucket_cap).drop("bkt_n", "bkt_rep")
     collapsed = (
         stats.filter(
@@ -295,7 +248,7 @@ def _split_by_bucket_size(
             F.approx_count_distinct(F.struct(*keys)).alias("hot_buckets"),
         )
     )
-    return small, collapsed, persisted
+    return small, collapsed
 
 
 def _minhash_min_aggs(n_hashes: int) -> list[Column]:
@@ -374,7 +327,7 @@ def minhash_lsh_pairs(
         )
         .select("doc_id", element_hash(F.col("t")).alias("h"))
     )
-    # Cache strategy (re-A/B'd r14 per VERDICT r13 #3, sf0.1, TWO
+    # Cache choice (re-A/B'd r14 per VERDICT r13 #3, sf0.1, TWO
     # independent interleaved same-session runs of 5 rounds each after
     # 8 warm-up runs): session A min/med — stats 2.56/3.06, tok
     # 3.41/3.54, checkpoint 2.13/2.25, stats+tok 2.85/2.97; session B —
@@ -383,41 +336,22 @@ def minhash_lsh_pairs(
     # between sessions: the four strategies are within the ±40 %
     # session-to-session machine window at this row's ~2-3 s magnitude,
     # which also adjudicates the r11(2.16) vs r13(3.4) "regression" —
-    # window noise, not a strategy change. "stats" stays the default:
-    # never slower than noise, and it keeps lineage ("checkpoint"
-    # truncates it — a lost executor then kills the job instead of
-    # recomputing, the wrong trade at 1000 executors). The knob stays
-    # for re-tuning: "tok" persists the sketch, "+eager" materializes
-    # it in a separate job (same-job lazy persist populates too late
-    # for reuse), "checkpoint" localCheckpoints.
+    # window noise, not a strategy change. Only the window stats are
+    # cached: never slower than noise, and it keeps lineage (the
+    # checkpoint arm truncates it — a lost executor then kills the job
+    # instead of recomputing, the wrong trade at 1000 executors).
     tok = ex.groupBy("doc_id").agg(
         F.collect_set("h").alias("toks"), *_minhash_min_aggs(n_hashes)
     )
-    strategy = set(
-        getattr(minhash_lsh_pairs, "_cache_strategy", "stats").split("+")
-    )
-    persisted = []
-    if "tok" in strategy:
-        tok = tok.persist()
-        persisted.append(tok)
-        if "eager" in strategy:
-            # materialize in a separate job so the main DAG's three
-            # consumers all read cached blocks (lazy persist populates
-            # mid-job, too late for same-job reuse) while KEEPING
-            # lineage — the fault-tolerant version of localCheckpoint
-            tok.count()
-    elif "checkpoint" in strategy:
-        tok = tok.localCheckpoint()
     banded = tok.select(
         "doc_id",
         F.size("toks").alias("sz"),
         F.explode(_band_structs(n_bands, band_size)).alias("band"),
     ).select("doc_id", "sz", F.col("band.band_id").alias("band_id"), F.col("band.band_key").alias("band_key"))
-    small, collapsed, split_caches = _split_by_bucket_size(
+    small, collapsed = _split_by_bucket_size(
         banded, ["band_id", "band_key"], ["doc_id"], bucket_cap,
-        op="minhash", cache_stats="stats" in strategy,
+        op="minhash", cache_stats=True,
     )
-    persisted += split_caches
     a, b = small.alias("a"), small.alias("b")
     # Candidate pairs carry ids only — the band join and the pair dedup
     # shuffle 16-byte rows, never the token arrays. The token-set size
@@ -470,14 +404,13 @@ def minhash_lsh_pairs(
         .join(ta, "doc_a")
         .join(tb, "doc_b")
     )
-    return _track_caches(
+    return (
         verified.withColumn(
             "jaccard_micro",
-            _verify_expr(TX.jaccard_micro(F.col("toks_a"), F.col("toks_b"))),
+            _eval_once(TX.jaccard_micro(F.col("toks_a"), F.col("toks_b"))),
         )
         .filter(F.col("jaccard_micro") >= _micro_threshold(threshold))
-        .select("doc_a", "doc_b", "jaccard_micro"),
-        *persisted,
+        .select("doc_a", "doc_b", "jaccard_micro")
     )
 
 
@@ -636,10 +569,9 @@ def simhash_near_dup(
 
     # The explode + 64 vote-SUM aggregates are the expensive subtree;
     # under the window split its only consumer is the banded frame that
-    # feeds the cached stats, so the default "stats" strategy computes
-    # it exactly once and caches nothing else (3.8 s vs 6.0 s for r4's
-    # fp-persist + broadcast split, same-session A/B). "fp"/"checkpoint"
-    # knobs kept for re-tuning (checkpoint+stats measured 3.66 s but
+    # feeds the cached stats, so caching only the stats computes it
+    # exactly once (3.8 s vs 6.0 s for r4's fp-persist + broadcast
+    # split, same-session A/B; checkpoint+stats measured 3.66 s but
     # truncates lineage — see minhash note).
     fp = sums.select(
         "doc_id",
@@ -647,15 +579,6 @@ def simhash_near_dup(
         pack(1, half).alias("fpa"),
         pack(half + 1, n_bits).alias("fpb"),
     )
-    strategy = set(
-        getattr(simhash_near_dup, "_cache_strategy", "stats").split("+")
-    )
-    persisted = []
-    if "fp" in strategy:
-        fp = fp.persist()
-        persisted.append(fp)
-    elif "checkpoint" in strategy:
-        fp = fp.localCheckpoint()
     # Pigeonhole band blocking: with max_hamming errors spread over
     # n_bands > max_hamming bands, at least one band is error-free, so
     # every qualifying pair shares an exact band — the band equi-join is
@@ -680,15 +603,14 @@ def simhash_near_dup(
     banded = fp.select(
         "doc_id", "block", "fpa", "fpb", F.explode(F.array(*bands)).alias("band")
     ).select("doc_id", "block", "fpa", "fpb", "band.band_id", "band.band_bits")
-    small, collapsed, split_caches = _split_by_bucket_size(
+    small, collapsed = _split_by_bucket_size(
         banded,
         ["block", "band_id", "band_bits"],
         ["doc_id", "fpa", "fpb"],
         bucket_cap,
         op="simhash",
-        cache_stats="stats" in strategy,
+        cache_stats=True,
     )
-    persisted += split_caches
     a, b = small.alias("a"), small.alias("b")
     candidates = a.join(
         b,
@@ -731,12 +653,11 @@ def simhash_near_dup(
     hamming = F.bit_count(
         F.col("fpa_a").bitwiseXOR(F.col("fpa_b"))
     ) + F.bit_count(F.col("fpb_a").bitwiseXOR(F.col("fpb_b")))
-    return _track_caches(
+    return (
         candidates.withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", "hamming"),
-        *persisted,
+        .select("doc_a", "doc_b", "hamming")
     )
 
 
@@ -769,9 +690,6 @@ def ngram_jaccard_pairs(
     size-ratio filter before any set op.
     """
     band_size = n_hashes // n_bands
-    strategy = set(
-        getattr(ngram_jaccard_pairs, "_cache_strategy", "g+stats").split("+")
-    )
     ex = (
         df.repartition(CPU_PARTITIONS, F.col(id_col))
         .select(F.col(id_col).alias("doc_id"), F.col("lang"), F.col(text_col).alias("txt"))
@@ -795,7 +713,7 @@ def ngram_jaccard_pairs(
     g = ex.groupBy("doc_id", "lang").agg(
         F.collect_set("h").alias("grams"), *_minhash_min_aggs(n_hashes)
     )
-    # Default "g+stats" (re-A/B'd late r14 after the verify guard +
+    # Gram frame + window stats cached (re-A/B'd late r14 after the verify guard +
     # hash-repartition changes shifted the balance): the gram frame
     # feeds THREE consumers (banded + both re-attach sides), and
     # persisting it now wins every interleaved round — stats-only med
@@ -806,20 +724,8 @@ def ngram_jaccard_pairs(
     # against the since-removed banded-persist + broadcast split
     # shape, not a pure gram-frame persist. The split's stats action
     # populates the cache mid-build, so no eager count is needed. The
-    # gram arrays are ~|text| ints per doc — MEMORY_AND_DISK, released
-    # via the _track_caches handle.
-    persisted = []
-    if "checkpoint" in strategy:
-        g = g.localCheckpoint()
-    elif "g" in strategy:
-        g = g.persist()
-        persisted.append(g)
-        if "stats" not in strategy:
-            # without the stats branch no mid-build action populates
-            # the cache before the three consumers scan it in one job —
-            # the lazy-persist-never-populates-in-time pitfall
-            # (ADVICE r14); materialize eagerly
-            g.count()
+    # gram arrays are ~|text| ints per doc — MEMORY_AND_DISK.
+    g = persist(g)
     banded = g.select(
         "doc_id",
         "lang",
@@ -832,11 +738,10 @@ def ngram_jaccard_pairs(
         F.col("band.band_id").alias("band_id"),
         F.col("band.band_key").alias("band_key"),
     )
-    small, collapsed, split_caches = _split_by_bucket_size(
+    small, collapsed = _split_by_bucket_size(
         banded, ["lang", "band_id", "band_key"], ["doc_id"], bucket_cap,
-        op="ngram", cache_stats="stats" in strategy,
+        op="ngram", cache_stats=True,
     )
-    persisted += split_caches
     a, b = small.alias("a"), small.alias("b")
     # The gram-set SIZE rides along on the banded rows (one int) so the
     # threshold-implied size-ratio bound (j >= t forces |A|/|B| within
@@ -876,17 +781,13 @@ def ngram_jaccard_pairs(
         .join(ga, "doc_a")
         .join(gb, "doc_b")
     )
-    return _track_caches(
-        pairs.select(
-            "doc_a",
-            "doc_b",
-            _verify_expr(
-                TX.jaccard_micro(F.col("grams_a"), F.col("grams_b"))
-            ).alias("jaccard_micro"),
-        )
-        .filter(F.col("jaccard_micro") >= _micro_threshold(threshold)),
-        *persisted,
-    )
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        _eval_once(
+            TX.jaccard_micro(F.col("grams_a"), F.col("grams_b"))
+        ).alias("jaccard_micro"),
+    ).filter(F.col("jaccard_micro") >= _micro_threshold(threshold))
 
 
 def ngram_containment(
@@ -1042,7 +943,7 @@ def lsh_recall_report(
         )
         .withColumn(
             "jaccard_micro",
-            _verify_expr(TX.jaccard_micro(F.col("a.toks"), F.col("b.toks"))),
+            _eval_once(TX.jaccard_micro(F.col("a.toks"), F.col("b.toks"))),
         )
         .filter(F.col("jaccard_micro") >= _micro_threshold(threshold))
         .select(
@@ -1093,7 +994,7 @@ def lsh_recall_report(
             ).alias("worst_miss_micro"),
         )
     )
-    return _track_caches(report, *getattr(lsh, "_jonesy_cached_deps", ()))
+    return report
 
 
 def prefix_jaccard_pairs(
@@ -1143,15 +1044,15 @@ def prefix_jaccard_pairs(
     path) or must opt into the capped collapse. The check is skipped
     when ``bucket_cap`` is set — the collapse already bounds every
     bucket to O(k)."""
-    # Cache strategy, re-adjudicated r15 under the DRIVER's methodology
+    # Cache choice, re-adjudicated r15 under the DRIVER's methodology
     # (scripts/cold_ab.py: fresh JVM per arm, bench-style cold +
     # min-of-warm — the r14 same-session interleaved A/Bs picked a
     # persist both driver windows then measured as a regression): the
     # r14 default eagerly persisted the FULL exploded distinct token
     # stream ("ex+eager" — corpus x tokens rows, the largest
     # intermediate in the suite), the memory-heavy / compute-light
-    # shape the quantized-store A/B already rejected. The default is
-    # now "pref+toksets+eager": persist the PREFIX-SELECTED subset (a
+    # shape the quantized-store A/B already rejected. It now eagerly
+    # persists the PREFIX-SELECTED subset (a
     # ~(1-t) fraction of the stream, 3 consumers: density estimate +
     # both candidate-join sides) and the per-doc collect_set frame
     # (one row per doc, both re-attach sides). Cold-JVM A/B at 32c
@@ -1160,13 +1061,6 @@ def prefix_jaccard_pairs(
     # 12.9 vs 13.9 vs 13.4). 8-core rounds were window-drift-dominated
     # (within-arm spread 6.9-9.0 s > arm deltas) — adjudicated to the
     # clean 32c signal; OPTIMIZATION_r15.md has the full table.
-    # Strategy knob follows the minhash pattern.
-    strategy = set(
-        getattr(
-            prefix_jaccard_pairs, "_cache_strategy", "pref+toksets+eager"
-        ).split("+")
-    )
-    persisted = []
     ex = (
         df.repartition(CPU_PARTITIONS, F.col(id_col))
         .select(
@@ -1178,11 +1072,6 @@ def prefix_jaccard_pairs(
         .select("doc_id", element_hash(F.col("t")).alias("h"))
         .distinct()
     )
-    if "ex" in strategy:
-        ex = ex.persist()
-        persisted.append(ex)
-        if "eager" in strategy:
-            ex.count()
     dft = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     from pyspark.sql import Window as W
 
@@ -1194,14 +1083,11 @@ def prefix_jaccard_pairs(
     )
     L = F.col("sz") - F.ceil(F.round(F.lit(threshold) * F.col("sz"), 9)) + 1
     pref = pos.filter(F.col("pos") <= L).select("doc_id", "h", "sz")
-    if "pref" in strategy:
-        # the prefix-selected subset (a (1-t) fraction of the stream)
-        # feeds the density estimate and BOTH candidate-join sides —
-        # persisting it runs the df-agg + position-window chain once
-        pref = pref.persist()
-        persisted.append(pref)
-        if "eager" in strategy:
-            pref.count()
+    # the prefix-selected subset (a (1-t) fraction of the stream)
+    # feeds the density estimate and BOTH candidate-join sides —
+    # persisting it runs the df-agg + position-window chain once
+    pref = persist(pref)
+    pref.count()
     if pair_density_limit is not None and bucket_cap is None:
         est = (
             pref.groupBy("h")
@@ -1223,11 +1109,11 @@ def prefix_jaccard_pairs(
         # carry leads with doc_id: the split keys the bucket
         # representative on carry[0] (latent in the never-exercised
         # capped branch until the r13 density-contract test)
-        small, collapsed, caches = _split_by_bucket_size(
+        small, collapsed = _split_by_bucket_size(
             pref, ["h"], ["doc_id", "sz"], bucket_cap, op="prefix_jaccard"
         )
     else:
-        small, collapsed, caches = pref, None, []
+        small, collapsed = pref, None
     a, b = small.alias("a"), small.alias("b")
     cand = (
         a.join(
@@ -1250,13 +1136,10 @@ def prefix_jaccard_pairs(
         )
     cand = cand.dropDuplicates(["doc_a", "doc_b"])
     toksets = ex.groupBy("doc_id").agg(F.collect_set("h").alias("toks"))
-    if "toksets" in strategy:
-        toksets = toksets.persist()
-        persisted.append(toksets)
-        if "eager" in strategy:
-            # same-job lazy persist populates too late for the two
-            # re-attach consumers (the minhash "tok+eager" rationale)
-            toksets.count()
+    toksets = persist(toksets)
+    # same-job lazy persist populates too late for the two re-attach
+    # consumers: materialize in a separate job
+    toksets.count()
     ta = toksets.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
     tb = toksets.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
     # Hash repartition, not round-robin — see the minhash verify comment
@@ -1282,9 +1165,9 @@ def prefix_jaccard_pairs(
         .join(tb, "doc_b")
         .withColumn(
             "jaccard_micro",
-            _verify_expr(TX.jaccard_micro(F.col("toks_a"), F.col("toks_b"))),
+            _eval_once(TX.jaccard_micro(F.col("toks_a"), F.col("toks_b"))),
         )
         .filter(F.col("jaccard_micro") >= _micro_threshold(threshold))
         .select("doc_a", "doc_b", "jaccard_micro")
     )
-    return _track_caches(out, *persisted, *caches)
+    return out

@@ -44,30 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tracked_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
-    """``localCheckpoint()`` plus the ids of the persistent RDDs it
-    created. ``DataFrame.unpersist()`` only clears CacheManager
-    entries — a localCheckpoint's blocks live in RDD block storage and
-    survive it (ADVICE r12, verified empirically there), so releasing
-    a dead checkpoint requires ``unpersist`` on the underlying RDD,
-    which is only reachable by diffing the context's persistent-RDD
-    map around the call. Single-threaded callers only: a concurrent
-    persist in another thread would be misattributed."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint()
-    after = sc._jsc.getPersistentRDDs().keySet().toArray()
-    return out, [i for i in after if i not in before]
-
-
-def _release_rdds(df: DataFrame, ids: list[int]) -> None:
-    """Drop the named RDDs' storage blocks (non-blocking) — the actual
-    release ``DataFrame.unpersist()`` cannot perform for checkpoints."""
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        if jmap.containsKey(i):
-            jmap.get(i).unpersist(False)
+from ..caching import checkpoint, release
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -173,7 +150,7 @@ def _run_star_rounds(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]
     exits in ZERO rounds when the input is already a star forest — the
     common case for pair lists coming from collapsed hot buckets, which
     are emitted rep→member, i.e. already star-shaped."""
-    edges = edges.localCheckpoint()
+    edges = checkpoint(edges)
     if _is_star_forest(edges):
         return edges, 0
     for rounds in range(1, max_rounds + 1):
@@ -181,8 +158,10 @@ def _run_star_rounds(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]
         # (r14) each star is a single-consumer chain — the r13 shape
         # needed a second localCheckpoint between the stars because
         # large-star's output fed two subtrees (its min table and the
-        # join probe). Half the driver-sync barriers per round.
-        edges = _small_star(_large_star(edges)).localCheckpoint()
+        # join probe). Half the driver-sync barriers per round. The
+        # superseded round is dead once the new one exists.
+        prev, edges = edges, checkpoint(_small_star(_large_star(edges)))
+        release(prev)
         if _is_star_forest(edges):
             return edges, rounds
     raise RuntimeError(
@@ -340,14 +319,15 @@ def pagerank(
     silently weights parallel edges into deg/contrib and the ranks
     stop summing to 1; when in doubt leave it False. Setup
     checkpoints (``nodes``/``deg``/``ed``, ~node/edge-count rows of
-    longs) are released before return AT THE RDD LEVEL — checkpoint
-    blocks live in RDD block storage, where ``DataFrame.unpersist()``
-    is a no-op (ADVICE r12); :func:`_tracked_checkpoint` captures the
-    persistent-RDD ids at creation so the release actually drops the
-    blocks. The returned frame hangs off the final rank checkpoint
-    alone, so repeated calls in one session (graph_probe runs 3+ per
-    tier) cannot accumulate setup or per-iteration blocks
-    (ADVICE r11/r12; pinned by a getRDDStorageInfo test).
+    longs) are released before return, and every superseded rank
+    generation as soon as the next one exists (``caching.release``
+    drops a checkpoint at the RDD level, where
+    ``DataFrame.unpersist()`` is a no-op — ADVICE r12). The returned
+    frame hangs off the final rank checkpoint alone, which the
+    caller's cache scope releases, so repeated calls in one session
+    (graph_probe runs 3+ per tier) cannot accumulate setup or
+    per-iteration blocks (ADVICE r11/r12; pinned by a
+    getRDDStorageInfo test).
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
@@ -357,7 +337,7 @@ def pagerank(
     # one distinct edge frame between the loop and its out-degree column
     if not assume_distinct:
         e = e.distinct()
-    nodes, nodes_ids = _tracked_checkpoint(
+    nodes = checkpoint(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -368,12 +348,12 @@ def pagerank(
     # checkpointed: deg is read every iteration via ed, and an un-cut
     # deg would drag the full source scan + distinct + groupBy back
     # into EVERY iteration (r11 review finding)
-    deg, deg_ids = _tracked_checkpoint(
+    deg = checkpoint(
         e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     )
     # out-degree rides the edge list once; the per-iteration join then
     # touches a single pre-built (src, dst, deg) table
-    ed, ed_ids = _tracked_checkpoint(e.join(deg, "src"))
+    ed = checkpoint(e.join(deg, "src"))
     # The rank vector CARRIES its node's dangling flag (out-degree
     # zero — a static property of the graph): the per-iteration
     # dangling mass is then a narrow filter+sum over the rank
@@ -381,7 +361,7 @@ def pagerank(
     # every round (r14 optimization — one whole join subtree removed
     # per iteration; same sum over the same rows, so ranks are
     # bit-identical).
-    ranks, ranks_ids = _tracked_checkpoint(
+    ranks = checkpoint(
         nodes.join(
             deg.select(F.col("src").alias("node"), F.lit(True).alias("__o")),
             "node",
@@ -435,7 +415,7 @@ def pagerank(
                 *carry_old,
             )
         )
-        new_ranks, new_ranks_ids = _tracked_checkpoint(new_ranks)
+        new_ranks = checkpoint(new_ranks)
         if tol > 0:
             delta = new_ranks.agg(
                 F.sum(F.abs(F.col("rank") - F.col("__old"))).alias("d")
@@ -443,17 +423,17 @@ def pagerank(
         else:
             delta = float("inf")
         # the superseded checkpoint is dead once the new one exists —
-        # release its executor-storage blocks now (at the RDD level:
-        # DataFrame.unpersist is a no-op for checkpoint blocks, ADVICE
-        # r12) instead of letting max_iter generations accumulate for
-        # the life of the job (ADVICE r6).
-        _release_rdds(ranks, ranks_ids)
-        ranks, ranks_ids = new_ranks, new_ranks_ids
+        # release its executor-storage blocks now instead of letting
+        # max_iter generations accumulate for the life of the job
+        # (ADVICE r6).
+        release(ranks)
+        ranks = new_ranks
         if delta < tol:
             break
     # the final ranks checkpoint is the only block the returned frame
     # needs — release the three setup checkpoints now instead of
-    # leaving them to the ContextCleaner (ADVICE r11; RDD-level per
-    # ADVICE r12, pinned by test_pagerank_releases_checkpoint_blocks)
-    _release_rdds(ranks, [*nodes_ids, *deg_ids, *ed_ids])
+    # leaving them to the ContextCleaner (ADVICE r11; pinned by
+    # test_pagerank_releases_checkpoint_blocks)
+    for setup in (nodes, deg, ed):
+        release(setup)
     return ranks.select("node", F.round("rank", 9).alias("rank"))

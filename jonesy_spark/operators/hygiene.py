@@ -27,9 +27,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, persist
 from ..functions import text as TX
 from ..functions.scalars import micro_units
-from .dedup import CPU_PARTITIONS, _track_caches, element_hash
+from .dedup import CPU_PARTITIONS, element_hash
 
 #: Phone shapes, anchored to telephone-like GROUPING rather than "any
 #: long digit run" (which also ate ISBNs, numeric ids, timestamps):
@@ -264,14 +265,12 @@ def incremental_dedup(
         # each RE-RUN the normalize+md5 pipeline over the batch text —
         # measured 3x the batch compute per probe on a 40 MB batch.
         # The batch is micro-batch-sized by this flag's contract, so
-        # the cache is small; the handle rides the release-caches
-        # protocol (bench/jobs call it after their terminal action).
-        firsts = firsts.persist()
+        # the cache is small and lives for the caller's cache scope.
+        firsts = persist(firsts)
         matched = seen.join(
             F.broadcast(firsts.select("content_hash")), "content_hash", "left_semi"
         )
         novel = firsts.join(F.broadcast(matched), "content_hash", "left_anti")
-        novel = _track_caches(novel, firsts)
     else:
         novel = firsts.join(seen, "content_hash", "left_anti")
     updated = seen.union(novel.select("content_hash"))
@@ -401,7 +400,7 @@ def probe_minhash_index(
 
     from pyspark.errors import AnalysisException
 
-    from .dedup import _micro_threshold, _verify_expr, estimated_jaccard
+    from .dedup import _eval_once, _micro_threshold, estimated_jaccard
 
     def _observed(df: DataFrame, n_buckets: int) -> DataFrame:
         return df.observe(
@@ -428,8 +427,8 @@ def probe_minhash_index(
     # broadcast, and the candidate join — and each otherwise re-runs
     # the batch's explode + MinHash aggregation (r14: the before-plan
     # carried the sketch subtree 3x). O(batch) rows of ~19 longs by the
-    # index contract. Released via the _track_caches handle.
-    new_sigs = new_sigs.persist()
+    # index contract.
+    new_sigs = persist(new_sigs)
     # Partition pruning first: the layout derives ``bucket`` from
     # band_key (write_minhash_index: substring(band_key, 1, 2)), so the
     # batch's touched buckets are knowable up front. Collecting them is
@@ -475,21 +474,16 @@ def probe_minhash_index(
         )
         .dropDuplicates(["doc_id", "index_doc_id"])
     )
-    from .dedup import _track_caches
-
-    return _track_caches(
-        _observed(
-            cand.withColumn(
-                "est_jaccard_micro",
-                _verify_expr(
-                    estimated_jaccard(F.col("mh"), F.col("mh_i"), n_hashes)
-                ),
-            )
-            .filter(F.col("est_jaccard_micro") >= _micro_threshold(threshold))
-            .select("doc_id", "index_doc_id", "est_jaccard_micro"),
-            len(buckets),
-        ),
-        new_sigs,
+    return _observed(
+        cand.withColumn(
+            "est_jaccard_micro",
+            _eval_once(
+                estimated_jaccard(F.col("mh"), F.col("mh_i"), n_hashes)
+            ),
+        )
+        .filter(F.col("est_jaccard_micro") >= _micro_threshold(threshold))
+        .select("doc_id", "index_doc_id", "est_jaccard_micro"),
+        len(buckets),
     )
 
 
@@ -538,27 +532,29 @@ def incremental_near_dup(
     anti-join, and the index append; the match/novel frames feed a
     sink and the return path) are ``persist``-ed, NOT checkpointed —
     lineage survives executor loss at cluster scale (SCALE.md "Cache
-    lifecycle"). The handles ride the returned ``novel`` frame: call
-    ``dedup.release_caches(novel)`` after the terminal actions on BOTH
-    returned frames.
+    lifecycle"); they live for the caller's cache scope, so run the
+    terminal actions on BOTH returned frames inside it.
     """
     from . import dedup as DD
     from . import graph as G
 
-    pairs = DD.minhash_lsh_pairs(
-        new_docs, text_col=text_col, id_col=id_col,
-        n_hashes=n_hashes, n_bands=n_bands, threshold=threshold,
-    )
-    survivors = G.resolve_duplicates(new_docs, pairs, id_col=id_col)
-    DD.release_caches(pairs)
-    sigs = DD.minhash_banded_sigs(
+    # the LSH sketch caches are dead once connected components has
+    # checkpointed the pair graph
+    with cache_scope(keep_checkpoints=True):
+        pairs = DD.minhash_lsh_pairs(
+            new_docs, text_col=text_col, id_col=id_col,
+            n_hashes=n_hashes, n_bands=n_bands, threshold=threshold,
+        )
+        survivors = G.resolve_duplicates(new_docs, pairs, id_col=id_col)
+    # probe + anti-join + index append: one computation
+    sigs = persist(DD.minhash_banded_sigs(
         survivors, text_col=text_col, id_col=id_col,
         n_hashes=n_hashes, n_bands=n_bands,
-    ).persist()  # probe + anti-join + index append: one computation
-    matches = probe_minhash_index(
+    ))
+    matches = persist(probe_minhash_index(
         sigs, spark, index_path, threshold=threshold, n_hashes=n_hashes,
         exclude_run_id=run_id,
-    ).persist()
+    ))
     dup_ids = matches.select(F.col("doc_id").alias(id_col)).distinct()
     novel = survivors.join(dup_ids, id_col, "left_anti").observe(
         "incremental_near_dup_novel", F.count(F.lit(1)).alias("novel_docs")
@@ -567,10 +563,9 @@ def incremental_near_dup(
         dup_ids.select(F.col(id_col).alias("doc_id")), "doc_id", "left_anti"
     )
     if novel_sink is not None:
-        novel = DD._track_caches(novel.persist(), novel)
+        novel = persist(novel)
         novel_sink(novel)
     write_minhash_index(novel_sigs, index_path, mode=mode, run_id=run_id)
-    novel = DD._track_caches(novel, sigs, matches)
     return novel, matches
 
 
@@ -691,8 +686,8 @@ def near_dup_contamination(
     comparison, exactly as in the batch LSH operators.
     """
     from .dedup import (
+        _eval_once,
         _micro_threshold,
-        _verify_expr,
         estimated_jaccard,
         minhash_banded_sigs,
     )
@@ -722,7 +717,7 @@ def near_dup_contamination(
     return (
         cand.withColumn(
             "est_jaccard_micro",
-            _verify_expr(
+            _eval_once(
                 estimated_jaccard(F.col("mh"), F.col("mh_b"), n_hashes)
             ),
         )
@@ -1026,7 +1021,6 @@ def repeated_span_removal(
     # removed-span join — without the persist both re-run the per-
     # position gram md5 transform (the operator's heaviest map) from
     # the scan (r14 plan audit: 16 Exchanges, the gram subtree twice).
-    # Released via the _track_caches handle.
     grams = base.select(
         id_col,
         F.posexplode(
@@ -1039,7 +1033,8 @@ def repeated_span_removal(
                 ),
             ).otherwise(F.array().cast("array<string>"))
         ).alias("start", "g"),
-    ).persist()
+    )
+    grams = persist(grams)
     hot = (
         grams.select(id_col, "g")
         .distinct()
@@ -1081,18 +1076,13 @@ def repeated_span_removal(
         ).alias("clean_text"),
         F.count(F.lit(1)).alias("n_kept"),
     )
-    from .dedup import _track_caches
-
-    return _track_caches(
-        totals.join(rebuilt, id_col, "left").select(
-            id_col,
-            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
-            F.col("n_tokens").cast("int").alias("n_tokens"),
-            (F.col("n_tokens") - F.coalesce(F.col("n_kept"), F.lit(0)))
-            .cast("int")
-            .alias("n_removed"),
-        ),
-        grams,
+    return totals.join(rebuilt, id_col, "left").select(
+        id_col,
+        F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
+        F.col("n_tokens").cast("int").alias("n_tokens"),
+        (F.col("n_tokens") - F.coalesce(F.col("n_kept"), F.lit(0)))
+        .cast("int")
+        .alias("n_removed"),
     )
 
 

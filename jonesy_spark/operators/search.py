@@ -61,25 +61,18 @@ def bm25_search(
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("t"),
     ).filter(F.col("t") != "")
     # per-doc length over ALL tokens (BM25 normalizes by full doc
-    # length), plus the 1-row corpus aggregates. Cache strategy
+    # length), plus the 1-row corpus aggregates. Cache choice
     # (re-adjudicated r15 under cold-JVM timing, VERDICT r14 #3): lens
     # feeds the corpus aggregate AND the contribution join, tf feeds
     # the idf aggregate AND the contribution join. The r14 "lens+tf"
     # persists never won a cold-JVM round (bm25 row: all four arms
     # within 0.06 s; hybrid row: none 2.00 s mean vs lens+tf 2.21 —
-    # the persists were the driver-flagged hybrid regression), so the
-    # default is now "none": the re-run explodes are cheap per byte
-    # cached, and corpus-SCALE retrieval goes through the persisted
-    # inverted index (write_search_index / bm25_probe), not this
-    # ad-hoc operator — a cluster caller that does hammer this path
-    # flips the knob to "lens+tf" (2 corpus passes instead of 4).
-    # OPTIMIZATION_r15.md has the A/B table.
-    strategy = set(getattr(bm25_search, "_cache_strategy", "none").split("+"))
-    persisted = []
+    # the persists were the driver-flagged hybrid regression), so
+    # nothing is cached: the re-run explodes are cheap per byte cached,
+    # and corpus-SCALE retrieval goes through the persisted inverted
+    # index (write_search_index / bm25_probe), not this ad-hoc
+    # operator. OPTIMIZATION_r15.md has the A/B table.
     lens = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("len"))
-    if "lens" in strategy:
-        lens = lens.persist()
-        persisted.append(lens)
     corpus = lens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len")
     )
@@ -87,9 +80,6 @@ def bm25_search(
     # what keeps the aggregation input query-sized, not corpus-sized
     hits = toks.join(F.broadcast(qdf), "t")
     tf = hits.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("tf"))
-    if "tf" in strategy:
-        tf = tf.persist()
-        persisted.append(tf)
     df_t = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     idf = df_t.crossJoin(F.broadcast(corpus)).select(
         "t",
@@ -118,9 +108,7 @@ def bm25_search(
             ).alias("c"),
         )
     )
-    from .dedup import _track_caches
-
-    return _track_caches(
+    return (
         contrib.groupBy(id_col)
         .agg(
             (F.round(F.sum(F.col("c").cast("decimal(12,9)")), 6) * 1_000_000)
@@ -129,8 +117,7 @@ def bm25_search(
             F.count(F.lit(1)).cast("int").alias("n_hits"),
         )
         .orderBy(F.col("score_micro").desc(), F.col(id_col))
-        .limit(top_k),
-        *persisted,
+        .limit(top_k)
     )
 
 
@@ -463,10 +450,9 @@ def hybrid_search(
     else:
         qv = [round(c / nrm, 6) for c in comp]
 
-    bm0 = bm25_search(
+    bm = bm25_search(
         docs, terms, top_k=channel_n, text_col=text_col, id_col=id_col
-    )
-    bm = bm0.select(id_col, F.col("score_micro").alias("bm_score"))
+    ).select(id_col, F.col("score_micro").alias("bm_score"))
     w_bm = Window.orderBy(F.col("bm_score").desc(), F.col(id_col))
     bm_ranked = bm.select(
         id_col, F.row_number().over(w_bm).alias("bm25_rank")
@@ -505,11 +491,8 @@ def hybrid_search(
         .cast("long")
         .alias("rrf_score_nano"),
     )
-    from .dedup import carry_caches
-
-    return carry_caches(
+    return (
         fused.orderBy(F.col("rrf_score_nano").desc(), F.col(id_col))
         .limit(top_k)
-        .select(id_col, "rrf_score_nano", "bm25_rank", "dense_rank"),
-        bm0,
+        .select(id_col, "rrf_score_nano", "bm25_rank", "dense_rank")
     )

@@ -17,9 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, persist
 from ..functions import vectors as VX
 from ..functions.scalars import micro_units
-from .dedup import _micro_threshold
+from .dedup import _eval_once, _micro_threshold
 
 
 def _prepared(emb: DataFrame, n_partitions: int = 64) -> DataFrame:
@@ -252,23 +253,15 @@ def embedding_near_dup(
     the K ~ sqrt(n) default otherwise runs; it is only consulted when
     neither ``centroids`` nor ``n_centroids`` pins K explicitly.
     """
-    # Cache strategy, re-adjudicated r15 under the driver's cold-JVM
+    # Cache choice, re-adjudicated r15 under the driver's cold-JVM
     # methodology (VERDICT r14 #2): the r14 "e+assign" default also
     # persisted the prepared vector frame — a corpus-wide double-array
     # frame, exactly the memory-heavy / compute-light shape the
     # quantized-store A/B rejected (the repeated subtree is a scan +
     # cast + norm, cheap per byte cached), and the row regressed in
-    # both driver windows. Default is now assign-only; the knob follows
-    # the minhash pattern for re-tuning. OPTIMIZATION_r15.md has the
-    # cold-JVM A/B numbers.
-    strategy = set(
-        getattr(embedding_near_dup, "_cache_strategy", "assign").split("+")
-    )
-    persisted = []
+    # both driver windows. Only the assignments are cached now;
+    # OPTIMIZATION_r15.md has the cold-JVM A/B numbers.
     e = _prepared(emb)
-    if "e" in strategy:
-        e = e.persist()
-        persisted.append(e)
     if centroids is None and n_centroids is None:
         n_centroids = adaptive_centroids(
             n_docs if n_docs is not None else emb.count()
@@ -276,13 +269,10 @@ def embedding_near_dup(
     # The assignment subtree (K x n centroid scoring + top-probe
     # selection) feeds both self-join sides; persist it so it runs once
     # (measured 5.7 -> 3.9 s at sf0.1, same-session min-of-3). Rows are
-    # (vec_id, cid) x probes — narrow at any corpus size. The handle is
-    # released by the caller via dedup.release_caches, same contract as
-    # the LSH operators.
-    assign = ivf_assignments(e, n_centroids or 0, probes, centroids=centroids)
-    if "assign" in strategy:
-        assign = assign.persist()
-        persisted.append(assign)
+    # (vec_id, cid) x probes — narrow at any corpus size.
+    assign = persist(
+        ivf_assignments(e, n_centroids or 0, probes, centroids=centroids)
+    )
     a, b = assign.alias("a"), assign.alias("b")
     candidates = (
         a.join(
@@ -298,23 +288,20 @@ def embedding_near_dup(
     )
     va = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     vb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    from .dedup import _track_caches, _verify_expr
-
-    return _track_caches(
+    return (
         candidates.join(va, "vec_a")
         .join(vb, "vec_b")
         .select(
             "vec_a",
             "vec_b",
-            _verify_expr(
+            _eval_once(
                 micro_units(
                     VX.dot(F.col("va"), F.col("vb"))
                     / (F.col("na") * F.col("nb"))
                 )
             ).alias("cosine_micro"),
         )
-        .filter(F.col("cosine_micro") >= _micro_threshold(threshold)),
-        *persisted,
+        .filter(F.col("cosine_micro") >= _micro_threshold(threshold))
     )
 
 
@@ -343,10 +330,8 @@ def semantic_dedup(
     back to the corpus; raise ``n_bucket_dims`` with the corpus so
     per-cell populations stay bounded (2^d cells).
     """
-    e = (
-        _prepared(emb)
-        .withColumn("cell", VX.sign_bucket(F.col("v"), n_bucket_dims))
-        .persist()
+    e = persist(
+        _prepared(emb).withColumn("cell", VX.sign_bucket(F.col("v"), n_bucket_dims))
     )
     a = e.select("vec_id", "cell", F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = e.select(
@@ -372,9 +357,7 @@ def semantic_dedup(
         .groupBy("vec_id")
         .agg(F.min("vec_b").alias("hit_by"))
     )
-    from .dedup import _track_caches
-
-    return _track_caches(
+    return (
         e.select("vec_id", "cell")
         .join(hits, "vec_id", "left")
         .select(
@@ -384,8 +367,7 @@ def semantic_dedup(
             F.coalesce(F.col("hit_by"), F.lit(-1))
             .cast("long")
             .alias("pruned_by"),
-        ),
-        e,
+        )
     )
 
 
@@ -635,13 +617,11 @@ def probe_ivf_index(
             F.col("nrm").alias("inrm"),
             "cid",
         )
-    from .dedup import _verify_expr
-
     return _observed(
         probe.join(idx, "cid")
         .withColumn(
             "cosine_micro",
-            _verify_expr(
+            _eval_once(
                 micro_units(
                     VX.dot(F.col("v"), F.col("iv"))
                     / (F.col("nrm") * F.col("inrm"))
@@ -683,30 +663,30 @@ def incremental_embedding_dedup(
     the two writes replays into an identical recompute rather than a
     self-matched empty batch.
     """
-    from .dedup import _track_caches, release_caches
     from .graph import resolve_duplicates
 
-    pairs = embedding_near_dup(new_emb, threshold=threshold)
-    survivors = resolve_duplicates(
-        new_emb, pairs, id_col="vec_id", src="vec_a", dst="vec_b"
-    )
-    release_caches(pairs)
+    # the pair search's caches are dead once connected components has
+    # checkpointed the pair graph
+    with cache_scope(keep_checkpoints=True):
+        pairs = embedding_near_dup(new_emb, threshold=threshold)
+        survivors = resolve_duplicates(
+            new_emb, pairs, id_col="vec_id", src="vec_a", dst="vec_b"
+        )
     # persist, not checkpoint: multi-consumer subtrees keep their
     # lineage so a lost executor recomputes instead of killing the job
-    # (SCALE.md "Cache lifecycle"); release via the handles on ``novel``
-    matches = probe_ivf_index(
+    # (SCALE.md "Cache lifecycle"); released with the caller's scope
+    matches = persist(probe_ivf_index(
         survivors, spark, index_path, threshold=threshold, probes=probes,
         exclude_run_id=run_id,
-    ).persist()
+    ))
     dup_ids = matches.select("vec_id").distinct()
     novel = survivors.join(dup_ids, "vec_id", "left_anti").observe(
         "incremental_embedding_novel", F.count(F.lit(1)).alias("novel_vecs")
     )
     if novel_sink is not None:
-        novel = _track_caches(novel.persist(), novel)
+        novel = persist(novel)
         novel_sink(novel)
     write_ivf_index(novel, index_path, run_id=run_id, mode=mode)
-    novel = _track_caches(novel, matches)
     return novel, matches
 
 
@@ -765,8 +745,8 @@ def rebuild_ivf_index(
             VX.dequantize_int8(F.col("qv")).alias("v"),
             F.col("nrm").cast("double").alias("nrm"),
         )
-    vectors = idx.select("vec_id", "v", "nrm").dropDuplicates(["vec_id"]).persist()
-    try:
+    with cache_scope():
+        vectors = persist(idx.select("vec_id", "v", "nrm").dropDuplicates(["vec_id"]))
         n = vectors.count()
         if n == 0:
             raise ValueError(
@@ -809,8 +789,6 @@ def rebuild_ivf_index(
             .partitionBy("cid")
             .parquet(f"{new_root}/assignments/ingest_batch={run_id}")
         )
-    finally:
-        vectors.unpersist()
     # everything durable -> atomic publish (single file create)
     fs.create(Path(f"{new_root}/_COMMITTED")).close()
     return new_version
@@ -1185,22 +1163,17 @@ def pq_topk(
     touches ``n_queries * overfetch * k`` rows. Pass precomputed
     ``codebooks``/``codes`` (the persisted-store path) to skip
     training and encoding."""
-    from .dedup import _track_caches
-
     # ONE persisted _prepared frame shared by codebook training, the
     # encode pass, the query side, the IVF branch and the float
     # re-rank (r14: five separate _prepared subtrees each re-ran the
     # scan + as_double + norm; the codebook sample's bounded collect
     # is the eager job that populates the cache for every later
-    # consumer). Released via the _track_caches handle. r15: the
+    # consumer). r15: the
     # embedding_near_dup re-adjudication dropped the SAME vector-frame
     # shape there, so this persist was cold-JVM A/B'd too ("prep" vs
     # "none") — here it SURVIVED: five consumers and the mid-build
-    # collect make the cache pay (OPTIMIZATION_r15.md has the table);
-    # knob kept for re-tuning.
-    prep = _prepared(emb)
-    if getattr(pq_topk, "_cache_strategy", "prep") == "prep":
-        prep = prep.persist()
+    # collect make the cache pay (OPTIMIZATION_r15.md has the table).
+    prep = persist(_prepared(emb))
     if codebooks is None:
         codebooks = pq_codebooks(emb, m=m, k=n_codes, prepared=prep)
     if codes is None:
@@ -1212,7 +1185,6 @@ def pq_topk(
         # mirror pq_encode's empty-frame guard: no vectors means no
         # queries and no candidates — an empty result, not a NoneType
         # subscript
-        prep.unpersist()
         return emb.sparkSession.createDataFrame(
             [], "query_id long, vec_id long, cosine_micro long, rank int"
         )
@@ -1302,7 +1274,7 @@ def pq_topk(
     if not rerank:
         # approximate scores straight from ADC (unit vectors):
         # cos = 1 - d2/2
-        return _track_caches(
+        return (
             adc.join(F.broadcast(cand), ["query_id", "vec_id"])
             .select(
                 "query_id",
@@ -1316,8 +1288,7 @@ def pq_topk(
                         F.col("cosine_micro").desc(), F.col("vec_id")
                     )
                 ),
-            ),
-            prep,
+            )
         )
     # the float re-rank side reads the SAME persisted frame (fv == v,
     # fn == nrm by construction — as_double then norm)
@@ -1328,7 +1299,7 @@ def pq_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_micro").desc(), F.col("vec_id")
     )
-    return _track_caches(
+    return (
         fl.join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(qf.filter(F.col("query_id") < n_queries)), "query_id")
         .withColumn(
@@ -1339,8 +1310,7 @@ def pq_topk(
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine_micro", "rank"),
-        prep,
+        .select("query_id", "vec_id", "cosine_micro", "rank")
     )
 
 

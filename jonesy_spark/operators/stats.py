@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import persist
 from ..functions.scalars import micro_units
 
 from ..functions import text as TX
@@ -1306,8 +1307,8 @@ def kmv_overlap_report(
     # no-persist 1.65 s vs eager 1.10 s ≈ no-persist 1.08 s); the
     # eager count costs one extra tiny job (<= G x k rows by the KMV
     # contract) and at corpus scale replaces four upstream scans with
-    # one. Released via the _track_caches handle.
-    sketches = sketches.persist()
+    # one.
+    sketches = persist(sketches)
     sketches.count()
     keys = sketches.select("key").distinct()
     pairs = (
@@ -1342,18 +1343,11 @@ def kmv_overlap_report(
     est_union = F.when(F.col("n_kept") < k, F.col("n_kept")).otherwise(
         F.expr(f"CAST({numer} DIV kth_hash AS BIGINT)")
     )
-    from .dedup import _track_caches
-
-    return _track_caches(
-        agg.withColumn("est_union", est_union).withColumn(
-            "est_intersection",
-            F.when(F.col("n_kept") < k, F.col("n_common")).otherwise(
-                F.expr(
-                    "CAST(est_union * n_common DIV " + str(k) + " AS BIGINT)"
-                )
-            ),
+    return agg.withColumn("est_union", est_union).withColumn(
+        "est_intersection",
+        F.when(F.col("n_kept") < k, F.col("n_common")).otherwise(
+            F.expr("CAST(est_union * n_common DIV " + str(k) + " AS BIGINT)")
         ),
-        sketches,
     )
 
 

@@ -68,6 +68,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, checkpoint, persist
 from ..functions.scalars import micro_units
 
 from ..functions.text import PRETOKEN_PATTERN
@@ -316,16 +317,15 @@ def bpe_train_distributed(
     :func:`bpe_train` — the two trainers are merge-for-merge identical
     on any corpus whose word table survives the cap (tested).
     """
-    state = (
-        word_counts(docs, text_col)
-        .filter(F.col("count") >= min_count)
-        .select(F.split("word", "").alias("syms"), "count")
-        .repartition(CPU_PARTITIONS)
-        .persist()
-    )
     merges: list[tuple[int, str, str, str, int]] = []
     rounds = 0
-    try:
+    with cache_scope():
+        state = persist(
+            word_counts(docs, text_col)
+            .filter(F.col("count") >= min_count)
+            .select(F.split("word", "").alias("syms"), "count")
+            .repartition(CPU_PARTITIONS)
+        )
         while len(merges) < n_merges:
             rounds += 1
             # pair stream built map-side from an indexed transform; the
@@ -365,14 +365,14 @@ def bpe_train_distributed(
                 syms = _apply_merge_col(syms, a, b)
             nxt = state.select(syms.alias("syms"), "count")
             if rounds % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint()
-            nxt = nxt.persist()
+                nxt = checkpoint(nxt)
+            nxt = persist(nxt)
+            # drop the superseded round's cache; a checkpoint stays
+            # until the scope closes, since the still-lazy nxt reads it
             state.unpersist()
             state = nxt
             if floored:
                 break
-    finally:
-        state.unpersist()
     out = docs.sparkSession.createDataFrame(merges, MERGES_SCHEMA)
     out._jonesy_train_rounds = rounds  # observability for tests/SCALE.md
     return out

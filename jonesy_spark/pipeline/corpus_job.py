@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, checkpoint, persist
 from ..operators import corpus as C
 from ..operators import dedup as DD
 from ..operators.dedup import _micro_threshold
@@ -135,7 +136,9 @@ def prepare_training_corpus(
     frames (all lazy — callers materialize what they need):
     ``clean`` (gated docs), ``split`` (doc_id -> train/val/test),
     ``packed`` (doc -> sequence assignment), ``sequences`` (assembled
-    training text, train split only)."""
+    training text, train split only). The frames read checkpoints
+    registered in the caller's cache scope: materialize them inside
+    it."""
     cfg = cfg or CorpusConfig()
 
     # 1. exact dedup: keep each content digest's min-id representative.
@@ -244,13 +247,13 @@ def prepare_training_corpus(
             * (1.0 - F.least(F.lit(1.0), c_stop / n_tokens)),
             6,
         )
-        kept = C.token_budget_prune(docs, cfg.token_budget, quality)
         # the stage is already eager (the prune's offset collect);
-        # localCheckpoint the id set so the operator's persisted range
-        # frame can release NOW instead of leaking into the lazy
-        # downstream (the cache-manager-empty contract, r5)
-        kept_ids = kept.select("doc_id").localCheckpoint()
-        DD.release_caches(kept)
+        # checkpoint the id set so the operator's persisted range frame
+        # is released NOW instead of leaking into the lazy downstream
+        # (the cache-manager-empty contract, r5)
+        with cache_scope(keep_checkpoints=True):
+            kept = C.token_budget_prune(docs, cfg.token_budget, quality)
+            kept_ids = checkpoint(kept.select("doc_id"))
         docs = docs.join(kept_ids, "doc_id", "left_semi")
 
     # 4. near-dup dedup at CLUSTER level: pair-wise drop-the-higher-id
@@ -260,38 +263,38 @@ def prepare_training_corpus(
     # connected_components checkpoints the canonical pair graph up
     # front, so every downstream consumer (the anti-join under all four
     # returned frames, however many times they materialize) reads the
-    # checkpointed star forest, never the LSH subtree — and the
-    # operator's internal sketch caches can be released immediately.
-    pairs = DD.minhash_lsh_pairs(docs, threshold=cfg.near_dup_threshold)
-    if cfg.survivor_policy == "quality":
-        # Keep the best-quality member of each cluster instead of the
-        # min id — the keep-the-best-copy policy. The score must be
-        # pre-rounded (engine-stable ordering); same composite as the
-        # quality gate.
-        from ..functions import text as TX
+    # checkpointed star forest, never the LSH subtree — so the
+    # operator's internal sketch caches are released at build time.
+    with cache_scope(keep_checkpoints=True):
+        pairs = DD.minhash_lsh_pairs(docs, threshold=cfg.near_dup_threshold)
+        if cfg.survivor_policy == "quality":
+            # Keep the best-quality member of each cluster instead of the
+            # min id — the keep-the-best-copy policy. The score must be
+            # pre-rounded (engine-stable ordering); same composite as the
+            # quality gate.
+            from ..functions import text as TX
 
-        n_tokens = TX.whitespace_token_count(F.col("text"))
-        c_stop = TX.occurrences(F.lower(F.col("text")), "the")
-        q = F.round(
-            F.least(F.lit(1.0), n_tokens / 100.0)
-            * (1.0 - F.least(F.lit(1.0), c_stop / n_tokens)),
-            6,
-        )
-        assign = G.survivor_assignments(
-            docs.select("doc_id", q.alias("quality")), pairs, "quality"
-        )
-        survivors = assign.filter(
-            F.col("doc_id") == F.col("survivor_id")
-        ).select("doc_id")
-        docs = docs.join(survivors, "doc_id", "left_semi")
-    elif cfg.survivor_policy == "min_id":
-        docs = G.resolve_duplicates(docs, pairs)
-    else:
-        raise ValueError(
-            f"unknown survivor_policy {cfg.survivor_policy!r}; "
-            "expected 'min_id' or 'quality'"
-        )
-    DD.release_caches(pairs)
+            n_tokens = TX.whitespace_token_count(F.col("text"))
+            c_stop = TX.occurrences(F.lower(F.col("text")), "the")
+            q = F.round(
+                F.least(F.lit(1.0), n_tokens / 100.0)
+                * (1.0 - F.least(F.lit(1.0), c_stop / n_tokens)),
+                6,
+            )
+            assign = G.survivor_assignments(
+                docs.select("doc_id", q.alias("quality")), pairs, "quality"
+            )
+            survivors = assign.filter(
+                F.col("doc_id") == F.col("survivor_id")
+            ).select("doc_id")
+            docs = docs.join(survivors, "doc_id", "left_semi")
+        elif cfg.survivor_policy == "min_id":
+            docs = G.resolve_duplicates(docs, pairs)
+        else:
+            raise ValueError(
+                f"unknown survivor_policy {cfg.survivor_policy!r}; "
+                "expected 'min_id' or 'quality'"
+            )
 
     # 4.5 semantic near-dup (opt-in): hash-embed the lexical
     # survivors, pair by embedding cosine (IVF-blocked), collapse
@@ -305,14 +308,11 @@ def prepare_training_corpus(
             "embedding",
             F.lit("d").alias("label"),
         )
-        sem_raw = SIM.embedding_near_dup(
-            emb, threshold=cfg.semantic_dedup_threshold
-        )  # cache handles ride THIS frame (release below)
-        sem_pairs = sem_raw.select(
-            F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-        )
-        docs = G.resolve_duplicates(docs, sem_pairs)
-        DD.release_caches(sem_raw)
+        with cache_scope(keep_checkpoints=True):
+            sem_pairs = SIM.embedding_near_dup(
+                emb, threshold=cfg.semantic_dedup_threshold
+            ).select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
+            docs = G.resolve_duplicates(docs, sem_pairs)
 
     # 5. mixture sampling (default keeps everything). Explicit rates
     # win; otherwise a temperature knob rebalances domains with
@@ -345,14 +345,14 @@ def prepare_training_corpus(
     # follows its document into one split.
     split_base = clean.dropDuplicates(["doc_id"]) if pack_id != "doc_id" else clean
     if cfg.split_cluster_threshold is not None:
-        split_pairs = DD.minhash_lsh_pairs(
-            split_base, threshold=cfg.split_cluster_threshold
-        )
-        comps = G.connected_components(split_pairs).select(
-            F.col("node").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-        )
-        DD.release_caches(split_pairs)
+        with cache_scope(keep_checkpoints=True):
+            split_pairs = DD.minhash_lsh_pairs(
+                split_base, threshold=cfg.split_cluster_threshold
+            )
+            comps = G.connected_components(split_pairs).select(
+                F.col("node").alias("doc_id"),
+                F.col("component").alias("cluster_id"),
+            )
         split = C.cluster_keyed_split(
             split_base, comps, salt=cfg.salt, train_frac=0.75, val_frac=0.125
         ).select("doc_id", "split")
@@ -475,14 +475,14 @@ def prepare_corpus_from_jsonl(
     report = ingest_jsonl_corpus(spark, src_path, docs_path)
     docs = spark.read.parquet(docs_path)
 
-    out = prepare_training_corpus(docs, cfg)
-    # The two output frames share the full expensive upstream (LSH +
-    # connected components, whose internal caches release at build
-    # time): persist the shared subtrees so the second write and the
-    # count pass don't recompute the near-dup stages end-to-end.
-    out["clean"].persist()
-    out["split"].persist()
-    try:
+    with cache_scope():
+        out = prepare_training_corpus(docs, cfg)
+        # The two output frames share the full expensive upstream (LSH
+        # + connected components): persist the shared subtrees so the
+        # second write and the count pass don't recompute the near-dup
+        # stages end-to-end.
+        persist(out["clean"])
+        persist(out["split"])
         paths = {}
         for key in ("split", "sequences"):
             paths[key] = f"{workdir}/corpus/{key}"
@@ -494,9 +494,6 @@ def prepare_corpus_from_jsonl(
         counts = {
             key: spark.read.parquet(path).count() for key, path in paths.items()
         }
-    finally:
-        out["clean"].unpersist()
-        out["split"].unpersist()
     manifest = write_corpus_manifest(
         spark, workdir, cfg or CorpusConfig(), report, stats_run, counts
     )
@@ -552,10 +549,10 @@ def prepare_corpus_from_crawl(
     docs = spark.read.parquet(f"{workdir}/documents")
     n_documents = docs.count()
 
-    out = prepare_training_corpus(docs, cfg)
-    out["clean"].persist()
-    out["split"].persist()
-    try:
+    with cache_scope():
+        out = prepare_training_corpus(docs, cfg)
+        persist(out["clean"])
+        persist(out["split"])
         paths = {}
         for key in ("split", "sequences"):
             paths[key] = f"{workdir}/corpus/{key}"
@@ -566,9 +563,6 @@ def prepare_corpus_from_crawl(
             "n_split": spark.read.parquet(paths["split"]).count(),
             "n_sequences": spark.read.parquet(paths["sequences"]).count(),
         }
-    finally:
-        out["clean"].unpersist()
-        out["split"].unpersist()
     manifest = write_json_manifest(
         spark,
         f"{workdir}/_MANIFEST.json",

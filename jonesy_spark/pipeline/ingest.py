@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import cache_scope, persist
+
 #: Name of the PERMISSIVE-mode corrupt-record column. Leading underscore
 #: keeps it out of anyone's business schema.
 CORRUPT_COL = "_corrupt_record"
@@ -177,8 +179,8 @@ def ingest_jsonl_corpus(
     actually catches them. Normalize at the front door, once; the
     quarantine keeps the raw bytes untouched as evidence.
     """
-    parsed = read_jsonl_corpus(spark, src_path, schema).persist()
-    try:
+    with cache_scope():
+        parsed = persist(read_jsonl_corpus(spark, src_path, schema))
         clean, quarantine = split_quarantine(parsed, required)
         if normalize:
             from ..functions.text import nfc_normalize, strip_control_chars
@@ -214,5 +216,3 @@ def ingest_jsonl_corpus(
             clean_path=dest_path,
             quarantine_path=quarantine_path,
         )
-    finally:
-        parsed.unpersist()

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, persist
 from ..operators.hygiene import GOPHER_GATE_RULES
 
 #: The gate's rule columns, in report order — re-exported from the
@@ -55,75 +56,38 @@ def intake_batch(
     from ..operators import hygiene as H
     from . import warc as W
 
-    recs = W.warc_records_quarantined(raw).persist()
-    try:
+    with cache_scope():
+        recs = persist(W.warc_records_quarantined(raw))
         clean, quarantine = W.split_warc_records(recs, normalize=True)
         extracted = clean.select(
             "doc_id",
             TX.strip_html(F.col("text")).alias("text"),
             *_PROVENANCE[1:],
         )
-        gated = H.gopher_quality_gate(
-            extracted, passthrough=_PROVENANCE
-        ).persist()
-        try:
-            kept = gated.filter(F.col("keep")).select(
-                "doc_id", *_PROVENANCE
-            )
-            seen = H.read_digest_index(
-                spark, index_path, exclude_run_id=run_id
-            )
-            novel, _ = H.incremental_dedup(
-                kept, seen, small_batch=small_batch
-            )
-            novel = novel.persist()
-            try:
-                novel.write.mode("overwrite").parquet(
-                    f"{docs_root}/ingest_batch={run_id}"
-                )
-                H.write_novel_digests(
-                    novel, index_path, mode="overwrite", run_id=run_id
-                )
-                quarantine = quarantine.persist()
-                try:
-                    quarantine.write.mode("overwrite").parquet(
-                        f"{quarantine_root}/ingest_batch={run_id}"
-                    )
-                    n_quarantined = quarantine.count()
-                finally:
-                    quarantine.unpersist()
-                stats = gated.agg(
-                    F.count(F.lit(1)).alias("n_extracted"),
-                    F.coalesce(
-                        F.sum(F.col("keep").cast("long")), F.lit(0)
-                    ).alias("n_kept"),
-                    *[
-                        F.coalesce(
-                            F.sum((~F.col(r)).cast("long")), F.lit(0)
-                        ).alias(f"rej_{r}")
-                        for r in GATE_RULES
-                    ],
-                ).collect()[0]
-                counts = {
-                    "n_quarantined": int(n_quarantined),
-                    "n_extracted": int(stats["n_extracted"]),
-                    "n_kept": int(stats["n_kept"]),
-                    **{
-                        f"rej_{r}": int(stats[f"rej_{r}"])
-                        for r in GATE_RULES
-                    },
-                    "n_novel": int(novel.count()),
-                }
-            finally:
-                novel.unpersist()
-                if small_batch:
-                    # small_batch=True persists the batch digest frame
-                    # (compute-once across broadcast + anti-join sides)
-                    from ..operators.dedup import release_caches
-
-                    release_caches(novel)
-        finally:
-            gated.unpersist()
-    finally:
-        recs.unpersist()
-    return counts
+        gated = persist(H.gopher_quality_gate(extracted, passthrough=_PROVENANCE))
+        kept = gated.filter(F.col("keep")).select("doc_id", *_PROVENANCE)
+        seen = H.read_digest_index(spark, index_path, exclude_run_id=run_id)
+        novel, _ = H.incremental_dedup(kept, seen, small_batch=small_batch)
+        novel = persist(novel)
+        novel.write.mode("overwrite").parquet(f"{docs_root}/ingest_batch={run_id}")
+        H.write_novel_digests(novel, index_path, mode="overwrite", run_id=run_id)
+        quarantine = persist(quarantine)
+        quarantine.write.mode("overwrite").parquet(
+            f"{quarantine_root}/ingest_batch={run_id}"
+        )
+        n_quarantined = quarantine.count()
+        stats = gated.agg(
+            F.count(F.lit(1)).alias("n_extracted"),
+            F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("n_kept"),
+            *[
+                F.coalesce(F.sum((~F.col(r)).cast("long")), F.lit(0)).alias(f"rej_{r}")
+                for r in GATE_RULES
+            ],
+        ).collect()[0]
+        return {
+            "n_quarantined": int(n_quarantined),
+            "n_extracted": int(stats["n_extracted"]),
+            "n_kept": int(stats["n_kept"]),
+            **{f"rej_{r}": int(stats[f"rej_{r}"]) for r in GATE_RULES},
+            "n_novel": int(novel.count()),
+        }

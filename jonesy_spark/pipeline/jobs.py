@@ -30,6 +30,7 @@ from datetime import date
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope
 from ..catalog import Catalog
 from ..plans import all_queries
 from .sinks import MultiTargetSink, daily_prefix, write_gzip_csv
@@ -514,8 +515,12 @@ JOBS: dict[str, Callable[[JobContext], None]] = {
 
 def run_job(name: str, ctx: JobContext) -> JobContext:
     """Dispatch by job name; unknown names abort — mirrors the JOB env
-    var dispatch (``jonesy.py:13-16``, ``jobs.py:28-65``)."""
+    var dispatch (``jonesy.py:13-16``, ``jobs.py:28-65``). A job owns
+    one cache scope: whatever it persists or checkpoints is released
+    when it returns, like the reference job's connections and spill
+    files."""
     if name not in JOBS:
         raise SystemExit(f"unknown or missing job {name!r}; known: {sorted(JOBS)}")
-    JOBS[name](ctx)
+    with cache_scope():
+        JOBS[name](ctx)
     return ctx

@@ -399,6 +399,8 @@ def ingest_warc_corpus(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from ..caching import cache_scope, persist
+
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", pattern)
@@ -408,8 +410,8 @@ def ingest_warc_corpus(
             F.col("content").alias("payload"),
         )
     )
-    recs = warc_records_quarantined(raw).persist()
-    try:
+    with cache_scope():
+        recs = persist(warc_records_quarantined(raw))
         quarantine_path = os.path.join(dest_path, "_quarantine")
         clean, quarantine = split_warc_records(recs, normalize=normalize)
 
@@ -434,5 +436,3 @@ def ingest_warc_corpus(
             clean_path=dest_path,
             quarantine_path=quarantine_path,
         )
-    finally:
-        recs.unpersist()

@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, checkpoint, persist
 from ..catalog import Catalog, spread
 from ..functions import scalars as SC
 from ..functions import text as TX
@@ -1030,8 +1031,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("token") != "")
     # Persisted: tf feeds the df aggregation AND the scoring join —
     # without the persist both re-run the explode from the scan (r14).
-    # Released by the bench/driver release_caches hook.
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")).persist()
+    tf = persist(tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
     df_ = tf.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n"))
     scored = (
@@ -1048,10 +1048,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(
         F.col("salience_micro").desc(), F.col("token")
     )
-    return DD._track_caches(
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3),
-        tf,
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= 3
     )
 
 
@@ -1491,13 +1489,10 @@ def image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         fake=False,
         pair_density_limit=2_000_000_000,
     )
-    return DD.carry_caches(
-        pairs.select(
-            "doc_id",
-            "dup_doc_id",
-            F.col("hamming").cast("long").alias("hamming"),
-        ),
-        pairs,
+    return pairs.select(
+        "doc_id",
+        "dup_doc_id",
+        F.col("hamming").cast("long").alias("hamming"),
     )
 
 
@@ -1561,13 +1556,10 @@ def audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         fake=False,
         pair_density_limit=2_000_000_000,
     )
-    return DD.carry_caches(
-        pairs.select(
-            "doc_id",
-            "dup_doc_id",
-            F.col("hamming").cast("long").alias("hamming"),
-        ),
-        pairs,
+    return pairs.select(
+        "doc_id",
+        "dup_doc_id",
+        F.col("hamming").cast("long").alias("hamming"),
     )
 
 
@@ -2263,9 +2255,7 @@ def token_budget_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (1.0 - F.least(F.lit(1.0), c_stop / n_tokens))
     )
     out = C.token_budget_prune(docs, budget_tokens=15_000, quality=quality)
-    return DD.carry_caches(
-        out.withColumnRenamed("quality", "quality_micro"), out
-    )
+    return out.withColumnRenamed("quality", "quality_micro")
 
 
 def _pii_oracle() -> str:
@@ -2363,7 +2353,10 @@ def pii_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: survives spark.catalog.clearCache(), which is the point — consumers
 #: of the GRAPH (dedup_clusters, corpus-style pipelines) must not pay
 #: or re-time the LSH computation the dedup_minhash_lsh row already
-#: witnesses.
+#: witnesses. Deliberate cross-row state: the checkpoint is the
+#: package's one raw ``localCheckpoint()``, owned by the session, not
+#: by any cache scope (a row scope releasing it would break the next
+#: consumer row with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
 _PAIR_GRAPH_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -2372,15 +2365,16 @@ def _shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir) and localCheckpoint-ed. ``dedup_minhash_lsh`` itself always
     computes fresh — it is the timing and correctness witness for the
     pair computation; graph consumers reuse. The operator's internal
-    sketch caches are released once the checkpoint holds the pairs."""
+    sketch caches live in an inner scope that closes once the
+    checkpoint holds the pairs."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PAIR_GRAPH_MEMO:
-        pairs = DD.minhash_lsh_pairs(
-            Catalog(spark, sf_dir).documents, n_hashes=16, n_bands=2, threshold=0.8
-        )
-        cp = pairs.localCheckpoint()
-        DD.release_caches(pairs)
-        _PAIR_GRAPH_MEMO[key] = cp
+        with cache_scope():
+            pairs = DD.minhash_lsh_pairs(
+                Catalog(spark, sf_dir).documents,
+                n_hashes=16, n_bands=2, threshold=0.8,
+            )
+            _PAIR_GRAPH_MEMO[key] = pairs.localCheckpoint()
     return _PAIR_GRAPH_MEMO[key]
 
 
@@ -2691,7 +2685,6 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights; the unseen-bucket fallback path keeps its pytest pin.
     operators.classify has the broadcast-model scale notes."""
     from ..operators import classify as CL
-    from ..operators.dedup import _track_caches
 
     docs = Catalog(spark, sf_dir).documents
     # Shared-token_buckets arm (r15, VERDICT r14 #7): train and score
@@ -2702,18 +2695,11 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared 2.49-4.85 (wild, mean 3.90), shared+eager mean 4.15;
     # colds 15.9 / 16.1 / 16.9 — the persist of the (doc, bucket, tf)
     # frame costs more than the recompute at every measured point and
-    # destabilizes the row. Default stays "unshared"; the `tf=`
-    # parameter remains for pipelines that already hold a prepared
-    # frame (OPTIMIZATION_r15.md has the table).
-    strategy = getattr(quality_classifier, "_tf_strategy", "unshared")
-    if strategy == "unshared":
-        model = CL.train_log_odds(docs, F.col("lang") == "en")
-        return CL.score_log_odds(docs, model)
-    tf = CL.token_buckets(docs).persist()
-    if strategy == "shared+eager":
-        tf.count()
-    model = CL.train_log_odds(docs, F.col("lang") == "en", tf=tf)
-    return _track_caches(CL.score_log_odds(docs, model, tf=tf), tf)
+    # destabilizes the row, so train and score stay unshared; the
+    # `tf=` parameter remains for pipelines that already hold a
+    # prepared frame (OPTIMIZATION_r15.md has the table).
+    model = CL.train_log_odds(docs, F.col("lang") == "en")
+    return CL.score_log_odds(docs, model)
 
 
 @query(
@@ -4016,15 +4002,13 @@ def link_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iteration loop (assume_distinct) and the out-degree column read
     # the materialized edge list instead of re-scanning events twice
     # (r11 review finding)
-    edges = (
+    edges = checkpoint(
         ev.select(
             (F.col("user_id") % 499).alias("src"),
             (
                 ((F.col("event_id") * F.lit(2654435761)) % 2147483647) % 499
             ).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct()
     )
     ranks = G.pagerank(
         edges, damping=0.85, max_iter=6, tol=0.0, assume_distinct=True
@@ -4605,12 +4589,14 @@ def link_authority_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # linkers x {1..7}: distinct by construction, checkpointed so the
     # iteration loop and the out-degree column read one materialized
     # edge list (the link_authority rule)
-    edges = linkers.select(
-        "src",
-        F.explode(
-            F.sequence(F.lit(1).cast("long"), F.lit(7).cast("long"))
-        ).alias("dst"),
-    ).localCheckpoint()
+    edges = checkpoint(
+        linkers.select(
+            "src",
+            F.explode(
+                F.sequence(F.lit(1).cast("long"), F.lit(7).cast("long"))
+            ).alias("dst"),
+        )
+    )
     ranks = G.pagerank(
         edges, damping=0.85, max_iter=60, tol=1e-9, assume_distinct=True
     )

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import cache_scope, persist
+
 #: events.parquet PHYSICAL schema as generated by the nanos-era fixtures
 #: (``ts`` as INT64 nanos). NOT the logical post-normalization schema —
 #: after :func:`events_stream` / ``Catalog`` normalize, ``ts`` is a
@@ -44,6 +46,20 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
+
+
+def _scoped(handle):
+    """Run a ``foreachBatch`` handler in its own cache scope, so what
+    the batch's operators persist or checkpoint is released when the
+    handler returns. py4j callback threads start with a fresh context:
+    without the scope they would register into the process-wide
+    root."""
+
+    def run(batch_df, epoch_id: int) -> None:
+        with cache_scope():
+            handle(batch_df, epoch_id)
+
+    return run
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,9 +323,7 @@ def run_foreach_batch_fanout(
     """foreachBatch sink: each micro-batch is handed to the batch sink
     (gzip CSV + multi-target upload) with its epoch id — the
     exactly-once pattern for object stores."""
-    q = df.writeStream.foreachBatch(
-        lambda batch_df, epoch_id: emit(batch_df, epoch_id)
-    ).start()
+    q = df.writeStream.foreachBatch(_scoped(emit)).start()
     q.processAllAvailable()
     q.stop()
 
@@ -357,28 +371,26 @@ def run_jsonl_ingest_stream(
         .json(src_path)
     )
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         # persist: the two sinks share one parse of the raw bytes
-        batch_df = batch_df.persist()
-        try:
-            clean, quarantine = I.split_quarantine(batch_df, required)
-            clean.write.mode("overwrite").parquet(
-                f"{dest_path}/ingest_batch=epoch-{epoch_id}"
-            )
-            quarantine.write.mode("overwrite").parquet(
-                f"{dest_path}/_quarantine/ingest_batch=epoch-{epoch_id}"
-            )
-            if stats_index_path is not None:
-                from ..operators import stats as ST
+        batch_df = persist(batch_df)
+        clean, quarantine = I.split_quarantine(batch_df, required)
+        clean.write.mode("overwrite").parquet(
+            f"{dest_path}/ingest_batch=epoch-{epoch_id}"
+        )
+        quarantine.write.mode("overwrite").parquet(
+            f"{dest_path}/_quarantine/ingest_batch=epoch-{epoch_id}"
+        )
+        if stats_index_path is not None:
+            from ..operators import stats as ST
 
-                ST.write_stats_index(
-                    ST.profile_batch(clean),
-                    stats_index_path,
-                    mode="overwrite",
-                    run_id=f"epoch-{epoch_id}",
-                )
-        finally:
-            batch_df.unpersist()
+            ST.write_stats_index(
+                ST.profile_batch(clean),
+                stats_index_path,
+                mode="overwrite",
+                run_id=f"epoch-{epoch_id}",
+            )
 
     q = (
         raw.writeStream.foreachBatch(handle)
@@ -421,6 +433,7 @@ def run_incremental_dedup_stream(
     """
     from ..operators import hygiene as H
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         seen = H.read_digest_index(
@@ -431,23 +444,14 @@ def run_incremental_dedup_stream(
         # 15-minute epoch would dwarf the batch cost)
         novel, _ = H.incremental_dedup(batch_df, seen, small_batch=True)
         # persist, not checkpoint: two sinks share one computation, and
-        # lineage survives executor loss (SCALE.md "Cache lifecycle");
-        # the handler is the terminal scope, so it releases before return
-        novel = novel.persist()
-        try:
-            novel.write.mode("overwrite").parquet(
-                f"{novel_path}/ingest_batch={epoch_id}"
-            )
-            H.write_novel_digests(
-                novel, index_path, mode="overwrite", run_id=f"epoch-{epoch_id}"
-            )
-        finally:
-            novel.unpersist()
-            # small_batch=True persists the batch digest frame too
-            # (compute-once across its broadcast + anti-join sides)
-            from ..operators.dedup import release_caches
-
-            release_caches(novel)
+        # lineage survives executor loss (SCALE.md "Cache lifecycle")
+        novel = persist(novel)
+        novel.write.mode("overwrite").parquet(
+            f"{novel_path}/ingest_batch={epoch_id}"
+        )
+        H.write_novel_digests(
+            novel, index_path, mode="overwrite", run_id=f"epoch-{epoch_id}"
+        )
 
     q = (
         docs.writeStream.foreachBatch(handle)
@@ -483,11 +487,10 @@ def run_incremental_near_dup_stream(
     """
     from ..operators import hygiene as H
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
-        from ..operators.dedup import release_caches
-
         spark = batch_df.sparkSession
-        novel, _ = H.incremental_near_dup(
+        H.incremental_near_dup(
             batch_df,
             spark,
             index_path,
@@ -498,8 +501,6 @@ def run_incremental_near_dup_stream(
                 f"{novel_path}/ingest_batch={epoch_id}"
             ),
         )
-        # the operator's writes are the handler's terminal actions
-        release_caches(novel)
 
     q = (
         docs.writeStream.foreachBatch(handle)
@@ -532,13 +533,12 @@ def run_incremental_embedding_stream(
     """
     from ..operators import similarity as S
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return  # an empty first epoch must not freeze empty centroids
-        from ..operators.dedup import release_caches
-
         spark = batch_df.sparkSession
-        novel, _ = S.incremental_embedding_dedup(
+        S.incremental_embedding_dedup(
             batch_df,
             spark,
             index_path,
@@ -550,8 +550,6 @@ def run_incremental_embedding_stream(
                 f"{novel_path}/ingest_batch={epoch_id}"
             ),
         )
-        # the operator's writes are the handler's terminal actions
-        release_caches(novel)
 
     q = (
         emb.writeStream.foreachBatch(handle)
@@ -661,6 +659,7 @@ def run_tokenized_shard_stream(
             f"family must be 'bpe' or 'unigram', got {family!r}"
         )
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         if family == "unigram":
@@ -743,6 +742,7 @@ def run_scored_doc_stream(
     """
     from ..operators import classify as CL
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         got = CL.read_model(spark, model_path)
@@ -787,6 +787,7 @@ def run_stats_profile_stream(
     invariant the two-wave test asserts."""
     from ..operators import stats as ST
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         profile = ST.profile_batch(batch_df, group_cols=group_cols)
         ST.write_stats_index(
@@ -819,6 +820,7 @@ def run_search_index_stream(
     however many epochs have accumulated."""
     from ..operators import search as SE
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         SE.write_search_index(
             batch_df,
@@ -861,6 +863,7 @@ def run_classifier_counts_stream(
 
     nb = n_buckets if n_buckets is not None else CL.DEFAULT_N_BUCKETS
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         CL.write_classifier_counts(
             batch_df,
@@ -928,20 +931,16 @@ def run_warc_ingest_stream(
         )
     )
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
-        recs = W.warc_records_quarantined(batch_df).persist()
-        try:
-            clean, quarantine = W.split_warc_records(
-                recs, normalize=normalize
-            )
-            clean.write.mode("overwrite").parquet(
-                f"{dest_path}/ingest_batch=epoch-{epoch_id}"
-            )
-            quarantine.write.mode("overwrite").parquet(
-                f"{dest_path}/_quarantine/ingest_batch=epoch-{epoch_id}"
-            )
-        finally:
-            recs.unpersist()
+        recs = persist(W.warc_records_quarantined(batch_df))
+        clean, quarantine = W.split_warc_records(recs, normalize=normalize)
+        clean.write.mode("overwrite").parquet(
+            f"{dest_path}/ingest_batch=epoch-{epoch_id}"
+        )
+        quarantine.write.mode("overwrite").parquet(
+            f"{dest_path}/_quarantine/ingest_batch=epoch-{epoch_id}"
+        )
 
     q = (
         raw.writeStream.foreachBatch(handle)
@@ -971,6 +970,7 @@ def run_pq_index_stream(
     growing store at any moment."""
     from ..operators import similarity as S
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return  # an empty first epoch must not freeze a codebook
@@ -1015,11 +1015,10 @@ def run_incremental_media_stream(
     crawl media path."""
     from ..multimodal import binary_ops as B
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
-        from ..operators.dedup import release_caches
-
         spark = batch_df.sparkSession
-        novel, _ = B.incremental_media_dedup(
+        B.incremental_media_dedup(
             batch_df,
             spark,
             index_path,
@@ -1031,7 +1030,6 @@ def run_incremental_media_stream(
                 f"{novel_path}/ingest_batch={epoch_id}"
             ),
         )
-        release_caches(novel)
 
     q = (
         media.writeStream.foreachBatch(handle)
@@ -1059,6 +1057,7 @@ def run_rollup_stream(
     change the folded result."""
     from ..operators import stats as ST
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         ST.write_rollup_index(
             ST.rollup_batch(batch_df, bucket_seconds=bucket_seconds),
@@ -1096,6 +1095,7 @@ def run_kmv_stream(
     idempotent — duplicate rows are absorbed by the distinct)."""
     from ..operators import stats as ST
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         ST.write_kmv_index(
             ST.kmv_sketch_batch(batch_df, key_cols, value_col, k=k),
@@ -1141,6 +1141,7 @@ def run_sketch_stream(
     fold is cut-invariant by the tier's merge theorem, which is
     exactly what makes the epoch granularity a free choice."""
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         from ..operators.stats import write_kmv_index
 
@@ -1239,6 +1240,7 @@ def run_crawl_intake_stream(
         + ", n_novel long"
     )
 
+    @_scoped
     def handle(batch_df, epoch_id: int) -> None:
         sess = batch_df.sparkSession
         counts = intake_batch(

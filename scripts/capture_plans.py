@@ -24,7 +24,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     from bench import HEADLINE
-    from jonesy_spark.operators.dedup import release_caches
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.plans import all_queries
     from jonesy_spark.session import get_spark
 
@@ -42,13 +42,13 @@ def main() -> None:
     for name in names:
         spark.catalog.clearCache()
         try:
-            df = queries[name](spark, SF_DIR)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
+            with cache_scope():
+                df = queries[name](spark, SF_DIR)
+                plan = df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"
+                    )
                 )
-            )
-            release_caches(df)
         except Exception as exc:  # capture the failure instead of dying
             plan = f"ERROR building {name}: {exc!r}\n"
         path = os.path.join(out_dir, f"{name}_{tag}.txt")

@@ -1,28 +1,26 @@
 #!/usr/bin/env python
-"""Cold-JVM A/B runner: one FRESH JVM per invocation, bench-style
-timing (noop sink, cache cleared per run, cold + min-of-warm), with an
-operator cache strategy pinned via its ``_cache_strategy`` attribute.
+"""Cold-JVM timing of one registry row: one FRESH JVM per invocation,
+bench-style timing (noop sink, cache cleared per run, each run in its
+own cache scope, cold + min-of-warm).
 
 Why a fresh process per arm: the r14 same-session interleaved A/Bs
 picked persists that BOTH of the driver's independent cold runs then
 measured as regressions (prefix_jaccard_join +46-54 %) — a warm
 session's page cache + populated code cache hides the cost a cold run
 pays to materialize a giant cached frame. The driver times cold JVMs,
-so adjudication must too (VERDICT r14 #1-3). Alternate arms ACROSS
-invocations (A B A B ...) so window drift still cancels.
+so adjudication must too (VERDICT r14 #1-3). To compare two versions
+of the code, alternate invocations ACROSS checkouts (A B A B ...) so
+window drift still cancels.
 
 Usage:
-  python scripts/cold_ab.py QUERY [TARGET STRATEGY]... [-n RUNS]
+  python scripts/cold_ab.py QUERY [-n RUNS]
 
-TARGET is dotted under jonesy_spark.operators, e.g.
-``dedup.prefix_jaccard_pairs``; STRATEGY is the value to pin (use
-``default`` to leave the attribute unset). Prints ONE JSON line.
+Prints ONE JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
-import importlib
 import json
 import os
 import sys
@@ -36,27 +34,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("query")
-    ap.add_argument("pins", nargs="*", help="TARGET STRATEGY pairs")
     ap.add_argument("-n", "--runs", type=int, default=4)
     args = ap.parse_args()
-    if len(args.pins) % 2:
-        ap.error("pins must be TARGET STRATEGY pairs")
 
-    pins = {}
-    for i in range(0, len(args.pins), 2):
-        target, strategy = args.pins[i], args.pins[i + 1]
-        target, _, attr = target.partition(":")
-        mod_name, func_name = target.rsplit(".", 1)
-        try:
-            mod = importlib.import_module(f"jonesy_spark.operators.{mod_name}")
-        except ModuleNotFoundError:
-            mod = importlib.import_module(f"jonesy_spark.{mod_name}")
-        func = getattr(mod, func_name)
-        if strategy != "default":
-            setattr(func, attr or "_cache_strategy", strategy)
-        pins[target] = strategy
-
-    from jonesy_spark.operators.dedup import release_caches
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.plans import all_queries
     from jonesy_spark.session import get_spark
 
@@ -66,19 +47,17 @@ def main() -> None:
 
     def run_once() -> float:
         spark.catalog.clearCache()
-        t0 = time.time()
-        df = queries[args.query](spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
-        release_caches(df)
-        return dt
+        with cache_scope():
+            t0 = time.time()
+            df = queries[args.query](spark, SF_DIR)
+            df.write.mode("overwrite").format("noop").save()
+            return time.time() - t0
 
     runs = [run_once() for _ in range(args.runs)]
     print(
         json.dumps(
             {
                 "query": args.query,
-                "pins": pins,
                 "cold": round(runs[0], 3),
                 "warm_min": round(min(runs[1:]), 3) if len(runs) > 1 else None,
                 "runs": [round(r, 3) for r in runs],

@@ -136,6 +136,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.catalog import FIXTURE_TABLES
     from jonesy_spark.session import get_spark
 
@@ -173,11 +174,8 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            from jonesy_spark.operators.dedup import release_caches
-
-            df = queries[name](spark, args.sf_dir)
-            spdf = df.toPandas()
-            release_caches(df)
+            with cache_scope():
+                spdf = queries[name](spark, args.sf_dir).toPandas()
             hazards = dtype_hazards(spdf, "spark")
             shash = canon_hash(spdf)
             if name not in oracles:

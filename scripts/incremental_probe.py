@@ -60,6 +60,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from jonesy_spark.caching import cache_scope, persist
     from jonesy_spark.multimodal import binary_ops as MM
     from jonesy_spark.operators import dedup as DD
     from jonesy_spark.operators import graph as G
@@ -88,9 +89,10 @@ def main() -> None:
 
     def timed(fn):
         spark.catalog.clearCache()
-        t0 = time.time()
-        rows = fn()
-        return round(time.time() - t0, 2), rows
+        with cache_scope():
+            t0 = time.time()
+            rows = fn()
+            return round(time.time() - t0, 2), rows
 
     out = {}
 
@@ -132,14 +134,12 @@ def main() -> None:
                     batch, H.read_digest_index(spark, idx),
                     small_batch=True,
                 )
-                novel = novel.persist()
+                novel = persist(novel)
                 n = novel.count()
                 # the nightly follow-through: O(novel) index append
                 H.write_novel_digests(
                     novel, idx, mode="overwrite", run_id="probe"
                 )
-                novel.unpersist()
-                DD.release_caches(novel)
                 return n
             return run
 
@@ -152,13 +152,12 @@ def main() -> None:
             # the write+count pair, same as the probe side — neither
             # leg pays a double computation)
             novel, _ = H.incremental_dedup(docs, empty)
-            novel = novel.persist()
+            novel = persist(novel)
             n = novel.count()
             H.write_novel_digests(
                 novel, f"{args.work_dir}/digest_rebuild",
                 mode="overwrite", run_id="rebuild",
             )
-            novel.unpersist()
             return n
 
         rb = timed(rebuild)
@@ -181,7 +180,6 @@ def main() -> None:
                 )
                 n = novel.count()
                 matches.count()
-                DD.release_caches(novel)
                 return n
             return run
 
@@ -191,9 +189,9 @@ def main() -> None:
         def rebuild():
             # the no-index nightly: full-corpus pair join + component
             # resolution + index rebuild from scratch
-            pairs = DD.minhash_lsh_pairs(docs)
-            survivors = G.resolve_duplicates(docs, pairs, id_col="doc_id")
-            DD.release_caches(pairs)
+            with cache_scope(keep_checkpoints=True):
+                pairs = DD.minhash_lsh_pairs(docs)
+                survivors = G.resolve_duplicates(docs, pairs, id_col="doc_id")
             H.write_minhash_index(
                 DD.minhash_banded_sigs(survivors),
                 f"{args.work_dir}/mh_rebuild",
@@ -218,15 +216,14 @@ def main() -> None:
 
         def probe(idx):
             def run():
-                ph = MM.perceptual_hashes(
+                ph = persist(MM.perceptual_hashes(
                     MM.attach_ppm_near_dup_payload(batch), fake=False
-                ).persist()
+                ))
                 n = MM.probe_phash_index(
                     ph, spark, idx, max_hamming=3, bucket_cap=256
                 ).count()
                 # nightly follow-through: O(batch) index append
                 MM.write_phash_index(ph, idx, mode="overwrite", run_id="probe")
-                ph.unpersist()
                 return n
             return run
 
@@ -236,9 +233,9 @@ def main() -> None:
         def rebuild():
             # the no-index nightly: re-decode + all-pairs banded join
             # over the full corpus, then rebuild the index
-            full = MM.perceptual_hashes(
+            full = persist(MM.perceptual_hashes(
                 MM.attach_ppm_near_dup_payload(docs), fake=False
-            ).persist()
+            ))
             pairs = MM.media_near_dup(
                 docs, max_hamming=3, fake=False, sketches=full
             )
@@ -247,7 +244,6 @@ def main() -> None:
                 full, f"{args.work_dir}/ph_rebuild",
                 mode="overwrite", run_id="rebuild",
             )
-            full.unpersist()
             return n
 
         rb = timed(rebuild)

@@ -237,7 +237,8 @@ DECADE_SUITE = DEFAULT_PROBE + [
 
 
 def _timed_set(spark, queries, names, sf_dir, runs):
-    from jonesy_spark.operators.dedup import PairBudgetExceeded, release_caches
+    from jonesy_spark.caching import cache_scope
+    from jonesy_spark.operators.dedup import PairBudgetExceeded
 
     def calibrate() -> float:
         ts = []
@@ -260,13 +261,13 @@ def _timed_set(spark, queries, names, sf_dir, runs):
         try:
             for _ in range(runs):
                 spark.catalog.clearCache()
-                t0 = time.time()
-                df = queries[name](spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                run_ts.append(time.time() - t0)
-                if rows is None:
-                    rows = df.count()
-                release_caches(df)
+                with cache_scope():
+                    t0 = time.time()
+                    df = queries[name](spark, sf_dir)
+                    df.write.mode("overwrite").format("noop").save()
+                    run_ts.append(time.time() - t0)
+                    if rows is None:
+                        rows = df.count()
         except PairBudgetExceeded as e:
             # a bounded-tier contract refusing at this SF is a RESULT,
             # not a probe crash (r13: prefix_jaccard_join's

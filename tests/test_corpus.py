@@ -647,17 +647,15 @@ def test_token_budget_prune_partitioning_invariant(spark):
     """The greedy prefix is a property of the total order, not of where
     range bounds land: 1 partition and 64 partitions yield identical
     rows, and they equal the collected-sort reference."""
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.operators.corpus import token_budget_prune
-    from jonesy_spark.operators.dedup import release_caches
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     q = F.round(F.length("text") / 1000.0, 6)
-    a = token_budget_prune(docs, 8_000, q, n_ranges=1)
-    b = token_budget_prune(docs, 8_000, q, n_ranges=64)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
+    with cache_scope():
+        ra = sorted(map(tuple, token_budget_prune(docs, 8_000, q, n_ranges=1).collect()))
+        rb = sorted(map(tuple, token_budget_prune(docs, 8_000, q, n_ranges=64).collect()))
     assert ra == rb and len(ra) > 0
-    release_caches(a), release_caches(b)
 
     # collected-sort reference: greedy prefix over (quality desc, id)
     scored = sorted(
@@ -680,20 +678,18 @@ def test_token_budget_prune_partitioning_invariant(spark):
 
 
 def test_token_budget_prune_edges(spark):
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.operators.corpus import token_budget_prune
-    from jonesy_spark.operators.dedup import release_caches
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
     q = F.lit(1.0)
-    nothing = token_budget_prune(docs, 0, q)
-    assert nothing.count() == 0
-    release_caches(nothing)
-    everything = token_budget_prune(docs, 10**12, q)
-    rows = everything.collect()
+    with cache_scope():
+        assert token_budget_prune(docs, 0, q).count() == 0
+    with cache_scope():
+        rows = token_budget_prune(docs, 10**12, q).collect()
     assert len(rows) == 50
     # the max cum equals the token total: the prefix sum is exact
     assert max(r["cum_tokens"] for r in rows) == sum(r["n_tokens"] for r in rows)
-    release_caches(everything)
 
 
 def test_assemble_id_sequences_exact_boundaries(spark):

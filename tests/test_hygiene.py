@@ -8,6 +8,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+from jonesy_spark.caching import cache_scope
 from jonesy_spark.catalog import Catalog
 from jonesy_spark.operators import hygiene as H
 
@@ -238,48 +239,45 @@ def test_incremental_near_dup_two_batches(spark, tmp_path):
     spark.catalog.clearCache()  # isolate the residue assertion below
     t_common = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
 
-    batch1 = spark.createDataFrame(
-        [(1, t_common), (2, t_common), (3, "totally different words here now")],
-        ["doc_id", "text"],
-    )
-    novel1, matches1 = H.incremental_near_dup(
-        batch1, spark, idx, threshold=0.8, run_id="n0"
-    )
-    assert matches1.count() == 0  # first run: no index yet
-    assert sorted(r["doc_id"] for r in novel1.collect()) == [1, 3]  # 2 collapsed
+    with cache_scope():
+        batch1 = spark.createDataFrame(
+            [(1, t_common), (2, t_common), (3, "totally different words here now")],
+            ["doc_id", "text"],
+        )
+        novel1, matches1 = H.incremental_near_dup(
+            batch1, spark, idx, threshold=0.8, run_id="n0"
+        )
+        assert matches1.count() == 0  # first run: no index yet
+        assert sorted(r["doc_id"] for r in novel1.collect()) == [1, 3]  # 2 collapsed
 
-    batch2 = spark.createDataFrame(
-        [(10, t_common), (11, "yet another unrelated document body")],
-        ["doc_id", "text"],
-    )
-    novel2, matches2 = H.incremental_near_dup(
-        batch2, spark, idx, threshold=0.8, run_id="n1"
-    )
-    got = [
-        (r["doc_id"], r["index_doc_id"], r["est_jaccard_micro"])
-        for r in matches2.collect()
-    ]
-    assert got == [(10, 1, 1_000_000)]  # identical signature -> estimate 1
-    assert [r["doc_id"] for r in novel2.collect()] == [11]
+        batch2 = spark.createDataFrame(
+            [(10, t_common), (11, "yet another unrelated document body")],
+            ["doc_id", "text"],
+        )
+        novel2, matches2 = H.incremental_near_dup(
+            batch2, spark, idx, threshold=0.8, run_id="n1"
+        )
+        got = [
+            (r["doc_id"], r["index_doc_id"], r["est_jaccard_micro"])
+            for r in matches2.collect()
+        ]
+        assert got == [(10, 1, 1_000_000)]  # identical signature -> estimate 1
+        assert [r["doc_id"] for r in novel2.collect()] == [11]
 
-    # the index holds exactly the novel survivors' signatures
-    docs_in_index = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(idx).select("doc_id").distinct().collect()
-    )
-    assert docs_in_index == [1, 3, 11]
-    # and the layout matches the digest-index contract
-    import glob
+        # the index holds exactly the novel survivors' signatures
+        docs_in_index = sorted(
+            r["doc_id"]
+            for r in spark.read.parquet(idx).select("doc_id").distinct().collect()
+        )
+        assert docs_in_index == [1, 3, 11]
+        # and the layout matches the digest-index contract
+        import glob
 
-    assert glob.glob(f"{idx}/ingest_batch=n0/bucket=*/*.parquet")
-    assert glob.glob(f"{idx}/ingest_batch=n1/bucket=*/*.parquet")
+        assert glob.glob(f"{idx}/ingest_batch=n0/bucket=*/*.parquet")
+        assert glob.glob(f"{idx}/ingest_batch=n1/bucket=*/*.parquet")
 
     # VERDICT r5 #6: the operator persists (never checkpoints) its
-    # multi-consumer subtrees and hands release handles back on novel
-    from jonesy_spark.operators import dedup as DD
-
-    assert DD.release_caches(novel1) >= 1
-    assert DD.release_caches(novel2) >= 1
+    # multi-consumer subtrees; the scope releases them
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     assert cache_mgr.isEmpty()
 
@@ -298,8 +296,8 @@ def test_probe_minhash_index_observability(spark, tmp_path):
     idx = str(tmp_path / "mh_index")
     t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     seed = spark.createDataFrame([(1, t)], ["doc_id", "text"])
-    seed_novel, _ = H.incremental_near_dup(seed, spark, idx, run_id="n0")
-    DD.release_caches(seed_novel)
+    with cache_scope():
+        H.incremental_near_dup(seed, spark, idx, run_id="n0")
 
     sigs = DD.minhash_banded_sigs(
         spark.createDataFrame([(10, t), (11, "unrelated body")], ["doc_id", "text"])
@@ -313,13 +311,13 @@ def test_probe_minhash_index_observability(spark, tmp_path):
     assert got["probed_buckets"] >= 1
 
     # the incremental wrapper's novel path is observable too
-    novel, matches = H.incremental_near_dup(
-        spark.createDataFrame([(20, t)], ["doc_id", "text"]), spark, idx, run_id="n1"
-    )
-    plan = str(novel._jdf.queryExecution().analyzed())
-    assert "incremental_near_dup_novel" in plan
-    assert "probe_minhash_index" in str(matches._jdf.queryExecution().analyzed())
-    DD.release_caches(novel)
+    with cache_scope():
+        novel, matches = H.incremental_near_dup(
+            spark.createDataFrame([(20, t)], ["doc_id", "text"]), spark, idx, run_id="n1"
+        )
+        plan = str(novel._jdf.queryExecution().analyzed())
+        assert "incremental_near_dup_novel" in plan
+        assert "probe_minhash_index" in str(matches._jdf.queryExecution().analyzed())
 
 
 def test_incremental_near_dup_replay_idempotent(spark, tmp_path):

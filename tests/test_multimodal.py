@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+from jonesy_spark.caching import cache_scope
 from jonesy_spark.catalog import Catalog
 from jonesy_spark.multimodal.binary_ops import (
     attach_binary_payload,
@@ -652,7 +653,6 @@ def test_incremental_media_dedup_index_round_trip(spark, tmp_path):
     import random
 
     from jonesy_spark.multimodal import binary_ops as B
-    from jonesy_spark.operators.dedup import release_caches
 
     rnd = random.Random(41)
 
@@ -679,38 +679,38 @@ def test_incremental_media_dedup_index_round_trip(spark, tmp_path):
         [(i, p) for i, p in enumerate(originals)]
         + [(100, corrupt(originals[0]))],
     )
-    novel1, matches1 = B.incremental_media_dedup(
-        b1, spark, idx, run_id="b1", fake=True
-    )
-    got1 = sorted(r["doc_id"] for r in novel1.select("doc_id").collect())
-    assert matches1.count() == 0  # nothing indexed yet
+    with cache_scope():
+        novel1, matches1 = B.incremental_media_dedup(
+            b1, spark, idx, run_id="b1", fake=True
+        )
+        got1 = sorted(r["doc_id"] for r in novel1.select("doc_id").collect())
+        assert matches1.count() == 0  # nothing indexed yet
     assert got1 == [0, 1, 2, 3, 4, 5]  # 100 collapsed onto 0
-    release_caches(novel1)
 
     # batch 2: a near-copy of indexed doc 3 (drops) + two novel docs
     b2 = _fake_media_batch(
         spark,
         [(200, corrupt(originals[3])), (201, payload()), (202, payload())],
     )
-    novel2, matches2 = B.incremental_media_dedup(
-        b2, spark, idx, run_id="b2", fake=True
-    )
-    m = {(r["doc_id"], r["index_doc_id"]) for r in matches2.collect()}
+    with cache_scope():
+        novel2, matches2 = B.incremental_media_dedup(
+            b2, spark, idx, run_id="b2", fake=True
+        )
+        m = {(r["doc_id"], r["index_doc_id"]) for r in matches2.collect()}
+        got2 = sorted(r["doc_id"] for r in novel2.select("doc_id").collect())
     assert (200, 3) in m
-    got2 = sorted(r["doc_id"] for r in novel2.select("doc_id").collect())
     assert got2 == [201, 202]
-    release_caches(novel2)
 
     # replay of batch 2 (same run_id, overwrite): the probe excludes
     # the crashed attempt's own subtree, so the novel set is identical
-    novel2r, matches2r = B.incremental_media_dedup(
-        b2, spark, idx, run_id="b2", mode="overwrite", fake=True
-    )
-    assert sorted(
-        r["doc_id"] for r in novel2r.select("doc_id").collect()
-    ) == [201, 202]
-    assert {(r["doc_id"], r["index_doc_id"]) for r in matches2r.collect()} == m
-    release_caches(novel2r)
+    with cache_scope():
+        novel2r, matches2r = B.incremental_media_dedup(
+            b2, spark, idx, run_id="b2", mode="overwrite", fake=True
+        )
+        assert sorted(
+            r["doc_id"] for r in novel2r.select("doc_id").collect()
+        ) == [201, 202]
+        assert {(r["doc_id"], r["index_doc_id"]) for r in matches2r.collect()} == m
 
     # the index holds exactly the surviving representatives
     idx_docs = {
@@ -847,7 +847,6 @@ def test_probe_isin_cap_skips_partition_filter_keeps_semi_join(
     import random
 
     from jonesy_spark.multimodal import binary_ops as B
-    from jonesy_spark.operators.dedup import release_caches
 
     rnd = random.Random(43)
     originals = [
@@ -859,7 +858,6 @@ def test_probe_isin_cap_skips_partition_filter_keeps_semi_join(
         _fake_media_batch(spark, list(enumerate(originals))), fake=True
     )
     B.write_phash_index(seed, idx, run_id="seed")
-    release_caches(seed)
 
     def corrupt(p):
         c = bytearray(p)
@@ -897,7 +895,6 @@ def test_probe_isin_cap_skips_partition_filter_keeps_semi_join(
         (r["doc_id"], r["index_doc_id"]) for r in no_filter.collect()
     )
     assert got_capped == got_default
-    release_caches(batch)
 
 
 def test_media_family_pair_density_contract(spark):
@@ -916,7 +913,7 @@ def test_media_family_pair_density_contract(spark):
         media_near_dup,
         video_near_dup,
     )
-    from jonesy_spark.operators.dedup import PairBudgetExceeded, release_caches
+    from jonesy_spark.operators.dedup import PairBudgetExceeded
 
     k = 200
     same = bytes(range(256)) * 3
@@ -930,18 +927,15 @@ def test_media_family_pair_density_contract(spark):
         media_near_dup(df, pair_density_limit=10_000)
     # the capped collapse bounds the same corpus (every bucket is hot
     # here, so the capped tier drops them all — bounded, not wrong)
-    capped = media_near_dup(df, bucket_cap=64)
-    assert capped.count() == 0
-    release_caches(capped)
+    with cache_scope():
+        assert media_near_dup(df, bucket_cap=64).count() == 0
     # under the budget the exact tier is untouched: same pairs with
     # and without the limit (10 identical docs -> C(10,2) = 45)
     small = df.filter("doc_id < 10")
-    exact = media_near_dup(small)
-    n_exact = exact.count()
-    release_caches(exact)
-    limited = media_near_dup(small, pair_density_limit=10_000)
-    n_limited = limited.count()
-    release_caches(limited)
+    with cache_scope():
+        n_exact = media_near_dup(small).count()
+    with cache_scope():
+        n_limited = media_near_dup(small, pair_density_limit=10_000).count()
     assert n_exact == n_limited == 45
 
     # the video member: same contract over frame-level buckets
@@ -954,14 +948,11 @@ def test_media_family_pair_density_contract(spark):
     )
     with pytest.raises(PairBudgetExceeded, match="bucket_cap|incremental"):
         video_near_dup(vdf, pair_density_limit=10_000)
-    vcapped = video_near_dup(vdf, bucket_cap=16)
-    assert vcapped.count() == 0
-    release_caches(vcapped)
+    with cache_scope():
+        assert video_near_dup(vdf, bucket_cap=16).count() == 0
     vsmall = vdf.filter("doc_id < 6")
-    v_exact = video_near_dup(vsmall)
-    n_vexact = v_exact.count()
-    release_caches(v_exact)
-    v_limited = video_near_dup(vsmall, pair_density_limit=10_000_000)
-    n_vlimited = v_limited.count()
-    release_caches(v_limited)
+    with cache_scope():
+        n_vexact = video_near_dup(vsmall).count()
+    with cache_scope():
+        n_vlimited = video_near_dup(vsmall, pair_density_limit=10_000_000).count()
     assert n_vexact == n_vlimited

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR, assert_matches_oracle
+from jonesy_spark.caching import cache_scope
 from jonesy_spark.catalog import Catalog
 from jonesy_spark.functions.scalars import micro_units
 from jonesy_spark.operators.joins import asof_topk_pandas, salted_join
@@ -284,10 +285,10 @@ def test_hot_bucket_cap_matches_oracle_when_hit(spark, tmp_path):
 
 
 def test_dedup_release_caches_leaves_no_residue(spark):
-    """VERDICT r4 #3: operators persist multi-consumer subtrees; the
-    returned frame must carry release handles so a long-lived session
-    (corpus job, 50-query driver run) can free them after the terminal
-    action. After release_caches the session's SQL cache must be empty."""
+    """VERDICT r4 #3: operators persist multi-consumer subtrees; a
+    long-lived session (corpus job, 50-query driver run) must get them
+    back once the terminal action ran. After the cache scope closes the
+    session's SQL cache must be empty."""
     import jonesy_spark.operators.dedup as DD
     from conftest import SF_DIR
     from jonesy_spark.catalog import Catalog
@@ -302,29 +303,11 @@ def test_dedup_release_caches_leaves_no_residue(spark):
         (DD.simhash_near_dup, {"max_hamming": 3}),
         (DD.ngram_jaccard_pairs, {"threshold": 0.6}),
     ]:
-        df = op(docs, **kwargs)
-        df.write.mode("overwrite").format("noop").save()
-        assert not cache_mgr.isEmpty(), op.__name__  # something was cached
-        released = DD.release_caches(df)
-        assert released >= 1, op.__name__
+        with cache_scope():
+            df = op(docs, **kwargs)
+            df.write.mode("overwrite").format("noop").save()
+            assert not cache_mgr.isEmpty(), op.__name__  # something was cached
         assert cache_mgr.isEmpty(), op.__name__
-        assert DD.release_caches(df) == 0  # idempotent
-
-
-def test_carry_caches_forwards_handles(spark):
-    """Plan builders that wrap an operator's output must forward the
-    release handles — a derived DataFrame is a new Python object."""
-    import jonesy_spark.operators.dedup as DD
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(1, "a b c"), (2, "a b c"), (3, "x y z")], ["doc_id", "text"]
-    ).withColumn("lang", F.lit("en"))
-    pairs = DD.minhash_lsh_pairs(docs)
-    wrapped = DD.carry_caches(pairs.select("doc_a"), pairs)
-    wrapped.write.mode("overwrite").format("noop").save()
-    assert DD.release_caches(wrapped) >= 1
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.slow
@@ -371,48 +354,45 @@ def test_incremental_embedding_dedup_two_batches(spark, tmp_path):
     idx = str(tmp_path / "ivf")
     spark.catalog.clearCache()  # isolate the residue assertion below
     emb = Catalog(spark, SF_DIR).embeddings
-    batch1 = emb.filter(F.col("vec_id") < 80)
-    novel1, matches1 = SIM.incremental_embedding_dedup(
-        batch1, spark, idx, threshold=0.995, run_id="r0"
-    )
-    assert matches1.count() == 0  # no index yet
-    n1 = novel1.count()
-    assert 0 < n1 <= 80
+    with cache_scope():
+        batch1 = emb.filter(F.col("vec_id") < 80)
+        novel1, matches1 = SIM.incremental_embedding_dedup(
+            batch1, spark, idx, threshold=0.995, run_id="r0"
+        )
+        assert matches1.count() == 0  # no index yet
+        n1 = novel1.count()
+        assert 0 < n1 <= 80
 
-    # batch 2: exact copies of three batch-1 survivors + fresh vectors
-    survivors = [r["vec_id"] for r in novel1.select("vec_id").limit(3).collect()]
-    copies = (
-        emb.filter(F.col("vec_id").isin(survivors))
-        .withColumn("vec_id", F.col("vec_id") + 1000)
-    )
-    fresh = emb.filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 90))
-    novel2, matches2 = SIM.incremental_embedding_dedup(
-        copies.unionByName(fresh), spark, idx, threshold=0.995, run_id="r1"
-    )
-    hit = {(r["vec_id"], r["index_vec_id"]) for r in matches2.collect()}
-    for s in survivors:
-        assert (s + 1000, s) in hit  # each copy matched its original
-    assert {r["vec_id"] for r in novel2.collect()}.isdisjoint(
-        {s + 1000 for s in survivors}
-    )
+        # batch 2: exact copies of three batch-1 survivors + fresh vectors
+        survivors = [r["vec_id"] for r in novel1.select("vec_id").limit(3).collect()]
+        copies = (
+            emb.filter(F.col("vec_id").isin(survivors))
+            .withColumn("vec_id", F.col("vec_id") + 1000)
+        )
+        fresh = emb.filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 90))
+        novel2, matches2 = SIM.incremental_embedding_dedup(
+            copies.unionByName(fresh), spark, idx, threshold=0.995, run_id="r1"
+        )
+        hit = {(r["vec_id"], r["index_vec_id"]) for r in matches2.collect()}
+        for s in survivors:
+            assert (s + 1000, s) in hit  # each copy matched its original
+        assert {r["vec_id"] for r in novel2.collect()}.isdisjoint(
+            {s + 1000 for s in survivors}
+        )
 
-    # layout: frozen centroids + cid-partitioned per-run assignments
-    assert glob.glob(f"{idx}/centroids/*.parquet")
-    assert glob.glob(f"{idx}/assignments/ingest_batch=r0/cid=*/*.parquet")
-    assert glob.glob(f"{idx}/assignments/ingest_batch=r1/cid=*/*.parquet")
-    # the index never double-stores a vector id
-    stored = [
-        r["vec_id"]
-        for r in spark.read.parquet(f"{idx}/assignments").select("vec_id").collect()
-    ]
-    assert len(stored) == len(set(stored))
+        # layout: frozen centroids + cid-partitioned per-run assignments
+        assert glob.glob(f"{idx}/centroids/*.parquet")
+        assert glob.glob(f"{idx}/assignments/ingest_batch=r0/cid=*/*.parquet")
+        assert glob.glob(f"{idx}/assignments/ingest_batch=r1/cid=*/*.parquet")
+        # the index never double-stores a vector id
+        stored = [
+            r["vec_id"]
+            for r in spark.read.parquet(f"{idx}/assignments").select("vec_id").collect()
+        ]
+        assert len(stored) == len(set(stored))
 
     # VERDICT r5 #6: persisted (not checkpointed) subtrees, released
-    # through the handles the operator attaches to novel
-    from jonesy_spark.operators import dedup as DD
-
-    assert DD.release_caches(novel1) >= 1
-    assert DD.release_caches(novel2) >= 1
+    # with the scope
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -519,16 +499,15 @@ def test_probe_ivf_index_observability(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import dedup as DD
     from jonesy_spark.operators import similarity as SIM
 
     idx = str(tmp_path / "ivf_obs")
     emb = Catalog(spark, SF_DIR).embeddings
-    seed_novel, _ = SIM.incremental_embedding_dedup(
-        emb.filter(F.col("vec_id") < 60), spark, idx, threshold=0.995, run_id="r0"
-    )
-    seed_ids = [r["vec_id"] for r in seed_novel.select("vec_id").limit(2).collect()]
-    DD.release_caches(seed_novel)
+    with cache_scope():
+        seed_novel, _ = SIM.incremental_embedding_dedup(
+            emb.filter(F.col("vec_id") < 60), spark, idx, threshold=0.995, run_id="r0"
+        )
+        seed_ids = [r["vec_id"] for r in seed_novel.select("vec_id").limit(2).collect()]
 
     copies = (
         emb.filter(F.col("vec_id").isin(seed_ids))
@@ -769,7 +748,6 @@ def test_semantic_dedup_prunes_planted_duplicates_min_id_wins(spark):
     prune down to the min id; an orthogonal singleton survives; every
     pruned row names the MIN smaller-id duplicate."""
     from jonesy_spark.operators import similarity as SIM
-    from jonesy_spark.operators.dedup import release_caches
 
     base = [1.0, 2.0, -3.0, 0.5, 0.0, 1.0, 0.0, 0.0]
     ortho = [-1.0, 2.0, 3.0, -0.5, 1.0, -1.0, 0.0, 0.0]
@@ -782,9 +760,8 @@ def test_semantic_dedup_prunes_planted_duplicates_min_id_wins(spark):
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, label string"
     )
-    out = SIM.semantic_dedup(emb, threshold=0.9)
-    got = {r["vec_id"]: r.asDict() for r in out.collect()}
-    release_caches(out)
+    with cache_scope():
+        got = {r["vec_id"]: r.asDict() for r in SIM.semantic_dedup(emb, threshold=0.9).collect()}
     assert len(got) == 4
     assert not got[10]["is_pruned"] and got[10]["pruned_by"] == -1
     assert got[11]["is_pruned"] and got[11]["pruned_by"] == 10
@@ -804,12 +781,11 @@ def test_semantic_dedup_matches_brute_force_on_fixture(spark):
     import numpy as np
 
     from jonesy_spark.operators import similarity as SIM
-    from jonesy_spark.operators.dedup import release_caches
 
     emb = Catalog(spark, SF_DIR).embeddings
-    out = SIM.semantic_dedup(emb, threshold=0.3)
-    got = {r["vec_id"]: (r["is_pruned"], r["pruned_by"]) for r in out.collect()}
-    release_caches(out)
+    with cache_scope():
+        out = SIM.semantic_dedup(emb, threshold=0.3)
+        got = {r["vec_id"]: (r["is_pruned"], r["pruned_by"]) for r in out.collect()}
 
     rows = sorted(
         (r["vec_id"], np.array(r["embedding"], dtype=np.float64))
@@ -942,7 +918,7 @@ def test_lsh_recall_report_planted_duplicates(spark):
     """Identical-set pairs share every band key, so banding recall over
     a corpus whose only true pairs are exact duplicates is 1.0 — and
     the report's counts, worst_miss and cache-release contract hold."""
-    from jonesy_spark.operators.dedup import lsh_recall_report, release_caches
+    from jonesy_spark.operators.dedup import lsh_recall_report
 
     rows = []
     # 20 mutually-distinct docs (disjoint token sets)
@@ -954,39 +930,33 @@ def test_lsh_recall_report_planted_duplicates(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     spark.catalog.clearCache()
-    rep = lsh_recall_report(docs, threshold=0.8, sample_frac=1.0)
-    r = rep.collect()[0]
+    with cache_scope():
+        r = lsh_recall_report(docs, threshold=0.8, sample_frac=1.0).collect()[0]
     assert r["n_docs"] == 25
     assert r["n_true_pairs"] == 5
     assert r["recall_micro"] == 1_000_000
     assert r["worst_miss_micro"] == -1  # no miss: -1 sentinel, not NULL
     assert r["n_lsh_pairs"] == 5
-    release_caches(rep)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_lsh_recall_report_empty_sample(spark):
-    from jonesy_spark.operators.dedup import lsh_recall_report, release_caches
+    from jonesy_spark.operators.dedup import lsh_recall_report
 
     docs = spark.createDataFrame(
         [(i, f"unique text {i}") for i in range(10)], "doc_id long, text string"
     )
-    rep = lsh_recall_report(docs, sample_frac=1.0)
-    r = rep.collect()[0]
+    with cache_scope():
+        r = lsh_recall_report(docs, sample_frac=1.0).collect()[0]
     # no true pairs -> vacuous recall 1.0, nothing missed
     assert r["n_true_pairs"] == 0 and r["recall_micro"] == 1_000_000
-    release_caches(rep)
 
 
 def test_prefix_jaccard_pairs_exact_vs_brute_force(spark):
     """Recall 1.0 by theorem: the prefix-filtered join returns EXACTLY
     the brute-force >= 0.8 pairs, and the probabilistic LSH pairs are
     a subset of them."""
-    from jonesy_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        prefix_jaccard_pairs,
-        release_caches,
-    )
+    from jonesy_spark.operators.dedup import minhash_lsh_pairs, prefix_jaccard_pairs
 
     base = ["alpha bravo charlie delta echo foxtrot golf hotel india juliet"]
     rows = []
@@ -999,10 +969,11 @@ def test_prefix_jaccard_pairs_exact_vs_brute_force(spark):
     rows.append((103, base[0]))                                  # J=1.0 w/ 100
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard_micro"]
-        for r in prefix_jaccard_pairs(docs, threshold=0.8).collect()
-    }
+    with cache_scope():
+        got = {
+            (r["doc_a"], r["doc_b"]): r["jaccard_micro"]
+            for r in prefix_jaccard_pairs(docs, threshold=0.8).collect()
+        }
     # brute force over hashed token sets
     from jonesy_spark.functions.text import jaccard_micro as jx
     from jonesy_spark.operators.dedup import element_hash
@@ -1032,9 +1003,10 @@ def test_prefix_jaccard_pairs_exact_vs_brute_force(spark):
     assert (100, 101) in got and (100, 103) in got
     assert (100, 102) not in got  # 0.667 < threshold
 
-    lsh = minhash_lsh_pairs(docs, threshold=0.8)
-    lsh_pairs = {(r["doc_a"], r["doc_b"]) for r in lsh.collect()}
-    release_caches(lsh)
+    with cache_scope():
+        lsh_pairs = {
+            (r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(docs, threshold=0.8).collect()
+        }
     assert lsh_pairs <= set(got)
 
 

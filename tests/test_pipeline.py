@@ -469,6 +469,7 @@ def test_prepare_corpus_r6_policies(spark):
     survivor policy keeps the best cluster member instead of the min
     id, and the cluster-keyed split never straddles a near-dup cluster
     at the split threshold — all deterministic under rerun."""
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.catalog import Catalog
     from jonesy_spark.operators import dedup as DD
     from jonesy_spark.operators import graph as G
@@ -495,11 +496,11 @@ def test_prepare_corpus_r6_policies(spark):
 
     # leakage property at the SPLIT threshold: re-derive the 0.8 pair
     # graph over the clean docs; no component may straddle splits
-    pairs = DD.minhash_lsh_pairs(clean, threshold=0.8)
-    comps = G.connected_components(pairs).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cid")
-    )
-    DD.release_caches(pairs)
+    with cache_scope(keep_checkpoints=True):
+        pairs = DD.minhash_lsh_pairs(clean, threshold=0.8)
+        comps = G.connected_components(pairs).select(
+            F.col("node").alias("doc_id"), F.col("component").alias("cid")
+        )
     straddle = (
         out["split"]
         .join(comps, "doc_id")

@@ -320,14 +320,14 @@ def test_token_budget_prune_equals_greedy_reference(spark, docs, budget):
     """Property: the two-pass range-partition cut == the collected
     greedy prefix, for ANY corpus and budget (incl. 0 and over-total).
     Quality ties are exercised (quality drawn from 6 values)."""
+    from jonesy_spark.caching import cache_scope
     from jonesy_spark.operators.corpus import token_budget_prune
-    from jonesy_spark.operators.dedup import release_caches
 
     rows = [(i, " ".join(["w"] * n), float(q) / 10.0) for i, n, q in docs]
     df = spark.createDataFrame(rows, "doc_id long, text string, q double")
-    out = token_budget_prune(df, budget, F.col("q"), n_ranges=4)
-    got = sorted((r["doc_id"], r["cum_tokens"]) for r in out.collect())
-    release_caches(out)
+    with cache_scope():
+        out = token_budget_prune(df, budget, F.col("q"), n_ranges=4)
+        got = sorted((r["doc_id"], r["cum_tokens"]) for r in out.collect())
 
     ordered = sorted(docs, key=lambda t: (-t[2] / 10.0, t[0]))
     want, cum = [], 0

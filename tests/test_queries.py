@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pytest
 
+from jonesy_spark.caching import cache_scope
 from jonesy_spark.plans import all_oracle_sql, all_queries
+from jonesy_spark.plans.llm_queries import _shared_minhash_pairs
 
 from conftest import SF_DIR, assert_matches_oracle
 
@@ -49,10 +51,25 @@ def test_oracles_reference_known_queries():
     assert set(ORACLE) <= set(QUERIES)
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 @pytest.mark.parametrize("name", sorted(ORACLE))
 def test_query_matches_oracle(spark, duck, name):
-    df = QUERIES[name](spark, SF_DIR)
-    assert_matches_oracle(df, duck, ORACLE[name])
+    """The row matches its oracle inside its own cache scope, and no
+    persisted frame or checkpoint it created survives the scope. The
+    session's minhash pair-graph memo is built before the snapshot: its
+    one checkpoint is deliberate cross-row state."""
+    _shared_minhash_pairs(spark, SF_DIR)
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    with cache_scope():
+        df = QUERIES[name](spark, SF_DIR)
+        assert_matches_oracle(df, duck, ORACLE[name])
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"{name} left persistent RDDs {sorted(leaked)}"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
 
 
 def test_entry_smoke(spark):
