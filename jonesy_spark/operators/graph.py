@@ -41,7 +41,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..caching import checkpoint, release
@@ -270,6 +270,17 @@ def survivor_assignments(
     )
 
 
+def _observed_checkpoint(
+    frame: DataFrame, keep: tuple[str, ...], *metrics: Column
+) -> tuple[DataFrame, dict]:
+    """Checkpoint ``frame``'s ``keep`` columns and return the
+    ``metrics`` (aggregates over ``frame``) that the checkpoint's own
+    eager job observed, so reading them costs no job."""
+    obs = Observation()
+    out = checkpoint(frame.observe(obs, *metrics).select(*keep))
+    return out, obs.get
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -291,149 +302,110 @@ def pagerank(
 
     with dangling (out-degree-zero) node mass redistributed uniformly —
     the standard correction that keeps ``sum(rank) == 1`` each
-    iteration (asserted by the tests, not just claimed). Convergence
-    stops at L1 delta < ``tol`` or ``max_iter``, whichever first;
-    ``tol <= 0`` pins EXACTLY ``max_iter`` iterations (the
-    fixed-iteration mode the SQL-unrollable oracle rows need) and
-    skips the delta job entirely — halving the per-iteration job
-    count when early stopping isn't wanted.
-    Output: ``(node, rank)`` for every node appearing on either edge
-    side, ranks rounded to 9 digits.
+    iteration (asserted by the tests, not just claimed). Iteration
+    stops at L1 delta < ``tol`` or ``max_iter``, whichever first; the
+    delta is never negative, so ``tol <= 0`` pins EXACTLY ``max_iter``
+    iterations (the fixed-iteration mode the SQL-unrollable oracle
+    rows need) through the same loop.
+    Output: ``(node, rank, out_degree)`` for every node appearing on
+    either edge side — ranks rounded to 9 digits, ``out_degree`` the
+    distinct-edge out-degree (0 for sinks).
 
-    Scale shape, per iteration: one join of the rank vector against
-    the out-degree-annotated edge list on the src key, one aggregation
-    on the dst key — both keyed shuffles over (long, double) rows; the
-    dangling mass is a grouping-free 1-row aggregate folded back IN
-    PLAN via a broadcast cross join (no per-iteration driver scalar —
-    the only driver sync per round is the eager ``localCheckpoint``,
-    plus the L1-delta read when ``tol > 0``). The rank vector is
-    ``localCheckpoint``-ed each round — the CC-loop rule: iterative
-    lineage MUST be cut or the plan doubles every round (the one
-    sanctioned checkpoint site in the codebase). Degenerate inputs
-    (no edges) raise rather than dividing by a zero node count.
+    Scale shape, per iteration: the edge list joined to the rank
+    vector on src, aggregated on dst, and joined back onto the rank
+    vector — keyed shuffles over (long, double) rows. The rank vector
+    carries each node's out-degree, and each generation is
+    ``localCheckpoint``-ed (iterative lineage MUST be cut or the plan
+    doubles every round). The checkpoint's own job observes
+    (``pyspark.sql.Observation``) the generation's dangling mass —
+    the next round's literal — and its L1 delta: one driver sync per
+    round, no extra job. Degenerate inputs (no edges) raise rather
+    than dividing by a zero node count.
 
-    ``assume_distinct=True`` skips the internal edge ``distinct()``.
-    CONTRACT: the caller guarantees the edge list is already
-    deduplicated (ideally checkpointed, so the loop reads a
-    materialized frame) — passing raw multi-edges under this flag
-    silently weights parallel edges into deg/contrib and the ranks
-    stop summing to 1; when in doubt leave it False. Setup
-    checkpoints (``nodes``/``deg``/``ed``, ~node/edge-count rows of
-    longs) are released before return, and every superseded rank
-    generation as soon as the next one exists (``caching.release``
-    drops a checkpoint at the RDD level, where
-    ``DataFrame.unpersist()`` is a no-op — ADVICE r12). The returned
-    frame hangs off the final rank checkpoint alone, which the
-    caller's cache scope releases, so repeated calls in one session
-    (graph_probe runs 3+ per tier) cannot accumulate setup or
-    per-iteration blocks (ADVICE r11/r12; pinned by a
+    ``assume_distinct=True`` reads ``edges`` as-is every round.
+    CONTRACT: the caller guarantees the edge list is deduplicated and
+    checkpointed — raw multi-edges under this flag silently weight
+    parallel edges and the ranks stop summing to 1; when in doubt
+    leave it False, which checkpoints one distinct copy. Setup
+    checkpoints are released before return, and each superseded rank
+    generation as soon as the next exists (``caching.release``, at the
+    RDD level). The returned frame hangs off the final rank
+    checkpoint alone, which the caller's cache scope releases, so
+    repeated calls in one session (``scripts/graph_probe.py`` makes
+    three per tier) cannot accumulate blocks (pinned by a
     getRDDStorageInfo test).
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # callers that already deduplicated (and ideally checkpointed) the
-    # edge list skip the distinct shuffle here — link_authority shares
-    # one distinct edge frame between the loop and its out-degree column
+    setup = []
     if not assume_distinct:
-        e = e.distinct()
-    nodes = checkpoint(
+        e = checkpoint(e.distinct())
+        setup.append(e)
+    degree = e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("out_degree")
+    )
+    nodes, seen = _observed_checkpoint(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
+        .join(degree, "node", "left")
+        .select("node", F.coalesce("out_degree", F.lit(0)).alias("out_degree")),
+        ("node", "out_degree"),
+        F.count(F.lit(1)).alias("n"),
     )
-    n = nodes.count()
+    setup.append(nodes)
+    n = seen["n"]
     if n == 0:
         raise ValueError("pagerank needs a non-empty edge table")
-    # checkpointed: deg is read every iteration via ed, and an un-cut
-    # deg would drag the full source scan + distinct + groupBy back
-    # into EVERY iteration (r11 review finding)
-    deg = checkpoint(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+
+    # every rank generation (node, rank, out_degree, __old) is
+    # checkpointed without __old, observing its dangling mass and its
+    # L1 distance from __old
+    cols = ("node", "rank", "out_degree")
+    observed = (
+        F.coalesce(
+            F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))), F.lit(0.0)
+        ).alias("dm"),
+        F.sum(F.abs(F.col("rank") - F.col("__old"))).alias("d"),
     )
-    # out-degree rides the edge list once; the per-iteration join then
-    # touches a single pre-built (src, dst, deg) table
-    ed = checkpoint(e.join(deg, "src"))
-    # The rank vector CARRIES its node's dangling flag (out-degree
-    # zero — a static property of the graph): the per-iteration
-    # dangling mass is then a narrow filter+sum over the rank
-    # checkpoint's own blocks instead of an anti-join against deg
-    # every round (r14 optimization — one whole join subtree removed
-    # per iteration; same sum over the same rows, so ranks are
-    # bit-identical).
-    ranks = checkpoint(
-        nodes.join(
-            deg.select(F.col("src").alias("node"), F.lit(True).alias("__o")),
-            "node",
-            "left",
-        ).select(
-            "node",
-            F.lit(1.0 / n).alias("rank"),
-            F.col("__o").isNull().alias("dang"),
-        )
+    r0 = F.lit(1.0 / n)
+    ranks, seen = _observed_checkpoint(
+        nodes.select("node", r0.alias("rank"), "out_degree", r0.alias("__old")),
+        cols,
+        *observed,
     )
     base = (1.0 - damping) / n
     for _ in range(max_iter):
-        # grouping-free aggregate: exactly 1 row, so the cross join is
-        # a provably-bounded BroadcastNestedLoopJoin (plan-audit rule)
-        dm = ranks.filter(F.col("dang")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-        )
         contrib = (
-            ed.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
+            e.join(
+                ranks.select(F.col("node").alias("src"), "rank", "out_degree"),
+                "src",
+            )
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("inflow"))
+            .agg(F.sum(F.col("rank") / F.col("out_degree")).alias("inflow"))
         )
-        # join contrib back onto the rank vector itself (same node set
-        # as `nodes`, and already checkpointed) so the previous rank
-        # rides along: the L1-delta below then reads the new
-        # checkpoint's own blocks instead of re-joining two rank
-        # generations (r14 — second join subtree removed per round).
-        # The __old carry exists ONLY for that delta, so fixed-iteration
-        # mode (tol == 0: link_authority's 6-round witness) does not pay
-        # the extra double per node in every checkpoint generation
-        # (r14: the unconditional carry regressed link_authority
-        # 1.92 -> 2.51 s while converged mode improved 6.81 -> 4.97).
-        carry_old = (
-            [F.col("rank").alias("__old")] if tol > 0 else []
-        )
-        new_ranks = (
-            ranks.select("node", "rank", "dang")
-            .join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
+        new_ranks, seen = _observed_checkpoint(
+            ranks.join(contrib, "node", "left").select(
                 "node",
                 (
                     F.lit(base)
                     + damping
                     * (
                         F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.col("__dm") / F.lit(float(n))
+                        + F.lit(seen["dm"]) / F.lit(float(n))
                     )
                 ).alias("rank"),
-                "dang",
-                *carry_old,
-            )
+                "out_degree",
+                F.col("rank").alias("__old"),
+            ),
+            cols,
+            *observed,
         )
-        new_ranks = checkpoint(new_ranks)
-        if tol > 0:
-            delta = new_ranks.agg(
-                F.sum(F.abs(F.col("rank") - F.col("__old"))).alias("d")
-            ).first()["d"]
-        else:
-            delta = float("inf")
-        # the superseded checkpoint is dead once the new one exists —
-        # release its executor-storage blocks now instead of letting
-        # max_iter generations accumulate for the life of the job
-        # (ADVICE r6).
         release(ranks)
         ranks = new_ranks
-        if delta < tol:
+        if seen["d"] < tol:
             break
-    # the final ranks checkpoint is the only block the returned frame
-    # needs — release the three setup checkpoints now instead of
-    # leaving them to the ContextCleaner (ADVICE r11; pinned by
-    # test_pagerank_releases_checkpoint_blocks)
-    for setup in (nodes, deg, ed):
-        release(setup)
-    return ranks.select("node", F.round("rank", 9).alias("rank"))
+    for frame in setup:
+        release(frame)
+    return ranks.select("node", F.round("rank", 9).alias("rank"), "out_degree")

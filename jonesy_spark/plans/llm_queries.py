@@ -3990,18 +3990,18 @@ def link_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fixed-iteration mode (tol=0.0, 6 iterations) so the run is exactly
     SQL-unrollable: the oracle generates one CTE triple per iteration
-    from the same loop bound. Per iteration the plan is two keyed
-    shuffles over (long, double) rows plus a provably-1-row broadcast
-    cross join for the dangling mass — at 100 TB the edge list is the
+    from the same loop bound. Per iteration the plan is keyed shuffles
+    over (long, double) rows and one checkpoint whose own job observes
+    the next round's dangling mass — at 100 TB the edge list is the
     host graph (millions of rows, not the corpus), so the whole loop
-    is metadata-sized next to the document scan that produced it."""
+    is metadata-sized next to the document scan that produced it.
+    ``out_degree`` is the one pagerank returns with the ranks."""
     from ..operators import graph as G
 
     ev = Catalog(spark, sf_dir).events
-    # ONE distinct pass over the source, checkpointed: both the
-    # iteration loop (assume_distinct) and the out-degree column read
-    # the materialized edge list instead of re-scanning events twice
-    # (r11 review finding)
+    # ONE distinct pass over the source, checkpointed: the iteration
+    # loop (assume_distinct) reads the materialized edge list every
+    # round instead of re-scanning events
     edges = checkpoint(
         ev.select(
             (F.col("user_id") % 499).alias("src"),
@@ -4013,12 +4013,9 @@ def link_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = G.pagerank(
         edges, damping=0.85, max_iter=6, tol=0.0, assume_distinct=True
     )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    return ranks.join(deg, "node", "left").select(
+    return ranks.select(
         "node",
-        F.coalesce(F.col("deg"), F.lit(0)).cast("long").alias("out_degree"),
+        "out_degree",
         F.round(F.col("rank") * 1e9).cast("long").alias("rank_nano"),
     )
 
@@ -4573,9 +4570,9 @@ def link_authority_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical hash (r12 measured ~19 iterations; 1e-9 lands in ~14,
     cutting the heaviest bench row accordingly).
 
-    Scale shape: identical to link_authority — per iteration two
-    keyed shuffles over (long, double) rows plus a provably-1-row
-    broadcast for the dangling mass; the early stop SAVES iterations
+    Scale shape: identical to link_authority — the same single loop
+    body, whose checkpoint job also observes the L1 delta, so the
+    convergence test costs no job; the early stop SAVES iterations
     at 100 TB whenever the host graph mixes faster than the pinned
     bound."""
     from ..operators import graph as G
@@ -4586,9 +4583,9 @@ def link_authority_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("src") % 3 != 0)
         .distinct()
     )
-    # linkers x {1..7}: distinct by construction, checkpointed so the
-    # iteration loop and the out-degree column read one materialized
-    # edge list (the link_authority rule)
+    # linkers x {1..7}: distinct by construction, checkpointed so
+    # every round reads one materialized edge list (the link_authority
+    # rule)
     edges = checkpoint(
         linkers.select(
             "src",
@@ -4600,12 +4597,9 @@ def link_authority_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = G.pagerank(
         edges, damping=0.85, max_iter=60, tol=1e-9, assume_distinct=True
     )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    return ranks.join(deg, "node", "left").select(
+    return ranks.select(
         "node",
-        F.coalesce(F.col("deg"), F.lit(0)).cast("long").alias("out_degree"),
+        "out_degree",
         F.round(F.col("rank") * 1e9).cast("long").alias("rank_nano"),
     )
 

@@ -34,12 +34,14 @@ import signal
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 CHILD = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[4])
 from pyspark.sql import functions as F
 from jonesy_spark.session import get_spark
 from jonesy_spark.catalog import Catalog
@@ -65,7 +67,7 @@ print("BOUNDARIES " + __import__("json").dumps(res["boundaries"]))
 
 def run_child(sf_dir: str, src: str, workdir: str) -> subprocess.Popen:
     return subprocess.Popen(
-        [sys.executable, "-c", CHILD, sf_dir, src, workdir],
+        [sys.executable, "-c", CHILD, sf_dir, src, workdir, str(ROOT)],
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
         text=True,

@@ -35,8 +35,10 @@ import hashlib
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 #: object-dtype cell types the driver demonstrably handles (green rows
 #: carry date/timestamp columns); everything else non-string is a

@@ -21,8 +21,10 @@ Usage: python scripts/gen_tokenizer_fixture.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = "/root/testdata/sf0.001"
 N_MERGES = 64

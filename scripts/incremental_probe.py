@@ -36,8 +36,10 @@ import json
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 STRIDE = 100_000_000  # gen_sf1.py's replica key shift
 

@@ -53,8 +53,10 @@ import io
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 HARD = ("CartesianProduct", "BatchEvalPython")
 WATCH = (

@@ -28,8 +28,10 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 #: Default probe set: the most expensive bench rows (the banded
 #: self-joins whose candidate sets could grow superlinearly on skew,
@@ -347,7 +349,7 @@ def decade_suite(args) -> None:
     table = "\n".join(lines)
     print(table)
     if args.append_scale_md:
-        with open("/root/repo/SCALE.md", "a") as f:
+        with open(ROOT / "SCALE.md", "a") as f:
             f.write(
                 f"\n### Decade-suite replay ({args.round}, generated)\n\n"
                 + table

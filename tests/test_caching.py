@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import tokenize
 
 from pyspark import StorageLevel
@@ -176,6 +177,9 @@ def test_package_caches_only_through_the_helpers():
 
 
 def test_no_source_names_the_removed_cache_machinery():
+    """No ``.py`` names the removed cache machinery, and none outside
+    tests hardcodes a checkout path: a script run from another checkout
+    (a parent/change A/B) must import that checkout's package."""
     removed = [
         "_jonesy_cached_deps",
         "_track_caches",
@@ -193,4 +197,9 @@ def test_no_source_names_the_removed_cache_machinery():
         with open(path, encoding="utf-8") as f:
             text = f.read()
         hits += [(os.path.relpath(path, REPO), n) for n in removed if n in text]
+        if os.path.relpath(path, REPO).split(os.sep)[0] != "tests" and (
+            os.path.abspath(REPO) in text
+            or re.search(r"sys\.path\.insert\(\s*0\s*,\s*[\"']/", text)
+        ):
+            hits.append((os.path.relpath(path, REPO), "hardcoded checkout path"))
     assert hits == []

@@ -227,17 +227,27 @@ def _np_pagerank(edges, damping=0.85, max_iter=50, tol=1e-9):
     return {nodes[i]: r[i] for i in range(n)}
 
 
+def _out_degree(edges):
+    """Distinct-edge out-degree of every node, 0 for sinks."""
+    deg = {x: 0 for e in edges for x in e}
+    for u, _ in set(edges):
+        deg[u] += 1
+    return deg
+
+
 @pytest.mark.slow
 def test_pagerank_matches_dense_reference(spark):
     """Spark PageRank vs an independent numpy power iteration on a
     graph with a hub, a chain, and a dangling sink."""
     edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 1), (5, 3)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["rank"] for r in G.pagerank(df, max_iter=60, tol=1e-12).collect()}
+    rows = G.pagerank(df, max_iter=60, tol=1e-12).collect()
+    got = {r["node"]: r["rank"] for r in rows}
     want = _np_pagerank(edges, max_iter=60, tol=1e-12)
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-6, (k, got[k], want[k])
+    assert {r["node"]: r["out_degree"] for r in rows} == _out_degree(edges)
     # mass conservation: the dangling correction keeps a distribution
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
@@ -298,10 +308,9 @@ def test_pagerank_fixed_iteration_mode_matches_numpy_exactly(spark):
     edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 1), (5, 3)]
     df = spark.createDataFrame(edges, ["src", "dst"])
     for k in (1, 3):
-        got = {
-            r["node"]: r["rank"]
-            for r in G.pagerank(df, max_iter=k, tol=0.0).collect()
-        }
+        rows = G.pagerank(df, max_iter=k, tol=0.0).collect()
+        got = {r["node"]: r["rank"] for r in rows}
+        assert {r["node"]: r["out_degree"] for r in rows} == _out_degree(edges)
         want = _np_pagerank(edges, max_iter=k, tol=0.0)
         far = _np_pagerank(edges, max_iter=60, tol=1e-12)
         assert any(abs(want[x] - far[x]) > 1e-4 for x in want), (
@@ -309,6 +318,29 @@ def test_pagerank_fixed_iteration_mode_matches_numpy_exactly(spark):
         )
         for x in want:
             assert abs(got[x] - want[x]) < 1e-9, (k, x, got[x], want[x])
+
+
+def test_pagerank_convergence_check_costs_no_job(spark):
+    """The dangling mass and the L1 delta are observed inside each
+    round's checkpoint job, so convergence mode (a tol that never
+    stops early) runs exactly the jobs of fixed-iteration mode, and a
+    round costs at most 7 jobs. Counted by job group."""
+    sc = spark.sparkContext
+    edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 1), (5, 3)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+
+    def jobs(max_iter, tol):
+        group = f"pagerank_jobs_{max_iter}_{tol}"
+        sc.setJobGroup(group, group)
+        try:
+            G.pagerank(df, max_iter=max_iter, tol=tol).collect()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fixed = jobs(4, 0.0)
+    assert jobs(4, 1e-300) == fixed
+    assert fixed - jobs(3, 0.0) <= 7
 
 
 def test_pagerank_releases_checkpoint_blocks(spark):
