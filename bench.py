@@ -1,12 +1,18 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"""Benchmark harness: times the headline registry rows at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS], writes
+one record to bench_out.json and prints the same record as ONE JSON
+line: steady and cold seconds per row and in total, the machine
+calibration probe around and inside the loop, and each row normalized
+by that probe.
 
-Each query is forced end-to-end with the `noop` sink (full computation,
+Each row is forced end-to-end with the `noop` sink (full computation,
 no sink cost, no driver collect). One warm-up of a trivial action first
-so JVM/codegen startup isn't attributed to the first query.
+so JVM/codegen startup isn't attributed to the first row.
+
+`time_row` and `calibrate` are the one row timer and the one
+calibration probe; scripts/cold_ab.py and scripts/scale_probe.py
+import them.
 """
 
 from __future__ import annotations
@@ -17,6 +23,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from jonesy_spark.caching import cache_scope
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -169,114 +177,63 @@ HEADLINE = [
     # sibling of sampled_quantiles; cold pays the one-time two-batch
     # ledger seed (session memo), steady prices the fold alone
     "kll_quantiles",
-    # NOT added, r14 (late): scd2_history — at 62 rows the compact
-    # stdout line's worst-plausible width (1919 chars) outgrows the
-    # driver's ~2000-char tail capture (test_compact_line_fits_...),
-    # so the set stays at 61; the row's scale witness is its decade
-    # (sf1 AND sf10) entry in SCALE.md instead.
-]
-
-#: The r5-era 21-query set — every HEADLINE row that existed before the
-#: r6 additions. Its subtotal is emitted per run so cross-round
-#: comparisons stop needing manual subtraction (VERDICT r6 #6).
-R5_COMPARABLE = [
-    q
-    for q in HEADLINE
-    if q
-    not in {
-        "incremental_near_dup",
-        "ann_quantized_topk",
-        "repeated_span_removal",
-        "bpe_token_stats",
-        "token_budget_prune",
-        "prefix_jaccard_join",
-        "quality_classifier",
-        "dsir_select",
-        "bm25_search",
-        "multimodal_real_codec",
-        "hybrid_search",
-        "multimodal_audio_codec",
-        "multimodal_video_codec",
-        "warc_ingest_roundtrip",
-        "ann_pq_topk",
-        "kmv_distinct_users",
-        "sampled_quantiles",
-        "events_sliding_window",
-        "cms_frequencies",
-        "mg_heavy_hitters",
-        "kmv_overlap_users",
-        "unigram_token_stats",
-        "sketch_dashboard",
-        "corpus_card",
-        "tokenizer_family_compare",
-        "skew_salted_join",
-        "tokenizer_family_fold",
-        "semantic_dedup",
-        "link_authority",
-        "html_extract",
-        "c4_line_filter",
-        "perplexity_buckets",
-        "gopher_quality_gate",
-        "link_authority_converged",
-        "crawl_gate_composed",
-        "ngram_novelty",
-        "temperature_mixture",
-        "bitext_mining_margin",
-        "excess_loss_select",
-        "kll_quantiles",
-    }
+    # scd2_history is not benched: its scale witness is its decade
+    # (sf1 AND sf10) entry in SCALE.md.
 ]
 
 
-#: Drift-healing bound (VERDICT r12 #2): a stretch whose bracketing
-#: calibration points exceed this ratio over the MEDIAN of the in-loop
-#: calibration series gets its queries re-run; r12's artifact
-#: certified runs at ~1.35 spread. The yardstick is deliberately the
-#: median, not the min — min-based stats false-heal under the JIT
-#: warm-up ramp (r13: two observed false-heal cycles).
-HEAL_BOUND = 1.35
+#: Each row runs RUNS times. Run 1 is COLD for its plan shape (one-time
+#: JIT + codegen, ~2-5 s on the heavy dedup plans at sf0.1) and is
+#: reported apart; the row's steady time is the min of the warm runs.
+#: 3 runs: the heavy dedup plans keep improving run 2 -> run 3 (C2
+#: compiles the generated code only after enough invocations).
+RUNS = 3
+#: Converged-warm rule: the heaviest codegen rows ramp for several warm
+#: runs (prefix_jaccard_join measured 14.7 -> 5.5 -> 5.2 -> 4.8 -> 4.85
+#: -> 4.2), so while the LAST run sets a new warm min by more than
+#: RAMP_EPS, keep re-running, up to MAX_RUNS in all.
+MAX_RUNS = 7
+RAMP_EPS = 0.05
+#: The calibration probe re-runs every CAL_EVERY rows, so the series
+#: shows a machine window that drifts inside the loop, not only at its
+#: ends: flat series + slow rows = real regression, spiky series =
+#: machine drift.
+CAL_EVERY = 8
 
 
-def spiky_stretches(
-    cal_series: list[float],
-    calibration_after: float,
-    n_queries: int,
-    cal_every: int,
-    bound: float = HEAL_BOUND,
-) -> list[int]:
-    """Indices of query stretches whose bracketing in-loop calibration
-    points ran more than ``bound`` x the loop's floor — the stretches
-    a drifting machine window inflated, localized exactly as VERDICT
-    r10 #2's interleaved series was designed to allow. Stretch k
-    covers queries [k*cal_every, (k+1)*cal_every); its brackets are
-    series point k-1 (absent for k=0 — the head marker is excluded as
-    warm-up, same rationale as the spread metric) and series point k
-    (the after-marker for the final, possibly partial, stretch).
+def calibrate(spark, sf_dir: str, reps: int = 3) -> float:
+    """Machine calibration: min of ``reps`` runs of a fixed lineitem
+    scan + groupBy count to the noop sink. Dividing a row's time by it
+    cancels much of the machine's speed, so rows from different runs
+    compare without reading machine drift as a plan regression."""
+    ts = []
+    for _ in range(reps):
+        t0 = time.time()
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
+            "l_returnflag"
+        ).count().write.mode("overwrite").format("noop").save()
+        ts.append(time.time() - t0)
+    return round(min(ts), 3)
 
-    The yardstick is the in-loop series MEDIAN, not the floor: the
-    probe's own speed is a function of total session JIT warmth, which
-    the queries keep raising all run (measured r13: 0.24 -> 0.12 over
-    ~20 invocations inside the bench, ~0.3 flat in a bare session) —
-    so the fastest point is systematically late/after-heal and a
-    min-floor reads that ramp as drift (two r13 false-heal cycles).
-    Drift is a LOCALIZED spike: a point well above the typical
-    (median) probe speed indicts its stretch; the monotone ramp moves
-    the median with it and stays quiet."""
-    median = sorted(cal_series)[len(cal_series) // 2] if cal_series else calibration_after
-    n_stretches = (n_queries + cal_every - 1) // cal_every
-    out = []
-    for k in range(n_stretches):
-        pts = []
-        if k > 0 and k - 1 < len(cal_series):
-            pts.append(cal_series[k - 1])
-        pts.append(cal_series[k] if k < len(cal_series) else calibration_after)
-        if max(pts) > median * bound:
-            out.append(k)
-    return out
+
+def time_row(spark, queries, name: str, sf_dir: str) -> float:
+    """Seconds for one end-to-end run of registry row ``name``,
+    cache-empty before and after. The build call is INSIDE the timed
+    window: for most rows it is pure plan construction (ms), but
+    iterative operators (dedup_clusters' connected-components rounds)
+    run real jobs at build time. The cache is cleared first because
+    Spark's CacheManager matches by plan equality, so a later run would
+    otherwise read an earlier run's cache; the row's own persists and
+    checkpoints are released when its cache scope closes."""
+    spark.catalog.clearCache()
+    with cache_scope():
+        t0 = time.time()
+        df = queries[name](spark, sf_dir)
+        df.write.mode("overwrite").format("noop").save()
+        return time.time() - t0
 
 
 def main() -> None:
-    from jonesy_spark.caching import cache_scope
     from jonesy_spark.plans import all_queries
     from jonesy_spark.session import get_spark
 
@@ -285,310 +242,60 @@ def main() -> None:
 
     # warm-up: JVM + parquet footer reads out of the timed path
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1).count()
+    # one untimed probe first: the probe plan pays its own codegen here,
+    # so every calibration point measures the SAME warm plan
+    calibrate(spark, SF_DIR, reps=1)
+    calibration_before = calibrate(spark, SF_DIR)
 
-    # Machine calibration: a fixed scan+agg timed before and after the
-    # query loop. Back-to-back identical bench runs were measured ±60%
-    # apart on sub-1.5 s queries (r5 session) — this number lets a
-    # reader normalize machine speed across rounds instead of reading
-    # environment drift as plan regressions.
-    def calibrate(reps: int = 3) -> float:
-        ts = []
-        for _ in range(reps):
-            t0 = time.time()
-            spark.read.parquet(f"{SF_DIR}/lineitem.parquet").groupBy(
-                "l_returnflag"
-            ).count().write.mode("overwrite").format("noop").save()
-            ts.append(time.time() - t0)
-        return round(min(ts), 3)
-
-    # one untimed probe first: the probe plan pays its own one-time
-    # codegen here, so calibration_before and every later series point
-    # measure the SAME warm plan — without this the head point runs
-    # ~2x the series (its cold cost) and the spread ratio reads as
-    # machine drift that never happened
-    calibrate(reps=1)
-    calibration_before = calibrate()
-
-    # Interleaved calibration (VERDICT r10 #2): the head/tail marker
-    # pair brackets the run but cannot see noise INSIDE the warm loop —
-    # twice in three rounds (r8, r10) a double-digit warm regression on
-    # byte-identical code had to be adjudicated by out-of-band
-    # re-measures because a mid-run machine window was invisible to
-    # min(before, after). The same fixed probe now runs every
-    # CAL_EVERY queries; the emitted series certifies (or indicts) the
-    # whole window: flat series + slow queries = real regression,
-    # spiky series = machine drift, localized to the affected stretch.
-    CAL_EVERY = 8
     cal_series: list[float] = []
-
-    # Each query runs RUNS times. Run 1 is COLD for this plan shape
-    # (pays one-time JVM JIT + codegen-cache costs, measured ~2-5 s on
-    # the heavy dedup plans at sf0.1); the min of all runs is STEADY —
-    # the
-    # throughput a long-running cluster job actually sustains. Both are
-    # reported so warm-up effects stay visible across rounds; the
-    # headline total and `queries` stay steady-state for cross-round
-    # comparability. The cache is cleared before EVERY run: operators
-    # persist() multi-consumer subtrees (e.g. the dedup sketches), and
-    # Spark's CacheManager matches by plan equality, so without the
-    # clear run 2 would read run 1's cache and report a cache-scan time
-    # instead of a compute time.
-    # 3 runs: the heavy dedup plans keep improving run 2 -> run 3 (C2
-    # JIT compiles the generated code only after enough invocations);
-    # min-of-2 was still ~30-60% above the sustained rate for them.
-    RUNS = 3
-    # Converged-warm rule (r14): the heaviest codegen rows ramp for
-    # SEVERAL warm runs (prefix_jaccard_join measured 14.7 -> 5.5 ->
-    # 5.2 -> 4.8 -> 4.85 -> 4.2 on an otherwise idle session — the r14
-    # bench printed 9.8 for a row whose steady state is ~4.2, purely
-    # from where the C2 ramp sat), so while the LAST run keeps setting
-    # a new warm minimum by more than RAMP_EPS, keep re-running, up to
-    # MAX_RUNS total. Stable rows stop at RUNS (a >5% improvement on
-    # the second warm repeat is rare); ramping rows converge instead
-    # of sampling their ramp.
-    MAX_RUNS = 7
-    RAMP_EPS = 0.05
-
-    def run_once(name: str) -> float:
-        """One timed end-to-end run, cache-empty before and after.
-        The build call is INSIDE the timed window: for most queries it
-        is pure plan construction (ms), but iterative operators
-        (dedup_clusters' connected-components rounds) run real jobs at
-        build time and must not escape the measurement. Operators
-        persist() multi-consumer subtrees into the run's cache scope,
-        which releases them so the next run (and later queries) start
-        from a cache-empty session."""
-        spark.catalog.clearCache()
-        with cache_scope():
-            t0 = time.time()
-            df = queries[name](spark, SF_DIR)
-            df.write.mode("overwrite").format("noop").save()
-            dt = time.time() - t0
-        return dt
-
     steady: dict[str, float] = {}
     cold: dict[str, float] = {}
     for i, name in enumerate(HEADLINE):
-        runs = [run_once(name) for _ in range(RUNS)]
-        # converged-warm rule: chase a still-descending C2 ramp
+        runs = [time_row(spark, queries, name, SF_DIR) for _ in range(RUNS)]
         while (
             len(runs) < MAX_RUNS
             and runs[-1] == min(runs[1:])
             and runs[-1] < (1 - RAMP_EPS) * min(runs[1:-1])
         ):
-            runs.append(run_once(name))
+            runs.append(time_row(spark, queries, name, SF_DIR))
         cold[name] = round(runs[0], 3)
-        # min over the WARM repeats only (runs 2..RUNS): run 1 pays
-        # one-time JIT/codegen and is reported separately as cold
         steady[name] = round(min(runs[1:]), 3)
         if (i + 1) % CAL_EVERY == 0:
-            cal_series.append(calibrate(reps=2))
+            cal_series.append(calibrate(spark, SF_DIR, reps=2))
+    calibration_after = calibrate(spark, SF_DIR)
 
-    calibration_after = calibrate()
-
-    # Self-healing under drift (VERDICT r12 #2): the r12 artifact could
-    # DIAGNOSE a drifting machine window (spread 3.05x) but not act, so
-    # five rows shipped drift-inflated warm numbers the judge had to
-    # re-adjudicate out-of-band. Now the bench acts on its own
-    # evidence, bounded to at most two extra tiers of work:
-    #   tier 1 — any stretch of CAL_EVERY queries whose bracketing
-    #   in-loop calibration points exceed HEAL_BOUND x the MEDIAN of
-    #   the in-loop series gets its queries re-run once (min-merged
-    #   into steady) and its calibration points re-measured (median,
-    #   not min: min-based yardsticks false-heal under the JIT ramp);
-    #   tier 2 — if the healed series is still spiky, one full warm
-    #   pass over every query, min-merged, with a fresh series.
-    # Mins are sound here: the metric is steady-state throughput, and
-    # a drifting window only ever INFLATES a wall-clock sample.
-    cal_series_raw = list(cal_series)
-    heal = {"stretch_reruns": [], "full_second_pass": False}
-
-    def spread(series: list[float]) -> float:
-        med = sorted(series)[len(series) // 2]
-        return round(max(series) / max(med, 1e-9), 2)
-
-    spiky = spiky_stretches(cal_series, calibration_after, len(HEADLINE), CAL_EVERY)
-    for k in spiky:
-        for name in HEADLINE[k * CAL_EVERY : (k + 1) * CAL_EVERY]:
-            heal["stretch_reruns"].append(name)
-            steady[name] = round(min(steady[name], run_once(name)), 3)
-        fresh = calibrate(reps=2)
-        if k < len(cal_series):
-            cal_series[k] = min(cal_series[k], fresh)
-        else:
-            calibration_after = min(calibration_after, fresh)
-    if spiky and spread(cal_series if cal_series else [calibration_after]) > HEAL_BOUND:
-        heal["full_second_pass"] = True
-        fresh_series: list[float] = []
-        for i, name in enumerate(HEADLINE):
-            steady[name] = round(min(steady[name], run_once(name)), 3)
-            if (i + 1) % CAL_EVERY == 0:
-                fresh_series.append(calibrate(reps=2))
-        # element-wise min: each stretch is certified by its BEST
-        # window across the two passes — the same semantics as the
-        # min-merged steady times it brackets
-        cal_series = [min(a, b) for a, b in zip(cal_series, fresh_series)]
-        calibration_after = min(calibration_after, calibrate())
-    # min of the two markers: the machine's best fixed-yardstick speed
-    # this run — dividing the comparable subtotal by it cancels
-    # machine/window drift, so cross-round regressions separate from
-    # environment noise (VERDICT r8 #4: the r8 driver artifact showed
-    # a uniform 1.25x "slowdown" that a calibrated re-run contradicted).
-    calibration = min(calibration_before, calibration_after)
-    # spread = max over MEDIAN of the interleaved in-loop series:
-    # ~1.0x = steady machine; a spike inside the loop shows here even
-    # when the head/tail pair agrees (the r8/r10 blind spot). The
-    # median denominator (not the min, r13) is deliberate: the probe's
-    # speed tracks total session JIT warmth, which the query loop
-    # keeps raising, so the min is systematically a late-run/healed
-    # point and max/min reads the benign ramp as drift (r12's real
-    # drift series scores 2.6 under this metric; r13's flat-but-ramped
-    # runs score ~1.2). Both markers are excluded: before is head
-    # warm-up (~2.3x), after is the probe's ~18th invocation — its
-    # systematic fastest.
-    series_loop = cal_series if cal_series else [calibration_after]
-    cal_median = sorted(series_loop)[len(series_loop) // 2]
-    cal_spread = round(max(series_loop) / max(cal_median, 1e-9), 2)
-    subtotal_r5 = round(sum(steady[q] for q in R5_COMPARABLE), 3)
-
+    # spread = max over MEDIAN of the in-loop series; both end markers
+    # are left out (before is head warm-up, after is the probe's
+    # warmest invocation). The median, not the min, because the probe
+    # speeds up as the session's JIT warms, so the min is
+    # systematically a late point and max/min reads that ramp as drift.
+    series = cal_series or [calibration_after]
+    cal_median = sorted(series)[len(series) // 2]
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # The FULL artifact — narratives, per-query cold times, the whole
-    # calibration series — goes to bench_out.json: the self-certifying
-    # line outgrew the driver's ~2000-char tail capture in r11
-    # (BENCH_r11.parsed came back null), so the file now carries full
-    # fidelity and stdout carries a COMPACT line that always fits
-    # (VERDICT r11 #3).
-    full = {
+    record = {
         "metric": "headline_queries_total_runtime",
         "unit": "sec",
         "sf": float(sf),
-        "runs_per_query": f"{RUNS} (+ up to {MAX_RUNS - RUNS} while the "
-        f"last run sets a new warm min by >{int(RAMP_EPS * 100)}% — the "
-        "r14 converged-warm rule for C2-ramping rows)",
-        "headline_set": (
-            f"the {len(HEADLINE)}-query set (count derived from "
-            "len(HEADLINE) — ADVICE r11). r4 added dedup_clusters "
-            "(connected components) — totals are NOT comparable "
-            "to r<=3's 20-query set without subtracting it. Since "
-            "r5 dedup_clusters reuses the session's checkpointed "
-            "minhash pair graph (computed once, on its cold run), "
-            "so its steady time prices connected components only "
-            "— the pair cost is priced by dedup_minhash_lsh. r6 "
-            "added incremental_near_dup (cold pays the one-time "
-            "index seed write, steady prices the probe), then "
-            "ann_quantized_topk, repeated_span_removal, "
-            "bpe_token_stats, token_budget_prune and "
-            "prefix_jaccard_join, then quality_classifier and "
-            "dsir_select and bm25_search; r7 added "
-            "multimodal_real_codec and hybrid_search; r8 added "
-            "the audio/video codecs, WARC round trip, PQ, and "
-            "the six sketch-ledger rows; r9 added "
-            "unigram_token_stats and sketch_dashboard; r10 "
-            "added corpus_card and tokenizer_family_compare; "
-            "r11 added EIGHT rows — skew_salted_join, "
-            "tokenizer_family_fold, semantic_dedup, "
-            "link_authority, html_extract, c4_line_filter, "
-            "perplexity_buckets and gopher_quality_gate; r12 "
-            "added link_authority_converged and "
-            "crawl_gate_composed; r13 added ngram_novelty and "
-            "temperature_mixture. subtotal_r5_comparable is the "
-            "cross-round-stable 21-query subtotal; "
-            "subtotal_r5_per_calib divides it by the "
-            "calibration marker so machine drift cancels"
-        ),
-        "timing": (
-            f"queries/value = min of the WARM repeats ({RUNS - 1} "
-            f"fixed + up to {MAX_RUNS - RUNS} more while the last run "
-            f"keeps improving the warm min by >{int(RAMP_EPS * 100)}% "
-            "— converged-warm, r14; run 1 = cold, pays one-time "
-            "JIT/codegen, reported "
-            "separately); cache cleared before every run; the "
-            f"fixed calibration probe re-runs every {CAL_EVERY} "
-            "queries — calibration_series certifies the machine "
-            "window across the whole loop, not just head/tail. "
-            "SELF-HEALING (r12 #2): stretches whose bracketing "
-            f"points exceed {HEAL_BOUND}x the median of the in-loop "
-            "series are re-run "
-            "once (min-merged); if the series is still spiky, one "
-            "full second warm pass — `heal` records what fired; "
-            "calibration_series is the healed series, _raw the "
-            "first pass's"
-        ),
-        "heal": heal,
-        "calibration_series_raw": cal_series_raw,
+        "queries": steady,
+        "value": round(sum(steady.values()), 3),
         "queries_cold": cold,
         "value_cold": round(sum(cold.values()), 3),
-        "queries": steady,
-        "subtotal_r5_comparable": subtotal_r5,
-        "n_r5_comparable": len(R5_COMPARABLE),
-        # fixed yardstick: min-of-3 lineitem scan+groupBy count,
-        # timed before and after the query loop, PLUS the
-        # interleaved min-of-2 series (one point per CAL_EVERY
-        # queries) — a flat series (spread ~1x) certifies the
-        # run; a spike localizes machine drift to a stretch of
-        # the loop (VERDICT r10 #2)
         "calibration_before": calibration_before,
         "calibration_series": cal_series,
         "calibration_after": calibration_after,
-        "calibration_spread_ratio": cal_spread,
-        # dimensionless: subtotal over the machine's yardstick
-        # speed this run — compare THIS across rounds
-        "subtotal_r5_per_calib": round(subtotal_r5 / calibration, 1),
-        # dimensionless twin over the median in-loop probe point —
-        # steadier across rounds than the min-of-markers denominator
-        "subtotal_r5_per_calib_series": round(subtotal_r5 / cal_median, 1),
-        # Per-row calibration-normalized seconds (VERDICT r14 #5):
-        # row / the run's own in-loop calibration median, so a
-        # cross-round per-row status can be computed on values from
-        # which machine-window drift cancels (the r14 32-core run's
-        # 1.30-spread window inflated 30 raw rows that the 8-core run
-        # of the same code contradicted). Dimensionless; compare THESE
-        # across rounds, not raw seconds, when spreads differ.
+        "calibration_spread_ratio": round(max(series) / max(cal_median, 1e-9), 2),
         "cal_median": round(cal_median, 3),
+        # each steady row over the run's in-loop calibration median:
+        # compare THESE across runs whose spreads differ, not raw seconds
         "queries_normalized": {
             k: round(v / cal_median, 2) for k, v in steady.items()
         },
-        "value": round(sum(steady.values()), 3),
     }
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_out.json"
-    )
-    with open(out_path, "w") as f:
-        json.dump(full, f)
-        f.write("\n")
-
-    # Compact driver line: the required contract keys plus the
-    # cross-round markers, steady times at 1 decimal (r13: the 58-row
-    # set outgrew 2 decimals at worst-plausible widths; full fidelity
-    # lives in bench_out.json, as does value_cold). Must stay under
-    # the driver's ~2000-char tail capture so `parsed` populates — the
-    # assert turns silent truncation into a local failure the moment
-    # the set outgrows the line again.
-    compact = {
-        "metric": "headline_queries_total_runtime",
-        "unit": "sec",
-        "sf": float(sf),
-        "n_queries": len(HEADLINE),
-        "artifact": "bench_out.json",
-        "queries": {k: round(v, 1) for k, v in steady.items()},
-        "calibration": calibration,
-        "calibration_spread_ratio": cal_spread,
-        "subtotal_r5_per_calib_series": round(subtotal_r5 / cal_median, 1),
-        # the in-loop calibration median: divides into every printed
-        # row to give its calibration-normalized value (the full
-        # queries_normalized dict lives in bench_out.json — 61 more
-        # dict entries would outgrow the driver's ~2000-char tail
-        # capture, so the compact line carries the one scalar the
-        # normalization needs)
-        "cal_median": round(cal_median, 3),
-        "value": round(sum(steady.values()), 3),
-    }
-    line = json.dumps(compact)
-    assert len(line) <= 1900, (
-        f"compact bench line is {len(line)} chars — exceeds the "
-        "driver's ~2000-char tail capture; shrink the printed keys "
-        "(full fidelity lives in bench_out.json)"
-    )
+    line = json.dumps(record)
+    with open(
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json"), "w"
+    ) as f:
+        f.write(line + "\n")
     print(line)
 
 

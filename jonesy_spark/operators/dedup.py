@@ -392,8 +392,8 @@ def minhash_lsh_pairs(
     # Parallelism floor for the CPU-dense verify is a HASH repartition
     # on doc_a, not round-robin: keyless repartition pays a local sort
     # of every pair row (sortBeforeRepartition, SPARK-23207) that the
-    # hash form skips — isolated re-attach A/B at sf0.1 (6.47 M pairs,
-    # scripts/reattach_repart_probe.py): rr med 5.33 s vs hash 2.34 vs
+    # hash form skips — an isolated re-attach A/B at sf0.1 (6.47 M
+    # pairs, OPTIMIZATION_r14.md §8): rr med 5.33 s vs hash 2.34 vs
     # no-repartition 2.39, rr slower in all 7 paired rounds. Hash on
     # doc_a also pre-satisfies the re-attach join's distribution when
     # it degrades to sort-merge at corpus scale; hot doc_a skew is
@@ -1144,7 +1144,7 @@ def prefix_jaccard_pairs(
     tb = toksets.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
     # Hash repartition, not round-robin — see the minhash verify comment
     # (keyless repartition pays sortBeforeRepartition; measured on THIS
-    # operator's verify stage in scripts/reattach_repart_probe.py). In
+    # operator's verify stage, OPTIMIZATION_r14.md §8). In
     # the capped tier hot-doc_a skew is bounded (a doc pairs with <=
     # bucket_cap members per prefix token), so doc_a alone is safe and
     # pre-satisfies a sort-merge re-attach. The EXACT tier (bucket_cap

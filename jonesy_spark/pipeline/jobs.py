@@ -12,12 +12,12 @@ MultiTargetSink`. Jobs:
   * ``upload_snapshot``   (``jobs.py:50-63``): full snapshot — basic
     attributes once, then per current term the courses + enrollments
     extracts (dynamic term fan-out D3, ``jobs.py:41-48,55-63``).
-  * ``upload_recent_refresh`` (``jobs.py:39-49``): incremental — the
-    watermark-filtered updates per term.
+  * ``upload_recent_refresh`` (``jobs.py:39-49``): incremental — two
+    watermark-filtered update extracts, no term loop.
 
-The per-term fan-out runs each term's extract as an independent write —
-on a cluster these are concurrent jobs (driver threads); the reference
-ran them serially on one cursor (``jobs.py:103``).
+The per-term fan-out runs each term's extract as its own write, one
+after another in a serial loop, as the reference ran them on one cursor
+(``jobs.py:103``).
 """
 
 from __future__ import annotations

@@ -13,11 +13,10 @@ Contract being reproduced (reference ``jonesy/jobs.py``):
   * one object uploaded to N targets with per-target error isolation
     (``jobs.py:116-132``) — write once, copy driver-side, errors contained
 
-Scale notes: a partitioned write (no coalesce) is the default — one
-gzip object per partition, committed in parallel. ``single_file=True``
-reproduces the reference's one-object-per-extract contract (global
-order + coalesce(1)); that's a deliberate serial tail, only for
-byte-compat extracts.
+Scale notes: every extract is ONE gzip object, the reference's
+one-object-per-extract contract (global order + coalesce(1)) — a
+deliberate serial tail for byte-compat extracts. Lake-scale outputs
+go through ``write_partitioned_parquet`` instead.
 """
 
 from __future__ import annotations
@@ -113,32 +112,23 @@ def write_gzip_csv(
     out_dir: str,
     name: str,
     order_by: list[Column] | None = None,
-    single_file: bool = True,
 ) -> str:
-    """Write a headerless gzip CSV extract; returns the object path.
-
-    single_file=True reproduces the reference's one-object contract
-    (with file-wide ordering, O1/O4 semantics); False leaves a
-    partitioned directory of gzip parts (the scale default).
+    """Write a headerless gzip CSV extract as one object, the
+    reference's one-object contract (with file-wide ordering, O1/O4
+    semantics); returns the object path.
     """
     staged = f"{out_dir}/__stage__{name}"
     to_write = serialize_for_csv(df)
     if order_by is not None:
         to_write = to_write.orderBy(*order_by)
-    if single_file:
-        to_write = to_write.coalesce(1)
     (
-        to_write.write.mode("overwrite")
+        to_write.coalesce(1)
+        .write.mode("overwrite")
         .option("header", "false")
         .option("compression", "gzip")
         .option("emptyValue", "")
         .csv(staged)
     )
-    if not single_file:
-        final = os.path.join(out_dir, name)
-        shutil.rmtree(final, ignore_errors=True)
-        os.replace(staged, final)
-        return final
     part = glob.glob(f"{staged}/part-*.csv.gz")[0]
     final = os.path.join(out_dir, name)
     os.makedirs(os.path.dirname(final), exist_ok=True)

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Cold-JVM timing of one registry row: one FRESH JVM per invocation,
-bench-style timing (noop sink, cache cleared per run, each run in its
-own cache scope, cold + min-of-warm).
+timed by bench.py's own `time_row` (noop sink, cache cleared per run,
+each run in its own cache scope), reported as cold + min-of-warm, with
+bench.py's calibration probe measured after the runs.
 
 Why a fresh process per arm: the r14 same-session interleaved A/Bs
 picked persists that BOTH of the driver's independent cold runs then
@@ -24,11 +25,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import SF_DIR, calibrate, time_row
 
 
 def main() -> None:
@@ -37,7 +37,6 @@ def main() -> None:
     ap.add_argument("-n", "--runs", type=int, default=4)
     args = ap.parse_args()
 
-    from jonesy_spark.caching import cache_scope
     from jonesy_spark.plans import all_queries
     from jonesy_spark.session import get_spark
 
@@ -45,15 +44,7 @@ def main() -> None:
     queries = all_queries()
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1).count()
 
-    def run_once() -> float:
-        spark.catalog.clearCache()
-        with cache_scope():
-            t0 = time.time()
-            df = queries[args.query](spark, SF_DIR)
-            df.write.mode("overwrite").format("noop").save()
-            return time.time() - t0
-
-    runs = [run_once() for _ in range(args.runs)]
+    runs = [time_row(spark, queries, args.query, SF_DIR) for _ in range(args.runs)]
     print(
         json.dumps(
             {
@@ -61,6 +52,7 @@ def main() -> None:
                 "cold": round(runs[0], 3),
                 "warm_min": round(min(runs[1:]), 3) if len(runs) > 1 else None,
                 "runs": [round(r, 3) for r in runs],
+                "calibration": calibrate(spark, SF_DIR),
             }
         )
     )

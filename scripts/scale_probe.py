@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Decade scale probe: time registry queries at an arbitrary SF dir
-(default the synthesized /tmp/jonesy_sf1 from gen_sf1.py) under the
-bench harness's timing discipline (noop sink, cache cleared per run,
-min-of-RUNS steady state) and print one JSON line per query plus a
-summary — the measured-scaling record SCALE.md cites (VERDICT r8 #6).
+(default the synthesized /tmp/jonesy_sf1 from gen_sf1.py) with the
+bench harness's own row timer and calibration probe (`bench.time_row`,
+`bench.calibrate`; min-of-RUNS steady state) and print one JSON line
+per query plus a summary — the measured-scaling record SCALE.md
+cites (VERDICT r8 #6).
 
 ``--suite decade`` (VERDICT r10 #4) puts the accumulated decade set on
 rails: it replays EVERY row that holds a measured sf1 decade — both
@@ -27,11 +28,12 @@ import argparse
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
+
+from bench import calibrate, time_row
 
 #: Default probe set: the most expensive bench rows (the banded
 #: self-joins whose candidate sets could grow superlinearly on skew,
@@ -242,34 +244,14 @@ def _timed_set(spark, queries, names, sf_dir, runs):
     from jonesy_spark.caching import cache_scope
     from jonesy_spark.operators.dedup import PairBudgetExceeded
 
-    def calibrate() -> float:
-        ts = []
-        for _ in range(3):
-            t0 = time.time()
-            spark.read.parquet(
-                f"{sf_dir}/lineitem.parquet"
-            ).groupBy("l_returnflag").count().write.mode(
-                "overwrite"
-            ).format("noop").save()
-            ts.append(time.time() - t0)
-        return round(min(ts), 3)
-
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).count()
-    cal = calibrate()
+    cal = calibrate(spark, sf_dir)
     results = {}
     for name in names:
-        run_ts = []
-        rows = None
         try:
-            for _ in range(runs):
-                spark.catalog.clearCache()
-                with cache_scope():
-                    t0 = time.time()
-                    df = queries[name](spark, sf_dir)
-                    df.write.mode("overwrite").format("noop").save()
-                    run_ts.append(time.time() - t0)
-                    if rows is None:
-                        rows = df.count()
+            run_ts = [time_row(spark, queries, name, sf_dir) for _ in range(runs)]
+            with cache_scope():
+                rows = queries[name](spark, sf_dir).count()
         except PairBudgetExceeded as e:
             # a bounded-tier contract refusing at this SF is a RESULT,
             # not a probe crash (r13: prefix_jaccard_join's

@@ -177,7 +177,8 @@ def test_package_caches_only_through_the_helpers():
 
 
 def test_no_source_names_the_removed_cache_machinery():
-    """No ``.py`` names the removed cache machinery, and none outside
+    """No ``.py`` names the removed cache machinery, the removed bench
+    bookkeeping or the deleted one-off probes, and none outside
     tests hardcodes a checkout path: a script run from another checkout
     (a parent/change A/B) must import that checkout's package."""
     removed = [
@@ -188,6 +189,12 @@ def test_no_source_names_the_removed_cache_machinery():
         "VERIFY_ONCE",
         "_tracked_checkpoint",
         "_release_rdds",
+        "spiky_stretches",
+        "R5_COMPARABLE",
+        "subtotal_r5",
+        "pq_phase_probe",
+        "reattach_repart_probe",
+        "intake_probe",
     ]
     me = os.path.abspath(__file__)
     hits = []

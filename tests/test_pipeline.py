@@ -108,15 +108,6 @@ def test_write_gzip_csv_headerless_ordered(spark, tmp_path):
     assert keys == sorted(keys)
 
 
-def test_write_gzip_csv_partitioned(spark, tmp_path):
-    df = Catalog(spark, SF_DIR).lineitem.select("l_orderkey", "l_linenumber")
-    out = write_gzip_csv(df, str(tmp_path), "parts", single_file=False)
-    assert os.path.isdir(out)
-    import glob as g
-
-    assert g.glob(f"{out}/part-*.csv.gz")
-
-
 def test_multi_target_isolation(tmp_path):
     src = tmp_path / "src.txt"
     src.write_text("payload")
