@@ -20,15 +20,19 @@ from pyspark.sql import functions as F
 from ..caching import cache_scope, persist
 from ..functions import vectors as VX
 from ..functions.scalars import micro_units
-from .dedup import _eval_once, _micro_threshold
+from .dedup import CPU_PARTITIONS, _eval_once, _micro_threshold
 
 
-def _prepared(emb: DataFrame, n_partitions: int = 64) -> DataFrame:
-    # Explicit repartition: embedding folds are CPU-heavy but byte-light,
-    # so AQE's size-based coalescing would serialize them otherwise
-    # (same rationale as operators.dedup.CPU_PARTITIONS).
+def _prepared(emb: DataFrame) -> DataFrame:
+    # Explicit repartition to dedup.CPU_PARTITIONS (2 x the core
+    # budget): embedding folds are CPU-heavy but byte-light, so AQE's
+    # size-based coalescing would serialize them otherwise. Not more:
+    # every Sort-based task downstream (pq_encode's SortAggregate, the
+    # re-rank's WindowGroupLimit) takes one 64 MB memory page whatever
+    # its row count, so execution memory grows with the partition
+    # count, not the data (64 partitions: 4.2 GB for 2,000 vectors).
     v = VX.as_double(F.col("embedding"))
-    return emb.repartition(n_partitions).select(
+    return emb.repartition(CPU_PARTITIONS).select(
         F.col("vec_id"), v.alias("v"), VX.norm(v).alias("nrm"), F.col("label")
     )
 
@@ -210,8 +214,9 @@ def kmeans_centroids(
     deterministic, so it stays out of the oracle-checked surface).
 
     Training is Spark-distributed (k-means||); only the K centers — a
-    K x dim float table — come to the driver, then ship back as literal
-    rows (MB-sized at any corpus scale, same budget as the broadcast)."""
+    K x dim float table — come to the driver, then ship back through
+    Arrow (MB-sized at any corpus scale, same budget as the broadcast)."""
+    import pandas as pd
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -223,7 +228,9 @@ def kmeans_centroids(
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    cents = spark.createDataFrame(rows, "cid bigint, cv array<double>")
+    cents = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["cid", "cv"]), "cid bigint, cv array<double>"
+    )
     return cents.select("cid", "cv", VX.norm(F.col("cv")).alias("cnrm"))
 
 
@@ -891,8 +898,6 @@ def quantized_topk(
     # CPU_PARTITIONS, not a literal: the dot-product scan is the
     # CPU-dense stage this floor exists for (r14 — scale-parameterized
     # with the rest of the forced-parallelism sites)
-    from .dedup import CPU_PARTITIONS
-
     store = store.repartition(CPU_PARTITIONS)
     dq = VX.dequantize_int8(F.col("qv"))
     e = store.select("vec_id", dq.alias("v")).withColumn("nrm", VX.norm(F.col("v")))
@@ -975,6 +980,7 @@ def pq_codebooks(
     contract — PQ stays on the pytest-pinned surface with
     :func:`quantized_topk`, never the oracle-checked one."""
     import numpy as np
+    import pandas as pd
 
     first = emb.select("embedding").first()
     if first is None:
@@ -1028,8 +1034,13 @@ def pq_codebooks(
         rows.extend(
             (j, c, [float(x) for x in centers[c]]) for c in range(k)
         )
+    # through Arrow, not a Python list: every action over the codebook
+    # (_pq_m's max(sub), the broadcasts) pays for the list form — a
+    # warm max(sub) took 0.44-0.64 s from a list, 0.17-0.26 s from
+    # pandas (4 cores)
     return emb.sparkSession.createDataFrame(
-        rows, "sub int, code int, sv array<double>"
+        pd.DataFrame(rows, columns=["sub", "code", "sv"]),
+        "sub int, code int, sv array<double>",
     )
 
 
@@ -1474,7 +1485,7 @@ def hash_embed(
     map-side combine; assembly is the house struct-sort groupBy. Keep
     ``dim`` small (16-64): this is a sketch, not a semantic space.
     """
-    from .dedup import CPU_PARTITIONS, element_hash
+    from .dedup import element_hash
 
     if dim < 2:
         raise ValueError(f"dim must be >= 2, got {dim}")

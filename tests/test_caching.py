@@ -5,6 +5,7 @@ code caches around the helpers."""
 
 from __future__ import annotations
 
+import ast
 import io
 import os
 import re
@@ -209,4 +210,44 @@ def test_no_source_names_the_removed_cache_machinery():
             or re.search(r"sys\.path\.insert\(\s*0\s*,\s*[\"']/", text)
         ):
             hits.append((os.path.relpath(path, REPO), "hardcoded checkout path"))
+    assert hits == []
+
+
+def test_no_operator_partition_count_is_a_literal():
+    """No operator repartitions or coalesces to an integer literal, and
+    no ``*partitions`` parameter defaults to one: a partition count
+    tuned to one machine's cores (the old ``_prepared`` 64) must come
+    from ``dedup.CPU_PARTITIONS`` or the caller. ``coalesce(1)``, the
+    single-file write funnel, is a layout choice and is allowed."""
+    hits = []
+    for path in _py_files(os.path.join(PACKAGE, "operators")):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        where = os.path.relpath(path, REPO)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("repartition", "coalesce")
+            ):
+                args = node.args + [k.value for k in node.keywords]
+                hits += [
+                    (where, node.lineno, node.func.attr, a.value)
+                    for a in args
+                    if isinstance(a, ast.Constant)
+                    and type(a.value) is int
+                    and not (node.func.attr == "coalesce" and a.value == 1)
+                ]
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                pos = a.posonlyargs + a.args
+                defaults = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+                defaults += zip(a.kwonlyargs, a.kw_defaults)
+                hits += [
+                    (where, node.lineno, arg.arg, d.value)
+                    for arg, d in defaults
+                    if arg.arg.endswith("partitions")
+                    and isinstance(d, ast.Constant)
+                    and type(d.value) is int
+                ]
     assert hits == []

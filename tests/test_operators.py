@@ -68,6 +68,20 @@ def test_asof_pandas_matches_window_plan(spark):
     assert p == w
 
 
+def test_prepared_partitions_by_the_core_budget(spark, monkeypatch):
+    """The vector frame every embedding operator reads is split into
+    CPU_PARTITIONS tasks, not a fixed count: each Sort-based task
+    downstream holds a 64 MB page, so a 32-core constant cost 4.2 GB of
+    execution memory on a 4-core box."""
+    from jonesy_spark.operators import similarity
+    from jonesy_spark.operators.dedup import CPU_PARTITIONS
+
+    emb = Catalog(spark, SF_DIR).embeddings
+    assert similarity._prepared(emb).rdd.getNumPartitions() == CPU_PARTITIONS
+    monkeypatch.setattr(similarity, "CPU_PARTITIONS", 3)
+    assert similarity._prepared(emb).rdd.getNumPartitions() == 3
+
+
 def test_ivf_near_dup_recall_vs_brute_force(spark):
     """IVF-blocked near-dup must (a) return a subset of the brute-force
     pairs with identical cosines (blocking never invents pairs) and (b)
