@@ -36,12 +36,6 @@ except ImportError:  # pragma: no cover - exercised in this container
 from ..caching import persist
 from . import codecs as _codecs
 
-#: Output schema of the feature extraction step (declared up front so
-#: downstream plans are fully typed).
-FEATURE_SCHEMA = (
-    "doc_id long, mime string, byte_len long, feature array<float>, decoder string"
-)
-
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stand-in source: pack a text column as the opaque binary payload
@@ -83,57 +77,6 @@ def decode_stub(
     )
 
 
-#: Output schema of the frame-sampling step: one row per sampled frame.
-FRAME_SCHEMA = (
-    "doc_id long, frame_idx int, frame_bytes binary, frame_hash string"
-)
-
-
-def sample_frames(df: DataFrame, stride: int = 64, max_frames: int = 4) -> DataFrame:
-    """Frame-sampling plumbing for video-like payloads: emit up to
-    ``max_frames`` fixed-stride slices of each binary payload as rows.
-
-    The slicing stands in for codec-level frame extraction (no av
-    libraries in this container); the Spark shape is the real one — a
-    ``mapInPandas`` fan-out where each input row yields N output rows,
-    so downstream per-frame operators (resize, embed) stay relational.
-    """
-    import hashlib as _hl
-
-    import numpy as np
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # Vectorized explode: one frame count per row, then a single
-            # np.repeat fan-out — no per-row iterrows; the only Python
-            # loop left is over the (already exploded) frame slices,
-            # which is the per-frame codec boundary itself.
-            payloads = [bytes(p) for p in pdf["payload"]]
-            counts = np.array(
-                [min(max_frames, max(1, len(p) // stride)) for p in payloads]
-            )
-            doc_ids = np.repeat(pdf["doc_id"].to_numpy(), counts)
-            frame_idx = np.concatenate([np.arange(c) for c in counts])
-            frames = [
-                p[i * stride : (i + 1) * stride]
-                for p, c in zip(payloads, counts)
-                for i in range(c)
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "frame_idx": frame_idx.astype("int32"),
-                    "frame_bytes": frames,
-                    "frame_hash": [
-                        _hl.md5(fr).hexdigest()[:12] for fr in frames
-                    ],
-                }
-            )
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
 def resize_stub(
     payload: bytes,
     target: int,
@@ -163,42 +106,6 @@ def resize_stub(
         f"no image codec for mime={mime!r} in this environment; "
         "pass fake=True"
     )
-
-
-def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
-
-    Arrow delivers each partition as an iterator of pandas batches; we
-    transform batch-at-a-time (vectorized apply over the batch) and
-    yield typed frames matching FEATURE_SCHEMA. At scale the partition
-    count (not the batch size) bounds Python parallelism — repartition
-    upstream if payload sizes are skewed.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    "byte_len": pdf["byte_len"],
-                    "feature": [
-                        decode_stub(bytes(p), fake, m)
-                        for p, m in zip(pdf["payload"], pdf["mime"])
-                    ],
-                    "decoder": "stub-fake"
-                    if fake
-                    else [
-                        "ppm"
-                        if m in _codecs.PPM_MIMES
-                        else ("pil" if _PILImage is not None else "real")
-                        for m in pdf["mime"]
-                    ],
-                }
-            )
-            yield out
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 #: Output schema of the perceptual-hash step.

@@ -278,31 +278,6 @@ def eval_report(scored: DataFrame, labels: DataFrame, id_col: str = "doc_id") ->
     )
 
 
-def scored_stream_report(scores: DataFrame) -> DataFrame:
-    """Nightly monitoring over a scored-document table (the
-    ``run_scored_doc_stream`` output): per (model_version,
-    ingest_batch) doc counts, positive rate, and mean score — one
-    keyed aggregation over per-row columns, no re-scoring (the
-    ``tokenize.oov_report`` pattern). A pred-rate STEP at a version
-    bump is the expected signature of a retrain taking over; a drift
-    WITHIN a version is the upstream-corpus-changed alarm (compare
-    with ``stats.stats_drift``'s volume view)."""
-    keys = [c for c in ("model_version", "ingest_batch") if c in scores.columns]
-    return (
-        scores.groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            micro_units(F.avg(F.col("pred").cast("int"))).alias(
-                "pred_rate_micro"
-            ),
-            F.round(F.avg("score_micro")).cast("long").alias(
-                "mean_score_micro"
-            ),
-        )
-        .orderBy(*keys)
-    )
-
-
 def write_model(
     model: DataFrame,
     path: str,
@@ -465,7 +440,7 @@ def write_classifier_counts(
     is ``overwrite`` — scoped to this run's ``ingest_batch=<run_id>``
     subtree, so a retried writer replaces its own partial epoch rather
     than appending duplicate count rows under the same run_id
-    (ADVICE r6; the streaming wrapper already passed overwrite).
+    (ADVICE r6).
     Returns the run_id used."""
     if run_id is None:
         import uuid

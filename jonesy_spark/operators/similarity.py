@@ -14,7 +14,7 @@ Two tiers, per SURVEY.md §7 Phase 5:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import cache_scope, persist
@@ -407,22 +407,6 @@ def _ivf_root(spark, index_path: str) -> str:
     return index_path if n is None else f"{index_path}/version={n}"
 
 
-def read_ivf_centroids(spark, index_path: str) -> DataFrame | None:
-    """The index's frozen cell table ``(cid, cv, cnrm)``; None when the
-    index does not exist yet. Centroids are written ONCE at index
-    creation and never change within a version — cell assignment must
-    be identical for every batch ever probed or appended to it. Growing
-    corpora re-train via :func:`rebuild_ivf_index`, which freezes a NEW
-    centroid table in a fresh ``version=`` subtree rather than mutating
-    this one."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{_ivf_root(spark, index_path)}/centroids")
-    except AnalysisException:
-        return None
-
-
 def write_ivf_index(
     emb: DataFrame,
     index_path: str,
@@ -697,110 +681,6 @@ def incremental_embedding_dedup(
     return novel, matches
 
 
-def rebuild_ivf_index(
-    spark,
-    index_path: str,
-    k: int | None = None,
-    run_id: str | None = None,
-    seed: int = 13,
-) -> int:
-    """Re-train the IVF index's centroids and re-shard every stored
-    vector into a NEW ``version=N`` subtree, then publish it with an
-    atomic marker flip — the periodic re-index a growing corpus needs
-    (a centroid table frozen at sqrt(first-batch) cells degrades as the
-    corpus grows 100x past it; K should track sqrt(corpus)). Returns
-    the new version number.
-
-    Publication protocol: the new version's ``centroids/`` and
-    ``assignments/`` are fully durable BEFORE its ``_COMMITTED`` marker
-    is created; readers and writers resolve the live version per call
-    (:func:`_ivf_root`), so anything in flight keeps the old subtree —
-    unaffected mid-rebuild — and the next operation lands on the new
-    one. A crash mid-rebuild leaves an unmarked subtree the next
-    rebuild attempt ignores (stale unmarked/old versions are cleanup
-    fodder, never correctness hazards).
-
-    Training is MLlib k-means|| (:func:`kmeans_centroids`, K ~
-    sqrt(corpus) by default): distributed over the stored vectors, only
-    the K x dim center table reaches the driver. Re-sharding is one
-    scan + one ``cid`` shuffle of the index — O(corpus), which is the
-    point: rebuilds are RARE maintenance (weekly, or at 10x growth),
-    appends stay O(novel).
-
-    Operational constraint: QUIESCE writers first, the compaction
-    contract (``hygiene.compact_index``) — an append racing the rebuild
-    lands in the old version after its snapshot and would be absent
-    from the new one.
-    """
-    import uuid
-
-    from pyspark.errors import AnalysisException
-
-    old_root = _ivf_root(spark, index_path)
-    try:
-        idx = spark.read.parquet(f"{old_root}/assignments")
-    except AnalysisException:
-        raise ValueError(f"no IVF index at {index_path!r} to rebuild") from None
-    # compaction tolerates duplicate rows between batches; a rebuild
-    # must not double-store them in the new shards. A quantized index
-    # re-trains on DEQUANTIZED vectors and stays quantized in the new
-    # version (the storage format is an index-level property).
-    quantized = "qv" in idx.columns
-    if quantized:
-        idx = idx.select(
-            "vec_id",
-            VX.dequantize_int8(F.col("qv")).alias("v"),
-            F.col("nrm").cast("double").alias("nrm"),
-        )
-    with cache_scope():
-        vectors = persist(idx.select("vec_id", "v", "nrm").dropDuplicates(["vec_id"]))
-        n = vectors.count()
-        if n == 0:
-            raise ValueError(
-                f"IVF rebuild at {index_path!r}: stored index is empty"
-            )
-        # number past EVERY version subtree, committed or not — a
-        # crashed rebuild's unmarked directory must not collide with
-        # the retry's errorifexists writes
-        sc = spark.sparkContext
-        Path = sc._jvm.org.apache.hadoop.fs.Path
-        fs = Path(index_path).getFileSystem(sc._jsc.hadoopConfiguration())
-        seen_versions = [
-            int(st.getPath().getName().split("=", 1)[1])
-            for st in (fs.globStatus(Path(f"{index_path}/version=*")) or [])
-        ]
-        new_version = max(seen_versions, default=0) + 1
-        new_root = f"{index_path}/version={new_version}"
-        cents = kmeans_centroids(
-            vectors.select("vec_id", F.col("v").alias("embedding")),
-            k or adaptive_centroids(n),
-            seed=seed,
-        )
-        cents.write.mode("errorifexists").parquet(f"{new_root}/centroids")
-        cents = spark.read.parquet(f"{new_root}/centroids")
-        assign = ivf_assignments(vectors, probes=1, centroids=cents)
-        run_id = run_id or f"rebuild-{uuid.uuid4().hex[:12]}"
-        resharded = vectors.join(assign, "vec_id")
-        if quantized:
-            resharded = resharded.select(
-                "vec_id",
-                VX.quantize_int8(F.col("v")).alias("qv"),
-                F.col("nrm").cast("float").alias("nrm"),
-                "cid",
-            )
-        else:
-            resharded = resharded.select("vec_id", "v", "nrm", "cid")
-        (
-            resharded.repartition("cid")
-            .write.mode("errorifexists")
-            .partitionBy("cid")
-            .parquet(f"{new_root}/assignments/ingest_batch={run_id}")
-        )
-    # everything durable -> atomic publish (single file create)
-    fs.create(Path(f"{new_root}/_COMMITTED")).close()
-    return new_version
-
-
 def vacuum_ivf_versions(spark, index_path: str) -> list[str]:
     """Delete every IVF subtree the live version no longer needs: stale
     ``version=N`` directories (superseded rebuilds and crashed attempts
@@ -982,15 +862,6 @@ def pq_codebooks(
     import numpy as np
     import pandas as pd
 
-    first = emb.select("embedding").first()
-    if first is None:
-        raise ValueError(
-            "pq_codebooks needs a non-empty embeddings frame to train on"
-        )
-    dim = len(first["embedding"])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d = dim // m
     # `prepared` lets pq_topk share ONE persisted _prepared frame
     # across codebook training, encoding, the query side and the
     # re-rank (r14: each used to re-run the scan + as_double + norm)
@@ -1004,7 +875,15 @@ def pq_codebooks(
         .limit(n_train)
         .collect()
     )
+    if not sample:
+        raise ValueError(
+            "pq_codebooks needs a non-empty embeddings frame to train on"
+        )
     X = np.array([r["u"] for r in sample], dtype=np.float64)
+    dim = X.shape[1]
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
+    d = dim // m
     if len(X) < k:
         raise ValueError(
             f"pq_codebooks needs >= k={k} training vectors, got {len(X)}"
@@ -1035,7 +914,7 @@ def pq_codebooks(
             (j, c, [float(x) for x in centers[c]]) for c in range(k)
         )
     # through Arrow, not a Python list: every action over the codebook
-    # (_pq_m's max(sub), the broadcasts) pays for the list form — a
+    # (pq_encode's max(sub), the broadcasts) pays for the list form — a
     # warm max(sub) took 0.44-0.64 s from a list, 0.17-0.26 s from
     # pandas (4 cores)
     return emb.sparkSession.createDataFrame(
@@ -1058,56 +937,45 @@ def _pq_m(codebooks: DataFrame) -> int:
     return top + 1
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: DataFrame,
-    prepared: DataFrame | None = None,
-) -> DataFrame:
-    """Encode unit-normalized embeddings under a PQ codebook:
-    ``(vec_id, codes array<int>, label)`` with ``codes[j]`` the
-    nearest subspace-``j`` centroid — ``m`` small ints instead of
-    ``dim`` floats, the 32x-smaller scan side of :func:`pq_topk`.
-
-    Plan shape: the codebook broadcasts; each vector explodes to its
-    ``m`` subvectors map-side, the ``k`` candidate distances fold in
-    the join projection, and the per-(vec, sub) argmin plus the
-    codes-array assembly are two keyed aggregations with map-side
-    combine (ties break to the lowest code, deterministically). No
-    corpus-wide anything but the one vec_id-keyed agg."""
-    m = _pq_m(codebooks)
-    dim_row = emb.select(F.size("embedding").alias("s")).first()
-    if dim_row is None:
-        # an empty batch encodes to an empty frame — the streaming
-        # writer's isEmpty() guard made this case real; the batch API
-        # must not die with an opaque NoneType subscript
-        return emb.sparkSession.createDataFrame(
-            [], "vec_id long, label string, codes array<int>"
+def _subvectors(u: str, m: int, out: str) -> Column:
+    """Explode a unit vector column into its ``m`` contiguous
+    subvectors ``struct(sub, <out>)``. The subvector length is read off
+    each row (``size(u) / m``), so no driver probe of the dimension is
+    needed."""
+    d = (F.size(u) / m).cast("int")
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).cast("int").alias("sub"),
+                    F.slice(F.col(u), d * j + 1, d).alias(out),
+                )
+                for j in range(m)
+            ]
         )
-    d = dim_row["s"] // m
-    unit = (prepared if prepared is not None else _prepared(emb)).select(
+    )
+
+
+def _sq_dist(a: str, b: str) -> Column:
+    """Squared L2 distance between two equal-length array columns."""
+    return F.aggregate(
+        F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, y: acc + y,
+    )
+
+
+def _pq_codes(prep: DataFrame, codebooks: DataFrame, m: int) -> DataFrame:
+    """:func:`pq_encode`'s plan over a :func:`_prepared` frame and a
+    known subspace count — the form :func:`pq_topk` calls, so an
+    encode inside a top-k pass probes nothing on the driver."""
+    unit = prep.select(
         "vec_id",
         "label",
         F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("u"),
     )
-    subs = unit.select(
-        "vec_id",
-        "label",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("sub"),
-                        F.slice(F.col("u"), j * d + 1, d).alias("x"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("s"),
-    ).select("vec_id", "label", "s.sub", "s.x")
-    d2 = F.aggregate(
-        F.zip_with(F.col("x"), F.col("sv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, y: acc + y,
+    subs = unit.select("vec_id", "label", _subvectors("u", m, "x").alias("s")).select(
+        "vec_id", "label", "s.sub", "s.x"
     )
     best = (
         subs.join(F.broadcast(codebooks), "sub")
@@ -1115,7 +983,7 @@ def pq_encode(
             "vec_id",
             "label",
             "sub",
-            F.struct(d2.alias("d"), F.col("code")).alias("dc"),
+            F.struct(_sq_dist("x", "sv").alias("d"), F.col("code")).alias("dc"),
         )
         .groupBy("vec_id", "label", "sub")
         .agg(F.min("dc").getField("code").alias("code"))
@@ -1125,6 +993,30 @@ def pq_encode(
             F.array_sort(F.collect_list(F.struct("sub", "code"))),
             lambda s: s.getField("code"),
         ).alias("codes")
+    )
+
+
+def pq_encode(
+    emb: DataFrame,
+    codebooks: DataFrame,
+    prepared: DataFrame | None = None,
+) -> DataFrame:
+    """Encode unit-normalized embeddings under a PQ codebook:
+    ``(vec_id, codes array<int>, label)`` with ``codes[j]`` the
+    nearest subspace-``j`` centroid — ``m`` small ints instead of
+    ``dim`` floats, the 32x-smaller scan side of :func:`pq_topk`.
+    An empty ``emb`` encodes to an empty frame.
+
+    Plan shape: the codebook broadcasts; each vector explodes to its
+    ``m`` subvectors map-side, the ``k`` candidate distances fold in
+    the join projection, and the per-(vec, sub) argmin plus the
+    codes-array assembly are two keyed aggregations with map-side
+    combine (ties break to the lowest code, deterministically). No
+    corpus-wide anything but the one vec_id-keyed agg. The one driver
+    probe is the codebook's subspace count."""
+    m = _pq_m(codebooks)
+    return _pq_codes(
+        prepared if prepared is not None else _prepared(emb), codebooks, m
     )
 
 
@@ -1172,8 +1064,13 @@ def pq_topk(
     ``n_cells``, one vec_id-co-keyed join tagging each code row with
     its cell — the query-cell mask is a broadcast); the re-rank
     touches ``n_queries * overfetch * k`` rows. Pass precomputed
-    ``codebooks``/``codes`` (the persisted-store path) to skip
-    training and encoding."""
+    ``codebooks``/``codes`` (the frozen-fixture path of the
+    ``ann_pq_rerank`` row) to skip training and encoding; an empty ``emb`` then yields an empty
+    result.
+
+    Driver probes: on the training path none beyond the codebook
+    sample (``m`` is the argument, the subvector length is read per
+    row); with ``codebooks`` passed, one ``max(sub)`` for ``m``."""
     # ONE persisted _prepared frame shared by codebook training, the
     # encode pass, the query side, the IVF branch and the float
     # re-rank (r14: five separate _prepared subtrees each re-ran the
@@ -1187,48 +1084,20 @@ def pq_topk(
     prep = persist(_prepared(emb))
     if codebooks is None:
         codebooks = pq_codebooks(emb, m=m, k=n_codes, prepared=prep)
+    else:
+        m = _pq_m(codebooks)
     if codes is None:
-        codes = pq_encode(emb, codebooks, prepared=prep)
+        codes = _pq_codes(prep, codebooks, m)
 
-    mm = _pq_m(codebooks)
-    dim_row = emb.select(F.size("embedding").alias("s")).first()
-    if dim_row is None:
-        # mirror pq_encode's empty-frame guard: no vectors means no
-        # queries and no candidates — an empty result, not a NoneType
-        # subscript
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, vec_id long, cosine_micro long, rank int"
-        )
-    dsub = dim_row["s"] // mm
     unit = prep.select(
         "vec_id", F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("u")
     )
     q = unit.filter(F.col("vec_id") < n_queries)
     qsubs = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("sub"),
-                        F.slice(F.col("u"), j * dsub + 1, dsub).alias("qx"),
-                    )
-                    for j in range(mm)
-                ]
-            )
-        ).alias("s"),
+        F.col("vec_id").alias("query_id"), _subvectors("u", m, "qx").alias("s")
     ).select("query_id", "s.sub", "s.qx")
     lut = qsubs.join(F.broadcast(codebooks), "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        F.aggregate(
-            F.zip_with(
-                F.col("qx"), F.col("sv"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, y: acc + y,
-        ).alias("d2"),
+        "query_id", "sub", "code", _sq_dist("qx", "sv").alias("d2")
     )
     exploded = codes.select(
         "vec_id", F.posexplode("codes").alias("sub", "code")
@@ -1323,74 +1192,6 @@ def pq_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cosine_micro", "rank")
     )
-
-
-def write_pq_index(
-    emb: DataFrame,
-    index_path: str,
-    m: int = 8,
-    k: int = 16,
-    run_id: str | None = None,
-    mode: str = "append",
-) -> str:
-    """Append a batch of vectors to the persisted PQ index; creates
-    the index (freezing its codebooks) on first call. Returns the
-    ``run_id`` used — the fifth member of the incremental-index
-    family (digest, minhash, IVF, classifier counts, PQ), same
-    ledger layout and maintenance rails.
-
-    Layout: ``codebooks/`` (immutable ``(sub, code, sv)`` — frozen at
-    creation exactly like the IVF centroid table, because codes
-    encoded under different codebooks are mutually meaningless) +
-    ``codes/ingest_batch=<run_id>/`` holding ``(vec_id, codes, label)``
-    — ``m`` ints per vector, the 32x-compressed scan side
-    :func:`pq_topk` consumes via its ``codebooks``/``codes``
-    parameters. Batches append; ``hygiene.compact_index`` (flat,
-    ``part_col=None``) handles the small-files pass, and readers go
-    through ``hygiene.read_index_resolved`` because duplicate code
-    rows are NOT harmless here: the ADC fold sums ``m`` partial
-    distances per vector, so a compaction-crash survivor batch would
-    double every affected distance (the same SUM-folding hazard as
-    the BM25/classifier ledgers)."""
-    from pyspark.errors import AnalysisException
-
-    spark = emb.sparkSession
-    if run_id is None:
-        import uuid
-
-        run_id = f"nightly-{uuid.uuid4().hex[:12]}"
-    try:
-        books = spark.read.parquet(f"{index_path}/codebooks")
-    except AnalysisException:
-        books = pq_codebooks(emb, m=m, k=k)
-        books.write.mode("errorifexists").parquet(f"{index_path}/codebooks")
-        books = spark.read.parquet(f"{index_path}/codebooks")
-    codes = pq_encode(emb, books)
-    codes.write.mode(mode).parquet(
-        f"{index_path}/codes/ingest_batch={run_id}"
-    )
-    return run_id
-
-
-def read_pq_index(spark, index_path: str):
-    """Read the persisted PQ index back as ``(codebooks, codes)`` —
-    plug both straight into :func:`pq_topk`. Codes read through
-    ``hygiene.read_index_resolved`` (compaction-crash survivors
-    excluded — see :func:`write_pq_index` for why duplicates corrupt
-    ADC distances); raises on an absent index, the house probe rule."""
-    from pyspark.errors import AnalysisException
-
-    from .hygiene import read_index_resolved
-
-    try:
-        books = spark.read.parquet(f"{index_path}/codebooks")
-        codes = read_index_resolved(spark, f"{index_path}/codes")
-    except AnalysisException:
-        raise ValueError(
-            f"no PQ index at {index_path!r}; write one with "
-            "write_pq_index before probing"
-        ) from None
-    return books, codes.drop("ingest_batch")
 
 
 def ann_recall(
@@ -1541,95 +1342,6 @@ def hash_embed(
         # oracle's raw-sum bucketing bit for bit.
         cols.append(F.col("raw").alias("raw_components"))
     return vec.select(*cols)
-
-
-def cluster_documents(
-    docs: DataFrame,
-    k: int = 8,
-    dim: int = 16,
-    seed: int = 13,
-    max_iter: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Corpus topic clustering: hash-embed the documents
-    (:func:`hash_embed`) and assign each to its nearest trained
-    k-means centroid — the exploration tier's "what's in this corpus"
-    map (swap in a real encoder by replacing the embed stage, as for
-    the semantic-dedup pass). Output: ``(id, cluster_id)`` for every
-    document with at least one token.
-
-    Scale shape: training is MLlib k-means|| (distributed; only K x
-    dim centers reach the driver), assignment is the map-side
-    :func:`ivf_assignments` path with ``probes=1`` — a broadcast
-    centroid array and a sorted-array expression per vector, no
-    shuffle beyond the embedding itself. NOT in the oracle-checked
-    surface (k-means inherits MLlib's seed semantics, not
-    cross-engine determinism); pinned by separation tests instead.
-    """
-    emb = hash_embed(docs, dim=dim, text_col=text_col, id_col=id_col)
-    e = _prepared(
-        emb.select(
-            F.col(id_col).alias("vec_id"), "embedding", F.lit("d").alias("label")
-        )
-    )
-    cents = kmeans_centroids(emb, k=k, seed=seed, max_iter=max_iter)
-    assign = ivf_assignments(e, probes=1, centroids=cents)
-    return assign.select(
-        F.col("vec_id").alias(id_col), F.col("cid").alias("cluster_id")
-    )
-
-
-def cluster_top_terms(
-    docs: DataFrame,
-    assignments: DataFrame,
-    top_n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cluster labels via c-TF-IDF (public method: the class-based
-    TF-IDF of BERTopic, Grootendorst 2022): treat each cluster's
-    concatenated documents as one pseudo-document, weight term counts
-    by how few clusters contain the term, and keep the ``top_n``
-    highest-scoring terms per cluster — the human-readable answer to
-    "what is cluster 7 about". Output: ``(cluster_id, term, score,
-    rank)``; score rounded to 6.
-
-    Scale shape: one (cluster, term) count aggregation with map-side
-    combine (cardinality <= clusters x vocabulary), a cluster-count
-    document frequency over that same frame, and a rank window
-    partitioned by cluster — nothing document-sized past the first
-    aggregation."""
-    from pyspark.sql import Window
-
-    toks = docs.join(assignments, id_col).select(
-        "cluster_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("t"),
-    )
-    ct = toks.groupBy("cluster_id", "t").agg(F.count(F.lit(1)).alias("tf"))
-    n_clusters = assignments.select("cluster_id").distinct().count()
-    dfc = ct.groupBy("t").agg(F.count(F.lit(1)).alias("df_clusters"))
-    scored = ct.join(dfc, "t").select(
-        "cluster_id",
-        F.col("t").alias("term"),
-        F.round(
-            F.col("tf") * F.log(F.lit(float(n_clusters)) / F.col("df_clusters") + 1.0),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("score").desc(), F.col("term")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-        .select("cluster_id", "term", "score", "rank")
-    )
 
 
 def margin_bitext_pairs(

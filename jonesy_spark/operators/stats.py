@@ -280,18 +280,6 @@ def snapshot_diff(
     )
 
 
-def snapshot_diff_summary(diff: DataFrame) -> DataFrame:
-    """One row per status with counts and share of the union — the
-    nightly monitoring view over :func:`snapshot_diff` (a sudden spike
-    in ``changed`` or ``removed`` is the classic upstream-regression
-    alarm). One keyed aggregation + a broadcast 1-row total."""
-    counts = diff.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
-    total = counts.agg(F.sum("n").alias("t"))
-    return counts.crossJoin(F.broadcast(total)).select(
-        "status", "n", micro_units(F.col("n") / F.col("t")).alias("share_micro")
-    )
-
-
 def psi_report(
     base: DataFrame,
     cur: DataFrame,
@@ -430,68 +418,6 @@ def key_skew_report(
         )
         .orderBy(F.col("n_rows").desc(), "key")
         .limit(top_n)
-    )
-
-
-def index_overlap_report(
-    spark: SparkSession,
-    index_path_a: str,
-    index_path_b: str,
-    lg_k: int = DEFAULT_LG_K,
-) -> DataFrame:
-    """Cross-corpus overlap estimate between two persisted digest
-    indexes (``hygiene.write_novel_digests`` layouts) — the governance
-    question "how much of corpus B is already in corpus A" answered
-    WITHOUT joining the two digest sets: per-index HLL sketches over
-    ``content_hash``, union-merged, then inclusion-exclusion::
-
-        |A ∩ B| ≈ est(A) + est(B) - est(A ∪ B)
-        jaccard ≈ |A ∩ B| / est(A ∪ B)
-
-    One row out: ``(est_a, est_b, est_union, est_intersection,
-    est_jaccard, containment_b_in_a)`` (floors at 0 — inclusion-
-    exclusion can go slightly negative at the sketch's error bound
-    when the true overlap is ~zero).
-
-    Scale shape: each index contributes ONE aggregation producing a
-    KB-sized sketch; the merge is register-wise max over two rows.
-    At 10 B digests a side this is two scans and no shuffle wider
-    than a sketch — the exact-join alternative (anti/semi join on
-    32-char digests) shuffles both indexes and is only worth it when
-    the DECISION needs exact counts, not a ratio. Error is the HLL
-    bound (~1.6% rsd at the default lg_k) on each term, so treat
-    single-digit-percent jaccard differences as noise.
-    """
-    from .hygiene import read_digest_index
-
-    a = read_digest_index(spark, index_path_a).agg(
-        F.hll_sketch_agg("content_hash", lg_k).alias("s")
-    )
-    bframe = read_digest_index(spark, index_path_b).agg(
-        F.hll_sketch_agg("content_hash", lg_k).alias("s")
-    )
-    both = a.unionByName(bframe)
-    merged = both.agg(F.hll_union_agg("s", True).alias("u"))
-    ests = (
-        a.select(F.hll_sketch_estimate("s").alias("est_a"))
-        .crossJoin(bframe.select(F.hll_sketch_estimate("s").alias("est_b")))
-        .crossJoin(merged.select(F.hll_sketch_estimate("u").alias("est_union")))
-    )
-    inter = F.greatest(
-        F.lit(0.0), F.col("est_a") + F.col("est_b") - F.col("est_union")
-    )
-    return ests.select(
-        "est_a",
-        "est_b",
-        "est_union",
-        F.round(inter, 1).alias("est_intersection"),
-        F.round(inter / F.col("est_union"), 6).alias("est_jaccard"),
-        F.round(
-            F.when(F.col("est_b") > 0, inter / F.col("est_b")).otherwise(
-                F.lit(0.0)
-            ),
-            6,
-        ).alias("containment_b_in_a"),
     )
 
 
@@ -1390,16 +1316,6 @@ def bloom_batch(
     )
 
 
-def bloom_fold(spark: SparkSession, index_path: str) -> DataFrame:
-    """Fold a Bloom ledger (written with :func:`write_kmv_index`) to
-    the current filter — distinct union of set bits, bit-identical to
-    the single-pass filter over every batch (the OR monoid), with
-    duplicate ledger rows absorbed (compaction crashes harmless, as
-    for KMV)."""
-    raw = _read_ledger(spark, index_path, "bloom", "write_kmv_index")
-    return raw.select("bit").distinct()
-
-
 def bloom_probe(
     sketch: DataFrame,
     queries: DataFrame,
@@ -1431,25 +1347,10 @@ def bloom_probe(
     )
 
 
-# --------------------------------------------------------------------
-# Incremental corpus card — the data-card panel answered from LEDGERS
-# instead of a corpus rescan: exact sum partials per (source, lang)
-# on the shared ingest_batch= rails (counts/chars/tokens/quality-sums
-# fold associatively with zero drift, the rollup property), and the
-# per-source distinct-content column from a KMV sketch of the
-# dedup-normalized digests (exact below k, ~1/sqrt(k-2) above — the
-# honest 100 TB answer: exact sums + sketched distincts, everything
-# metadata-sized). The scan-based twin is the `corpus_card` registry
-# row; the fixture test pins ledger == scan exactly (fixture sources
-# sit in the KMV exact regime).
-# --------------------------------------------------------------------
-
-
 def doc_quality_micro(text: Column) -> Column:
     """The standard document-quality composite in integer micro-units —
     the same expression the `quality_filter` / `corpus_card` oracles
-    pin (length saturation x stopword-ratio complement), factored here
-    so the incremental card cannot drift from the scan-based one."""
+    pin (length saturation x stopword-ratio complement)."""
     from ..functions.scalars import micro_units
     from ..functions.text import occurrences, whitespace_token_count
 
@@ -1458,136 +1359,4 @@ def doc_quality_micro(text: Column) -> Column:
     return micro_units(
         F.least(F.lit(1.0), n_tokens / 100.0)
         * (1.0 - F.least(F.lit(1.0), c_stop / n_tokens))
-    )
-
-
-def doc_stats_batch(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One batch's corpus-card partials: per (source, lang) —
-    ``(source, lang, n_docs, n_chars, n_ws_tokens, q_sum_micro,
-    n_en_docs)``, every column an exact integer SUM so partials from
-    any batch cut fold bit-identically (the rollup mergeability
-    argument). One keyed aggregation with map-side combine; group
-    count is (sources x langs)-sized — metadata."""
-    from ..functions.text import whitespace_token_count
-
-    t = F.col(text_col)
-    return (
-        docs.select(
-            "source",
-            "lang",
-            F.length(t).cast("long").alias("n_chars"),
-            whitespace_token_count(t).cast("long").alias("n_tokens"),
-            doc_quality_micro(t).alias("q_micro"),
-            (F.col("lang") == "en").cast("long").alias("is_en"),
-        )
-        .groupBy("source", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("n_chars"),
-            F.sum("n_tokens").alias("n_ws_tokens"),
-            F.sum("q_micro").alias("q_sum_micro"),
-            F.sum("is_en").alias("n_en_docs"),
-        )
-    )
-
-
-def write_doc_stats_index(
-    partials: DataFrame,
-    index_path: str,
-    mode: str = "append",
-    run_id: str | None = None,
-) -> str:
-    """Land one batch's card partials under the shared
-    ``ingest_batch=<run>`` rails (family member #9). SUM-folding
-    reader — crash-surviving duplicate batches are excluded via the
-    resolved-read protocol like every SUM family member."""
-    return _write_ledger(partials, index_path, mode, run_id)
-
-
-def doc_stats_fold(spark: SparkSession, index_path: str) -> DataFrame:
-    """Fold the card ledger to current per-(source, lang) totals —
-    exactly :func:`doc_stats_batch` over the union of every ingested
-    batch. Raises on an absent ledger, the house probe rule."""
-    raw = _read_ledger(spark, index_path, "doc-stats", "write_doc_stats_index")
-    return raw.groupBy("source", "lang").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars"),
-        F.sum("n_ws_tokens").alias("n_ws_tokens"),
-        F.sum("q_sum_micro").alias("q_sum_micro"),
-        F.sum("n_en_docs").alias("n_en_docs"),
-    )
-
-
-def corpus_card_report(
-    spark: SparkSession,
-    stats_index_path: str,
-    kmv_index_path: str,
-    k: int = KMV_DEFAULT_K,
-) -> DataFrame:
-    """The nightly data card WITHOUT a corpus rescan: per source, the
-    exact volume/quality columns folded from the doc-stats ledger
-    joined with the estimated distinct-content count from a KMV
-    ledger of dedup-normalized digests (build its batches with
-    ``kmv_sketch_batch(docs.select('source',
-    hygiene.content_digest(text)), ['source'], ...)``). Output matches
-    the scan-based `corpus_card` row column-for-column, with
-    ``n_exact_dup_docs`` carrying the sketch estimate — EXACT whenever
-    a source holds fewer than k distinct documents, ~13 % banded at
-    k=64 beyond (use a larger k at ingest time for tighter cards)."""
-    per_lang = doc_stats_fold(spark, stats_index_path)
-    per_source = per_lang.groupBy("source").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars"),
-        F.sum("n_ws_tokens").alias("n_ws_tokens"),
-        F.sum("q_sum_micro").alias("__qsum"),
-        F.sum("n_en_docs").alias("n_en_docs"),
-    )
-    sketch = kmv_fold(spark, kmv_index_path, ["source"], k=k)
-    est = kmv_estimate(sketch, ["source"], k=k).select(
-        "source", F.col("est_distinct").alias("__est_distinct")
-    )
-    # the two ledgers are written by separate calls with no shared
-    # transaction, so a source present in only one is a REAL ingest
-    # gap — and this card is exactly the inventory artifact that must
-    # surface it: fail loudly instead of inner-joining it away
-    asym = (
-        per_source.select("source")
-        .join(est.select("source"), "source", "full_outer")
-        .join(per_source.select("source", F.lit(1).alias("__s")), "source", "left")
-        .join(est.select("source", F.lit(1).alias("__k")), "source", "left")
-        .filter(F.col("__s").isNull() | F.col("__k").isNull())
-        .select("source", F.col("__s").isNotNull().alias("in_stats"))
-        .collect()  # bounded: source-cardinality metadata
-    )
-    if asym:
-        missing = {
-            r["source"]: "kmv" if r["in_stats"] else "doc-stats"
-            for r in asym
-        }
-        raise ValueError(
-            "corpus_card_report: sources present in only one ledger "
-            f"(source -> missing ledger): {missing} — land both the "
-            "doc-stats and the digest-KMV batch for every ingest run"
-        )
-    return (
-        per_source.join(est, "source")
-        .withColumn(
-            "n_exact_dup_docs",
-            F.greatest(
-                F.col("n_docs") - F.col("__est_distinct"), F.lit(0)
-            ).cast("long"),
-        )
-        .withColumn(
-            "mean_quality_micro",
-            F.expr("CAST(__qsum DIV n_docs AS BIGINT)"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_chars",
-            "n_ws_tokens",
-            "n_exact_dup_docs",
-            "mean_quality_micro",
-            "n_en_docs",
-        )
     )

@@ -538,43 +538,6 @@ def bpe_vocab(
     return base.select("token_id", "token", "kind").unionByName(merged)
 
 
-def live_merges_version(spark: SparkSession, path: str) -> int | None:
-    """The committed merge-table version currently served, or None when
-    none is published (the shared ``store.live_version`` contract:
-    atomic ``_COMMITTED`` publish, crashed writes invisible)."""
-    from .store import live_version
-
-    return live_version(spark, path)
-
-
-def write_bpe_merges(merges: DataFrame, path: str) -> int:
-    """Publish a trained merge table as the next ``version=N`` subtree,
-    made live by an atomic ``_COMMITTED`` marker create. Returns the
-    published version number.
-
-    A merge table is a VOCABULARY CONTRACT: every artifact encoded
-    under it (packed sequences, token counts, downstream training
-    shards) is only comparable to artifacts encoded under the SAME
-    table, so the store is versioned-immutable like the IVF centroid
-    tables — retraining publishes a new version, it never mutates one.
-    Version numbering skips past crashed (uncommitted) attempts, and
-    the table itself is one coalesced file (``n_merges`` rows —
-    driver-sized by definition)."""
-    from .store import publish_version
-
-    return publish_version(merges, path)
-
-
-def read_bpe_merges(spark: SparkSession, path: str) -> DataFrame | None:
-    """The live (latest committed) merge table, or None when no version
-    has been published — crashed partial writes are invisible by
-    construction (no ``_COMMITTED`` marker)."""
-    from .store import read_live
-
-    got = read_live(spark, path)
-    return None if got is None else got[0][0]
-
-
 def bpe_encode_ids(
     docs: DataFrame,
     vocab: DataFrame,
@@ -632,12 +595,13 @@ def write_bpe_tokenizer(merges: DataFrame, vocab: DataFrame, path: str) -> int:
     ``merges/`` and ``vocab/``. Ids are meaningless without the exact
     vocab they were assigned under, so the two tables freeze together
     or not at all: one ``_COMMITTED`` marker covers both (a reader can
-    never see a new vocab with old merges mid-publish). Same
-    versioned-immutable contract as :func:`write_bpe_merges`; use THIS
-    store when downstream consumes ids (training shards), the
-    merges-only store when it consumes token strings. The two layouts
-    differ (subtrees vs a bare table), so give each store its own
-    path."""
+    never see a new vocab with old merges mid-publish).
+
+    A tokenizer is a VOCABULARY CONTRACT: every artifact encoded under
+    it is only comparable to artifacts encoded under the SAME pair, so
+    the store is versioned-immutable — retraining publishes a new
+    version, it never mutates one. Version numbering skips past
+    crashed (uncommitted) attempts."""
     from .store import publish_version
 
     return publish_version({"merges": merges, "vocab": vocab}, path)
@@ -657,113 +621,6 @@ def read_bpe_tokenizer(
         return None
     (merges, vocab), n = got
     return merges, vocab, n
-
-
-def oov_report(shards: DataFrame) -> DataFrame:
-    """Nightly OOV-rate report over a tokenized shard table (the
-    ``run_tokenized_shard_stream`` / :func:`bpe_encode_ids` output):
-    per (tokenizer_version, ingest_batch) docs, token totals, OOV
-    totals and rate — one keyed aggregation over per-row counters, no
-    re-tokenization. A rising ``oov_rate`` across batches is the
-    re-train-the-vocab alarm; a STEP at a version bump is the expected
-    signature of the new vocab taking over."""
-    keys = [
-        c for c in ("tokenizer_version", "ingest_batch") if c in shards.columns
-    ]
-    # the shard schema names its token count for its family; read
-    # either — but a table carrying BOTH is two families written to one
-    # path (schema-merged parquet with nulls in each half), whose token
-    # totals are not comparable: reject it instead of silently summing
-    # one family's column against every row's doc count
-    has_bpe = "n_bpe_tokens" in shards.columns
-    has_uni = "n_unigram_tokens" in shards.columns
-    if has_bpe and has_uni:
-        raise ValueError(
-            "shards table carries both n_bpe_tokens and "
-            "n_unigram_tokens — mixed tokenizer families in one shards "
-            "path; give each family its own path"
-        )
-    if not has_bpe and not has_uni:
-        raise ValueError(
-            "shards table carries neither n_bpe_tokens nor "
-            "n_unigram_tokens — not a tokenized shards table (expected "
-            f"one family token column; got {shards.columns})"
-        )
-    tok_col = "n_bpe_tokens" if has_bpe else "n_unigram_tokens"
-    return (
-        shards.groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(tok_col).alias("n_tokens"),
-            F.sum("n_oov").alias("n_oov"),
-        )
-        .withColumn(
-            "oov_rate",
-            F.round(
-                F.col("n_oov") / F.greatest(F.col("n_tokens"), F.lit(1)), 6
-            ),
-        )
-    )
-
-
-def tokenizer_drift(old_merges: DataFrame, new_merges: DataFrame) -> DataFrame:
-    """One-row drift report between two merge tables — the re-ship
-    decision input when :func:`oov_report` alarms: ``(n_old, n_new,
-    n_shared, n_rank_moved, jaccard, prefix_len)``. ``n_shared``
-    counts merges present in both (by (left, right) pair),
-    ``n_rank_moved`` those shared but at a different rank,
-    ``prefix_len`` the length of the common PREFIX (identical pair at
-    every rank up to it) — BPE merges are order-sensitive, so a long
-    shared prefix means shards encoded under the old table stay
-    byte-identical up to tokens formed past that point. Driver-sized
-    inputs by definition (merge tables); one join, no corpus access."""
-    o = old_merges.select(
-        F.col("rank").alias("rank_old"), "left", "right"
-    )
-    n = new_merges.select(
-        F.col("rank").alias("rank_new"), "left", "right"
-    )
-    j = o.join(n, ["left", "right"], "full_outer")
-    agg = j.agg(
-        F.count(F.when(F.col("rank_old").isNotNull(), 1)).alias("n_old"),
-        F.count(F.when(F.col("rank_new").isNotNull(), 1)).alias("n_new"),
-        F.count(
-            F.when(
-                F.col("rank_old").isNotNull() & F.col("rank_new").isNotNull(),
-                1,
-            )
-        ).alias("n_shared"),
-        F.count(
-            F.when(
-                F.col("rank_old").isNotNull()
-                & F.col("rank_new").isNotNull()
-                & (F.col("rank_old") != F.col("rank_new")),
-                1,
-            )
-        ).alias("n_rank_moved"),
-        F.min(
-            F.when(
-                F.col("rank_old").isNull() | F.col("rank_new").isNull()
-                | (F.col("rank_old") != F.col("rank_new")),
-                F.coalesce("rank_old", "rank_new"),
-            )
-        ).alias("__first_div"),
-    )
-    return agg.select(
-        "n_old",
-        "n_new",
-        "n_shared",
-        "n_rank_moved",
-        micro_units(
-            F.col("n_shared")
-            / F.greatest(
-                F.col("n_old") + F.col("n_new") - F.col("n_shared"), F.lit(1)
-            )
-        ).alias("jaccard_micro"),
-        F.coalesce(
-            F.col("__first_div"), F.least("n_old", "n_new")
-        ).cast("int").alias("prefix_len"),
-    )
 
 
 # ---------------------------------------------------------------------
@@ -1373,51 +1230,6 @@ def unigram_encode_ids(
         return pd.Series(out)
 
     return docs.withColumn(out_col, _enc(pretokens(F.col(text_col))))
-
-
-def unigram_drift(old_pieces: DataFrame, new_pieces: DataFrame) -> DataFrame:
-    """One-row drift report between two unigram piece tables — the
-    unigram twin of :func:`tokenizer_drift` and the same re-ship
-    decision input: ``(n_old, n_new, n_shared, n_id_moved,
-    jaccard_micro, mean_abs_dlogprob_micro)``. Unlike BPE merges,
-    pieces are ORDER-FREE (ids are a pure rank of the table itself),
-    so instead of a common-prefix length the report carries the mean
-    absolute log-prob movement over shared pieces — the quantity that
-    actually moves Viterbi segmentations. ``n_id_moved`` counts shared
-    pieces whose :func:`unigram_vocab` id changed (shard
-    id-compatibility at a glance). Vocab-sized inputs by definition;
-    one join, no corpus access."""
-    o = unigram_vocab(old_pieces).select(
-        "piece",
-        F.col("token_id").alias("id_old"),
-        F.col("logprob_micro").alias("lp_old"),
-    )
-    n = unigram_vocab(new_pieces).select(
-        "piece",
-        F.col("token_id").alias("id_new"),
-        F.col("logprob_micro").alias("lp_new"),
-    )
-    j = o.join(n, "piece", "full_outer")
-    shared = F.col("id_old").isNotNull() & F.col("id_new").isNotNull()
-    return j.agg(
-        F.count(F.when(F.col("id_old").isNotNull(), 1)).alias("n_old"),
-        F.count(F.when(F.col("id_new").isNotNull(), 1)).alias("n_new"),
-        F.count(F.when(shared, 1)).alias("n_shared"),
-        F.count(
-            F.when(shared & (F.col("id_old") != F.col("id_new")), 1)
-        ).alias("n_id_moved"),
-        micro_units(
-            F.count(F.when(shared, 1))
-            / F.greatest(
-                F.count(F.lit(1)),
-                F.lit(1),
-            )
-        ).alias("jaccard_micro"),
-        F.coalesce(
-            F.avg(F.when(shared, F.abs(F.col("lp_old") - F.col("lp_new")))),
-            F.lit(0.0),
-        ).cast("long").alias("mean_abs_dlogprob_micro"),
-    )
 
 
 def _seed_unigram_distributed(

@@ -196,7 +196,7 @@ def prepare_training_corpus(
     # re-admit classifier-rejected ones). The model resolves at
     # pipeline build (store glob + bounded parquet read; the scoring
     # plan itself stays lazy), so a nightly retrain re-points the next
-    # run — publishing is the rollout, as for the streaming scorer.
+    # run — publishing is the rollout.
     if cfg.classifier_model_path is not None:
         from ..operators import classify as CL
 

@@ -59,10 +59,6 @@ class JobContext:
     run_date: date = field(default_factory=date.today)
     written: list[str] = field(default_factory=list)
 
-    @property
-    def sink(self) -> MultiTargetSink:
-        return MultiTargetSink(self.targets)
-
 
 def _current_term_ids(ctx: JobContext) -> list[str]:
     """Dynamic fan-out driver (D3): the top-3 'terms' (months) from the
@@ -71,22 +67,26 @@ def _current_term_ids(ctx: JobContext) -> list[str]:
     return [r["term_month"].strftime("%Y-%m") for r in terms.collect()]
 
 
-def _emit(ctx: JobContext, df, key: str, order_by=None) -> None:
+def emit(ctx, df, key: str, order_by=None) -> None:
+    """Land one extract: gzip CSV under ``ctx.out_root``, uploaded to
+    every target under the run date's daily prefix, ``key`` recorded
+    in ``ctx.written``. The one emit path of both job trios: ``ctx`` is
+    a :class:`JobContext` or a ``sis_jobs.SisJobContext``."""
     path = write_gzip_csv(df, ctx.out_root, key, order_by=order_by)
-    ctx.sink.upload(path, f"{daily_prefix(ctx.run_date)}/{key}")
+    MultiTargetSink(ctx.targets).upload(path, f"{daily_prefix(ctx.run_date)}/{key}")
     ctx.written.append(key)
 
 
 def upload_advisors(ctx: JobContext) -> None:
     """Term-independent advisor extracts (``jonesy/jobs.py:30-38``)."""
     q = all_queries()
-    _emit(
+    emit(
         ctx,
         q["basic_attributes"](ctx.spark, ctx.sf_dir),
         "advisors/advisor-note-permissions.csv.gz",
         order_by=[F.col("custkey")],
     )
-    _emit(
+    emit(
         ctx,
         q["latest_order_per_customer"](ctx.spark, ctx.sf_dir),
         "advisors/instructor-advisor-map.csv.gz",
@@ -97,7 +97,7 @@ def upload_snapshot(ctx: JobContext) -> None:
     """Full snapshot: attributes once + per-term course/enrollment
     extracts (``jonesy/jobs.py:50-63``)."""
     q = all_queries()
-    _emit(
+    emit(
         ctx,
         q["basic_attributes"](ctx.spark, ctx.sf_dir),
         "sis-data/basic-attributes.csv.gz",
@@ -119,7 +119,7 @@ def upload_snapshot(ctx: JobContext) -> None:
             )
             .distinct()
         )
-        _emit(
+        emit(
             ctx,
             enroll,
             f"sis-data/enrollments-{term}.csv.gz",
@@ -131,12 +131,12 @@ def upload_recent_refresh(ctx: JobContext) -> None:
     """Incremental refresh: watermark-filtered latest state + recent
     change-log joins (``jonesy/jobs.py:39-49``)."""
     q = all_queries()
-    _emit(
+    emit(
         ctx,
         q["watermark_incremental"](ctx.spark, ctx.sf_dir),
         "sis-data/recent-enrollment-updates.csv.gz",
     )
-    _emit(
+    emit(
         ctx,
         q["recent_instructor_updates"](ctx.spark, ctx.sf_dir),
         "sis-data/recent-instructor-updates.csv.gz",
@@ -218,9 +218,10 @@ def _ingest_warc(ctx: JobContext) -> None:
 
 def _train_tokenizer(ctx: JobContext) -> None:
     """Nightly vocabulary training: learn a tokenizer on the corpus
-    and publish it as the next committed version — consumers (the
-    shard stream, the corpus pipeline) re-resolve the live version per
-    run/batch, so publishing IS the rollout. ``TOKENIZER_FAMILY``
+    and publish it as the next committed version — readers
+    (``tokenize.read_bpe_tokenizer`` / ``read_unigram_tokenizer``)
+    resolve the live version per call, so publishing IS the rollout.
+    ``TOKENIZER_FAMILY``
     (layered config) picks the algorithm: ``bpe`` (default; merge
     count via ``TOKENIZER_MERGES``) publishes the (merges, vocab) pair
     under ``{out_root}/tokenizer``; ``unigram`` (SentencePiece-style;
@@ -260,9 +261,9 @@ def _train_classifier(ctx: JobContext) -> None:
     (``CLASSIFIER_LABEL_LANG``, default ``en`` — "looks like the
     reference language" quality gating) and publish it as the next
     committed version under ``{out_root}/quality_model``. Scoring
-    consumers (``streaming.run_scored_doc_stream``) re-resolve the
-    live version per batch, so publishing IS the rollout — the
-    tokenizer-job contract."""
+    consumers (``classify.read_model``, e.g. the corpus pipeline's
+    classifier gate) resolve the live version per run, so publishing
+    IS the rollout — the tokenizer-job contract."""
     from ..operators import classify as CL
 
     docs = Catalog(ctx.spark, ctx.sf_dir).documents
@@ -288,7 +289,7 @@ def _maintain_indexes(ctx: JobContext) -> None:
     compact + vacuum the IVF vector store's assignments and stale
     versions. Runs on the same operational rails as ingest/train — the
     cron wrapper schedules it in the maintenance window, AFTER the
-    streaming bridges quiesce (compaction's standing contract: a
+    index writers quiesce (compaction's standing contract: a
     crashed epoch must replay before its rows fold into ``compact-*``,
     or the replay's own-run exclusion no longer reaches them).
 
@@ -370,7 +371,7 @@ def _corpus_card(ctx: JobContext) -> None:
     artifact next to the extract CSVs. Deterministically ordered by
     source (the O4 single-file ordering contract)."""
     card = all_queries()["corpus_card"](ctx.spark, ctx.sf_dir)
-    _emit(ctx, card, "corpus_card", order_by=["source"])
+    emit(ctx, card, "corpus_card", order_by=["source"])
 
 
 def _crawl_intake(ctx: JobContext) -> None:

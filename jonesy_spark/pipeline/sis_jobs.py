@@ -23,7 +23,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import sis_queries as SQ
-from .sinks import MultiTargetSink, daily_prefix, write_gzip_csv
+from .jobs import emit
 
 RECENT_REFRESH_CUTOFF_DAYS = 5  # reference jonesy/jobs.py:19
 
@@ -42,13 +42,6 @@ class SisJobContext:
     def recency_cutoff(self) -> datetime:
         return self.now - timedelta(days=RECENT_REFRESH_CUTOFF_DAYS)
 
-    def emit(self, df, key: str, order_by=None) -> None:
-        path = write_gzip_csv(df, self.out_root, key, order_by=order_by)
-        MultiTargetSink(self.targets).upload(
-            path, f"{daily_prefix(self.run_date)}/{key}"
-        )
-        self.written.append(key)
-
 
 def current_term_ids(ctx: SisJobContext) -> list[str]:
     """get_current_term_ids (``jonesy/jobs.py:71-74``)."""
@@ -59,28 +52,33 @@ def current_term_ids(ctx: SisJobContext) -> list[str]:
 
 
 def upload_advisors(ctx: SisJobContext) -> None:
-    ctx.emit(
+    emit(
+        ctx,
         SQ.advisor_notes_access(ctx.spark, ctx.fixtures_dir),
         "advisors/advisor-note-permissions.csv.gz",
     )
-    ctx.emit(
+    emit(
+        ctx,
         SQ.instructor_advisor_relationships(ctx.spark, ctx.fixtures_dir),
         "advisors/instructor-advisor-map.csv.gz",
     )
 
 
 def upload_snapshot(ctx: SisJobContext) -> None:
-    ctx.emit(
+    emit(
+        ctx,
         SQ.basic_attributes(ctx.spark, ctx.fixtures_dir),
         "sis-data/basic-attributes.csv.gz",
         order_by=[F.col("ldap_uid")],
     )
     for term in current_term_ids(ctx):
-        ctx.emit(
+        emit(
+            ctx,
             SQ.term_courses(ctx.spark, ctx.fixtures_dir, term),
             f"sis-data/courses-{term}.csv.gz",
         )
-        ctx.emit(
+        emit(
+            ctx,
             SQ.term_enrollments(ctx.spark, ctx.fixtures_dir, term),
             f"sis-data/enrollments-{term}.csv.gz",
             order_by=[F.col("section_id"), F.col("sis_id")],
@@ -89,13 +87,15 @@ def upload_snapshot(ctx: SisJobContext) -> None:
 
 def upload_recent_refresh(ctx: SisJobContext) -> None:
     for term in current_term_ids(ctx):
-        ctx.emit(
+        emit(
+            ctx,
             SQ.recent_enrollment_updates(
                 ctx.spark, ctx.fixtures_dir, term, ctx.recency_cutoff
             ),
             f"sis-data/enrollment-updates-{term}.csv.gz",
         )
-        ctx.emit(
+        emit(
+            ctx,
             SQ.recent_instructor_updates(
                 ctx.spark, ctx.fixtures_dir, term, ctx.recency_cutoff
             ),

@@ -182,7 +182,7 @@ TABLES: tuple[str, ...] = (
     '| mergeable HLL corpus statistics + persisted stats index (r6) | `operators.stats.profile_batch`/`merge_profiles`/`write_stats_index`/`corpus_stats_report` (Datasketches `hll_sketch_agg`/`hll_union_agg` — O(batch) nightly, report folds group-level metadata only; per-epoch rows from the streaming ingest bridge) | exact-counter + sparse-exact estimate test, cut-invariance (merged halves == single pass, exact), index round-trip + replay idempotence |',
     '| corpus drift report (r6) | `operators.stats.stats_drift` (token-share deltas, vocab ratios, new/gone domains over two report frames) | known-answer drift test |',
     '| raw-bytes-to-corpus composition (r6) | `pipeline.corpus_job.prepare_corpus_from_jsonl` (ingest -> pipeline -> stats index under one workdir) | e2e conservation/quarantine/split-coverage test |',
-    '| int8 embedding quantization tier (r6) | `functions.vectors.quantize_int8`/`dequantize_int8` (symmetric max-abs, error <= scale/2, pure higher-order built-ins); `similarity.quantized_topk` (int8 candidate scan + broadcast exact float re-rank); `write_ivf_index(quantize=True)` — sticky format, probe dequantizes inside the cid-pruned join, rebuild stays int8 | hypothesis error-bound property over arbitrary vectors, rerank-score EXACT-equality + recall >= 0.9, sticky-append/rebuild/size tests; bench row `ann_quantized_topk`; **driver rows `ann_int8_rerank`/`ann_pq_rerank`** (r14 — scan+rerank oracle-checked over the frozen ANN fixture, the tokenizer-fold split) |',
+    '| int8 embedding quantization tier (r6) | `functions.vectors.quantize_int8`/`dequantize_int8` (symmetric max-abs, error <= scale/2, pure higher-order built-ins); `similarity.quantized_topk` (int8 candidate scan + broadcast exact float re-rank); `write_ivf_index(quantize=True)` — sticky format, probe dequantizes inside the cid-pruned join | hypothesis error-bound property over arbitrary vectors, rerank-score EXACT-equality + recall >= 0.9, sticky-append/size tests; bench row `ann_quantized_topk`; **driver rows `ann_int8_rerank`/`ann_pq_rerank`** (r14 — scan+rerank oracle-checked over the frozen ANN fixture, the tokenizer-fold split) |',
     '| ANN recall tuning report (r6) | `operators.similarity.ann_recall` (per-query recall of any approx top-k vs exact; metadata-sized joins) | identity=1.0 / empty=0.0 tests + used by the quantized-recall test |',
     '| temperature-scaled mixture (r6) | `operators.corpus.temperature_rates`/`temperature_mix` (p ∝ share^tau over the bounded totals dict; budget-preserving, realized via mixture_upsample); pipeline knob `mixture_tau` with doc-keyed split + copy-unique packing ids | budget-conservation math test (1e-6), e2e copies/one-split/determinism test |',
     '| BPE-ish pre-tokenizer count (r6) | `functions.text.pretoken_count` (GPT-2-style alternation, explicit whitespace classes — `\\s` means different sets per engine, spelled out it is identical in Java/RE2/PCRE) | whole-corpus Spark==DuckDB differential + hypothesis Spark==`regex` property incl. \\x0B/\\x85 edge cases |',

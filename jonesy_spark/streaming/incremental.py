@@ -135,47 +135,6 @@ def windowed_counts(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window_seconds: int = 3600,
-    slide_seconds: int = 900,
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Hopping-window counts with late-data watermark — streaming twin
-    of the batch ``windows.sliding_window_rollup`` (identical hop
-    semantics: each event lands in W/S overlapping windows; state is
-    |keys| x |open windows|, bounded by the watermark instead of
-    re-scans)."""
-    if window_seconds % slide_seconds != 0:
-        raise ValueError(
-            f"window_seconds={window_seconds} must be a multiple of "
-            f"slide_seconds={slide_seconds} (aligned hops)"
-        )
-    from ..functions.scalars import micro_units
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.window(
-                "ts",
-                f"{int(window_seconds)} seconds",
-                f"{int(slide_seconds)} seconds",
-            ).alias("w"),
-            F.col("event_type").alias("key"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(micro_units(F.col("value"))).alias("sum_value_micro"),
-        )
-        .select(
-            "key",
-            F.col("w.start").cast("long").alias("window_es"),
-            "n_events",
-            "sum_value_micro",
-        )
-    )
-
-
 def latest_state_dedup(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     """Streaming dedup state: first event per (user_id, event_type) per
     watermark horizon — the stateful analogue of the reference's
@@ -286,8 +245,8 @@ def dir_stream(
     checkpoint at a directory holding months of landed files would
     otherwise take the whole history as ONE micro-batch (one giant
     state/ledger transaction, one failure domain). Capped, the drain
-    becomes bounded epochs — pair it with ``available_now=True`` on
-    the bridge so the query stops itself when caught up."""
+    becomes bounded epochs, which a bridge's ``processAllAvailable``
+    drains one after another."""
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
@@ -401,67 +360,6 @@ def run_jsonl_ingest_stream(
     q.stop()
 
 
-def run_incremental_dedup_stream(
-    docs: DataFrame,
-    index_path: str,
-    novel_path: str,
-    checkpoint: str,
-) -> None:
-    """Streaming bridge to the PERSISTED digest index: each micro-batch
-    dedups against the on-disk index (``hygiene.read_digest_index`` —
-    re-read per batch, so it sees every previously committed epoch),
-    writes the surviving novel documents under ``novel_path``, and lands
-    their digests in a batch-scoped ``ingest_batch=epoch-N`` partition
-    of the index via ``hygiene.write_novel_digests`` — the SAME
-    one-layout-per-index contract the nightly writer uses, so a corpus
-    that runs both against one ``index_path`` stays readable (partition
-    discovery needs uniform directory depth; r4 verdict #4).
-
-    foreachBatch is at-least-once; idempotence comes from the writes,
-    not the framework: an epoch replay OVERWRITES its own
-    ``ingest_batch=epoch-N`` subtree on both sinks, so the index never
-    double-counts a retried batch — the streaming analogue of the
-    nightly append-only-novel invariant. Crucially the replay also
-    EXCLUDES its own epoch's subtree from the ``seen`` read (partition
-    filter): a crash after the index write but before the checkpoint
-    commit would otherwise make the replay see its own digests as
-    already-ingested, compute an empty novel set, and overwrite the
-    epoch's documents away from the novel sink (ADVICE r5 #1).
-    (``content_dedup_stream`` below is the state-store twin for
-    *within-horizon* duplicates; this one is the *historical* gate —
-    production runs both, in that order.)
-    """
-    from ..operators import hygiene as H
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        seen = H.read_digest_index(
-            spark, index_path, exclude_run_id=f"epoch-{epoch_id}"
-        )
-        # micro-batches are broadcast-sized by construction: probe the
-        # index map-side (scan, never shuffle — O(index) shuffles per
-        # 15-minute epoch would dwarf the batch cost)
-        novel, _ = H.incremental_dedup(batch_df, seen, small_batch=True)
-        # persist, not checkpoint: two sinks share one computation, and
-        # lineage survives executor loss (SCALE.md "Cache lifecycle")
-        novel = persist(novel)
-        novel.write.mode("overwrite").parquet(
-            f"{novel_path}/ingest_batch={epoch_id}"
-        )
-        H.write_novel_digests(
-            novel, index_path, mode="overwrite", run_id=f"epoch-{epoch_id}"
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
 def run_incremental_near_dup_stream(
     docs: DataFrame,
     index_path: str,
@@ -469,8 +367,7 @@ def run_incremental_near_dup_stream(
     checkpoint: str,
     threshold: float = 0.8,
 ) -> None:
-    """Streaming bridge to the persisted MINHASH index — the near-dup
-    twin of :func:`run_incremental_dedup_stream`: each micro-batch
+    """Streaming bridge to the persisted MINHASH index: each micro-batch
     collapses its own near-dup clusters, probes the on-disk signature
     index (re-read per batch, so it sees every committed epoch), writes
     surviving novel documents under ``novel_path``, and lands their
@@ -482,8 +379,7 @@ def run_incremental_near_dup_stream(
     crash between the index write and the checkpoint commit cannot
     make the replay self-match its own signatures and drop the batch
     (ADVICE r5 #1). The novel-document sink is written BEFORE the
-    index (``novel_sink`` hook), the same crash-ordering as the digest
-    bridge.
+    index (``novel_sink`` hook).
     """
     from ..operators import hygiene as H
 
@@ -529,7 +425,7 @@ def run_incremental_embedding_stream(
     freezes the centroid table). Replay-safe from the start: the probe
     excludes the replaying epoch's own subtree and the novel sink
     commits before the index write — the crash-ordering contract the
-    digest and minhash bridges share (ADVICE r5 #1).
+    minhash bridge follows (ADVICE r5 #1).
     """
     from ..operators import similarity as S
 
@@ -610,282 +506,6 @@ def session_aggregates(
     )
 
 
-def run_tokenized_shard_stream(
-    docs: DataFrame,
-    tokenizer_path: str,
-    shards_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    oov_id: int = -1,
-    family: str = "bpe",
-) -> None:
-    """Streaming shard encoder: each micro-batch of clean documents
-    encodes to integer token ids under the LIVE published tokenizer
-    (``tokenize.read_bpe_tokenizer`` — re-resolved per batch, so a
-    mid-stream vocab publish re-points the NEXT epoch atomically) and
-    lands ``(id, token_ids, n_bpe_tokens, n_oov, tokenizer_version)``
-    under an ``ingest_batch=epoch-N`` subtree — the same
-    overwrite-own-subtree replay idempotence as every bridge here.
-    ``tokenizer_version`` rides every row as artifact lineage: shards
-    are only comparable within one version, and a version bump
-    mid-stream is visible in the data, not just in logs.
-
-    OOV ids are EXPECTED at the streaming edge (a new batch can carry
-    characters the vocab never saw — that is why ``bpe_encode_ids``
-    has a sentinel instead of failing the job); ``n_oov`` is computed
-    JVM-side (higher-order ``filter`` over the id array) and lands
-    per-row, so the nightly OOV-rate report is one aggregation over
-    the shard table — a rising rate is the re-train-the-vocab alarm.
-
-    Raises immediately when no tokenizer version is committed: an
-    id-shard stream without a frozen vocabulary is a configuration
-    error, not a first-epoch bootstrap case (unlike the dedup indexes,
-    which legitimately start empty).
-
-    ``family`` toggles the tokenizer the jobs layer publishes:
-    ``bpe`` (default) resolves the (merges, vocab) pair store;
-    ``unigram`` resolves the piece-table store and derives ids via
-    ``unigram_vocab`` (a pure function of the pieces, so the single
-    table is the whole artifact). The shard schema is identical except
-    the token-count column is named for its family
-    (``n_bpe_tokens`` / ``n_unigram_tokens``) — ``oov_report`` reads
-    either.
-    """
-    from ..operators import tokenize as TOK
-
-    if family not in ("bpe", "unigram"):
-        raise ValueError(
-            f"family must be 'bpe' or 'unigram', got {family!r}"
-        )
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if family == "unigram":
-            got = TOK.read_unigram_tokenizer(spark, tokenizer_path)
-            if got is None:
-                raise ValueError(
-                    f"no committed tokenizer at {tokenizer_path!r}; "
-                    "publish one with tokenize.write_unigram_tokenizer "
-                    "before streaming"
-                )
-            pieces, version = got
-            enc = TOK.unigram_encode_ids(
-                batch_df,
-                TOK.unigram_vocab(pieces),
-                text_col=text_col,
-                oov_id=oov_id,
-            )
-            n_col = "n_unigram_tokens"
-        else:
-            tok = TOK.read_bpe_tokenizer(spark, tokenizer_path)
-            if tok is None:
-                raise ValueError(
-                    f"no committed tokenizer at {tokenizer_path!r}; "
-                    "publish one with tokenize.write_bpe_tokenizer "
-                    "before streaming"
-                )
-            merges, vocab, version = tok
-            enc = TOK.bpe_encode_ids(
-                batch_df, vocab, merges, text_col=text_col, oov_id=oov_id
-            )
-            n_col = "n_bpe_tokens"
-        out = enc.select(
-            F.col(id_col),
-            "token_ids",
-            F.size("token_ids").alias(n_col),
-            F.size(
-                F.filter("token_ids", lambda x: x == F.lit(oov_id))
-            ).alias("n_oov"),
-            F.lit(version).alias("tokenizer_version"),
-        )
-        out.write.mode("overwrite").parquet(
-            f"{shards_path}/ingest_batch=epoch-{epoch_id}"
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
-def run_scored_doc_stream(
-    docs: DataFrame,
-    model_path: str,
-    scores_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Streaming classifier scoring: each micro-batch of documents is
-    scored under the LIVE published model (``classify.read_model`` —
-    re-resolved per batch, so a nightly retrain's publish re-points
-    the NEXT epoch atomically, exactly the tokenized-shard contract)
-    and lands ``(id, n_tokens, score, pred, model_version)`` under an
-    ``ingest_batch=epoch-N`` subtree — overwrite-own-subtree replay
-    idempotence like every bridge here.
-
-    ``model_version`` rides every row as lineage: scores are only
-    comparable within one model version, and a mid-stream retrain is
-    visible in the data. The model's frozen ``n_buckets`` travels
-    with it through the store, so the scoring feature space can never
-    drift from the training one.
-
-    Raises immediately when no model version is committed: a scoring
-    stream without a model is a configuration error, not a
-    first-epoch bootstrap case (the tokenizer-stream rule; the dedup
-    indexes are the ones that legitimately start empty).
-    """
-    from ..operators import classify as CL
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        got = CL.read_model(spark, model_path)
-        if got is None:
-            raise ValueError(
-                f"no committed model at {model_path!r}; publish one "
-                "with classify.write_model before streaming"
-            )
-        model, n_buckets, ngrams, version = got
-        out = CL.score_log_odds(
-            batch_df, model, text_col=text_col, id_col=id_col,
-            n_buckets=n_buckets, ngrams=ngrams,
-        ).withColumn("model_version", F.lit(version))
-        out.write.mode("overwrite").parquet(
-            f"{scores_path}/ingest_batch=epoch-{epoch_id}"
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
-def run_stats_profile_stream(
-    docs: DataFrame,
-    stats_path: str,
-    checkpoint: str,
-    group_cols: tuple[str, ...] = ("source", "lang"),
-) -> None:
-    """Streaming corpus-statistics writer: each micro-batch lands its
-    per-group profile row (exact counters + HLL vocab sketch,
-    ``stats.profile_batch``) under an ``ingest_batch=epoch-N`` subtree
-    of the stats index — the ledger the nightly
-    ``stats.corpus_stats_report`` folds WITHOUT rescanning documents.
-    Epoch-scoped ``overwrite`` gives replay idempotence (the house
-    bridge contract), and because profiles are mergeable (counters
-    add, sketches union register-wise), however the stream cuts the
-    batches the folded report equals the single-pass profile — the
-    invariant the two-wave test asserts."""
-    from ..operators import stats as ST
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        profile = ST.profile_batch(batch_df, group_cols=group_cols)
-        ST.write_stats_index(
-            profile, stats_path, mode="overwrite", run_id=f"epoch-{epoch_id}"
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
-def run_search_index_stream(
-    docs: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Streaming writer for the persisted search index: each
-    micro-batch lands its postings + docmeta rows under
-    ``ingest_batch=epoch-N`` subtrees (``search.write_search_index``
-    with the epoch-overwrite replay idempotence every bridge here
-    uses), so the corpus becomes BM25-searchable as it streams in —
-    ``search.bm25_probe`` sees each epoch as soon as its write
-    commits, reading only the probed terms' bucket directories
-    however many epochs have accumulated."""
-    from ..operators import search as SE
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        SE.write_search_index(
-            batch_df,
-            index_path,
-            mode="overwrite",
-            run_id=f"epoch-{epoch_id}",
-            text_col=text_col,
-            id_col=id_col,
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
-def run_classifier_counts_stream(
-    docs: DataFrame,
-    label_col: str,
-    counts_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int | None = None,
-    ngrams: int = 1,
-) -> None:
-    """Streaming writer for the classifier's count ledger: each
-    micro-batch lands its sufficient statistics under
-    ``ingest_batch=epoch-N`` (overwrite idempotence — the house bridge
-    contract), so ``classify.train_from_counts`` can mint a fresh
-    model from the WHOLE streamed history at any moment without
-    touching a document again: the stream maintains the training set's
-    sufficient statistics, the nightly job folds and publishes.
-    ``label_col`` names a boolean column already present on the
-    streamed rows (the weak label travels with the data)."""
-    from ..operators import classify as CL
-
-    nb = n_buckets if n_buckets is not None else CL.DEFAULT_N_BUCKETS
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        CL.write_classifier_counts(
-            batch_df,
-            F.col(label_col),
-            counts_path,
-            mode="overwrite",
-            run_id=f"epoch-{epoch_id}",
-            text_col=text_col,
-            id_col=id_col,
-            n_buckets=nb,
-            ngrams=ngrams,
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
 def run_warc_ingest_stream(
     spark: SparkSession,
     src_path: str,
@@ -951,130 +571,6 @@ def run_warc_ingest_stream(
     q.stop()
 
 
-def run_pq_index_stream(
-    emb: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    m: int = 8,
-    k: int = 16,
-) -> None:
-    """Streaming writer for the persisted PQ index
-    (``similarity.write_pq_index``): each micro-batch of vectors
-    encodes under the store's frozen codebook (the FIRST epoch trains
-    and freezes it — the IVF centroid-freeze contract) and lands its
-    m-int code words as an ``ingest_batch=epoch-N`` subtree with
-    overwrite idempotence, so a replayed epoch replaces its own codes
-    rather than appending ADC-corrupting duplicates (the same
-    SUM-folding hazard the store's resolved reads guard against).
-    ``read_pq_index`` + ``pq_topk`` then probe the continuously
-    growing store at any moment."""
-    from ..operators import similarity as S
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # an empty first epoch must not freeze a codebook
-        S.write_pq_index(
-            batch_df,
-            index_path,
-            m=m,
-            k=k,
-            run_id=f"epoch-{epoch_id}",
-            mode="overwrite",
-        )
-
-    q = (
-        emb.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
-def run_incremental_media_stream(
-    media: DataFrame,
-    index_path: str,
-    novel_path: str,
-    checkpoint: str,
-    max_hamming: int = 7,
-    fake: bool = True,
-) -> None:
-    """Streaming bridge to the persisted PHASH index — the MEDIA twin
-    of :func:`run_incremental_near_dup_stream`, extending the
-    incremental family to binary payloads: each micro-batch of
-    ``(doc_id, payload, mime, byte_len)`` rows collapses its own
-    near-dup clusters, probes the on-disk phash index, writes
-    surviving novel payloads under ``novel_path``, and lands their
-    hashes in an ``ingest_batch=epoch-N`` bucket partition of the
-    index. Same idempotence contract as every bridge: epoch replays
-    overwrite exactly their own subtree, the probe excludes the
-    replaying epoch (inside ``incremental_media_dedup``), and the
-    novel sink commits before the index write. Composed with
-    :func:`run_warc_ingest_stream` this is the continuously-deduped
-    crawl media path."""
-    from ..multimodal import binary_ops as B
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        B.incremental_media_dedup(
-            batch_df,
-            spark,
-            index_path,
-            max_hamming=max_hamming,
-            run_id=f"epoch-{epoch_id}",
-            mode="overwrite",
-            fake=fake,
-            novel_sink=lambda novel: novel.write.mode("overwrite").parquet(
-                f"{novel_path}/ingest_batch={epoch_id}"
-            ),
-        )
-
-    q = (
-        media.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
-def run_rollup_stream(
-    events: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    bucket_seconds: int = 3600,
-) -> None:
-    """Streaming writer for the rollup ledger — the CONTINUOUS
-    AGGREGATE maintained by the stream (the hypertable shape): each
-    micro-batch lands its time-bucket partials
-    (``stats.rollup_batch``) as an ``ingest_batch=epoch-N`` subtree
-    with overwrite idempotence, and ``stats.rollup_report`` folds the
-    ledger to the exact single-pass totals at any moment — the
-    events themselves are never re-read. Mergeability means batch
-    cuts (including replays replacing their own epoch) can never
-    change the folded result."""
-    from ..operators import stats as ST
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        ST.write_rollup_index(
-            ST.rollup_batch(batch_df, bucket_seconds=bucket_seconds),
-            index_path,
-            mode="overwrite",
-            run_id=f"epoch-{epoch_id}",
-        )
-
-    q = (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
 def run_kmv_stream(
     rows: DataFrame,
     index_path: str,
@@ -1111,57 +607,6 @@ def run_kmv_stream(
     )
     q.processAllAvailable()
     q.stop()
-
-
-def run_sketch_stream(
-    rows: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    batch_fn,
-    available_now: bool = False,
-) -> None:
-    """Generic streaming writer for the sketch-ledger tier (CMS
-    counters, MG summaries, or any batch->partial function): each
-    micro-batch lands ``batch_fn(batch_df)`` as an
-    ``ingest_batch=epoch-N`` subtree with overwrite idempotence —
-    the same epoch-ledger contract as the rollup/KMV writers; the
-    corresponding fold (``cms_fold``/``mg_fold``) answers at any
-    moment without re-reading history. The fold's merge semantics
-    carry the replay story: SUM-folding partials are safe because a
-    replay OVERWRITES its own epoch (never double-lands), and MG
-    merges preserve their guarantee under any epoch cut.
-
-    ``available_now=True`` drains with ``Trigger.AvailableNow`` and
-    waits for self-termination instead of ``processAllAvailable`` —
-    the bounded-backfill mode: combined with ``dir_stream``'s
-    ``max_files_per_trigger`` the catch-up lands as MANY rate-limited
-    epochs (each its own idempotent ledger transaction) rather than
-    one history-sized batch, and the run exits when caught up (the
-    cron-driven drain shape). Same outputs either way — the ledger
-    fold is cut-invariant by the tier's merge theorem, which is
-    exactly what makes the epoch granularity a free choice."""
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        from ..operators.stats import write_kmv_index
-
-        write_kmv_index(
-            batch_fn(batch_df),
-            index_path,
-            mode="overwrite",
-            run_id=f"epoch-{epoch_id}",
-        )
-
-    writer = rows.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.start()
-        q.processAllAvailable()
-        q.stop()
 
 
 def run_crawl_intake_stream(
@@ -1202,9 +647,7 @@ def run_crawl_intake_stream(
 
     Scale shape: extraction and the gate are map-only expressions over
     the micro-batch; dedup probes the index map-side; the report is
-    one tiny aggregate. Per-epoch cost is O(batch) + an index scan —
-    the same envelope ``run_incremental_dedup_stream`` measured flat
-    at sf1.
+    one tiny aggregate. Per-epoch cost is O(batch) + an index scan.
 
     ``max_files_per_trigger`` rate-limits a BACKFILL into many
     epochs (a fresh checkpoint over a large landing tree would

@@ -130,73 +130,6 @@ def test_model_store_round_trip_and_version_bump(spark, tmp_path):
     assert (n_buckets, v) == (128, 1)
 
 
-@pytest.mark.slow
-def test_scored_doc_stream_two_waves_with_retrain(spark, tmp_path):
-    """Streaming scorer: wave 1 scores under model v0; a retrain
-    publishes v1 between waves and the restarted query scores wave 2
-    under it — the version lineage rides every row, and each wave
-    lands as its own epoch subtree."""
-    from jonesy_spark.streaming.incremental import run_scored_doc_stream
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    scores, ckpt = str(tmp_path / "scores"), str(tmp_path / "ckpt")
-    model_path = str(tmp_path / "model")
-
-    train = _docs(
-        spark,
-        [(0, "alpha beta alpha", "en"), (1, "omega sigma omega", "de")],
-    )
-    m0 = C.train_log_odds(train, F.col("lang") == "en", n_buckets=64)
-    assert C.write_model(m0, model_path, n_buckets=64) == 0
-
-    def wave(name, rows):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(f"{land}/{name}")
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            f"{land}/*"
-        )
-        run_scored_doc_stream(stream, model_path, scores, ckpt)
-
-    wave("w1", [(10, "alpha beta"), (11, "omega sigma")])
-    # retrain with the labels flipped: the sign of every score flips too
-    m1 = C.train_log_odds(train, F.col("lang") == "de", n_buckets=64)
-    assert C.write_model(m1, model_path, n_buckets=64) == 1
-    wave("w2", [(12, "alpha beta")])
-
-    got = {r["doc_id"]: r for r in spark.read.parquet(scores).collect()}
-    assert sorted(got) == [10, 11, 12]
-    assert got[10]["model_version"] == 0 and got[12]["model_version"] == 1
-    assert got[10]["pred"] and not got[11]["pred"]
-    # same text, flipped training labels -> mirrored score
-    assert got[12]["score_micro"] == -got[10]["score_micro"]
-    assert (
-        spark.read.parquet(scores).select("ingest_batch").distinct().count() == 2
-    )
-
-
-def test_scored_doc_stream_requires_model(spark, tmp_path):
-    from jonesy_spark.streaming.incremental import run_scored_doc_stream
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    spark.createDataFrame([(1, "x")], "doc_id long, text string").write.parquet(
-        f"{land}/w1"
-    )
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        f"{land}/*"
-    )
-    # the ValueError surfaces wrapped in StreamingQueryException
-    with pytest.raises(Exception, match="no committed model"):
-        run_scored_doc_stream(
-            stream,
-            str(tmp_path / "model"),
-            str(tmp_path / "scores"),
-            str(tmp_path / "ckpt"),
-        )
-
-
 def test_train_classifier_job_publishes_versioned_model(
     spark, tmp_path, monkeypatch
 ):
@@ -323,27 +256,6 @@ def test_scores_invariant_to_partitioning(spark):
     assert one == many
 
 
-def test_scored_stream_report_rates(spark):
-    scores = spark.createDataFrame(
-        [
-            (1, 500_000, True, 0, "epoch-0"),
-            (2, -1_000_000, False, 0, "epoch-0"),
-            (3, 2_000_000, True, 1, "epoch-1"),
-            (4, 4_000_000, True, 1, "epoch-1"),
-        ],
-        "doc_id long, score_micro long, pred boolean, model_version int, "
-        "ingest_batch string",
-    )
-    got = {
-        (r["model_version"], r["ingest_batch"]): r
-        for r in C.scored_stream_report(scores).collect()
-    }
-    assert got[(0, "epoch-0")]["pred_rate_micro"] == 500_000
-    assert got[(0, "epoch-0")]["mean_score_micro"] == -250_000
-    assert got[(1, "epoch-1")]["pred_rate_micro"] == 1_000_000
-    assert got[(1, "epoch-1")]["n_docs"] == 2
-
-
 def test_bigram_features_separate_reordered_texts(spark):
     """ngrams=2: two classes with IDENTICAL unigram bags but different
     word order are separable only with bigram features."""
@@ -417,42 +329,3 @@ def test_count_ledger_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="empty after exclusions"):
         # excluding the only batch leaves an empty fold -> loud error
         C.train_from_counts(spark, path2, exclude_run_id="epoch-7")
-
-
-@pytest.mark.slow
-def test_classifier_counts_stream_folds_to_monolithic(spark, tmp_path):
-    """Streamed count ledger: two waves of labeled docs, then
-    train_from_counts over the accumulated epochs equals monolithic
-    training over everything streamed."""
-    from jonesy_spark.streaming.incremental import run_classifier_counts_stream
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    counts_path, ckpt = str(tmp_path / "counts"), str(tmp_path / "ckpt")
-    schema = "doc_id long, text string, is_en boolean"
-    w1 = [(0, "alpha beta alpha", True), (1, "omega sigma", False)]
-    w2 = [(2, "alpha gamma", True), (3, "tau rho omega", False)]
-
-    def wave(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{land}/{name}"
-        )
-        stream = spark.readStream.schema(schema).parquet(f"{land}/*")
-        run_classifier_counts_stream(
-            stream, "is_en", counts_path, ckpt, n_buckets=64
-        )
-
-    wave("w1", w1)
-    wave("w2", w2)
-
-    model, n_buckets, ngrams = C.train_from_counts(spark, counts_path)
-    got = {r["bucket"]: r["weight"] for r in model.collect()}
-    mono = C.train_log_odds(
-        spark.createDataFrame(w1 + w2, schema), F.col("is_en"), n_buckets=64
-    )
-    want = {r["bucket"]: r["weight"] for r in mono.collect()}
-    assert got == want
-    epochs = (
-        spark.read.parquet(counts_path).select("ingest_batch").distinct().count()
-    )
-    assert epochs == 2

@@ -411,15 +411,15 @@ def test_incremental_embedding_dedup_two_batches(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_rebuild_ivf_index_versions(spark, tmp_path):
-    """VERDICT r5 missing #3: a growing corpus re-trains its frozen
-    centroids via rebuild_ivf_index — new version=N subtree, k-means||
-    centroids over every stored vector, atomic _COMMITTED publish.
-    Readers resolving mid-rebuild (marker absent) keep the old layout;
-    post-publish probes and appends land on the new one; the old
-    subtree is untouched."""
+def test_ivf_versioned_layout_resolution_and_vacuum(spark, tmp_path):
+    """The versioned IVF layout that ``maintain_indexes`` vacuums: an
+    unmarked ``version=N`` subtree (a publish in flight or crashed) is
+    invisible; once ``version=N/_COMMITTED`` exists, probes and
+    appends resolve to it; vacuum deletes the stale version dirs and
+    the legacy root and leaves the live version's probes unchanged."""
     import glob
     import os
+    import shutil
 
     from conftest import SF_DIR
     from pyspark.sql import functions as F
@@ -427,7 +427,7 @@ def test_rebuild_ivf_index_versions(spark, tmp_path):
     from jonesy_spark.catalog import Catalog
     from jonesy_spark.operators import similarity as SIM
 
-    idx = str(tmp_path / "ivf_rebuild")
+    idx = str(tmp_path / "ivf_versions")
     emb = Catalog(spark, SF_DIR).embeddings
     SIM.write_ivf_index(emb.filter(F.col("vec_id") < 60), idx, run_id="r0")
     SIM.write_ivf_index(
@@ -439,46 +439,32 @@ def test_rebuild_ivf_index_versions(spark, tmp_path):
     copies = emb.filter(F.col("vec_id") < 5).withColumn(
         "vec_id", F.col("vec_id") + 9000
     )
-    pre = {
-        (r["vec_id"], r["index_vec_id"])
-        for r in SIM.probe_ivf_index(copies, spark, idx, threshold=0.999).collect()
-    }
-    assert pre  # exact copies match their originals pre-rebuild
 
-    # an UNMARKED version subtree (rebuild in flight / crashed) must be
-    # invisible: resolution stays on the legacy root
+    def probe():
+        return {
+            (r["vec_id"], r["index_vec_id"])
+            for r in SIM.probe_ivf_index(
+                copies, spark, idx, threshold=0.999
+            ).collect()
+        }
+
+    pre = probe()
+    assert pre  # exact copies match their originals
+
+    # an UNMARKED version subtree must be invisible: resolution stays
+    # on the legacy root
     os.makedirs(f"{idx}/version=5")
     assert SIM.live_ivf_version(spark, idx) is None
-    mid = {
-        (r["vec_id"], r["index_vec_id"])
-        for r in SIM.probe_ivf_index(copies, spark, idx, threshold=0.999).collect()
-    }
-    assert mid == pre
+    assert probe() == pre
 
-    v = SIM.rebuild_ivf_index(spark, idx)
-    assert v == 6  # numbered past the crashed subtree, never colliding
+    # publish version 6: the same tables, then the marker
+    for part in ("centroids", "assignments"):
+        shutil.copytree(f"{idx}/{part}", f"{idx}/version=6/{part}")
+    open(f"{idx}/version=6/_COMMITTED", "w").close()
     assert SIM.live_ivf_version(spark, idx) == 6
-    assert os.path.exists(f"{idx}/version=6/_COMMITTED")
+    assert probe() == pre
 
-    # same matches through the retrained cells (identical vectors share
-    # a nearest centroid by definition)
-    post = {
-        (r["vec_id"], r["index_vec_id"])
-        for r in SIM.probe_ivf_index(copies, spark, idx, threshold=0.999).collect()
-    }
-    assert post == pre
-    # every stored vector made it across, exactly once
-    stored = [
-        r["vec_id"]
-        for r in spark.read.parquet(f"{idx}/version=6/assignments")
-        .select("vec_id")
-        .collect()
-    ]
-    assert sorted(stored) == list(range(80))
-    # the old layout is untouched (in-flight readers keep working)
-    assert glob.glob(f"{idx}/assignments/ingest_batch=r0/cid=*/*.parquet")
-    assert glob.glob(f"{idx}/assignments/ingest_batch=r1/cid=*/*.parquet")
-    # appends now land in the live version
+    # appends land in the live version, not the legacy root
     SIM.write_ivf_index(
         emb.filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 90)),
         idx,
@@ -487,19 +473,15 @@ def test_rebuild_ivf_index_versions(spark, tmp_path):
     assert glob.glob(f"{idx}/version=6/assignments/ingest_batch=r2/cid=*/*.parquet")
     assert not glob.glob(f"{idx}/assignments/ingest_batch=r2")
 
-    # vacuum (next maintenance window): stale version dirs + the legacy
-    # root go; the live version and its probes are untouched
+    # vacuum: stale version dirs + the legacy root go; the live
+    # version and its probes are untouched
     deleted = SIM.vacuum_ivf_versions(spark, idx)
     assert any(d.endswith("version=5") for d in deleted)
     assert any(d.endswith("/assignments") for d in deleted)
     assert not os.path.exists(f"{idx}/version=5")
     assert not os.path.exists(f"{idx}/assignments")
     assert os.path.exists(f"{idx}/version=6/_COMMITTED")
-    after_vacuum = {
-        (r["vec_id"], r["index_vec_id"])
-        for r in SIM.probe_ivf_index(copies, spark, idx, threshold=0.999).collect()
-    }
-    assert after_vacuum == pre
+    assert probe() == pre
     assert SIM.vacuum_ivf_versions(spark, idx) == []  # idempotent
 
 
@@ -842,8 +824,8 @@ def test_ann_recall_identity_and_miss(spark):
 
 def test_ivf_index_int8_tier(spark, tmp_path):
     """quantize=True stores the int8 tier; the format is sticky across
-    appends, survives a rebuild, probes still find copies, and the
-    subtree is materially smaller than its float twin."""
+    appends, probes still find copies, and the subtree is materially
+    smaller than its float twin."""
     import glob as _glob
     import os as _os
 
@@ -871,15 +853,6 @@ def test_ivf_index_int8_tier(spark, tmp_path):
         for r in SIM.probe_ivf_index(probe, spark, idx, threshold=0.99).collect()
     }
     assert {(1000, 0), (1001, 1), (1002, 2)} <= got
-
-    # rebuild re-trains on dequantized vectors and stays int8
-    v = SIM.rebuild_ivf_index(spark, idx)
-    assert "qv" in spark.read.parquet(f"{idx}/version={v}/assignments").columns
-    got2 = {
-        (r["vec_id"], r["index_vec_id"])
-        for r in SIM.probe_ivf_index(probe, spark, idx, threshold=0.99).collect()
-    }
-    assert {(1000, 0), (1001, 1), (1002, 2)} <= got2
 
     # the int8 subtree is materially smaller than a float twin of the
     # same batch (64-dim doubles: 512 B/row raw vs 64 B + scale)
@@ -1329,6 +1302,68 @@ def test_pq_encode_identical_vectors_share_codes(spark):
     assert by_q[0] == 1  # the identical copy wins at ADC distance 0
 
 
+def test_pq_codes_encoded_in_batches_probe_like_one_encode(spark):
+    """Codes encoded batch by batch under one frozen codebook are the
+    codes of one encode over the union: probing the concatenated code
+    table through ``pq_topk(codebooks=, codes=)`` equals probing a
+    single ``pq_encode`` of every vector."""
+    from jonesy_spark.operators import similarity as SIM
+
+    emb = Catalog(spark, SF_DIR).embeddings
+    half1 = emb.filter(F.col("vec_id") % 2 == 0)
+    half2 = emb.filter(F.col("vec_id") % 2 == 1)
+    books = SIM.pq_codebooks(half1, m=8, k=16)
+    batched = SIM.pq_encode(half1, books).unionByName(SIM.pq_encode(half2, books))
+    assert batched.count() == emb.count()
+
+    def probe(codes):
+        return sorted(
+            (r["query_id"], r["vec_id"], r["cosine_micro"], r["rank"])
+            for r in SIM.pq_topk(
+                emb, k=5, n_queries=4, codebooks=books, codes=codes
+            ).collect()
+        )
+
+    assert probe(batched) == probe(SIM.pq_encode(emb, books))
+
+
+def test_pq_topk_row_probes_each_value_at_most_once(spark):
+    """On the training path pq_topk takes ``m`` from its argument and
+    the dimension from the codebook sample, and its encode reuses that
+    ``m``: the ann_pq_topk row (build + noop write) runs at most 15
+    Spark jobs. Counted by job group."""
+    sc = spark.sparkContext
+    group = "ann_pq_topk_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        with cache_scope():
+            df = all_queries()["ann_pq_topk"](spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15
+
+
+def test_pq_empty_frame_guards(spark):
+    """Empty codebooks raise the house ValueError; an empty embeddings
+    frame encodes and probes to an empty result under given codebooks,
+    and cannot train one."""
+    from jonesy_spark.operators import similarity as SIM
+
+    emb = Catalog(spark, SF_DIR).embeddings
+    books = SIM.pq_codebooks(emb, m=8, k=16)
+    no_books = books.filter(F.lit(False))
+    with pytest.raises(ValueError, match="empty PQ codebooks"):
+        SIM.pq_encode(emb, no_books)
+    with pytest.raises(ValueError, match="empty PQ codebooks"):
+        SIM.pq_topk(emb, k=5, codebooks=no_books)
+    none = emb.filter(F.lit(False))
+    assert SIM.pq_encode(none, books).count() == 0
+    assert SIM.pq_topk(none, k=5, codebooks=books).count() == 0
+    with pytest.raises(ValueError, match="non-empty embeddings"):
+        SIM.pq_codebooks(none)
+
+
 def test_ivfpq_cell_restriction_and_full_probe_equality(spark):
     """The composed IVFPQ path: with probes >= n_cells every cell is
     probed and the output must EQUAL the unrestricted PQ scan row for
@@ -1374,61 +1409,6 @@ def test_ivfpq_cell_restriction_and_full_probe_equality(spark):
     got = {(r["query_id"], r["vec_id"]) for r in restricted}
     recall = len(got & exact_top) / len(exact_top)
     assert recall >= 0.3, f"IVFPQ recall {recall:.3f} below floor"
-
-
-def test_pq_index_store_round_trip_and_compaction(spark, tmp_path):
-    """The PQ store: two appended batches probe identically to a fresh
-    encode under the frozen codebook; flat compaction collapses the
-    ledger without changing the probe; duplicate-batch crash survivors
-    are excluded (the ADC SUM-folding hazard)."""
-    import glob
-    import json
-
-    from jonesy_spark.operators import hygiene as H
-    from jonesy_spark.operators import similarity as SIM
-
-    emb = Catalog(spark, SF_DIR).embeddings
-    half1 = emb.filter(F.col("vec_id") % 2 == 0)
-    half2 = emb.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "pq")
-    SIM.write_pq_index(half1, path, run_id="b1")
-    SIM.write_pq_index(half2, path, run_id="b2")
-
-    books, codes = SIM.read_pq_index(spark, path)
-    fresh = SIM.pq_encode(emb, books)
-    assert sorted(
-        (r["vec_id"], tuple(r["codes"])) for r in codes.collect()
-    ) == sorted((r["vec_id"], tuple(r["codes"])) for r in fresh.collect())
-
-    def probe():
-        return sorted(
-            (r["query_id"], r["vec_id"], r["cosine_micro"], r["rank"])
-            for r in SIM.pq_topk(
-                emb, k=5, n_queries=5, codebooks=books, codes=codes
-            ).collect()
-        )
-
-    before = probe()
-
-    # flat compaction: one subtree, probe unchanged
-    rid = H.compact_index(spark, f"{path}/codes", part_col=None)
-    assert rid.startswith("compact-2-")
-    assert glob.glob(f"{path}/codes/ingest_batch=*") == [
-        f"{path}/codes/ingest_batch={rid}"
-    ]
-    books, codes = SIM.read_pq_index(spark, path)
-    assert probe() == before
-
-    # crash survivor: a consumed batch resurfaces next to the intent —
-    # the resolved read must exclude it or every ADC distance doubles
-    SIM.write_pq_index(half1, path, run_id="b3")
-    mdir = tmp_path / "pq" / "codes" / "_compactions"
-    mdir.mkdir(exist_ok=True)
-    (mdir / f"{rid}.json").write_text(
-        json.dumps({"run_id": rid, "consumed": ["b1", "b2", "b3"]})
-    )
-    books, codes = SIM.read_pq_index(spark, path)
-    assert probe() == before
 
 
 def test_sliding_window_rollup_matches_explicit_hops(spark):

@@ -231,52 +231,6 @@ def test_search_index_probe_requires_index(spark, tmp_path):
         bm25_probe(spark, str(tmp_path / "missing"), ["x"])
 
 
-@pytest.mark.slow
-def test_search_index_stream_two_waves(spark, tmp_path):
-    """Streaming search indexing: two waves land as epoch subtrees and
-    the probe over the accumulated index equals batch BM25 over all
-    streamed documents."""
-    from jonesy_spark.operators.search import bm25_probe, bm25_search
-    from jonesy_spark.streaming.incremental import run_search_index_stream
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    index_path, ckpt = str(tmp_path / "sx"), str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-    w1 = [(1, "spark join window"), (2, "table scan join")]
-    w2 = [(3, "spark spark window sort")]
-
-    def wave(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{land}/{name}"
-        )
-        stream = spark.readStream.schema(schema).parquet(f"{land}/*")
-        run_search_index_stream(stream, index_path, ckpt)
-
-    wave("w1", w1)
-    wave("w2", w2)
-
-    got = [
-        (r["doc_id"], r["score_micro"], r["n_hits"])
-        for r in bm25_probe(spark, index_path, ["spark", "window"]).collect()
-    ]
-    want = [
-        (r["doc_id"], r["score_micro"], r["n_hits"])
-        for r in bm25_search(
-            spark.createDataFrame(w1 + w2, schema), ["spark", "window"]
-        ).collect()
-    ]
-    assert got == want and len(got) == 2
-    batches = {
-        r["ingest_batch"]
-        for r in spark.read.parquet(f"{index_path}/postings")
-        .select("ingest_batch")
-        .distinct()
-        .collect()
-    }
-    assert batches == {"epoch-0", "epoch-1"}
-
-
 def test_search_index_compaction_preserves_probe(spark, tmp_path):
     """hygiene.compact_index over the postings root (same
     ingest_batch=/bucket= layout as the dedup indexes) folds the
@@ -420,39 +374,6 @@ def test_hybrid_search_rejects_empty_query(spark):
     docs = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="query term"):
         hybrid_search(docs, [" "])
-
-
-def test_cluster_documents_separates_populations(spark):
-    """k=2 over two disjoint-vocabulary populations: each population
-    lands wholly in one cluster, and c-TF-IDF labels each cluster with
-    its own vocabulary."""
-    from jonesy_spark.operators.similarity import (
-        cluster_documents,
-        cluster_top_terms,
-    )
-
-    vocab_a = ["alpha", "beta", "gamma", "delta"]
-    vocab_b = ["omega", "sigma", "tau", "rho"]
-    rows = [
-        (i, " ".join(vocab_a[(i + j) % 4] for j in range(12))) for i in range(10)
-    ] + [
-        (i + 10, " ".join(vocab_b[(i + j) % 4] for j in range(12)))
-        for i in range(10)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    assign = cluster_documents(docs, k=2, dim=32)
-    got = {r["doc_id"]: r["cluster_id"] for r in assign.collect()}
-    a_clusters = {got[i] for i in range(10)}
-    b_clusters = {got[i + 10] for i in range(10)}
-    assert len(a_clusters) == 1 and len(b_clusters) == 1
-    assert a_clusters != b_clusters
-
-    labels = cluster_top_terms(docs, assign, top_n=4).collect()
-    by_cluster: dict = {}
-    for r in labels:
-        by_cluster.setdefault(r["cluster_id"], set()).add(r["term"])
-    assert by_cluster[a_clusters.pop()] == set(vocab_a)
-    assert by_cluster[b_clusters.pop()] == set(vocab_b)
 
 
 def test_margin_bitext_recovers_planted_parallel_pairs(spark):

@@ -33,29 +33,6 @@ def test_windowed_counts_match_batch(spark):
     assert got == want
 
 
-def test_sliding_counts_match_batch(spark):
-    """The streaming hopping window must agree with the batch
-    sliding_window_rollup once the stream drains — same hop set, same
-    micro-unit sums (SURVEY §2.10: the sliding member of the windowed
-    family, state bounded by the watermark)."""
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators.windows import sliding_window_rollup
-    from jonesy_spark.streaming.incremental import sliding_counts
-
-    stream = sliding_counts(events_stream(spark, SF_DIR))
-    run_to_memory(stream, "stream_sliding", mode="complete")
-    got = {
-        (r["key"], r["window_es"]): (r["n_events"], r["sum_value_micro"])
-        for r in spark.sql("SELECT * FROM stream_sliding").collect()
-    }
-    batch = sliding_window_rollup(Catalog(spark, SF_DIR).events)
-    want = {
-        (r["key"], r["window_es"]): (r["n_events"], r["sum_value_micro"])
-        for r in batch.collect()
-    }
-    assert got == want
-
-
 def test_latest_state_dedup_one_per_key(spark):
     stream = latest_state_dedup(events_stream(spark, SF_DIR))
     run_to_memory(stream, "stream_dedup", mode="append")
@@ -201,60 +178,15 @@ def test_file_sink_checkpoint_restart_resume(spark, tmp_path):
     assert dupes == 0
 
 
-def test_incremental_dedup_stream_maintains_index(spark, tmp_path):
-    """Streaming bridge to the persisted digest index: wave 1 lands its
-    novel docs + digests; a restarted query over wave 2 (same
-    checkpoint) must drop digests wave 1 already committed, and the
-    index holds exactly one row per distinct digest."""
-    import pandas as pd
-
-    from jonesy_spark.operators.hygiene import read_digest_index
-    from jonesy_spark.streaming.incremental import (
-        dir_stream,
-        run_incremental_dedup_stream,
-    )
-
-    land = tmp_path / "land"
-    land.mkdir()
-    idx, novel, ckpt = (
-        str(tmp_path / "index"),
-        str(tmp_path / "novel"),
-        str(tmp_path / "ckpt"),
-    )
-    schema = "doc_id bigint, text string"
-
-    def wave(name, rows):
-        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
-            land / f"{name}.parquet"
-        )
-        run_incremental_dedup_stream(
-            dir_stream(spark, str(land), schema), idx, novel, ckpt
-        )
-
-    wave("w1", [(1, "alpha beta"), (2, "gamma"), (3, "Alpha  beta")])
-    assert read_digest_index(spark, idx).count() == 2  # 3 collapses into 1
-
-    wave("w2", [(10, "gamma"), (11, "delta")])  # gamma known from wave 1
-    hashes = [r["content_hash"] for r in read_digest_index(spark, idx).collect()]
-    assert len(hashes) == 3 and len(set(hashes)) == 3
-
-    kept = spark.read.parquet(novel)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 11]
-
-
 def test_batch_and_streaming_writers_share_one_index(spark, tmp_path):
-    """r4 verdict #4: the nightly appender and the streaming bridge
-    must be able to target the SAME index root. A mixed-writer index
-    must stay readable (uniform partition-dir depth), the streaming
-    probe must drop digests the nightly run committed (and vice versa),
+    """r4 verdict #4: the nightly appender and a streaming epoch writer
+    (``pipeline.intake.intake_batch``, which ``run_crawl_intake_stream``
+    runs per micro-batch) must be able to target the SAME index root. A
+    mixed-writer index must stay readable (uniform partition-dir
+    depth), the epoch probe must drop digests the nightly run committed
+    (and vice versa), a replayed epoch must not see its own digests,
     and a follow-up nightly run must see the union."""
-    import pandas as pd
-
     from jonesy_spark.operators import hygiene as H
-    from jonesy_spark.streaming.incremental import (
-        dir_stream,
-        run_incremental_dedup_stream,
-    )
 
     idx = str(tmp_path / "index")
 
@@ -265,20 +197,17 @@ def test_batch_and_streaming_writers_share_one_index(spark, tmp_path):
     novel1, _ = H.incremental_dedup(nightly, H.read_digest_index(spark, idx))
     H.write_novel_digests(novel1, idx, run_id="nightly-t0")
 
-    # streaming epochs against the SAME root: 'gamma' must be dropped
-    land = tmp_path / "land"
-    land.mkdir()
-    pd.DataFrame(
-        [(10, "gamma"), (11, "delta")], columns=["doc_id", "text"]
-    ).to_parquet(land / "w1.parquet")
-    run_incremental_dedup_stream(
-        dir_stream(spark, str(land), "doc_id bigint, text string"),
-        idx,
-        str(tmp_path / "novel"),
-        str(tmp_path / "ckpt"),
+    # a streaming epoch against the SAME root: 'gamma' must be dropped;
+    # the replay of the same epoch excludes its own subtree from the
+    # probe and overwrites it, so it keeps the same novel set
+    epoch = spark.createDataFrame(
+        [(10, "gamma"), (11, "delta")], ["doc_id", "text"]
     )
-    kept = spark.read.parquet(str(tmp_path / "novel"))
-    assert [r["doc_id"] for r in kept.collect()] == [11]
+    for _ in range(2):
+        seen = H.read_digest_index(spark, idx, exclude_run_id="epoch-0")
+        novel, _ = H.incremental_dedup(epoch, seen, small_batch=True)
+        assert [r["doc_id"] for r in novel.collect()] == [11]
+        H.write_novel_digests(novel, idx, mode="overwrite", run_id="epoch-0")
 
     # the mixed-writer index reads as one table, duplicate-free
     hashes = [r["content_hash"] for r in H.read_digest_index(spark, idx).collect()]
@@ -520,80 +449,6 @@ def test_jsonl_ingest_stream_two_waves(spark, tmp_path):
     assert stats.agg(F.sum("n_docs")).first()[0] == 3
 
 
-@pytest.mark.slow
-def test_tokenized_shard_stream_two_waves(spark, tmp_path):
-    """Streaming shard encoder: wave 1 encodes under the published
-    tokenizer with zero OOV (same corpus); a restarted query over wave
-    2 (same checkpoint) encodes only the new files, and its unseen
-    characters land as counted OOV sentinels with the tokenizer
-    version riding every row."""
-    from jonesy_spark.operators import tokenize as T
-    from jonesy_spark.streaming.incremental import run_tokenized_shard_stream
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    shards, ckpt = str(tmp_path / "shards"), str(tmp_path / "ckpt")
-    tok_path = str(tmp_path / "tokenizer")
-
-    train = spark.createDataFrame(
-        [(1, "low lower"), (2, "newest widest")], "doc_id long, text string"
-    )
-    merges = T.bpe_train(train, n_merges=6)
-    vocab = T.bpe_vocab(train, merges)
-    v = T.write_bpe_tokenizer(merges, vocab, tok_path)
-    assert v == 0
-
-    def wave(name, rows):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(f"{land}/{name}")
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            f"{land}/*"
-        )
-        run_tokenized_shard_stream(stream, tok_path, shards, ckpt)
-
-    wave("w1", [(1, "low lower"), (2, "newest widest")])
-    wave("w2", [(3, "low zq")])
-
-    got = spark.read.parquet(shards)
-    rows = {r["doc_id"]: r for r in got.collect()}
-    assert sorted(rows) == [1, 2, 3]
-    # wave-1 docs: same corpus as the vocab -> zero OOV
-    assert rows[1]["n_oov"] == 0 and rows[2]["n_oov"] == 0
-    # wave-2 doc carries unseen chars z and q
-    assert rows[3]["n_oov"] == 2
-    assert all(r["tokenizer_version"] == 0 for r in rows.values())
-    # ids decode back to the text through the published vocab
-    id2tok = {r["token_id"]: r["token"] for r in vocab.collect()}
-    assert (
-        "".join(id2tok[i] for i in rows[1]["token_ids"]) == "low lower"
-    )
-    # the two waves landed as separate epoch subtrees
-    assert got.select("ingest_batch").distinct().count() == 2
-
-
-def test_tokenized_shard_stream_requires_tokenizer(spark, tmp_path):
-    import pytest as _pytest
-
-    from jonesy_spark.streaming.incremental import run_tokenized_shard_stream
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    spark.createDataFrame([(1, "x")], "doc_id long, text string").write.parquet(
-        f"{land}/w1"
-    )
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        f"{land}/*"
-    )
-    with _pytest.raises(Exception, match="no committed tokenizer"):
-        run_tokenized_shard_stream(
-            stream,
-            str(tmp_path / "missing_tok"),
-            str(tmp_path / "shards"),
-            str(tmp_path / "ckpt"),
-        )
-
-
 def test_warc_ingest_stream_two_waves_with_quarantine(spark, tmp_path):
     """The crawl front door as a stream: archives dropped in two waves
     land as epoch-scoped clean/quarantine subtrees under the same
@@ -652,135 +507,6 @@ def test_warc_ingest_stream_two_waves_with_quarantine(spark, tmp_path):
     assert stream_ids == batch_ids
 
 
-def test_pq_index_stream_two_waves_probe_matches_batch(spark, tmp_path):
-    """The PQ store as a stream: epoch 0 freezes the codebook, later
-    epochs encode under it, and probing the streamed store equals a
-    batch probe over the same vectors with the same codebook."""
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-    from jonesy_spark.streaming.incremental import run_pq_index_stream
-
-    emb = Catalog(spark, "/root/testdata/sf0.001").embeddings
-    half1 = emb.filter(F.col("vec_id") % 2 == 0)
-    half2 = emb.filter(F.col("vec_id") % 2 == 1)
-    stage = str(tmp_path / "stage")
-    idx = str(tmp_path / "pq")
-    ckpt = str(tmp_path / "ckpt")
-
-    half1.write.mode("overwrite").parquet(stage)
-    stream = spark.readStream.schema(emb.schema).parquet(stage)
-    run_pq_index_stream(stream, idx, ckpt)
-    books, codes = SIM.read_pq_index(spark, idx)
-    assert codes.count() == half1.count()
-
-    half2.write.mode("append").parquet(stage)
-    stream = spark.readStream.schema(emb.schema).parquet(stage)
-    run_pq_index_stream(stream, idx, ckpt)
-
-    books, codes = SIM.read_pq_index(spark, idx)
-    assert codes.count() == emb.count()
-    got = sorted(
-        (r["query_id"], r["vec_id"], r["cosine_micro"], r["rank"])
-        for r in SIM.pq_topk(
-            emb, k=5, n_queries=4, codebooks=books, codes=codes
-        ).collect()
-    )
-    want = sorted(
-        (r["query_id"], r["vec_id"], r["cosine_micro"], r["rank"])
-        for r in SIM.pq_topk(
-            emb, k=5, n_queries=4, codebooks=books,
-            codes=SIM.pq_encode(emb, books),
-        ).collect()
-    )
-    assert got == want
-
-
-def test_incremental_media_stream_two_waves(spark, tmp_path):
-    """The media-dedup bridge: wave one seeds the phash index, wave
-    two's near-copy of an indexed payload drops while its novel
-    payload lands — and both the novel sink and the index stay
-    epoch-scoped."""
-    import random
-
-    from jonesy_spark.streaming.incremental import (
-        run_incremental_media_stream,
-    )
-
-    rnd = random.Random(97)
-
-    def payload():
-        return bytes(rnd.randrange(256) for _ in range(640))
-
-    originals = [payload() for _ in range(4)]
-
-    def write_wave(rows, mode):
-        df = spark.createDataFrame(
-            [(i, bytes(p), "image/png", len(p)) for i, p in rows],
-            "doc_id long, payload binary, mime string, byte_len long",
-        )
-        df.write.mode(mode).parquet(stage)
-
-    stage = str(tmp_path / "landing")
-    idx = str(tmp_path / "phash_idx")
-    novel = str(tmp_path / "novel")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, payload binary, mime string, byte_len long"
-
-    write_wave(list(enumerate(originals)), "overwrite")
-    run_incremental_media_stream(
-        spark.readStream.schema(schema).parquet(stage), idx, novel, ckpt
-    )
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(novel).collect()
-    ) == [0, 1, 2, 3]
-
-    near = bytearray(originals[2])
-    near[50] = (near[50] + 97) % 256
-    write_wave([(300, bytes(near)), (301, payload())], "append")
-    run_incremental_media_stream(
-        spark.readStream.schema(schema).parquet(stage), idx, novel, ckpt
-    )
-    got = sorted(r["doc_id"] for r in spark.read.parquet(novel).collect())
-    assert got == [0, 1, 2, 3, 301]  # 300 dropped against indexed 2
-    idx_docs = {
-        r["doc_id"]
-        for r in spark.read.parquet(idx).select("doc_id").distinct().collect()
-    }
-    assert idx_docs == {0, 1, 2, 3, 301}
-
-
-def test_rollup_stream_fold_equals_batch(spark, tmp_path):
-    """The continuous aggregate: two streamed waves of events fold to
-    exactly the single-pass rollup over their union."""
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import stats as ST
-    from jonesy_spark.streaming.incremental import run_rollup_stream
-
-    events = Catalog(spark, "/root/testdata/sf0.001").events
-    stage = str(tmp_path / "stage")
-    idx = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
-
-    half1 = events.filter(F.col("event_id") % 2 == 0)
-    half2 = events.filter(F.col("event_id") % 2 == 1)
-    half1.write.mode("overwrite").parquet(stage)
-    run_rollup_stream(
-        spark.readStream.schema(events.schema).parquet(stage), idx, ckpt
-    )
-    half2.write.mode("append").parquet(stage)
-    run_rollup_stream(
-        spark.readStream.schema(events.schema).parquet(stage), idx, ckpt
-    )
-
-    got = sorted(map(tuple, ST.rollup_report(spark, idx).collect()))
-    want = sorted(map(tuple, ST.rollup_batch(events).collect()))
-    assert got == want
-
-
 def test_kmv_stream_fold_equals_batch(spark, tmp_path):
     """The continuously-maintained COUNT DISTINCT: two streamed waves
     of events land KMV partials that fold to exactly the single-pass
@@ -836,76 +562,23 @@ def test_kmv_stream_fold_equals_batch(spark, tmp_path):
     assert got == want
 
 
-def test_sketch_stream_cms_and_mg(spark, tmp_path):
-    """The generic sketch-ledger stream: CMS counter partials streamed
-    over two waves fold to exactly the single-pass sketch (SUM folds
-    are cut-invariant), and streamed MG summaries merge within the
-    additive guarantee on every reported key."""
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import stats as ST
-    from jonesy_spark.streaming.incremental import run_sketch_stream
-
-    events = Catalog(spark, "/root/testdata/sf0.001").events.filter(
-        F.col("user_id").isNotNull()
-    )
-    n_total = events.count()
-    stage = str(tmp_path / "stage")
-    events.filter(F.col("event_id") % 2 == 0).write.mode("overwrite").parquet(stage)
-
-    cms_idx, mg_idx = str(tmp_path / "cms"), str(tmp_path / "mg")
-    for wave in range(2):
-        if wave:
-            events.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(stage)
-        src = lambda: spark.readStream.schema(events.schema).parquet(stage)
-        run_sketch_stream(
-            src(), cms_idx, str(tmp_path / "ck_cms"),
-            lambda b: ST.cms_sketch_batch(b, "user_id", d=4, w=256),
-        )
-        run_sketch_stream(
-            src(), mg_idx, str(tmp_path / "ck_mg"),
-            lambda b: ST.mg_summary_batch(b, "user_id", k=8),
-        )
-
-    got = sorted(map(tuple, ST.cms_fold(spark, cms_idx).collect()))
-    want = sorted(
-        map(tuple, ST.cms_sketch_batch(events, "user_id", d=4, w=256).collect())
-    )
-    assert got == want
-
-    exact = {
-        r["value"]: r["n"]
-        for r in events.groupBy(
-            F.col("user_id").cast("string").alias("value")
-        ).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    merged = {r["value"]: r["est"] for r in ST.mg_fold(spark, mg_idx, k=8).collect()}
-    assert merged  # k=8 << 150 users: truncation exercised, rows survive
-    for v, est in merged.items():
-        assert est <= exact[v] <= est + n_total // 9
-
-
 def test_streamed_ledgers_feed_cross_ledger_dashboard(spark, tmp_path):
-    """The monitoring dashboard's end-to-end streaming story: TWO
-    continuously-maintained ledgers (hourly rollup, daily KMV users)
-    fed by the same two-wave event stream, then the cross-ledger
-    dashboard join (the sketch_dashboard shape: rollup re-folded from
-    hour to day buckets x KMV distinct estimate) computed purely from
-    the streamed ledgers — equal to the same join computed directly
-    from the full events table in one batch pass."""
+    """The monitoring dashboard from TWO ledgers over the same two
+    waves of events: the hourly rollup ledger lands one batch partial
+    per wave, the daily KMV users ledger is maintained by the stream.
+    The cross-ledger dashboard join (the sketch_dashboard shape:
+    rollup re-folded from hour to day buckets x KMV distinct estimate)
+    computed purely from the ledgers equals the same join computed
+    directly from the full events table in one batch pass."""
     from pyspark.sql import functions as F
 
     from jonesy_spark.catalog import Catalog
     from jonesy_spark.operators import stats as ST
-    from jonesy_spark.streaming.incremental import (
-        run_kmv_stream,
-        run_rollup_stream,
-    )
+    from jonesy_spark.streaming.incremental import run_kmv_stream
 
     events = Catalog(spark, "/root/testdata/sf0.001").events
     stage = str(tmp_path / "stage")
-    r_idx, r_ckpt = str(tmp_path / "rollup"), str(tmp_path / "rck")
+    r_idx = str(tmp_path / "rollup")
     k_idx, k_ckpt = str(tmp_path / "kmv"), str(tmp_path / "kck")
 
     es = F.unix_timestamp(F.col("ts").cast("timestamp"))
@@ -918,11 +591,11 @@ def test_streamed_ledgers_feed_cross_ledger_dashboard(spark, tmp_path):
     )
 
     for parity, mode in ((0, "overwrite"), (1, "append")):
-        events.filter(F.col("event_id") % 2 == parity).write.mode(
-            mode
-        ).parquet(stage)
-        src = spark.readStream.schema(events.schema).parquet(stage)
-        run_rollup_stream(src, r_idx, r_ckpt)
+        wave = events.filter(F.col("event_id") % 2 == parity)
+        wave.write.mode(mode).parquet(stage)
+        ST.write_rollup_index(
+            ST.rollup_batch(wave), r_idx, mode="overwrite", run_id=f"w{parity}"
+        )
         run_kmv_stream(
             day_rows(
                 spark.readStream.schema(events.schema).parquet(stage)
@@ -963,66 +636,20 @@ def test_streamed_ledgers_feed_cross_ledger_dashboard(spark, tmp_path):
     )
 
 
-def test_streamed_doc_stats_feed_incremental_corpus_card(spark, tmp_path):
-    """The ninth ledger family on the generic stream rails: doc-stats
-    partials and content-digest KMV partials both maintained by
-    run_sketch_stream over a two-wave document stream, then the
-    incremental corpus card from the streamed ledgers equals the
-    scan-based corpus_card registry row exactly (fixture sources sit
-    in the KMV exact regime; the sum columns are exact always)."""
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.operators import stats as ST
-    from jonesy_spark.operators.hygiene import content_digest
-    from jonesy_spark.plans import all_queries
-    from jonesy_spark.streaming.incremental import run_sketch_stream
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    stage = str(tmp_path / "stage")
-    s_idx, s_ckpt = str(tmp_path / "stats"), str(tmp_path / "sck")
-    k_idx, k_ckpt = str(tmp_path / "kmv"), str(tmp_path / "kck")
-
-    def kmv_fn(batch):
-        return ST.kmv_sketch_batch(
-            batch.select(
-                "source", content_digest(F.col("text")).alias("digest")
-            ),
-            ["source"],
-            "digest",
-        )
-
-    for parity, mode in ((0, "overwrite"), (1, "append")):
-        docs.filter(F.col("doc_id") % 2 == parity).write.mode(mode).parquet(
-            stage
-        )
-        src = lambda: spark.readStream.schema(docs.schema).parquet(stage)  # noqa: E731
-        run_sketch_stream(src(), s_idx, s_ckpt, ST.doc_stats_batch)
-        run_sketch_stream(src(), k_idx, k_ckpt, kmv_fn)
-
-    incremental = ST.corpus_card_report(spark, s_idx, k_idx)
-    scan = all_queries()["corpus_card"](spark, sf)
-    cols = scan.columns
-    assert sorted(map(tuple, incremental.select(*cols).collect())) == sorted(
-        map(tuple, scan.collect())
-    )
-
-
-def test_sketch_stream_available_now_rate_limited_backfill(spark, tmp_path):
-    """The bounded-backfill drain (r10): a landing directory holding
-    several files drains under Trigger.AvailableNow with
-    maxFilesPerTrigger=1 — one idempotent ledger epoch PER FILE rather
-    than one history-sized batch, the query stops itself when caught
-    up, the fold equals the single-pass sketch (cut-invariance makes
-    the epoch granularity a free choice), and an immediate re-run
-    drains nothing new."""
+def test_kmv_stream_rate_limited_backfill_one_epoch_per_file(spark, tmp_path):
+    """The bounded-backfill drain: a landing directory holding several
+    files drains with ``dir_stream(max_files_per_trigger=1)`` — one
+    idempotent ledger epoch PER FILE rather than one history-sized
+    batch — the fold equals the single-pass sketch (cut-invariance
+    makes the epoch granularity a free choice), and an immediate
+    re-run drains nothing new."""
     import glob
 
     from pyspark.sql import functions as F
 
     from jonesy_spark.catalog import Catalog
     from jonesy_spark.operators import stats as ST
-    from jonesy_spark.streaming.incremental import dir_stream, run_sketch_stream
+    from jonesy_spark.streaming.incremental import dir_stream, run_kmv_stream
 
     events = Catalog(spark, "/root/testdata/sf0.001").events.filter(
         F.col("user_id").isNotNull()
@@ -1032,34 +659,35 @@ def test_sketch_stream_available_now_rate_limited_backfill(spark, tmp_path):
     n_files = len(glob.glob(f"{stage}/part-*.parquet"))
     assert n_files == 4
 
-    idx, ckpt = str(tmp_path / "cms"), str(tmp_path / "ck")
-    batch_fn = lambda b: ST.cms_sketch_batch(b, "user_id", d=4, w=256)
-    run_sketch_stream(
-        dir_stream(spark, stage, events.schema, max_files_per_trigger=1),
-        idx, ckpt, batch_fn, available_now=True,
-    )
-    epochs = {
-        p.split("ingest_batch=")[1].split("/")[0]
-        for p in glob.glob(f"{idx}/ingest_batch=*")
-    }
+    idx, ckpt = str(tmp_path / "kmv"), str(tmp_path / "ck")
+    keys = ["event_type"]
+
+    def drain():
+        run_kmv_stream(
+            dir_stream(spark, stage, events.schema, max_files_per_trigger=1),
+            idx, ckpt, keys, "user_id", k=16,
+        )
+        return {
+            p.split("ingest_batch=")[1].split("/")[0]
+            for p in glob.glob(f"{idx}/ingest_batch=*")
+        }
+
+    epochs = drain()
     assert len(epochs) == n_files, epochs  # one rate-limited epoch per file
 
-    got = sorted(map(tuple, ST.cms_fold(spark, idx).collect()))
+    got = sorted(map(tuple, ST.kmv_fold(spark, idx, keys, k=16).collect()))
     want = sorted(
-        map(tuple, ST.cms_sketch_batch(events, "user_id", d=4, w=256).collect())
+        map(
+            tuple,
+            ST.kmv_sketch_batch(
+                events.select("event_type", "user_id"), keys, "user_id", k=16
+            ).collect(),
+        )
     )
     assert got == want
 
-    # caught up: a re-run terminates on its own and lands nothing new
-    run_sketch_stream(
-        dir_stream(spark, stage, events.schema, max_files_per_trigger=1),
-        idx, ckpt, batch_fn, available_now=True,
-    )
-    after = {
-        p.split("ingest_batch=")[1].split("/")[0]
-        for p in glob.glob(f"{idx}/ingest_batch=*")
-    }
-    assert after == epochs
+    # caught up: a re-run lands nothing new
+    assert drain() == epochs
 
 
 def test_crawl_intake_stream_composes_and_matches_batch(spark, tmp_path):

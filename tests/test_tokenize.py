@@ -247,27 +247,22 @@ def test_bpe_train_min_pair_count_stops(spark):
 
 
 @pytest.mark.slow
-def test_bpe_merge_store_versioned_publish(spark, tmp_path):
-    path = str(tmp_path / "merges")
+def test_bpe_tokenizer_store_skips_crashed_version(spark, tmp_path):
+    path = str(tmp_path / "tok")
     docs = _tiny_docs(spark)
-    assert T.read_bpe_merges(spark, path) is None
-
     m1 = T.bpe_train(docs, n_merges=4)
-    v1 = T.write_bpe_merges(m1, path)
-    assert v1 == 0
-    got = T.read_bpe_merges(spark, path).orderBy("rank").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in m1.orderBy("rank").collect()]
+    assert T.write_bpe_tokenizer(m1, T.bpe_vocab(docs, m1), path) == 0
 
     # a crashed attempt (no _COMMITTED marker) stays invisible
     m2 = T.bpe_train(docs, n_merges=6)
-    m2.write.parquet(f"{path}/version=1")
-    assert T.live_merges_version(spark, path) == 0
-    assert len(T.read_bpe_merges(spark, path).collect()) == 4
+    m2.write.parquet(f"{path}/version=1/merges")
+    merges, _, n = T.read_bpe_tokenizer(spark, path)
+    assert n == 0 and merges.count() == 4
 
     # the next publish skips past the crashed subtree
-    v2 = T.write_bpe_merges(m2, path)
-    assert v2 == 2
-    assert len(T.read_bpe_merges(spark, path).collect()) == 6
+    assert T.write_bpe_tokenizer(m2, T.bpe_vocab(docs, m2), path) == 2
+    merges, _, n = T.read_bpe_tokenizer(spark, path)
+    assert n == 2 and merges.count() == 6
 
 
 def test_bpe_encode_ids_roundtrip_through_vocab(spark):
@@ -376,25 +371,6 @@ def test_train_tokenizer_job_rejects_unknown_family(spark, tmp_path, monkeypatch
         run_job("train_tokenizer", ctx)
 
 
-def test_oov_report_rates(spark):
-    shards = spark.createDataFrame(
-        [
-            (1, [5, 6], 2, 0, 0, "epoch-0"),
-            (2, [5, -1], 2, 1, 0, "epoch-0"),
-            (3, [5, 6, -1, -1], 4, 2, 0, "epoch-1"),
-        ],
-        "doc_id long, token_ids array<int>, n_bpe_tokens int, n_oov int, "
-        "tokenizer_version int, ingest_batch string",
-    )
-    got = {
-        r["ingest_batch"]: r
-        for r in T.oov_report(shards).collect()
-    }
-    assert got["epoch-0"]["n_docs"] == 2 and got["epoch-0"]["n_oov"] == 1
-    assert abs(got["epoch-0"]["oov_rate"] - 0.25) < 1e-9
-    assert abs(got["epoch-1"]["oov_rate"] - 0.5) < 1e-9
-
-
 # --- property: the incremental driver trainer == the naive reference ---
 
 from hypothesis import HealthCheck, given, settings
@@ -421,27 +397,6 @@ def test_bpe_incremental_trainer_matches_naive_property(words, n):
     exactly the recount-from-scratch reference on ANY corpus."""
     got = T._train_bpe_py([(list(w), c) for w, c in words], n, 2)
     assert got == _naive_bpe(words, n, 2)
-
-
-def test_tokenizer_drift_report(spark):
-    docs = _tiny_docs(spark)
-    m8 = T.bpe_train(docs, n_merges=8)
-    m4 = T.bpe_train(docs, n_merges=4)
-    # prefix-extension: identical prefix, no moves
-    r = T.tokenizer_drift(m4, m8).collect()[0]
-    assert (r["n_old"], r["n_new"], r["n_shared"]) == (4, 8, 4)
-    assert r["n_rank_moved"] == 0 and r["prefix_len"] == 4
-    assert r["jaccard_micro"] == 500_000
-    # identical tables: full overlap, prefix == length
-    r2 = T.tokenizer_drift(m8, m8).collect()[0]
-    assert r2["jaccard_micro"] == 1_000_000 and r2["prefix_len"] == 8
-    # disjoint corpora: divergence at rank 0
-    other = spark.createDataFrame(
-        [(0, "zzz zzz zzz yyy yyy")], "doc_id long, text string"
-    )
-    mo = T.bpe_train(other, n_merges=3)
-    r3 = T.tokenizer_drift(m8, mo).collect()[0]
-    assert r3["n_shared"] == 0 and r3["prefix_len"] == 0
 
 
 def test_bpe_train_distributed_batches_merge_rounds(spark):
@@ -619,85 +574,6 @@ def test_unigram_encode_ids_roundtrip_and_oov(spark):
     assert got["token_ids"] == [-1, -1]
 
 
-@pytest.mark.slow
-def test_unigram_shard_stream_and_oov_report(spark, tmp_path):
-    from jonesy_spark.streaming.incremental import run_tokenized_shard_stream
-
-    land = tmp_path / "docs"
-    land.mkdir()
-    shards, ckpt = str(tmp_path / "shards"), str(tmp_path / "ckpt")
-    tok_path = str(tmp_path / "uni_tok")
-
-    train = spark.createDataFrame(
-        [(1, "low lower"), (2, "newest widest")], "doc_id long, text string"
-    )
-    pieces = T.unigram_train(train, vocab_size=48, max_piece_len=6,
-                             seed_size=128)
-    assert T.write_unigram_tokenizer(pieces, tok_path) == 0
-
-    def wave(name, rows):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(f"{land}/{name}")
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            f"{land}/*"
-        )
-        run_tokenized_shard_stream(
-            stream, tok_path, shards, ckpt, family="unigram"
-        )
-
-    wave("w1", [(1, "low lower"), (2, "newest widest")])
-    wave("w2", [(3, "low zq")])
-
-    got = spark.read.parquet(shards)
-    rows = {r["doc_id"]: r for r in got.collect()}
-    assert sorted(rows) == [1, 2, 3]
-    assert rows[1]["n_oov"] == 0 and rows[2]["n_oov"] == 0
-    assert rows[3]["n_oov"] == 2  # z and q never seen by the vocab
-    assert all(r["tokenizer_version"] == 0 for r in rows.values())
-    # the report reads the family-named count column transparently
-    # (one row per (version, ingest_batch) — two epochs here)
-    rep = T.oov_report(got).collect()
-    assert len(rep) == 2
-    assert sum(r["n_oov"] for r in rep) == 2
-    assert sum(r["n_tokens"] for r in rep) == sum(
-        r["n_unigram_tokens"] for r in rows.values()
-    )
-
-
-def test_unigram_stream_rejects_unknown_family(spark, tmp_path):
-    from jonesy_spark.streaming.incremental import run_tokenized_shard_stream
-
-    (tmp_path / "empty").mkdir()
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        str(tmp_path / "empty")
-    )
-    with pytest.raises(ValueError, match="family"):
-        run_tokenized_shard_stream(
-            stream, "x", "y", "z", family="wordpiece"
-        )
-
-
-def test_unigram_drift_identity_and_movement(spark):
-    a = spark.createDataFrame(
-        [(1, "low lower"), (2, "newest widest")], "doc_id long, text string"
-    )
-    b = spark.createDataFrame(
-        [(1, "low lowest"), (2, "newer wide zq")], "doc_id long, text string"
-    )
-    pa = T.unigram_train(a, vocab_size=48, max_piece_len=6, seed_size=128)
-    pb = T.unigram_train(b, vocab_size=48, max_piece_len=6, seed_size=128)
-    same = T.unigram_drift(pa, pa).first()
-    assert same["n_old"] == same["n_new"] == same["n_shared"]
-    assert same["n_id_moved"] == 0
-    assert same["jaccard_micro"] == 1_000_000
-    assert same["mean_abs_dlogprob_micro"] == 0
-    diff = T.unigram_drift(pa, pb).first()
-    assert 0 < diff["n_shared"] < diff["n_old"] + diff["n_new"]
-    assert diff["jaccard_micro"] < 1_000_000
-    assert diff["mean_abs_dlogprob_micro"] > 0
-
-
 def test_unigram_train_distributed_equals_driver(spark):
     """The unbounded-word-table trainer reproduces the in-driver
     trainer: identical piece set, log-probs within float-summation-
@@ -764,26 +640,6 @@ def test_unigram_train_rejects_small_vocab_and_empty_corpus(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     with pytest.raises(ValueError, match="non-empty corpus"):
         T.unigram_train(empty, vocab_size=16)
-
-
-def test_oov_report_rejects_mixed_family_shards(spark):
-    mixed = spark.createDataFrame(
-        [(1, 5, 4, 0, 0), (2, 3, 0, 2, 0)],
-        "doc_id long, n_bpe_tokens long, n_unigram_tokens long, "
-        "n_oov long, tokenizer_version int",
-    )
-    with pytest.raises(ValueError, match="mixed tokenizer families"):
-        T.oov_report(mixed)
-
-
-def test_oov_report_rejects_untokenized_shards(spark):
-    # neither family column: fail with a named-column ValueError, not a
-    # downstream unresolved-column AnalysisException (r9 ADVICE)
-    plain = spark.createDataFrame(
-        [(1, 0, 0)], "doc_id long, n_oov long, tokenizer_version int"
-    )
-    with pytest.raises(ValueError, match="neither n_bpe_tokens nor"):
-        T.oov_report(plain)
 
 
 def test_seed_unigram_distributed_ignores_empty_words(spark):
