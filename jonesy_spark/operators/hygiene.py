@@ -837,9 +837,8 @@ def compact_index(
     index needs: every epoch adds up to one file per touched bucket, so
     a year of 15-minute epochs is ~9 M tiny files whose listing alone
     dominates probe planning. Works on the digest and minhash signature
-    indexes (``part_col="bucket"``, the default) and on the IVF vector
-    store (``similarity.compact_ivf_assignments`` passes
-    ``part_col="cid"`` over its ``assignments/`` root).
+    indexes and the search postings (``part_col="bucket"``, the
+    default).
 
     Returns the new consolidated ``run_id``
     (``compact-<n_batches>-<hex>``).

@@ -45,44 +45,3 @@ def salted_join(
         F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))),
     )
     return salted.join(replicated, on=[on, "__salt"], how=how).drop("__salt")
-
-
-def asof_topk_pandas(events: DataFrame) -> DataFrame:
-    """Alternate as-of implementation: per-user ``applyInPandas`` with
-    ``pandas.merge_asof`` — semantically identical to the window-based
-    ``plans.extension_queries.asof_join_last_click``.
-
-    Kept as the reference implementation of the grouped-Pandas escape
-    hatch (SURVEY.md §4.3 custom-operator preference order: built-ins
-    first, applyInPandas second): groups arrive as Arrow batches, Python
-    runs once per group, the output schema is declared up front. The
-    window version wins at scale (no Python boundary); this one wins
-    when the per-group logic stops being expressible as windows.
-    """
-    import pandas as pd
-
-    def per_user(pdf: pd.DataFrame) -> pd.DataFrame:
-        clicks = (
-            pdf[pdf.event_type == "click"][["ts"]]
-            .rename(columns={"ts": "click_ts"})
-            .sort_values("click_ts")
-        )
-        purchases = pdf[pdf.event_type == "purchase"][
-            ["event_id", "user_id", "ts"]
-        ].sort_values("ts")
-        if purchases.empty:
-            return pd.DataFrame(
-                columns=["purchase_id", "user_id", "purchase_ts", "click_ts"]
-            )
-        merged = pd.merge_asof(
-            purchases, clicks, left_on="ts", right_on="click_ts", direction="backward"
-        )
-        merged = merged.dropna(subset=["click_ts"])
-        return merged.rename(
-            columns={"event_id": "purchase_id", "ts": "purchase_ts"}
-        )[["purchase_id", "user_id", "purchase_ts", "click_ts"]]
-
-    return events.groupBy("user_id").applyInPandas(
-        per_user,
-        schema="purchase_id long, user_id long, purchase_ts timestamp, click_ts timestamp",
-    )

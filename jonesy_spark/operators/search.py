@@ -131,7 +131,7 @@ def write_search_index(
     prefix_len: int = 2,
 ) -> str:
     """Append a batch's INVERTED INDEX rows to the persisted search
-    index — the retrieval sibling of the digest/MinHash/IVF indexes
+    index — the retrieval sibling of the digest/MinHash indexes
     (same ``ingest_batch=<run_id>/bucket=`` layout, same epoch-
     overwrite replay idempotence): ``postings/`` holds ``(t, doc_id,
     tf, len)`` rows bucketed by the term's md5 prefix (so a probe

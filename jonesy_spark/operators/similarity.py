@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import cache_scope, persist
+from ..caching import persist
 from ..functions import vectors as VX
 from ..functions.scalars import micro_units
 from .dedup import CPU_PARTITIONS, _eval_once, _micro_threshold
@@ -329,9 +329,9 @@ def semantic_dedup(
     above a cosine threshold; here the cells are the deterministic
     sign buckets (:func:`functions.vectors.sign_bucket`) so the DuckDB
     oracle reproduces the frame bit-for-bit — the k-means-cell variant
-    at scale is the IVF machinery next door (``ivf_assignments`` /
-    ``incremental_embedding_dedup``, pytest-pinned because centroid
-    training is iterative). Scale shape: a cell-blocked self-join
+    at scale is the IVF machinery next door (``ivf_assignments`` with
+    trained centroids, pytest-pinned because centroid training is
+    iterative). Scale shape: a cell-blocked self-join
     (equi-join on the cell key, never all-pairs — same plan family as
     ``bucketed_topk``) followed by a min-aggregate and a left join
     back to the corpus; raise ``n_bucket_dims`` with the corpus so
@@ -375,362 +375,6 @@ def semantic_dedup(
             .cast("long")
             .alias("pruned_by"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Persisted IVF index — incremental embedding near-dup (the semantic
-# sibling of hygiene's digest / MinHash indexes).
-# ---------------------------------------------------------------------------
-
-
-def live_ivf_version(spark, index_path: str) -> int | None:
-    """The committed version the index currently serves, or None for an
-    unversioned (pre-rebuild) layout. A version is LIVE only once its
-    ``version=N/_COMMITTED`` marker exists — the marker is a single
-    file create, so publishing a rebuild is atomic: readers resolving
-    mid-rebuild see the old version until the new one is fully durable
-    (Hadoop FileSystem API, so the same code runs on local disk, HDFS,
-    or s3a)."""
-    from .store import live_version
-
-    return live_version(spark, index_path)
-
-
-def _ivf_root(spark, index_path: str) -> str:
-    """Resolve the directory actually holding ``centroids/`` +
-    ``assignments/``: the live ``version=N`` subtree after a rebuild,
-    the index path itself before one. Every reader/writer resolves at
-    call time, so a rebuild's marker flip re-points the NEXT operation
-    without touching in-flight ones."""
-    n = live_ivf_version(spark, index_path)
-    return index_path if n is None else f"{index_path}/version={n}"
-
-
-def write_ivf_index(
-    emb: DataFrame,
-    index_path: str,
-    centroids: DataFrame | None = None,
-    run_id: str | None = None,
-    mode: str = "append",
-    quantize: bool = False,
-) -> str:
-    """Append a batch of vectors to the persisted IVF index; creates the
-    index (freezing its centroid table) on first call. Returns the
-    ``run_id`` used.
-
-    Layout: ``centroids/`` (immutable ``(cid, cv, cnrm)``) +
-    ``assignments/ingest_batch=<run_id>/cid=<N>/`` holding
-    ``(vec_id, v, nrm)`` — each vector stored in its ONE nearest cell
-    (standard IVF: storage is single-cell, recall comes from
-    multi-probe at query time). Partitioning by ``cid`` means a probe
-    that targets p cells reads ~p/K of the index — the same
-    partition-pruning contract as the digest index's hash buckets.
-    On creation, ``centroids`` defaults to the deterministic first-K
-    vectors BY RANK of vec_id (K ~ sqrt(batch)); pass
-    :func:`kmeans_centroids` output for trained cells. Centroids are
-    frozen forever, so creation REFUSES an empty centroid table —
-    every future probe of such an index would silently return nothing.
-
-    ``quantize=True`` stores the int8 tier instead of double arrays —
-    ``(vec_id, qv struct<q: array<tinyint>, scale: float>, nrm float,
-    cid)``, ~8x less index IO per probe. Probe-time cosines are then
-    computed on DEQUANTIZED vectors (distortion well under 1 %, see
-    ``vectors.quantize_int8``) — size the match ``threshold`` with
-    that margin. Storage format is an index-level property: appends
-    FOLLOW the existing assignment schema, whatever this call asks
-    for, so one index never mixes formats (mixed subtrees would break
-    schema-uniform reads).
-    """
-    from pyspark.errors import AnalysisException
-
-    spark = emb.sparkSession
-    if run_id is None:
-        import uuid
-
-        run_id = f"nightly-{uuid.uuid4().hex[:12]}"
-    e = _prepared(emb)
-    # resolve ONCE: centroids and assignments must land in the same
-    # version subtree even if a rebuild commits mid-call (writers are
-    # quiesced during rebuilds by contract, same as compaction)
-    root = _ivf_root(spark, index_path)
-    try:
-        cents = spark.read.parquet(f"{root}/centroids")
-    except AnalysisException:
-        cents = None
-    if cents is None:
-        if centroids is None:
-            from pyspark.sql import Window
-
-            n = emb.count()
-            if n == 0:
-                raise ValueError(
-                    f"IVF index creation at {index_path!r}: empty centroid "
-                    "table (empty first batch) — refusing to freeze an "
-                    "index that could never match anything"
-                )
-            k = adaptive_centroids(n)
-            # First K by RANK, not by id VALUE (ADVICE r5 #2): a first
-            # batch with offset/hashed/post-dedup vec_ids has no rows
-            # below k, and an id-value filter would freeze an empty or
-            # undersized centroid table — permanently, since centroids
-            # are immutable after creation. limit(k) collapses to one
-            # task of k rows (K ~ sqrt(batch)), so the global window
-            # ranks a driver-bounded frame, never the corpus.
-            centroids = (
-                e.orderBy("vec_id")
-                .limit(k)
-                .select(
-                    (F.row_number().over(Window.orderBy("vec_id")) - 1).alias(
-                        "cid"
-                    ),
-                    F.col("v").alias("cv"),
-                    F.col("nrm").alias("cnrm"),
-                )
-            )
-        if centroids.isEmpty():
-            raise ValueError(
-                f"IVF index creation at {index_path!r}: empty centroid "
-                "table (empty first batch?) — refusing to freeze an "
-                "index that could never match anything"
-            )
-        centroids.write.mode("errorifexists").parquet(f"{root}/centroids")
-        cents = spark.read.parquet(f"{root}/centroids")
-    # storage format is sticky: appends follow whatever the index
-    # already stores, regardless of this call's quantize argument
-    try:
-        quantize = "qv" in spark.read.parquet(f"{root}/assignments").columns
-    except AnalysisException:
-        pass
-    assign = ivf_assignments(e, probes=1, centroids=cents)
-    rows = e.join(assign, "vec_id")
-    if quantize:
-        rows = rows.select(
-            "vec_id",
-            VX.quantize_int8(F.col("v")).alias("qv"),
-            F.col("nrm").cast("float").alias("nrm"),
-            "cid",
-        )
-    else:
-        rows = rows.select("vec_id", "v", "nrm", "cid")
-    (
-        rows.repartition("cid")
-        .write.mode(mode)
-        .partitionBy("cid")
-        .parquet(f"{root}/assignments/ingest_batch={run_id}")
-    )
-    return run_id
-
-
-def probe_ivf_index(
-    new_emb: DataFrame,
-    spark,
-    index_path: str,
-    threshold: float = 0.9,
-    probes: int = 4,
-    exclude_run_id: str | None = None,
-    observation=None,
-) -> DataFrame:
-    """Semantic matches of a new batch against the persisted IVF index:
-    ``(vec_id, index_vec_id, cosine)`` for every new vector within
-    ``threshold`` cosine of an indexed one that shares one of its
-    ``probes`` nearest cells.
-
-    The probe joins on the index's ``cid`` PARTITION column, so the
-    scan touches only the probed cells' directories (dynamic partition
-    pruning); verification is the exact rounded cosine against the
-    stored vectors. An absent index yields no matches.
-    ``exclude_run_id`` prunes one ``ingest_batch=`` subtree (partition
-    filter) — retrying writers exclude their own run_id so a crashed
-    prior attempt's committed vectors can't self-match the replay at
-    cosine 1.0 and erase the batch (the ADVICE r5 #1 hazard, same as
-    the digest/minhash indexes).
-
-    Observability rides the caller's own action (the hot-bucket
-    ``CollectMetrics`` pattern): the returned frame observes
-    ``matches`` / ``matched_new_vecs`` (pass a ``pyspark.sql.
-    Observation`` to read in-process; default listener name
-    ``probe_ivf_index``), and the batch's assignment subtree observes
-    ``probed_cells`` under the name ``probe_ivf_cells`` — a nightly
-    job alerts on zero extra passes.
-    """
-    from pyspark.errors import AnalysisException
-
-    def _observed(df: DataFrame) -> DataFrame:
-        return df.observe(
-            observation if observation is not None else "probe_ivf_index",
-            F.count(F.lit(1)).alias("matches"),
-            F.approx_count_distinct("vec_id").alias("matched_new_vecs"),
-        )
-
-    # resolve ONCE: the probe's centroids and scanned assignments must
-    # come from the same version subtree
-    root = _ivf_root(spark, index_path)
-    try:
-        cents = spark.read.parquet(f"{root}/centroids")
-    except AnalysisException:
-        cents = None
-    if cents is None:
-        return _observed(
-            new_emb.sparkSession.createDataFrame(
-                [], "vec_id long, index_vec_id long, cosine_micro long"
-            )
-        )
-    e = _prepared(new_emb)
-    probe = e.join(ivf_assignments(e, probes=probes, centroids=cents), "vec_id")
-    probe = probe.observe(
-        "probe_ivf_cells", F.approx_count_distinct("cid").alias("probed_cells")
-    )
-    try:
-        idx = spark.read.parquet(f"{root}/assignments")
-    except AnalysisException:
-        return _observed(
-            new_emb.sparkSession.createDataFrame(
-                [], "vec_id long, index_vec_id long, cosine_micro long"
-            )
-        )
-    if exclude_run_id is not None:
-        idx = idx.filter(F.col("ingest_batch") != exclude_run_id)
-    if "qv" in idx.columns:
-        # int8 storage tier: dequantize at scan (the scan reads ~8x
-        # fewer bytes; cosine distortion < 1 % — threshold is sized
-        # with that margin by the caller, see write_ivf_index)
-        idx = idx.select(
-            F.col("vec_id").alias("index_vec_id"),
-            VX.dequantize_int8(F.col("qv")).alias("iv"),
-            F.col("nrm").cast("double").alias("inrm"),
-            "cid",
-        )
-    else:
-        idx = idx.select(
-            F.col("vec_id").alias("index_vec_id"),
-            F.col("v").alias("iv"),
-            F.col("nrm").alias("inrm"),
-            "cid",
-        )
-    return _observed(
-        probe.join(idx, "cid")
-        .withColumn(
-            "cosine_micro",
-            _eval_once(
-                micro_units(
-                    VX.dot(F.col("v"), F.col("iv"))
-                    / (F.col("nrm") * F.col("inrm"))
-                )
-            ),
-        )
-        .filter(F.col("cosine_micro") >= _micro_threshold(threshold))
-        .select("vec_id", "index_vec_id", "cosine_micro")
-        .dropDuplicates(["vec_id", "index_vec_id"])
-    )
-
-
-def incremental_embedding_dedup(
-    new_emb: DataFrame,
-    spark,
-    index_path: str,
-    threshold: float = 0.9,
-    probes: int = 4,
-    run_id: str | None = None,
-    mode: str = "append",
-    novel_sink=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Semantic dedup of a new embedding batch against the persisted
-    IVF index — the embedding-space sibling of
-    ``hygiene.incremental_near_dup``: returns ``(novel, matches)`` and
-    appends only the novel vectors to the index.
-
-    Within-batch near-dups collapse first at cluster level
-    (:func:`embedding_near_dup` pairs closed by connected components,
-    min-id survivor); the survivors probe the index, and any within
-    ``threshold`` of an indexed vector are dropped. Nightly cost is
-    O(batch) sketch+probe against the probed cells only — historical
-    vectors outside those cells are never read.
-
-    Replay idempotence (same contract as the digest/minhash indexes):
-    with a ``run_id``, the probe excludes that run's own
-    ``ingest_batch=`` subtree, and ``novel_sink`` (a ``novel_df ->
-    None`` callable) runs BEFORE the index write so a crash between
-    the two writes replays into an identical recompute rather than a
-    self-matched empty batch.
-    """
-    from .graph import resolve_duplicates
-
-    # the pair search's caches are dead once connected components has
-    # checkpointed the pair graph
-    with cache_scope(keep_checkpoints=True):
-        pairs = embedding_near_dup(new_emb, threshold=threshold)
-        survivors = resolve_duplicates(
-            new_emb, pairs, id_col="vec_id", src="vec_a", dst="vec_b"
-        )
-    # persist, not checkpoint: multi-consumer subtrees keep their
-    # lineage so a lost executor recomputes instead of killing the job
-    # (SCALE.md "Cache lifecycle"); released with the caller's scope
-    matches = persist(probe_ivf_index(
-        survivors, spark, index_path, threshold=threshold, probes=probes,
-        exclude_run_id=run_id,
-    ))
-    dup_ids = matches.select("vec_id").distinct()
-    novel = survivors.join(dup_ids, "vec_id", "left_anti").observe(
-        "incremental_embedding_novel", F.count(F.lit(1)).alias("novel_vecs")
-    )
-    if novel_sink is not None:
-        novel = persist(novel)
-        novel_sink(novel)
-    write_ivf_index(novel, index_path, run_id=run_id, mode=mode)
-    return novel, matches
-
-
-def vacuum_ivf_versions(spark, index_path: str) -> list[str]:
-    """Delete every IVF subtree the live version no longer needs: stale
-    ``version=N`` directories (superseded rebuilds and crashed attempts
-    without a ``_COMMITTED`` marker) and, once a versioned layout is
-    live, the legacy root's ``centroids/`` + ``assignments/``. Returns
-    the deleted paths. No-op (empty list) while the index is still
-    unversioned — there is nothing stale yet.
-
-    Old subtrees are retention for in-flight readers, so vacuum runs
-    AFTER those drain — typically the next maintenance window, one
-    cycle behind the rebuild that stranded them (the same quiescence
-    contract as ``hygiene.compact_index``; deletes use the Hadoop
-    FileSystem API so local disk, HDFS, and s3a behave alike)."""
-    live = live_ivf_version(spark, index_path)
-    if live is None:
-        return []
-    sc = spark.sparkContext
-    Path = sc._jvm.org.apache.hadoop.fs.Path
-    fs = Path(index_path).getFileSystem(sc._jsc.hadoopConfiguration())
-    doomed = [
-        st.getPath()
-        for st in (fs.globStatus(Path(f"{index_path}/version=*")) or [])
-        if int(st.getPath().getName().split("=", 1)[1]) != live
-    ]
-    doomed += [
-        Path(f"{index_path}/{legacy}")
-        for legacy in ("centroids", "assignments")
-        if fs.exists(Path(f"{index_path}/{legacy}"))
-    ]
-    deleted = []
-    for p in doomed:
-        fs.delete(p, True)
-        deleted.append(str(p.toUri().getPath()))
-    return deleted
-
-
-def compact_ivf_assignments(spark, index_path: str, run_id: str | None = None) -> str:
-    """Compact the IVF index's accumulated per-epoch vector subtrees —
-    ``hygiene.compact_index`` over the ``assignments/`` root with the
-    cell id as the partition column. Centroids are a single immutable
-    table and never need compaction; the same crash ordering applies
-    (consolidated tree before deletes; duplicate vectors are tolerated
-    by the probe's pair dedup until the next compaction)."""
-    from .hygiene import compact_index
-
-    return compact_index(
-        spark,
-        f"{_ivf_root(spark, index_path)}/assignments",
-        run_id=run_id,
-        part_col="cid",
     )
 
 
@@ -1268,7 +912,7 @@ def hash_embed(
     ``s in {-1, +1}`` drawn from the house md5 hash of ``t|j``, then
     L2-normalized. Near-duplicate texts map to near-identical unit
     vectors, so the output plugs straight into ``embedding_near_dup``
-    / the IVF index — completing the documents -> vectors -> semantic
+    — completing the documents -> vectors -> semantic
     dedup chain without an external model (swap in a real encoder by
     replacing THIS stage only; every downstream operator reads the
     same ``(id, embedding)`` shape).

@@ -112,7 +112,7 @@ def write_stats_index(
 ) -> str:
     """Land one batch's profile rows under a batch-scoped subtree.
     O(groups) bytes per batch; ``overwrite`` + an epoch run_id gives
-    replay idempotence (same contract as the digest/minhash/IVF
+    replay idempotence (same contract as the digest/minhash
     indexes). Returns the run_id used."""
     return _write_ledger(profile, index_path, mode, run_id)
 

@@ -1,8 +1,7 @@
 """Versioned-immutable artifact store: the one publish/resolve
-contract behind every frozen model artifact in the engine — BPE merge
-tables and (merges, vocab) tokenizer pairs (``operators.tokenize``),
-rebuilt IVF centroid layouts (``operators.similarity``), and
-classifier models (``operators.classify``).
+contract behind every frozen model artifact in the engine — the BPE
+(merges, vocab) pairs and unigram piece tables (``operators.tokenize``)
+and classifier models (``operators.classify``).
 
 Contract:
   * an artifact version is a ``{path}/version=N`` subtree, written

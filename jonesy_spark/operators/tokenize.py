@@ -36,14 +36,6 @@ Scale shape (100 TB):
     over it (bounded, like the k-means centroid table). The merge TABLE
     is driver-sized by definition — ``n_merges`` rows is the entire
     output of training.
-  * ``bpe_train_distributed`` is the unbounded path (no word cap): the
-    per-round state stays a DataFrame, each round is one keyed
-    aggregation (pair counts, map-side combined) + a 1-row driver
-    action (the argmax pair — same bounded-collect precedent as the
-    per-term fan-out) + a map-only fold applying the merge. Lineage is
-    truncated on a ``localCheckpoint`` cadence exactly like the
-    connected-components round loop (``operators.graph``). Verified
-    merge-for-merge identical to the driver trainer in tests.
   * ``bpe_encode`` is the sanctioned slow path: pre-tokenization stays
     JVM-side (``regexp_extract_all``), and only the per-segment merge
     loop crosses to Python as an Arrow-batched pandas UDF with a
@@ -54,13 +46,9 @@ Scale shape (100 TB):
   * The UNIGRAM-LM family (Kudo 2018, the SentencePiece trainer —
     the public alternative pipelines toggle) shares the same shapes:
     ``unigram_train`` runs EM + shrink driver-side over the capped
-    word table; ``unigram_train_distributed`` is its unbounded twin
-    (substring seed and every E-step are distributed over the FULL
-    word-count table, only vocab-sized state reaches the driver; the
-    control loop is shared verbatim, so the trainers agree to float-
-    summation-order tolerance — tested); ``unigram_encode`` /
-    ``unigram_encode_ids`` run deterministic integer-micro Viterbi
-    behind the same Arrow memo boundary as ``bpe_encode``.
+    word table; ``unigram_encode`` / ``unigram_encode_ids`` run
+    deterministic integer-micro Viterbi behind the same Arrow memo
+    boundary as ``bpe_encode``.
 """
 
 from __future__ import annotations
@@ -68,13 +56,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import cache_scope, checkpoint, persist
 from ..functions.scalars import micro_units
-
 from ..functions.text import PRETOKEN_PATTERN
-from .dedup import CPU_PARTITIONS
 
-#: Output schema of both trainers — ``rank`` is the merge order (0 is
+#: Output schema of :func:`bpe_train` — ``rank`` is the merge order (0 is
 #: the first, most-frequent merge), ``pair_count`` the pair's frequency
 #: at the time it was chosen (weighted by word counts).
 MERGES_SCHEMA = "rank int, left string, right string, merged string, pair_count long"
@@ -109,8 +94,7 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _merge_word(syms: list[str], a: str, b: str, ab: str) -> list[str]:
     """Greedy left-to-right non-overlapping replacement of the adjacent
-    pair (a, b) — the classic BPE application order. Identical to the
-    SQL ``aggregate`` fold the distributed trainer uses (a just-merged
+    pair (a, b) — the classic BPE application order (a just-merged
     symbol is ``ab``, which no longer equals ``a`` unless the strings
     collide, in which case re-merging IS the correct greedy behavior)."""
     out: list[str] = []
@@ -133,8 +117,7 @@ def _train_bpe_py(
     """In-driver BPE over a bounded ``(symbols, count)`` word table —
     incremental pair bookkeeping (only words containing the chosen pair
     are touched per round), deterministic tie-break (max count, then
-    lexicographically smallest pair). Pure Python on a capped table;
-    the distributed twin reproduces it merge-for-merge (tested)."""
+    lexicographically smallest pair). Pure Python on a capped table."""
     from collections import Counter, defaultdict
 
     syms = [list(w) for w, _ in words]
@@ -192,8 +175,7 @@ def bpe_train(
     (bounded collect, the unigram-vocab precedent), and the merge loop
     runs in-process over them. Training stops early once the best
     pair's weighted count drops below ``min_pair_count`` (merging
-    near-singletons memorizes noise, and the distributed twin's
-    stopping rule must agree exactly).
+    near-singletons memorizes noise).
 
     Returns a :data:`MERGES_SCHEMA` DataFrame — ``n_merges`` rows at
     most, driver-sized by definition, broadcast-shaped for
@@ -212,170 +194,6 @@ def bpe_train(
     )
     spark = docs.sparkSession
     return spark.createDataFrame(merges, MERGES_SCHEMA)
-
-
-def _apply_merge_col(syms: Column, a: str, b: str) -> Column:
-    """The SQL twin of :func:`_merge_word`: a left fold over the symbol
-    array that merges adjacent (a, b) greedily. Whole-stage-codegen
-    higher-order function — map-only, no shuffle, no Python."""
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def _exact_batch_prefix(
-    rows, start_rank: int, budget: int, min_pair_count: int
-):
-    """Select the maximal PREFIX of a (count desc, l, r)-ordered
-    candidate page that the sequential trainer would provably pick in
-    this order — the r6 #4 batching rule, exactness argument:
-
-    * Pairs are accepted in page order while pairwise SYMBOL-DISJOINT
-      (including each accepted merge's produced string, so a produced
-      token can never collide with a later candidate's symbol). A
-      disjoint pair's count is untouched by the earlier merges, so at
-      its turn it still carries its original count.
-    * Every pair OVERLAPPING the accepted set sits at/after the stop
-      position (the page is sorted and we stop at the first overlap),
-      so its count is <= c_stop. A merge (a, b) can only create pairs
-      ``(x, ab)`` / ``(ab, y)`` whose counts are bounded by the
-      ORIGINAL counts of ``(x, a)`` / ``(b, y)`` — overlapping pairs —
-      hence every created pair's count is <= c_stop as well.
-    * Therefore each accepted pair with count STRICTLY > c_stop beats
-      every created, decreased, and unseen pair at its turn — the
-      sequential argmax (count desc, l, r tie-break) picks exactly
-      this prefix, in this order. Candidates at c_stop (where a tie
-      with a created pair could flip the lexicographic pick) wait for
-      the next round's fresh count table.
-
-    Returns the accepted ``(rank, l, r, produced, count)`` rows and
-    whether the stop was the ``min_pair_count`` floor (train is done).
-    """
-    accepted: list[tuple[int, str, str, str, int]] = []
-    used: set[str] = set()
-    floored = False
-    # everything NOT on the page is bounded by the page's last count
-    # (the page is one row larger than the budget precisely to witness
-    # this bound); a complete page means no unseen pairs at all
-    c_stop = rows[-1]["c"] if len(rows) > budget else min_pair_count - 1
-    for row in rows[:budget]:
-        a, b, c = row["l"], row["r"], row["c"]
-        if c < min_pair_count:
-            floored = True
-            break
-        if {a, b, a + b} & used:
-            # the first overlapping candidate ALSO bounds every pair a
-            # prior merge can create or shrink (created (x, ab) counts
-            # are <= the original (x, a) count, and every overlapping
-            # pair sorts at/after this position) — fold it into c_stop
-            c_stop = max(c_stop, c)
-            break
-        accepted.append((start_rank + len(accepted), a, b, a + b, c))
-        used |= {a, b, a + b}
-    # strictness trim: ranks 2+ must beat c_stop outright, or a created
-    # pair could tie them and win the lexicographic tie-break; the head
-    # is the true argmax of the CURRENT table and always stands
-    while len(accepted) > 1 and accepted[-1][4] <= c_stop:
-        accepted.pop()
-    return accepted, floored and not accepted
-
-
-def bpe_train_distributed(
-    docs: DataFrame,
-    n_merges: int = 256,
-    text_col: str = "text",
-    min_count: int = 1,
-    min_pair_count: int = 2,
-    checkpoint_every: int = 8,
-    batch_candidates: int = 32,
-) -> DataFrame:
-    """The unbounded-word-table trainer: per-round state is the
-    ``(symbols, count)`` DataFrame itself, never collected. Each round
-    costs one keyed pair-count aggregation (map-side combined; the pair
-    stream is built map-side from array slices, the span-dedup idiom),
-    one bounded top-page collect (``batch_candidates + 1`` rows), and
-    ONE map-only fold applying every merge the page proves safe —
-    :func:`_exact_batch_prefix` selects the maximal symbol-disjoint,
-    strictly-above-the-stop-count prefix, which the sequential trainer
-    provably emits in the same order (VERDICT r6 #4: merges per job
-    > 1 instead of one 32k-merge vocab costing 32k Spark jobs).
-    ``localCheckpoint`` every ``checkpoint_every`` rounds truncates
-    lineage exactly like the connected-components loop; each round's
-    state is persisted and the predecessor released, so no round
-    replays its ancestors.
-
-    Same deterministic tie-break and ``min_pair_count`` stop as
-    :func:`bpe_train` — the two trainers are merge-for-merge identical
-    on any corpus whose word table survives the cap (tested).
-    """
-    merges: list[tuple[int, str, str, str, int]] = []
-    rounds = 0
-    with cache_scope():
-        state = persist(
-            word_counts(docs, text_col)
-            .filter(F.col("count") >= min_count)
-            .select(F.split("word", "").alias("syms"), "count")
-            .repartition(CPU_PARTITIONS)
-        )
-        while len(merges) < n_merges:
-            rounds += 1
-            # pair stream built map-side from an indexed transform; the
-            # slice guard (not sequence()) keeps 1-symbol words empty —
-            # sequence(1, 0) DESCENDS in Spark — and get() is the
-            # ANSI-safe subscript for the final null-padded slot
-            pairs = (
-                state.select(
-                    F.explode(
-                        F.expr(
-                            "slice(transform(syms, (s, i) -> "
-                            "struct(get(syms, i) as l, get(syms, i + 1) as r)), "
-                            "1, greatest(size(syms) - 1, 0))"
-                        )
-                    ).alias("p"),
-                    "count",
-                )
-                .groupBy("p.l", "p.r")
-                .agg(F.sum("count").alias("c"))
-            )
-            budget = min(batch_candidates, n_merges - len(merges))
-            page = (
-                pairs.orderBy(F.col("c").desc(), "l", "r")
-                .limit(budget + 1)
-                .collect()
-            )
-            if not page:
-                break
-            accepted, floored = _exact_batch_prefix(
-                page, len(merges), budget, min_pair_count
-            )
-            if not accepted:
-                break
-            merges.extend(accepted)
-            syms = F.col("syms")
-            for _, a, b, _, _ in accepted:
-                syms = _apply_merge_col(syms, a, b)
-            nxt = state.select(syms.alias("syms"), "count")
-            if rounds % checkpoint_every == 0:
-                nxt = checkpoint(nxt)
-            nxt = persist(nxt)
-            # drop the superseded round's cache; a checkpoint stays
-            # until the scope closes, since the still-lazy nxt reads it
-            state.unpersist()
-            state = nxt
-            if floored:
-                break
-    out = docs.sparkSession.createDataFrame(merges, MERGES_SCHEMA)
-    out._jonesy_train_rounds = rounds  # observability for tests/SCALE.md
-    return out
 
 
 def _rank_table(merges) -> dict[tuple[str, str], int]:
@@ -753,32 +571,9 @@ def _train_unigram_py(
     Returns (pieces with RENORMALIZED log-probs, the corpus
     log-likelihood after each EM step — non-decreasing within a round,
     the EM monotonicity property the tests pin)."""
-    logp = _seed_unigram_py(words, max_piece_len, seed_size)
-    return _train_unigram_loop(
-        lambda lp: _em_step_py(words, lp, max_piece_len),
-        logp,
-        vocab_size,
-        em_iters_per_round=em_iters_per_round,
-        shrink=shrink,
-    )
-
-
-def _train_unigram_loop(
-    em_step,
-    logp: dict[str, float],
-    vocab_size: int,
-    em_iters_per_round: int = 2,
-    shrink: float = 0.75,
-) -> tuple[list[tuple[str, float]], list[float]]:
-    """The trainer's driver-side control loop, shared verbatim by the
-    in-driver and the distributed trainer — only the E-step
-    (``em_step(logp) -> (expected counts, corpus ll)``) differs, so
-    the two trainers can only disagree where float summation order
-    does (tested to micro tolerance). State (``logp``) is vocab-sized
-    throughout: the loop never touches the corpus or the word table
-    except through ``em_step``."""
     import math
 
+    logp = _seed_unigram_py(words, max_piece_len, seed_size)
     if not logp:
         raise ValueError(
             "unigram training needs a non-empty corpus: the substring "
@@ -795,7 +590,7 @@ def _train_unigram_loop(
     ll_history: list[float] = []
     while True:
         for _ in range(em_iters_per_round):
-            expected, ll = em_step(logp)
+            expected, ll = _em_step_py(words, logp, max_piece_len)
             ll_history.append(ll)
             floor = 1e-12
             total = sum(expected.values())
@@ -817,7 +612,7 @@ def _train_unigram_loop(
         logp = {p: lp for p, lp in logp.items() if len(p) == 1}
         logp.update(dict(multi))
         if target == keep:
-            expected, ll = em_step(logp)
+            expected, ll = _em_step_py(words, logp, max_piece_len)
             ll_history.append(ll)
             total = sum(expected.values())
             floor = 1e-12
@@ -1230,137 +1025,3 @@ def unigram_encode_ids(
         return pd.Series(out)
 
     return docs.withColumn(out_col, _enc(pretokens(F.col(text_col))))
-
-
-def _seed_unigram_distributed(
-    wc: DataFrame, max_piece_len: int, seed_size: int
-) -> dict[str, float]:
-    """The distributed twin of :func:`_seed_unigram_py`: substring
-    candidates enumerated JVM-side (a nested ``transform`` over
-    position x length sequences — map-only, whole-stage codegen), one
-    keyed aggregation for the weighted substring counts, singles kept
-    unconditionally, the top ``seed_size`` multi-char candidates by
-    (count*len desc, piece) via orderBy+limit. Only the RESULT —
-    alphabet + seed_size rows — reaches the driver, so the seed is
-    computable over a word table no driver could hold. Same multiset
-    semantics as the in-driver seed (overlapping repeats inside one
-    word each count), so on a shared word table the two seeds are
-    IDENTICAL up to float division."""
-    import math
-
-    # guard: sequence(1, length(word)) on a zero-length word yields a
-    # DESCENDING [1, 0] sequence whose empty-string pieces would linger
-    # in logp (len('') escapes both pruning paths); pretokens never
-    # emits empty segments today, but arbitrary word-count inputs must
-    # not depend on that
-    wc = wc.filter(F.length("word") > 0)
-    subs = (
-        wc.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(1, length(word)), i -> "
-                    f"transform(sequence(i, least(i + {int(max_piece_len)}"
-                    " - 1, length(word))), j -> "
-                    "substring(word, i, j - i + 1))))"
-                )
-            ).alias("piece"),
-            F.col("count"),
-        )
-        .groupBy("piece")
-        .agg(F.sum("count").alias("c"))
-    )
-    singles = subs.filter(F.length("piece") == 1).collect()
-    multi = (
-        subs.filter(F.length("piece") > 1)
-        .withColumn("score", F.col("c") * F.length("piece"))
-        .orderBy(F.col("score").desc(), "piece")
-        .limit(seed_size)
-        .collect()
-    )
-    scores = {r["piece"]: float(r["c"]) for r in singles}
-    scores.update({r["piece"]: float(r["score"]) for r in multi})
-    total = sum(scores.values())
-    return {p: math.log(s / total) for p, s in scores.items()}
-
-
-def unigram_em_step_distributed(
-    wc: DataFrame, logp: dict[str, float], max_piece_len: int
-) -> tuple[dict[str, float], float]:
-    """One distributed EM iteration: the forward-backward lattice runs
-    per word inside an Arrow-batched ``mapInPandas`` (the vocab-sized
-    ``logp`` dict rides the closure, the broadcast-dict contract), each
-    word emits its per-piece expected counts plus one log-likelihood
-    row flagged by an explicit ``is_ll`` column (a typed flag, not a
-    name sentinel — a real piece containing any byte sequence can
-    never collide with it), and ONE keyed aggregation folds them
-    corpus-wide — the word table is the only distributed input, never
-    collected. Numerically identical to :func:`_em_step_py` per word;
-    corpus sums differ only in float addition order (tested to micro
-    tolerance)."""
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            pieces: list[str] = []
-            exps: list[float] = []
-            is_ll: list[bool] = []
-            for w, c in zip(pdf["word"], pdf["count"]):
-                expected, ll = _em_step_py([(w, int(c))], logp, max_piece_len)
-                for p, e in expected.items():
-                    pieces.append(p)
-                    exps.append(e)
-                    is_ll.append(False)
-                pieces.append("")
-                exps.append(ll)
-                is_ll.append(True)
-            yield pd.DataFrame(
-                {"piece": pieces, "exp": exps, "is_ll": is_ll}
-            )
-
-    folded = (
-        wc.select("word", "count")
-        .mapInPandas(gen, schema="piece string, exp double, is_ll boolean")
-        .groupBy("piece", "is_ll")
-        .agg(F.sum("exp").alias("exp"))
-        .collect()  # bounded: vocab + 1 log-likelihood rows
-    )
-    expected = {r["piece"]: r["exp"] for r in folded if not r["is_ll"]}
-    ll = next((r["exp"] for r in folded if r["is_ll"]), 0.0)
-    return expected, ll
-
-
-def unigram_train_distributed(
-    docs: DataFrame,
-    vocab_size: int = 512,
-    text_col: str = "text",
-    max_piece_len: int = 8,
-    seed_size: int = 4096,
-) -> DataFrame:
-    """The unbounded-word-table unigram trainer — the
-    :func:`bpe_train_distributed` complement: no ``max_words`` cap
-    anywhere. The seed aggregates substrings distributedly
-    (:func:`_seed_unigram_distributed`), every E-step is one Arrow
-    pass + one keyed fold over the full word-count table
-    (:func:`unigram_em_step_distributed`), and only vocab-sized state
-    (the ``logp`` dict, the folded expected counts) ever reaches the
-    driver — the same control loop as :func:`unigram_train`, shared
-    verbatim (``_train_unigram_loop``), so the two trainers can only
-    diverge where float summation order does (pinned to micro
-    tolerance in tests). Output schema matches :func:`unigram_train`.
-
-    Scale note: each EM round re-reads the word-count table; persist
-    it upstream (or let the parquet cache serve it) when training
-    many rounds — the table is Heaps-bounded, orders of magnitude
-    smaller than the corpus."""
-    wc = word_counts(docs, text_col)
-    logp = _seed_unigram_distributed(wc, max_piece_len, seed_size)
-    pieces, _ = _train_unigram_loop(
-        lambda lp: unigram_em_step_distributed(wc, lp, max_piece_len),
-        logp,
-        vocab_size,
-    )
-    spark = docs.sparkSession
-    return spark.createDataFrame(
-        [(p, int(round(lp * 1_000_000))) for p, lp in pieces], PIECES_SCHEMA
-    )

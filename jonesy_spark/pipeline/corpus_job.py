@@ -588,8 +588,9 @@ def read_corpus_outputs(spark, workdir: str) -> dict:
     any earlier boundary leaves no manifest and this reader refuses.
     Partial subtrees (a sequences directory whose write died before
     the Spark committer's ``_SUCCESS``) are therefore invisible to
-    consumers going through this door, the same contract the IVF
-    index gives via its ``_COMMITTED`` marker. On success the split
+    consumers going through this door, the same contract the
+    versioned store (``operators.store``) gives via its ``_COMMITTED``
+    marker. On success the split
     and sequences frames are returned only after their row counts are
     verified against the manifest's boundary counts — a torn state
     (manifest from run N, outputs from a dying run N+1) fails loudly
@@ -647,7 +648,7 @@ def write_corpus_manifest(
     Hadoop FileSystem API — every sibling artifact goes through Spark
     writers, so the manifest must resolve the same schemes
     (local/hdfs/s3a), not assume a driver-local path (the same pattern
-    as the IVF ``_COMMITTED`` marker).
+    as the versioned store's ``_COMMITTED`` marker).
     """
     import dataclasses
 
@@ -668,7 +669,8 @@ def write_json_manifest(spark, path_str: str, payload: dict) -> str:
     """Write a JSON manifest through the Hadoop FileSystem API so the
     destination resolves the same schemes (local/hdfs/s3a) as every
     Spark-written sibling artifact — shared by the corpus and WARC
-    front doors (and the IVF ``_COMMITTED`` marker pattern)."""
+    front doors (and the versioned store's ``_COMMITTED`` marker
+    pattern)."""
     import json
 
     sc = spark.sparkContext

@@ -221,7 +221,8 @@ def _train_tokenizer(ctx: JobContext) -> None:
     and publish it as the next committed version — readers
     (``tokenize.read_bpe_tokenizer`` / ``read_unigram_tokenizer``)
     resolve the live version per call, so publishing IS the rollout.
-    ``TOKENIZER_FAMILY``
+    Both families train in-driver over the corpus's capped top-words
+    table (``bpe_train`` / ``unigram_train``). ``TOKENIZER_FAMILY``
     (layered config) picks the algorithm: ``bpe`` (default; merge
     count via ``TOKENIZER_MERGES``) publishes the (merges, vocab) pair
     under ``{out_root}/tokenizer``; ``unigram`` (SentencePiece-style;
@@ -285,10 +286,9 @@ def _maintain_indexes(ctx: JobContext) -> None:
     incremental index family's accumulated ``ingest_batch=`` subtrees
     into one (``hygiene.compact_index`` — the small-files pass an
     append-heavy layout needs: a year of 15-minute epochs is millions
-    of tiny files whose listing dominates probe planning), then
-    compact + vacuum the IVF vector store's assignments and stale
-    versions. Runs on the same operational rails as ingest/train — the
-    cron wrapper schedules it in the maintenance window, AFTER the
+    of tiny files whose listing dominates probe planning). Runs on the
+    same operational rails as ingest/train — the cron wrapper
+    schedules it in the maintenance window, AFTER the
     index writers quiesce (compaction's standing contract: a
     crashed epoch must replay before its rows fold into ``compact-*``,
     or the replay's own-run exclusion no longer reaches them).
@@ -299,8 +299,8 @@ def _maintain_indexes(ctx: JobContext) -> None:
     default ``bucket``, and ``<path>:flat`` compacts without hive
     partitioning — the classifier ledger's layout, whose ``bucket`` is
     a DATA column that partitioning would shatter into one-row
-    directories) and ``MAINTAIN_IVF_PATH``. Missing paths are
-    skipped — maintenance is idempotent and shape-tolerant by design.
+    directories). Missing paths are skipped — maintenance is
+    idempotent and shape-tolerant by design.
     The SUM-folding families (BM25 postings, classifier counts) are
     crash-safe under compaction via the intent-manifest protocol
     (``hygiene.compact_index`` / ``superseded_batches``): their
@@ -309,10 +309,8 @@ def _maintain_indexes(ctx: JobContext) -> None:
     (ADVICE r7).
     """
     from ..operators import hygiene as H
-    from ..operators import similarity as SIM
 
-    cfg = layered_config()
-    spec = cfg.get(
+    spec = layered_config().get(
         "MAINTAIN_INDEX_PATHS",
         "digest_index,minhash_index,search_index/postings,"
         "classifier_counts:flat",
@@ -350,17 +348,6 @@ def _maintain_indexes(ctx: JobContext) -> None:
             # shrink the ledger to one pre-existing batch — logging
             # either as a compaction would be a false claim (ADVICE r7)
             ctx.written.append(f"{rel}/ingest_batch={rid}")
-    ivf = f"{ctx.out_root}/{cfg.get('MAINTAIN_IVF_PATH', 'ivf_index')}"
-    try:
-        rid = SIM.compact_ivf_assignments(ctx.spark, ivf)
-        ctx.written.append(f"ivf assignments/ingest_batch={rid}")
-    except Exception as exc:  # noqa: BLE001 — absent store is fine
-        from pyspark.errors import AnalysisException
-
-        if not isinstance(exc, (ValueError, AnalysisException)):
-            raise
-    for gone in SIM.vacuum_ivf_versions(ctx.spark, ivf):
-        ctx.written.append(f"vacuumed {gone}")
 
 
 def _corpus_card(ctx: JobContext) -> None:

@@ -24,6 +24,7 @@ from ..catalog import Catalog
 from ..functions.scalars import micro_units
 from ..functions import text as TX
 from ..operators.windows import topk_per_group
+from .seeded import seeded_dir
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1504,38 +1505,23 @@ def anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> tmp rollup-ledger dir seeded with the
-#: events table split into two batches (the one seed per session rule,
-#: as for the minhash/phrase index rows).
-_ROLLUP_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _rollup_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
     """The session's seeded rollup ledger — shared by events_rollup
     and the cross-ledger dashboard row, so the two-batch seed is paid
     once per session however many rows read it."""
     from ..operators import stats as ST
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ROLLUP_INDEX_MEMO:
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="jonesy_rollup_")
+    def seed(d: str) -> None:
         events = Catalog(spark, sf_dir).events
-        ST.write_rollup_index(
-            ST.rollup_batch(events.filter(F.col("event_id") % 2 == 0)),
-            d,
-            mode="overwrite",
-            run_id="even",
-        )
-        ST.write_rollup_index(
-            ST.rollup_batch(events.filter(F.col("event_id") % 2 == 1)),
-            d,
-            mode="overwrite",
-            run_id="odd",
-        )
-        _ROLLUP_INDEX_MEMO[key] = d
-    return _ROLLUP_INDEX_MEMO[key]
+        for rid, parity in (("even", 0), ("odd", 1)):
+            ST.write_rollup_index(
+                ST.rollup_batch(events.filter(F.col("event_id") % 2 == parity)),
+                d,
+                mode="overwrite",
+                run_id=rid,
+            )
+
+    return seeded_dir(spark, sf_dir, "jonesy_rollup_", seed)
 
 
 @query(
@@ -1577,11 +1563,6 @@ def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ST.rollup_report(spark, _rollup_ledger_dir(spark, sf_dir))
 
 
-#: (applicationId, sf_dir) -> tmp KMV-ledger dir seeded with the events
-#: table split into two batches (the events_rollup seed pattern).
-_KMV_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _kmv_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (event_id, key, day-bucket, user_id) projection the KMV
     rows sketch — shared so the ledger and its readers can never
@@ -1599,11 +1580,6 @@ def _kmv_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> tmp per-(key, day) KLL ledger dir for
-#: the dashboard's p50 column (two batches, even/odd event_id).
-_KLL_DASH_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _kll_dash_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
     """The session's seeded per-(event_type, day) KLL value ledger —
     the dashboard's rank-quantile column (VERDICT r13 #5): same
@@ -1611,10 +1587,7 @@ def _kll_dash_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
     beside it, over the value column in micro-units."""
     from ..operators import stats as ST
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KLL_DASH_INDEX_MEMO:
-        import tempfile
-
+    def seed(d: str) -> None:
         es = F.unix_timestamp(F.col("ts").cast("timestamp"))
         ev = (
             Catalog(spark, sf_dir)
@@ -1628,7 +1601,6 @@ def _kll_dash_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
                 "value",
             )
         )
-        d = tempfile.mkdtemp(prefix="jonesy_kll_dash_")
         for rid, parity in (("even", 0), ("odd", 1)):
             ST.write_kll_index(
                 ST.kll_sketch_batch(
@@ -1641,8 +1613,8 @@ def _kll_dash_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
                 mode="overwrite",
                 run_id=rid,
             )
-        _KLL_DASH_INDEX_MEMO[key] = d
-    return _KLL_DASH_INDEX_MEMO[key]
+
+    return seeded_dir(spark, sf_dir, "jonesy_kll_dash_", seed)
 
 
 def _kmv_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1650,11 +1622,7 @@ def _kmv_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
     shared by kmv_distinct_users and the cross-ledger dashboard row."""
     from ..operators import stats as ST
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KMV_INDEX_MEMO:
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="jonesy_kmv_")
+    def seed(d: str) -> None:
         ev = _kmv_daily_events(spark, sf_dir)
         for rid, parity in (("even", 0), ("odd", 1)):
             ST.write_kmv_index(
@@ -1667,8 +1635,8 @@ def _kmv_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
                 mode="overwrite",
                 run_id=rid,
             )
-        _KMV_INDEX_MEMO[key] = d
-    return _KMV_INDEX_MEMO[key]
+
+    return seeded_dir(spark, sf_dir, "jonesy_kmv_", seed)
 
 
 @query(
@@ -1965,11 +1933,6 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> tmp CMS-ledger dir (two batches,
-#: even/odd event_id — the KMV seed pattern).
-_CMS_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 @query(
     "cms_frequencies",
     # Count-min partials FOLD BY SUM (counter addition is associative)
@@ -2029,11 +1992,8 @@ def cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = cat.events.filter(F.col("user_id").isNotNull()).select(
         "event_id", "user_id"
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CMS_INDEX_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_cms_")
+    def seed(d: str) -> None:
         for rid, parity in (("even", 0), ("odd", 1)):
             ST.write_kmv_index(
                 ST.cms_sketch_batch(
@@ -2043,8 +2003,8 @@ def cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
                 mode="overwrite",
                 run_id=rid,
             )
-        _CMS_INDEX_MEMO[key] = d
-    sketch = ST.cms_fold(spark, _CMS_INDEX_MEMO[key])
+
+    sketch = ST.cms_fold(spark, seeded_dir(spark, sf_dir, "jonesy_cms_", seed))
     est = ST.cms_point_estimates(sketch, ev, "user_id")
     exact = ev.groupBy(F.col("user_id").cast("string").alias("value")).agg(
         F.count(F.lit(1)).alias("exact_count")
@@ -2230,11 +2190,6 @@ def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> tmp MG-ledger dir (two batches,
-#: even/odd event_id — the KMV seed pattern).
-_MG_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 @query(
     "mg_heavy_hitters",
     # Misra-Gries summaries are NOT cut-invariant (unlike KMV/CMS),
@@ -2309,11 +2264,8 @@ def mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = cat.events.filter(F.col("user_id").isNotNull()).select(
         "event_id", "user_id"
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MG_INDEX_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_mg_")
+    def seed(d: str) -> None:
         for rid, parity in (("even", 0), ("odd", 1)):
             ST.write_kmv_index(
                 ST.mg_summary_batch(
@@ -2323,21 +2275,16 @@ def mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 mode="overwrite",
                 run_id=rid,
             )
-        _MG_INDEX_MEMO[key] = d
-    mg = ST.mg_fold(spark, _MG_INDEX_MEMO[key], k=16).withColumnRenamed(
-        "est", "est_count"
-    )
+
+    mg = ST.mg_fold(
+        spark, seeded_dir(spark, sf_dir, "jonesy_mg_", seed), k=16
+    ).withColumnRenamed("est", "est_count")
     exact = ev.groupBy(F.col("user_id").cast("string").alias("value")).agg(
         F.count(F.lit(1)).alias("exact_count")
     )
     return mg.join(exact, "value").withColumn(
         "undercount", F.col("exact_count") - F.col("est_count")
     )
-
-
-#: (applicationId, sf_dir) -> tmp bottom-k sample-ledger dir (two
-#: batches, even/odd event_id — the KMV seed pattern).
-_SAMPLE_INDEX_MEMO: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -2413,11 +2360,8 @@ def sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = cat.events.filter(
         F.col("event_id").isNotNull() & F.col("value").isNotNull()
     ).select("event_id", F.col("event_type").alias("key"), "value")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SAMPLE_INDEX_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_sample_")
+    def seed(d: str) -> None:
         for rid, parity in (("even", 0), ("odd", 1)):
             ST.write_kmv_index(
                 ST.bottomk_sample_batch(
@@ -2431,8 +2375,10 @@ def sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 mode="overwrite",
                 run_id=rid,
             )
-        _SAMPLE_INDEX_MEMO[key] = d
-    sample = ST.sample_fold(spark, _SAMPLE_INDEX_MEMO[key], ["key"], k=128)
+
+    sample = ST.sample_fold(
+        spark, seeded_dir(spark, sf_dir, "jonesy_sample_", seed), ["key"], k=128
+    )
     sq = ST.sample_quantiles(sample, ["key"], (25, 50, 75, 90, 99))
 
     evh = ev.select(
@@ -2456,11 +2402,6 @@ def sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sq.join(exact, ["key", "q_pct"]).withColumn(
         "err_micro", F.expr("abs(q_value_micro - exact_q_micro)")
     )
-
-
-#: (applicationId, sf_dir) -> tmp KLL ledger dir (two batches,
-#: even/odd event_id — the KMV seed pattern).
-_KLL_INDEX_MEMO: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -2557,11 +2498,8 @@ def kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = cat.events.filter(
         F.col("event_id").isNotNull() & F.col("value").isNotNull()
     ).select("event_id", F.col("event_type").alias("key"), "value")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KLL_INDEX_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_kll_")
+    def seed(d: str) -> None:
         for rid, parity in (("even", 0), ("odd", 1)):
             ST.write_kll_index(
                 ST.kll_sketch_batch(
@@ -2574,8 +2512,10 @@ def kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 mode="overwrite",
                 run_id=rid,
             )
-        _KLL_INDEX_MEMO[key] = d
-    folded = ST.kll_fold(spark, _KLL_INDEX_MEMO[key], ["key"], k=128)
+
+    folded = ST.kll_fold(
+        spark, seeded_dir(spark, sf_dir, "jonesy_kll_", seed), ["key"], k=128
+    )
     kq = ST.kll_quantiles(folded, ["key"], (25, 50, 75, 90, 99))
 
     evm = ev.select("key", micro_units(F.col("value")).alias("v"))

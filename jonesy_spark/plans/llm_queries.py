@@ -23,6 +23,7 @@ from ..functions import scalars as SC
 from ..functions import text as TX
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
+from .seeded import seeded_dir
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -665,9 +666,8 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chars_per_token). REGISTRY-ONLY, deliberately no DuckDB oracle: the
     iterative merge induction is not SQL-expressible — correctness is
     pinned instead by the pytest differentials (merge table == an
-    independent naive recount-per-round reference; distributed trainer
-    == driver trainer merge-for-merge; encode == sequential merge
-    replay; exact concat round-trip)."""
+    independent naive recount-per-round reference; encode ==
+    sequential merge replay; exact concat round-trip)."""
     from ..operators import tokenize as TOK
 
     docs = Catalog(spark, sf_dir).documents
@@ -3046,13 +3046,6 @@ def quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source")
 
 
-#: (applicationId, sf_dir) -> minhash index dir seeded with the even
-#: half of ``documents``. One seed write per fixture per session; the
-#: write is overwrite-idempotent under the fixed run_id, so a re-seed
-#: after a crashed session replaces, never duplicates, the subtree.
-_MH_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 @query(
     "incremental_near_dup",
     # The index round-trip collapses to pure relational algebra: the
@@ -3128,23 +3121,21 @@ def incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import hygiene as H
 
     docs = Catalog(spark, sf_dir).documents
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MH_INDEX_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_mh_index_")
+    def seed(d: str) -> None:
         H.write_minhash_index(
             DD.minhash_banded_sigs(docs.filter(F.col("doc_id") % 2 == 0)),
             d,
             mode="overwrite",
             run_id="seed",
         )
-        _MH_INDEX_MEMO[key] = d
+
+    index = seeded_dir(spark, sf_dir, "jonesy_mh_index_", seed)
     probe_sigs = DD.minhash_banded_sigs(docs.filter(F.col("doc_id") % 2 == 1))
     return H.probe_minhash_index(
         probe_sigs,
         spark,
-        _MH_INDEX_MEMO[key],
+        index,
         threshold=0.8,
         n_hashes=16,
         bucket_cap=DD.BUCKET_CAP,
@@ -3325,11 +3316,6 @@ def hash_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> positional-index tmp dir for the
-#: phrase_search row (one seed per session, the _MH_INDEX_MEMO rule).
-_PHRASE_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 @query(
     "phrase_search",
     oracle="""
@@ -3358,14 +3344,15 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import search as SE
 
     docs = Catalog(spark, sf_dir).documents
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PHRASE_INDEX_MEMO:
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="jonesy_phrase_index_")
-        SE.write_positional_index(docs, d, mode="overwrite", run_id="seed")
-        _PHRASE_INDEX_MEMO[key] = d
-    return SE.phrase_probe(spark, _PHRASE_INDEX_MEMO[key], ["batch", "batch"])
+    index = seeded_dir(
+        spark,
+        sf_dir,
+        "jonesy_phrase_index_",
+        lambda d: SE.write_positional_index(
+            docs, d, mode="overwrite", run_id="seed"
+        ),
+    )
+    return SE.phrase_probe(spark, index, ["batch", "batch"])
 
 
 @query(
@@ -3535,11 +3522,6 @@ def diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> classifier count-ledger tmp dir for the
-#: incremental_classifier row (one seed per session).
-_CLF_LEDGER_MEMO: dict[tuple[str, str], str] = {}
-
-
 @query(
     "incremental_classifier",
     oracle="""
@@ -3617,11 +3599,8 @@ def incremental_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import classify as CL
 
     docs = Catalog(spark, sf_dir).documents
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CLF_LEDGER_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_clf_ledger_")
+    def seed(d: str) -> None:
         label = F.col("lang") == "en"
         CL.write_classifier_counts(
             docs.filter(F.col("doc_id") % 4 == 0), label, d,
@@ -3631,17 +3610,14 @@ def incremental_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 4 == 2), label, d,
             mode="overwrite", run_id="seed-b",
         )
-        _CLF_LEDGER_MEMO[key] = d
-    model, n_buckets, ngrams = CL.train_from_counts(spark, _CLF_LEDGER_MEMO[key])
+
+    model, n_buckets, ngrams = CL.train_from_counts(
+        spark, seeded_dir(spark, sf_dir, "jonesy_clf_ledger_", seed)
+    )
     return CL.score_log_odds(
         docs.filter(F.col("doc_id") % 2 == 1), model,
         n_buckets=n_buckets, ngrams=ngrams,
     )
-
-
-#: (applicationId, sf_dir) -> search-index tmp dir for the
-#: bm25_index_probe row (one seed per session).
-_SEARCH_INDEX_MEMO: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -3699,11 +3675,8 @@ def bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import search as SE
 
     docs = Catalog(spark, sf_dir).documents
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SEARCH_INDEX_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_search_index_")
+    def seed(d: str) -> None:
         SE.write_search_index(
             docs.filter(F.col("doc_id") % 2 == 0), d,
             mode="overwrite", run_id="seed-a",
@@ -3712,9 +3685,12 @@ def bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 2 == 1), d,
             mode="overwrite", run_id="seed-b",
         )
-        _SEARCH_INDEX_MEMO[key] = d
+
     return SE.bm25_probe(
-        spark, _SEARCH_INDEX_MEMO[key], ["join", "spark", "window"], top_k=20
+        spark,
+        seeded_dir(spark, sf_dir, "jonesy_search_index_", seed),
+        ["join", "spark", "window"],
+        top_k=20,
     )
 
 
@@ -3833,12 +3809,6 @@ def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return CL.eval_report(scored, labels)
 
 
-#: (applicationId, sf_dir) -> tmp phash-index dir seeded with the EVEN
-#: docs' real-codec perceptual hashes (one seed per session — the
-#: _MH_INDEX_MEMO rule).
-_PHASH_INDEX_MEMO: dict[tuple[str, str], str] = {}
-
-
 @query(
     "media_index_probe",
     # The persisted-probe semantics collapse to relational algebra:
@@ -3900,11 +3870,8 @@ def media_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..multimodal import binary_ops as MM
 
     docs = Catalog(spark, sf_dir).documents
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PHASH_INDEX_MEMO:
-        import tempfile
 
-        d = tempfile.mkdtemp(prefix="jonesy_phash_index_")
+    def seed(d: str) -> None:
         even = MM.perceptual_hashes(
             MM.attach_ppm_near_dup_payload(
                 docs.filter(F.col("doc_id") % 2 == 0)
@@ -3912,13 +3879,14 @@ def media_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             fake=False,
         )
         MM.write_phash_index(even, d, mode="overwrite", run_id="seed")
-        _PHASH_INDEX_MEMO[key] = d
+
+    index = seeded_dir(spark, sf_dir, "jonesy_phash_index_", seed)
     odd = MM.perceptual_hashes(
         MM.attach_ppm_near_dup_payload(docs.filter(F.col("doc_id") % 2 == 1)),
         fake=False,
     )
     out = MM.probe_phash_index(
-        odd, spark, _PHASH_INDEX_MEMO[key], max_hamming=3, bucket_cap=None
+        odd, spark, index, max_hamming=3, bucket_cap=None
     )
     return out.select(
         "doc_id",

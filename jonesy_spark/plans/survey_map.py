@@ -164,8 +164,8 @@ TABLES: tuple[str, ...] = (
     '| incremental dedup vs corpus index | `operators.hygiene.incremental_dedup` | multi-round semantics test |',
     '| persisted digest index (O(novel) nightly appends) | `operators.hygiene.write_novel_digests`/`read_digest_index` (hash-prefix-partitioned parquet; one `ingest_batch=` layout shared with the streaming bridge since r5) | two-batch append/probe round-trip test (r4) + mixed-writer interop test (r5) |',
     '| persisted MinHash signature index / incremental NEAR-dup (r5) | `operators.hygiene.write_minhash_index`/`probe_minhash_index`/`incremental_near_dup` + `operators.dedup.minhash_banded_sigs`/`estimated_jaccard`; streaming bridge `streaming.incremental.run_incremental_near_dup_stream` | two-batch cross-dedup test + DuckDB differential on the signature-agreement estimate + two-wave streaming test |',
-    '| persisted IVF index / incremental EMBEDDING dedup (r5) | `operators.similarity.write_ivf_index`/`probe_ivf_index`/`incremental_embedding_dedup` (frozen centroid table, cid-partitioned vector storage, multi-probe reads only probed cells; rank-seeded centroids + replay-safe probe since r6) | two-batch copies-vs-fresh test incl. layout + no-double-store, offset-id seeding + empty-batch refusal, crash-replay idempotence (`tests/test_operators.py`) |',
-    "| streaming IVF embedding bridge (r6) | `streaming.incremental.run_incremental_embedding_stream` — completes the incremental family's streaming story on all three axes (digest r4, minhash r5, embedding r6), replay-safe from the start (own-subtree exclusion + novel-sink-before-index) | two-wave restart test (`tests/test_streaming.py`) |",
+    '| persisted IVF index / incremental EMBEDDING dedup (r5) | **Removed:** no job wrote the store (a frozen centroid table over cid-partitioned vectors, probed cell by cell). `operators.similarity.ivf_assignments` and the PQ tier stay | — |',
+    "| streaming IVF embedding bridge (r6) | **Removed** with the IVF store it wrote | — |",
     '| connected components / cluster-level dedup | `operators.graph.connected_components`/`resolve_duplicates` (large-star/small-star, O(log² n) rounds) | union-find property differential, 300-hop chain, `dedup_clusters` driver row w/ recursive-CTE oracle (r4) |',
     '| per-domain quality percentile gate | `operators.corpus.quality_percentile_filter` | **driver row `quality_filter` (r5)** + pipeline gate test |',
     '| unigram-LM scoring / perplexity proxy (r6) | `operators.corpus.unigram_logprob` (broadcast top-V vocab + OOV floor) | **driver row `doc_logprob`** + hand-computed floor/ranking test + broadcast plan assert |',
@@ -174,7 +174,7 @@ TABLES: tuple[str, ...] = (
     '| leakage-safe cluster-keyed split (r6) | `operators.corpus.cluster_keyed_split` | **driver row `leakage_safe_split`** + never-straddles property test |',
     '| line-level boilerplate removal (CCNet-style) (r6) | `operators.hygiene.line_dedup` (distinct-per-doc line-df pass over 16-byte digests, broadcast hot-line set, position-sorted reassembly) | **driver row `line_dedup` (injected-banner oracle, pii_stats precedent)** + all-boilerplate/within-doc-repeat/order tests |',
     '| exact per-stratum quota sampling (r6) | `operators.corpus.quota_sample` (deterministic reservoir: smallest md5 draw wins; growing a quota is a strict superset) | registry-only pytest DuckDB differential + exact-count/superset/population-cap property tests (both constituent plan families already driver-checked — see plans/__init__.py note) |',
-    '| index compaction (small-files maintenance) (r6) | `operators.hygiene.compact_index` — collapses accumulated `ingest_batch=` subtrees into one for both index layouts; consolidated tree written before old subtrees are deleted (crash leaves duplicates, which both probes tolerate), deletion via Hadoop FileSystem API (local/HDFS/s3a); `similarity.compact_ivf_assignments` applies it to the IVF vector store (cid partition) | content-identity + tree-collapse + probe-unchanged tests across all three layouts |',
+    '| index compaction (small-files maintenance) (r6) | `operators.hygiene.compact_index` — collapses accumulated `ingest_batch=` subtrees into one for both index layouts; consolidated tree written before old subtrees are deleted (crash leaves duplicates, which both probes tolerate), deletion via Hadoop FileSystem API (local/HDFS/s3a); `JOB=maintain_indexes` runs it over the digest, minhash, postings and classifier-count indexes | content-identity + tree-collapse + probe-unchanged tests on the bucketed and flat layouts |',
     "| sketch-level eval decontamination (r6) | `operators.hygiene.near_dup_contamination` (benchmark sketches broadcast; corpus side reuses the index's signature pipeline) | **driver row `near_dup_contamination`** + reversed-token witness test (exact 13-gram gate scores it low, sketch flags it) |",
     '| public-suffix registrable domains | `functions.url.registered_domain` + vendored `PUBLIC_SUFFIX_SNAPSHOT` | multi-label suffix tests (r4) |',
     '| mime-dispatched media codecs (PIL when importable) | `multimodal.binary_ops.decode_stub`/`resize_stub` | dispatch test green with AND without PIL (r4) |',
@@ -182,7 +182,7 @@ TABLES: tuple[str, ...] = (
     '| mergeable HLL corpus statistics + persisted stats index (r6) | `operators.stats.profile_batch`/`merge_profiles`/`write_stats_index`/`corpus_stats_report` (Datasketches `hll_sketch_agg`/`hll_union_agg` — O(batch) nightly, report folds group-level metadata only; per-epoch rows from the streaming ingest bridge) | exact-counter + sparse-exact estimate test, cut-invariance (merged halves == single pass, exact), index round-trip + replay idempotence |',
     '| corpus drift report (r6) | `operators.stats.stats_drift` (token-share deltas, vocab ratios, new/gone domains over two report frames) | known-answer drift test |',
     '| raw-bytes-to-corpus composition (r6) | `pipeline.corpus_job.prepare_corpus_from_jsonl` (ingest -> pipeline -> stats index under one workdir) | e2e conservation/quarantine/split-coverage test |',
-    '| int8 embedding quantization tier (r6) | `functions.vectors.quantize_int8`/`dequantize_int8` (symmetric max-abs, error <= scale/2, pure higher-order built-ins); `similarity.quantized_topk` (int8 candidate scan + broadcast exact float re-rank); `write_ivf_index(quantize=True)` — sticky format, probe dequantizes inside the cid-pruned join | hypothesis error-bound property over arbitrary vectors, rerank-score EXACT-equality + recall >= 0.9, sticky-append/size tests; bench row `ann_quantized_topk`; **driver rows `ann_int8_rerank`/`ann_pq_rerank`** (r14 — scan+rerank oracle-checked over the frozen ANN fixture, the tokenizer-fold split) |',
+    '| int8 embedding quantization tier (r6) | `functions.vectors.quantize_int8`/`dequantize_int8` (symmetric max-abs, error <= scale/2, pure higher-order built-ins); `similarity.quantized_topk` (int8 candidate scan + broadcast exact float re-rank) | hypothesis error-bound property over arbitrary vectors, rerank-score EXACT-equality + recall >= 0.9; bench row `ann_quantized_topk`; **driver rows `ann_int8_rerank`/`ann_pq_rerank`** (r14 — scan+rerank oracle-checked over the frozen ANN fixture, the tokenizer-fold split) |',
     '| ANN recall tuning report (r6) | `operators.similarity.ann_recall` (per-query recall of any approx top-k vs exact; metadata-sized joins) | identity=1.0 / empty=0.0 tests + used by the quantized-recall test |',
     '| temperature-scaled mixture (r6) | `operators.corpus.temperature_rates`/`temperature_mix` (p ∝ share^tau over the bounded totals dict; budget-preserving, realized via mixture_upsample); pipeline knob `mixture_tau` with doc-keyed split + copy-unique packing ids | budget-conservation math test (1e-6), e2e copies/one-split/determinism test |',
     '| BPE-ish pre-tokenizer count (r6) | `functions.text.pretoken_count` (GPT-2-style alternation, explicit whitespace classes — `\\s` means different sets per engine, spelled out it is identical in Java/RE2/PCRE) | whole-corpus Spark==DuckDB differential + hypothesis Spark==`regex` property incl. \\x0B/\\x85 edge cases |',
@@ -193,7 +193,7 @@ TABLES: tuple[str, ...] = (
     "| ingest as a registered job (r6) | `JOBS['ingest_corpus']` + `scripts/cron/ingest-corpus.sh` (`$CORPUS_SRC` via the layered config; self-materializes fixture JSONL when unset so cron/tests run without external inputs) | job e2e test (manifest + outputs under out_root) |",
     '| unicode script-family profiling (r6) | `functions.text.script_counts`/`dominant_script` (explicit codepoint ranges — named script classes differ between Java and RE2, literal ranges are identical everywhere; deterministic tie-break CASE chain) | cross-engine differential vs DuckDB + tie/none cases |',
     '| embedding-store health report (r6) | `operators.similarity.embedding_health` (one aggregation pass: duplicate ids, mixed dims, null/zero vectors, approx norm quantiles) | healthy-fixture + planted-defect tests |',
-    '| BPE vocabulary induction + tokenization (r6) | `operators.tokenize` — `word_counts` (the one corpus-scale pass), `bpe_train` (Zipf-capped top-`max_words` table to the driver, incremental merge loop — the unigram-vocab boundedness argument), `bpe_train_distributed` (per-round DataFrame state: map-side pair stream, 1-row argmax collect, codegen fold apply, CC-style localCheckpoint cadence), `bpe_encode` (JVM pretokenize, Arrow-batched rank-ordered merge UDF with per-batch segment memo), `bpe_token_stats`, `bpe_vocab` | merge table == independent naive recount-per-round reference; distributed == driver trainer merge-for-merge (tiny + fixture corpora); encode == sequential merge replay (the GPT-2 equivalence); exact concat round-trip; monotone token counts; prefix-extension of merge tables; registry query + bench row `bpe_token_stats` (no DuckDB oracle — induction is iterative, not SQL) |',
+    '| BPE vocabulary induction + tokenization (r6) | `operators.tokenize` — `word_counts` (the one corpus-scale pass), `bpe_train` (Zipf-capped top-`max_words` table to the driver, incremental merge loop — the unigram-vocab boundedness argument), `bpe_encode` (JVM pretokenize, Arrow-batched rank-ordered merge UDF with per-batch segment memo), `bpe_token_stats`, `bpe_vocab` | merge table == independent naive recount-per-round reference; encode == sequential merge replay (the GPT-2 equivalence); exact concat round-trip; monotone token counts; prefix-extension of merge tables; registry query + bench row `bpe_token_stats` (no DuckDB oracle — induction is iterative, not SQL) |',
     '| word-n-gram novelty vs train split (RAVEN-style, McCoy 2023) (r13) | `operators.hygiene.ngram_novelty` (shuffled 28-bit gram-hash equi-join, map-side distinct both sides — the corpus-scale complement to contamination\'s broadcast benchmark) | **driver row `ngram_novelty`** + endpoint property tests (contained=0, disjoint=1.0) |',
     '| temperature-rebalanced mixture, driver-witnessed (r13) | `operators.corpus.temperature_rates`/`temperature_mix` realized through the `mixture_upsample` draw; rates rounded to 9 decimals on both engines | **driver row `temperature_mixture`** + tau=1 identity property + budget-conservation test |',
     '| margin-ratio bitext mining (Artetxe & Schwenk 2019) (r13) | `operators.similarity.margin_bitext_pairs` (sign-bucket candidate equi-join, k-NN-average hubness suppressor, mutual-argmax on micro-unit BIGINTs; exact cross tier opt-in) | **driver row `bitext_mining_margin`** + planted-twin recovery test (both tiers) |',
@@ -211,7 +211,7 @@ TABLES: tuple[str, ...] = (
     '| CDC upsert (MERGE emulation) | `cdc_upsert` | oracle |',
     '| table profiling | `profile_table` | oracle |',
     '| skew-salted join | `operators.joins.salted_join` | equivalence tests |',
-    '| grouped-Pandas escape hatch | `operators.joins.asof_topk_pandas` | agrees with window plan |',
+    '| grouped-Pandas escape hatch | `pipeline.warc.write_fixture_archives` (one `applyInPandas` group packs one archive) | the fixture-seeding WARC ingest job and crawl kill/resume tests (`tests/test_warc.py`) |',
     '| bucketed co-located join | `tests/test_plans.py::test_bucketed_join_skips_shuffle` | plan assertion (no exchange) |',
     '| hive-partitioned lake sink | `pipeline.sinks.write_partitioned_parquet` | pruning test (PartitionFilters) |',
     '| plan-shape regression guards | `tests/test_plans.py` | broadcast/pushdown/map-only assertions |',

@@ -407,55 +407,6 @@ def run_incremental_near_dup_stream(
     q.stop()
 
 
-def run_incremental_embedding_stream(
-    emb: DataFrame,
-    index_path: str,
-    novel_path: str,
-    checkpoint: str,
-    threshold: float = 0.9,
-    probes: int = 4,
-) -> None:
-    """Streaming bridge to the persisted IVF index — the EMBEDDING twin
-    of :func:`run_incremental_near_dup_stream`, completing the
-    incremental family on all three axes (exact digests, MinHash
-    signatures, vectors): each micro-batch collapses its own semantic
-    near-dups, probes the on-disk IVF cells, writes surviving novel
-    vectors under ``novel_path``, and lands them in an
-    ``ingest_batch=epoch-N`` partition of the index (the first epoch
-    freezes the centroid table). Replay-safe from the start: the probe
-    excludes the replaying epoch's own subtree and the novel sink
-    commits before the index write — the crash-ordering contract the
-    minhash bridge follows (ADVICE r5 #1).
-    """
-    from ..operators import similarity as S
-
-    @_scoped
-    def handle(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # an empty first epoch must not freeze empty centroids
-        spark = batch_df.sparkSession
-        S.incremental_embedding_dedup(
-            batch_df,
-            spark,
-            index_path,
-            threshold=threshold,
-            probes=probes,
-            run_id=f"epoch-{epoch_id}",
-            mode="overwrite",
-            novel_sink=lambda novel: novel.write.mode("overwrite").parquet(
-                f"{novel_path}/ingest_batch={epoch_id}"
-            ),
-        )
-
-    q = (
-        emb.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
 def content_dedup_stream(docs: DataFrame, watermark_col: str = "ts", horizon: str = "1 day") -> DataFrame:
     """Streaming content dedup: first document per normalized content
     digest within the watermark horizon — the streaming twin of

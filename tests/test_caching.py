@@ -124,6 +124,49 @@ def test_pair_graph_memo_survives_a_row_scope(spark):
     assert again and clusters == first
 
 
+def test_seeded_dir_seeds_once_and_is_removed_at_exit(tmp_path):
+    """The index round-trip rows' seeded directories: one seed per
+    (application, fixture, prefix), and each directory is gone once the
+    interpreter that made it exits, so test, driver and bench runs leave
+    no ledger behind in the temp directory."""
+    import subprocess
+    import sys
+
+    child = """
+import types
+from jonesy_spark.plans.seeded import seeded_dir
+
+spark = types.SimpleNamespace(
+    sparkContext=types.SimpleNamespace(applicationId="app-1")
+)
+calls = []
+
+def seed(d):
+    calls.append(d)
+    with open(d + "/part", "w") as f:
+        f.write("x")
+
+a = seeded_dir(spark, "sf", "jonesy_probe_", seed)
+b = seeded_dir(spark, "sf", "jonesy_probe_", seed)
+c = seeded_dir(spark, "sf", "jonesy_other_", seed)
+assert a == b != c and calls == [a, c], calls
+print(a)
+print(c)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=REPO,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+    )
+    assert out.returncode == 0, out.stderr
+    made = out.stdout.split()
+    assert len(made) == 2
+    assert all(p.startswith(str(tmp_path)) for p in made)
+    assert not any(os.path.exists(p) for p in made)
+
+
 def _calls(path: str) -> list[tuple[int, str]]:
     """(line, attribute) for every ``.<attr>(`` call in a file's code
     (comments and strings excluded)."""

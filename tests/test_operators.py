@@ -10,7 +10,7 @@ from conftest import SF_DIR, assert_matches_oracle
 from jonesy_spark.caching import cache_scope
 from jonesy_spark.catalog import Catalog
 from jonesy_spark.functions.scalars import micro_units
-from jonesy_spark.operators.joins import asof_topk_pandas, salted_join
+from jonesy_spark.operators.joins import salted_join
 from jonesy_spark.plans import all_queries
 
 
@@ -54,18 +54,6 @@ def test_approx_distinct_within_bounds(spark):
         F.approx_count_distinct("l_partkey", rsd=0.05).alias("approx"),
     ).first()
     assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.15
-
-
-def test_asof_pandas_matches_window_plan(spark):
-    """The applyInPandas merge_asof variant and the window-based as-of
-    plan must agree row-for-row (two implementations, one semantics)."""
-    events = Catalog(spark, SF_DIR).events
-    pandas_out = asof_topk_pandas(events)
-    window_out = all_queries()["asof_join_last_click"](spark, SF_DIR)
-    cols = ["purchase_id", "user_id", "purchase_ts", "click_ts"]
-    p = sorted(tuple(r[c] for c in cols) for r in pandas_out.collect())
-    w = sorted(tuple(r[c] for c in cols) for r in window_out.collect())
-    assert p == w
 
 
 def test_prepared_partitions_by_the_core_budget(spark, monkeypatch):
@@ -352,221 +340,6 @@ def test_cap_split_is_noop_below_cap(spark):
         assert capped == uncapped and capped, op.__name__
 
 
-def test_incremental_embedding_dedup_two_batches(spark, tmp_path):
-    """Persisted IVF index: batch 1 freezes the centroid table and
-    seeds its cells; batch 2 copies of batch-1 vectors must be caught by
-    the cell probe (cosine 1.0) without reading vectors outside the
-    probed cells, and only genuinely novel vectors are appended."""
-    import glob
-
-    from conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-
-    idx = str(tmp_path / "ivf")
-    spark.catalog.clearCache()  # isolate the residue assertion below
-    emb = Catalog(spark, SF_DIR).embeddings
-    with cache_scope():
-        batch1 = emb.filter(F.col("vec_id") < 80)
-        novel1, matches1 = SIM.incremental_embedding_dedup(
-            batch1, spark, idx, threshold=0.995, run_id="r0"
-        )
-        assert matches1.count() == 0  # no index yet
-        n1 = novel1.count()
-        assert 0 < n1 <= 80
-
-        # batch 2: exact copies of three batch-1 survivors + fresh vectors
-        survivors = [r["vec_id"] for r in novel1.select("vec_id").limit(3).collect()]
-        copies = (
-            emb.filter(F.col("vec_id").isin(survivors))
-            .withColumn("vec_id", F.col("vec_id") + 1000)
-        )
-        fresh = emb.filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 90))
-        novel2, matches2 = SIM.incremental_embedding_dedup(
-            copies.unionByName(fresh), spark, idx, threshold=0.995, run_id="r1"
-        )
-        hit = {(r["vec_id"], r["index_vec_id"]) for r in matches2.collect()}
-        for s in survivors:
-            assert (s + 1000, s) in hit  # each copy matched its original
-        assert {r["vec_id"] for r in novel2.collect()}.isdisjoint(
-            {s + 1000 for s in survivors}
-        )
-
-        # layout: frozen centroids + cid-partitioned per-run assignments
-        assert glob.glob(f"{idx}/centroids/*.parquet")
-        assert glob.glob(f"{idx}/assignments/ingest_batch=r0/cid=*/*.parquet")
-        assert glob.glob(f"{idx}/assignments/ingest_batch=r1/cid=*/*.parquet")
-        # the index never double-stores a vector id
-        stored = [
-            r["vec_id"]
-            for r in spark.read.parquet(f"{idx}/assignments").select("vec_id").collect()
-        ]
-        assert len(stored) == len(set(stored))
-
-    # VERDICT r5 #6: persisted (not checkpointed) subtrees, released
-    # with the scope
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-@pytest.mark.slow
-def test_ivf_versioned_layout_resolution_and_vacuum(spark, tmp_path):
-    """The versioned IVF layout that ``maintain_indexes`` vacuums: an
-    unmarked ``version=N`` subtree (a publish in flight or crashed) is
-    invisible; once ``version=N/_COMMITTED`` exists, probes and
-    appends resolve to it; vacuum deletes the stale version dirs and
-    the legacy root and leaves the live version's probes unchanged."""
-    import glob
-    import os
-    import shutil
-
-    from conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-
-    idx = str(tmp_path / "ivf_versions")
-    emb = Catalog(spark, SF_DIR).embeddings
-    SIM.write_ivf_index(emb.filter(F.col("vec_id") < 60), idx, run_id="r0")
-    SIM.write_ivf_index(
-        emb.filter((F.col("vec_id") >= 60) & (F.col("vec_id") < 80)),
-        idx,
-        run_id="r1",
-    )
-
-    copies = emb.filter(F.col("vec_id") < 5).withColumn(
-        "vec_id", F.col("vec_id") + 9000
-    )
-
-    def probe():
-        return {
-            (r["vec_id"], r["index_vec_id"])
-            for r in SIM.probe_ivf_index(
-                copies, spark, idx, threshold=0.999
-            ).collect()
-        }
-
-    pre = probe()
-    assert pre  # exact copies match their originals
-
-    # an UNMARKED version subtree must be invisible: resolution stays
-    # on the legacy root
-    os.makedirs(f"{idx}/version=5")
-    assert SIM.live_ivf_version(spark, idx) is None
-    assert probe() == pre
-
-    # publish version 6: the same tables, then the marker
-    for part in ("centroids", "assignments"):
-        shutil.copytree(f"{idx}/{part}", f"{idx}/version=6/{part}")
-    open(f"{idx}/version=6/_COMMITTED", "w").close()
-    assert SIM.live_ivf_version(spark, idx) == 6
-    assert probe() == pre
-
-    # appends land in the live version, not the legacy root
-    SIM.write_ivf_index(
-        emb.filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 90)),
-        idx,
-        run_id="r2",
-    )
-    assert glob.glob(f"{idx}/version=6/assignments/ingest_batch=r2/cid=*/*.parquet")
-    assert not glob.glob(f"{idx}/assignments/ingest_batch=r2")
-
-    # vacuum: stale version dirs + the legacy root go; the live
-    # version and its probes are untouched
-    deleted = SIM.vacuum_ivf_versions(spark, idx)
-    assert any(d.endswith("version=5") for d in deleted)
-    assert any(d.endswith("/assignments") for d in deleted)
-    assert not os.path.exists(f"{idx}/version=5")
-    assert not os.path.exists(f"{idx}/assignments")
-    assert os.path.exists(f"{idx}/version=6/_COMMITTED")
-    assert probe() == pre
-    assert SIM.vacuum_ivf_versions(spark, idx) == []  # idempotent
-
-
-def test_probe_ivf_index_observability(spark, tmp_path):
-    """VERDICT r5 #7 (embedding axis): the IVF probe's returned frame
-    observes matches / matched_new_vecs, and the batch's assignment
-    subtree observes probed_cells — nightly alerting costs zero extra
-    actions."""
-    from conftest import SF_DIR
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-
-    idx = str(tmp_path / "ivf_obs")
-    emb = Catalog(spark, SF_DIR).embeddings
-    with cache_scope():
-        seed_novel, _ = SIM.incremental_embedding_dedup(
-            emb.filter(F.col("vec_id") < 60), spark, idx, threshold=0.995, run_id="r0"
-        )
-        seed_ids = [r["vec_id"] for r in seed_novel.select("vec_id").limit(2).collect()]
-
-    copies = (
-        emb.filter(F.col("vec_id").isin(seed_ids))
-        .withColumn("vec_id", F.col("vec_id") + 5000)
-    )
-    obs = Observation("ivf_probe")
-    out = SIM.probe_ivf_index(copies, spark, idx, threshold=0.995, observation=obs)
-    assert out.count() >= len(seed_ids)
-    got = obs.get
-    assert got["matches"] >= len(seed_ids)
-    assert got["matched_new_vecs"] >= 1
-    assert "probe_ivf_cells" in str(out._jdf.queryExecution().analyzed())
-
-
-def test_ivf_index_offset_ids_seed_centroids(spark, tmp_path):
-    """ADVICE r5 #2: a first batch whose vec_ids are offset/sparse (post
-    dedup, hashed, partition-offset) must still freeze a usable centroid
-    table — the old id-value filter (vec_id < K) found no rows and froze
-    an empty index that could never match anything, permanently."""
-    import glob
-
-    from conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-
-    idx = str(tmp_path / "ivf_offset")
-    emb = Catalog(spark, SF_DIR).embeddings
-    offset = emb.filter(F.col("vec_id") < 60).withColumn(
-        "vec_id", F.col("vec_id") + 5_000_000
-    )
-    SIM.write_ivf_index(offset, idx, run_id="r0")
-    cents = spark.read.parquet(f"{idx}/centroids")
-    k = SIM.adaptive_centroids(60)
-    assert cents.count() == k  # rank-based seed ignores id values
-    assert glob.glob(f"{idx}/assignments/ingest_batch=r0/cid=*/*.parquet")
-
-    # a copy of an indexed vector must be found by the probe
-    probe_batch = (
-        emb.filter(F.col("vec_id") < 3).withColumn("vec_id", F.col("vec_id") + 9_000_000)
-    )
-    hits = SIM.probe_ivf_index(probe_batch, spark, idx, threshold=0.999)
-    got = {(r["vec_id"], r["index_vec_id"]) for r in hits.collect()}
-    for i in range(3):
-        assert (9_000_000 + i, 5_000_000 + i) in got
-
-
-def test_ivf_index_refuses_empty_first_batch(spark, tmp_path):
-    """Creation must fail loudly rather than freeze a matchless index."""
-    import pytest
-
-    from conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-
-    emb = Catalog(spark, SF_DIR).embeddings.filter(F.col("vec_id") < 0)
-    with pytest.raises(ValueError, match="empty centroid"):
-        SIM.write_ivf_index(emb, str(tmp_path / "ivf_empty"), run_id="r0")
-
-
 def test_ngram_containment_asymmetric(spark):
     """Containment catches a short doc pasted inside a long one — the
     pair symmetric Jaccard misses — and only in the contained->container
@@ -609,81 +382,6 @@ def test_ngram_containment_df_cap_drops_boilerplate(spark):
     # the boilerplate grams (df=10 > 5) are dropped; the unique tails
     # share nothing, so no pair reaches 0.5
     assert got == []
-
-
-def test_incremental_embedding_dedup_replay_idempotent(spark, tmp_path):
-    """ADVICE r5 #1, embedding axis: a replayed batch (same run_id) must
-    not probe its own crashed attempt's committed vectors — without the
-    ingest_batch exclusion every survivor self-matches at cosine 1.0
-    and the batch is erased on replay."""
-    from conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-
-    idx = str(tmp_path / "ivf_replay")
-    batch = Catalog(spark, SF_DIR).embeddings.filter(F.col("vec_id") < 40)
-    novel1, _ = SIM.incremental_embedding_dedup(
-        batch, spark, idx, threshold=0.995, run_id="epoch-0", mode="overwrite"
-    )
-    ids1 = sorted(r["vec_id"] for r in novel1.collect())
-    assert ids1
-
-    sunk: list[list[int]] = []
-    novel2, matches2 = SIM.incremental_embedding_dedup(
-        batch,
-        spark,
-        idx,
-        threshold=0.995,
-        run_id="epoch-0",
-        mode="overwrite",
-        novel_sink=lambda df: sunk.append(sorted(r["vec_id"] for r in df.collect())),
-    )
-    assert matches2.count() == 0  # own subtree pruned
-    assert sorted(r["vec_id"] for r in novel2.collect()) == ids1
-    assert sunk == [ids1]
-    stored = sorted(
-        r["vec_id"]
-        for r in spark.read.parquet(f"{idx}/assignments")
-        .select("vec_id")
-        .distinct()
-        .collect()
-    )
-    assert stored == ids1
-
-
-def test_compact_ivf_assignments(spark, tmp_path):
-    """IVF compaction collapses the per-epoch vector subtrees into one
-    cid-partitioned tree; probes are unchanged."""
-    import glob
-
-    from conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    from jonesy_spark.catalog import Catalog
-    from jonesy_spark.operators import similarity as SIM
-
-    idx = str(tmp_path / "ivf")
-    emb = Catalog(spark, SF_DIR).embeddings
-    SIM.write_ivf_index(emb.filter(F.col("vec_id") < 40), idx, run_id="e0")
-    SIM.write_ivf_index(
-        emb.filter((F.col("vec_id") >= 40) & (F.col("vec_id") < 80)), idx, run_id="e1"
-    )
-    probe = emb.filter(F.col("vec_id") < 3).withColumn(
-        "vec_id", F.col("vec_id") + 1000
-    )
-    before = sorted(
-        map(tuple, SIM.probe_ivf_index(probe, spark, idx, threshold=0.999).collect())
-    )
-    rid = SIM.compact_ivf_assignments(spark, idx)
-    assert rid.startswith("compact-2-")
-    trees = glob.glob(f"{idx}/assignments/ingest_batch=*")
-    assert len(trees) == 1 and trees[0].endswith(rid)
-    after = sorted(
-        map(tuple, SIM.probe_ivf_index(probe, spark, idx, threshold=0.999).collect())
-    )
-    assert after == before and before  # copies still found post-compaction
 
 
 def test_quantize_int8_roundtrip_bounded(spark):
@@ -820,57 +518,6 @@ def test_ann_recall_identity_and_miss(spark):
     zero = SIM.ann_recall(exact, empty)
     assert all(r["recall_micro"] == 0 for r in zero.collect())
     exact.unpersist()
-
-
-def test_ivf_index_int8_tier(spark, tmp_path):
-    """quantize=True stores the int8 tier; the format is sticky across
-    appends, probes still find copies, and the subtree is materially
-    smaller than its float twin."""
-    import glob as _glob
-    import os as _os
-
-    from jonesy_spark.operators import similarity as SIM
-
-    emb = Catalog(spark, SF_DIR).embeddings
-    idx = str(tmp_path / "ivf8")
-    SIM.write_ivf_index(emb.filter(F.col("vec_id") < 300), idx, run_id="e0", quantize=True)
-    stored = spark.read.parquet(f"{idx}/assignments")
-    assert "qv" in stored.columns and "v" not in stored.columns
-
-    # appends follow the index's format even when the call disagrees
-    SIM.write_ivf_index(
-        emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)),
-        idx,
-        run_id="e1",
-        quantize=False,
-    )
-    assert "qv" in spark.read.parquet(f"{idx}/assignments/ingest_batch=e1").columns
-
-    # copies probe through the quantized store (distortion << threshold)
-    probe = emb.filter(F.col("vec_id") < 3).withColumn("vec_id", F.col("vec_id") + 1000)
-    got = {
-        (r["vec_id"], r["index_vec_id"])
-        for r in SIM.probe_ivf_index(probe, spark, idx, threshold=0.99).collect()
-    }
-    assert {(1000, 0), (1001, 1), (1002, 2)} <= got
-
-    # the int8 subtree is materially smaller than a float twin of the
-    # same batch (64-dim doubles: 512 B/row raw vs 64 B + scale)
-    idxf = str(tmp_path / "ivff")
-    SIM.write_ivf_index(emb.filter(F.col("vec_id") < 300), idxf, run_id="e0")
-
-    def _bytes(root):
-        return sum(
-            _os.path.getsize(p)
-            for p in _glob.glob(f"{root}/**/*.parquet", recursive=True)
-        )
-
-    # raw vector bytes shrink 8x (512 B -> 68 B per 64-dim row) but at
-    # 300 rows the per-file parquet overhead (~1 footer per cid cell)
-    # dominates both trees, so assert the direction, not the asymptote
-    assert _bytes(f"{idx}/assignments/ingest_batch=e0") < 0.65 * _bytes(
-        f"{idxf}/assignments/ingest_batch=e0"
-    )
 
 
 def test_embedding_health_flags_defects(spark):

@@ -827,7 +827,7 @@ def test_maintain_indexes_job_compacts_and_preserves_probes(spark, tmp_path, mon
     assert sorted(
         map(tuple, H.probe_minhash_index(sigs, spark, midx).collect())
     ) == matches_before
-    # absent families (search/classifier/IVF) were skipped, not fatal
+    # absent families (search/classifier) were skipped, not fatal
     assert not any("search_index" in w for w in ctx.written)
 
 

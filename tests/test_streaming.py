@@ -313,63 +313,6 @@ def test_incremental_near_dup_stream_two_waves(spark, tmp_path):
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3, 11]
 
 
-def test_incremental_embedding_stream_two_waves(spark, tmp_path):
-    """Streaming bridge to the persisted IVF index: wave 1 freezes the
-    centroids and seeds cells; a restarted query over wave 2 (same
-    checkpoint) must drop cross-wave copies via the cell probe and
-    append only genuinely novel vectors."""
-    import numpy as np
-    import pandas as pd
-
-    from jonesy_spark.streaming.incremental import (
-        dir_stream,
-        run_incremental_embedding_stream,
-    )
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(24, 8)).round(3)
-
-    land = tmp_path / "land"
-    land.mkdir()
-    idx, novel, ckpt = (
-        str(tmp_path / "ivf_index"),
-        str(tmp_path / "novel"),
-        str(tmp_path / "ckpt"),
-    )
-    schema = "vec_id bigint, embedding array<double>, label string"
-
-    def wave(name, rows):
-        pd.DataFrame(
-            {
-                "vec_id": [i for i, _ in rows],
-                "embedding": [list(map(float, v)) for _, v in rows],
-                "label": ["x" for _ in rows],
-            }
-        ).to_parquet(land / f"{name}.parquet")
-        run_incremental_embedding_stream(
-            dir_stream(spark, str(land), schema), idx, novel, ckpt,
-            threshold=0.999,
-        )
-
-    wave("w1", [(i, base[i]) for i in range(20)])
-    stored1 = set(
-        r["vec_id"]
-        for r in spark.read.parquet(f"{idx}/assignments").select("vec_id").collect()
-    )
-    assert stored1 == set(range(20))
-
-    # wave 2: three exact copies of wave-1 vectors + four fresh ones
-    wave("w2", [(100 + i, base[i]) for i in range(3)]
-         + [(200 + i, base[20 + i]) for i in range(4)])
-    stored2 = set(
-        r["vec_id"]
-        for r in spark.read.parquet(f"{idx}/assignments").select("vec_id").collect()
-    )
-    assert stored2 == set(range(20)) | {200, 201, 202, 203}
-    kept = set(r["vec_id"] for r in spark.read.parquet(novel).collect())
-    assert kept == stored2  # copies never reached either sink
-
-
 def test_session_window_stream_matches_batch(spark):
     """Streaming session_window aggregation must reproduce the batch
     session_window result once the stream drains — same gap, same

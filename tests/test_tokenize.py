@@ -2,8 +2,7 @@
 
 The merge table is pinned against an INDEPENDENT naive reference
 implementation (recount-every-round, written here, no code shared with
-the operator), the distributed trainer is pinned merge-for-merge against
-the driver trainer, and the encoder is pinned against sequentially
+the operator), and the encoder is pinned against sequentially
 replaying the training merges — the standard equivalence the greedy
 rank-ordered encoder claims."""
 
@@ -99,29 +98,6 @@ def test_bpe_train_matches_naive_reference(spark):
     want = _naive_bpe(TINY, 10)
     assert got == want
     assert len(got) > 3  # the corpus supports several merges
-
-
-def test_bpe_train_distributed_equals_driver(spark):
-    docs = _tiny_docs(spark)
-    drv = T.bpe_train(docs, n_merges=8).orderBy("rank").collect()
-    dist = (
-        T.bpe_train_distributed(docs, n_merges=8, checkpoint_every=3)
-        .orderBy("rank")
-        .collect()
-    )
-    assert [tuple(r) for r in drv] == [tuple(r) for r in dist]
-
-
-def test_bpe_train_distributed_equals_driver_on_fixture(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(60)
-    drv = T.bpe_train(docs, n_merges=12).orderBy("rank").collect()
-    dist = (
-        T.bpe_train_distributed(docs, n_merges=12, checkpoint_every=5)
-        .orderBy("rank")
-        .collect()
-    )
-    assert [tuple(r) for r in drv] == [tuple(r) for r in dist]
-    assert len(drv) == 12
 
 
 def test_bpe_encode_roundtrip_and_zero_merges(spark):
@@ -243,7 +219,6 @@ def test_bpe_train_min_pair_count_stops(spark):
         [(0, "abc"), (1, "def"), (2, "ghi")], "doc_id long, text string"
     )
     assert T.bpe_train(docs, n_merges=5).count() == 0
-    assert T.bpe_train_distributed(docs, n_merges=5).count() == 0
 
 
 @pytest.mark.slow
@@ -397,27 +372,6 @@ def test_bpe_incremental_trainer_matches_naive_property(words, n):
     exactly the recount-from-scratch reference on ANY corpus."""
     got = T._train_bpe_py([(list(w), c) for w, c in words], n, 2)
     assert got == _naive_bpe(words, n, 2)
-
-
-def test_bpe_train_distributed_batches_merge_rounds(spark):
-    """VERDICT r6 #4: the distributed trainer must emit MORE THAN ONE
-    merge per pair-count round (the exact-prefix batching rule) while
-    staying merge-for-merge equal to the sequential trainer — and a
-    batch budget of 1 must degenerate to the old one-merge-per-round
-    behavior, also exactly."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(60)
-    drv = [tuple(r) for r in T.bpe_train(docs, n_merges=12).orderBy("rank").collect()]
-
-    batched = T.bpe_train_distributed(docs, n_merges=12, checkpoint_every=5)
-    assert [tuple(r) for r in batched.orderBy("rank").collect()] == drv
-    rounds = batched._jonesy_train_rounds
-    assert rounds < 12, f"batching emitted 1 merge/round ({rounds} rounds)"
-
-    single = T.bpe_train_distributed(
-        docs, n_merges=12, checkpoint_every=5, batch_candidates=1
-    )
-    assert [tuple(r) for r in single.orderBy("rank").collect()] == drv
-    assert single._jonesy_train_rounds == 12
 
 
 # --- unigram-LM tokenizer (Kudo 2018 / SentencePiece-style) -----------
@@ -574,43 +528,6 @@ def test_unigram_encode_ids_roundtrip_and_oov(spark):
     assert got["token_ids"] == [-1, -1]
 
 
-def test_unigram_train_distributed_equals_driver(spark):
-    """The unbounded-word-table trainer reproduces the in-driver
-    trainer: identical piece set, log-probs within float-summation-
-    order tolerance (the loop is shared verbatim; only E-step addition
-    order differs), and identical per-doc token counts end to end."""
-    docs = _tiny_docs(spark)
-    drv = T.unigram_train(docs, vocab_size=24, max_piece_len=6,
-                          seed_size=64)
-    dist = T.unigram_train_distributed(docs, vocab_size=24,
-                                       max_piece_len=6, seed_size=64)
-    d = {r["piece"]: r["logprob_micro"] for r in drv.collect()}
-    g = {r["piece"]: r["logprob_micro"] for r in dist.collect()}
-    assert set(d) == set(g)
-    assert all(abs(d[p] - g[p]) <= 2 for p in d), {
-        p: (d[p], g[p]) for p in d if abs(d[p] - g[p]) > 2
-    }
-    a = T.unigram_token_stats(docs, drv).select(
-        "doc_id", F.col("n_unigram_tokens").alias("na")
-    )
-    b = T.unigram_token_stats(docs, dist).select(
-        "doc_id", F.col("n_unigram_tokens").alias("nb")
-    )
-    assert a.join(b, "doc_id").filter(F.col("na") != F.col("nb")).count() == 0
-
-
-def test_unigram_train_distributed_equals_driver_on_fixture(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(60)
-    drv = T.unigram_train(docs, vocab_size=96, max_piece_len=6,
-                          seed_size=256)
-    dist = T.unigram_train_distributed(docs, vocab_size=96,
-                                       max_piece_len=6, seed_size=256)
-    d = {r["piece"]: r["logprob_micro"] for r in drv.collect()}
-    g = {r["piece"]: r["logprob_micro"] for r in dist.collect()}
-    assert set(d) == set(g)
-    assert all(abs(d[p] - g[p]) <= 2 for p in d)
-
-
 def test_unigram_encoder_honors_trained_piece_length(spark):
     """The encoder's span bound comes from the TABLE, not a constant:
     a vocabulary trained with max_piece_len=12 produces 9+-char pieces
@@ -640,23 +557,6 @@ def test_unigram_train_rejects_small_vocab_and_empty_corpus(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     with pytest.raises(ValueError, match="non-empty corpus"):
         T.unigram_train(empty, vocab_size=16)
-
-
-def test_seed_unigram_distributed_ignores_empty_words(spark):
-    # a zero-length word must not plant '' pieces via the descending
-    # sequence(1, 0) enumeration (r9 ADVICE); the seed over a table
-    # containing an empty word equals the driver seed over the
-    # non-empty rows exactly
-    words = [("abab", 3), ("ba", 2)]
-    wc = spark.createDataFrame(
-        words + [("", 7)], "word string, count long"
-    )
-    got = T._seed_unigram_distributed(wc, max_piece_len=3, seed_size=4)
-    want = T._seed_unigram_py(words, max_piece_len=3, seed_size=4)
-    assert "" not in got
-    assert set(got) == set(want)
-    for p in want:
-        assert abs(got[p] - want[p]) < 1e-9
 
 
 def test_tokenizer_stats_fixture_matches_fresh_training(spark):
