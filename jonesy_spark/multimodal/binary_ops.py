@@ -346,8 +346,9 @@ def write_phash_index(
     run_id: str | None = None,
 ) -> str:
     """Append a batch's perceptual hashes to the on-disk MEDIA
-    near-dup index — the sixth incremental-index family member
-    (digest, minhash, IVF, classifier counts, PQ, phash), same ledger
+    near-dup index — an incremental-index family member (digest,
+    minhash, BM25 postings, classifier counts, phash, rollup, KMV,
+    KLL), same ledger
     contract: ``ingest_batch=<run_id>/bucket=<band_key>/`` rows of
     ``(doc_id, phash, band_id)`` — 8 rows of 3 longs per payload, the
     index never stores media bytes. ``bucket`` IS the band key

@@ -476,8 +476,7 @@ def rollup_batch(
     pre-epoch timestamps floor instead of rounding toward zero) is
     PART OF THE LEDGER CONTRACT: partials bucketed under a different
     rule do not merge with these — changing it means rebuilding any
-    ledger that holds affected rows, the same immutability rule as
-    the IVF centroids and PQ codebooks."""
+    ledger that holds affected rows."""
     es = F.unix_timestamp(F.col(ts_col).cast("timestamp"))
     # pmod, not %: Spark's % takes the dividend's sign, so a pre-epoch
     # timestamp (es < 0) would round TOWARD zero and merge into the
@@ -503,14 +502,14 @@ def write_rollup_index(
     run_id: str | None = None,
 ) -> str:
     """Land one batch's rollup partials under the
-    ``ingest_batch=<run_id>`` ledger — the SEVENTH incremental-index
-    family member: the events table is read once per batch, forever;
+    ``ingest_batch=<run_id>`` ledger — an incremental-index family
+    member: the events table is read once per batch, forever;
     every later windowed question folds the metadata-sized ledger
     instead (``rollup_report``). Partials are coalesced to one file
     (metadata-sized by construction); compaction uses the flat path
     (``compact_index(part_col=None)``) and reads resolve through
     ``read_index_resolved`` because the fold SUMS — a compaction-crash
-    survivor batch would double counts (the BM25/classifier/PQ hazard
+    survivor batch would double counts (the BM25/classifier hazard
     class)."""
     return _write_ledger(partials, index_path, mode, run_id)
 
@@ -535,7 +534,7 @@ def rollup_report(spark, index_path: str) -> DataFrame:
 
 # --------------------------------------------------------------------
 # KMV distinct-count sketch — the ORACLE-ABLE twin of the HLL profile
-# tier, and the EIGHTH incremental-index family member. COUNT DISTINCT
+# tier, and an incremental-index family member. COUNT DISTINCT
 # is the one aggregate the rollup ledger cannot fold (two batches'
 # exact distinct counts don't add); the HLL tier answers it but its
 # register state is library-internal, so no SQL oracle can reproduce
@@ -635,13 +634,14 @@ def write_kmv_index(
     run_id: str | None = None,
 ) -> str:
     """Land one batch's KMV partials under the ``ingest_batch=<run>``
-    ledger — family member #8 (digest, minhash, IVF, classifier
-    counts, PQ, phash, rollup, KMV). Rows are (keys, h) longs, ≤ k per
-    group — coalesced to one file. Compaction uses the flat path
-    (``compact_index(part_col=None)``); the fold is a distinct-union
-    min-k, so — uniquely in the family — duplicate rows from a
-    compaction crash are SAFE (distinct absorbs them), but reads still
-    resolve through ``read_index_resolved`` for uniformity."""
+    ledger — an incremental-index family member (digest, minhash,
+    BM25 postings, classifier counts, phash, rollup, KMV, KLL). Rows
+    are (keys, h) longs, ≤ k per group — coalesced to one file.
+    Compaction uses the flat path (``compact_index(part_col=None)``);
+    the fold is a distinct-union min-k, so — uniquely in the family —
+    duplicate rows from a compaction crash are SAFE (distinct absorbs
+    them), but reads still resolve through ``read_index_resolved``
+    for uniformity."""
     return _write_ledger(partials, index_path, mode, run_id)
 
 
@@ -872,7 +872,7 @@ def write_kll_index(
     run_id: str | None = None,
 ) -> str:
     """Land one batch's KLL partials under the ``ingest_batch=<run>``
-    ledger — family member #10. Rows are (keys, v, w) longs, <= k per
+    ledger — an index family member. Rows are (keys, v, w) longs, <= k per
     group. Duplicate rows from a compaction crash are NOT safe here
     (weights sum, the rollup/CMS hazard), so reads resolve through
     ``read_index_resolved`` and replays overwrite their own epoch."""

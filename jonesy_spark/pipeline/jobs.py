@@ -10,14 +10,16 @@ MultiTargetSink`. Jobs:
     term-independent extracts — advisor permissions + latest-per-group
     relationships.
   * ``upload_snapshot``   (``jobs.py:50-63``): full snapshot — basic
-    attributes once, then per current term the courses + enrollments
-    extracts (dynamic term fan-out D3, ``jobs.py:41-48,55-63``).
+    attributes once, then one enrollments extract per current term
+    (dynamic term fan-out D3, ``jobs.py:41-48,55-63``).
   * ``upload_recent_refresh`` (``jobs.py:39-49``): incremental — two
     watermark-filtered update extracts, no term loop.
 
-The per-term fan-out runs each term's extract as its own write, one
-after another in a serial loop, as the reference ran them on one cursor
-(``jobs.py:103``).
+The reference runs each term's extract as its own query, one after
+another on one cursor (``jobs.py:103``). Here the term fan-out is one
+scan and one partitioned write (``sinks.write_gzip_csv_by``, SURVEY.md
+§1.4's ``partitionBy("term_id")``); each term's part file becomes its
+own object, so the extracts keep the reference's keys and contents.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 from ..caching import cache_scope
 from ..catalog import Catalog
 from ..plans import all_queries
-from .sinks import MultiTargetSink, daily_prefix, write_gzip_csv
+from .sinks import MultiTargetSink, daily_prefix, write_gzip_csv, write_gzip_csv_by
 
 
 def layered_config(
@@ -72,7 +74,10 @@ def emit(ctx, df, key: str, order_by=None) -> None:
     every target under the run date's daily prefix, ``key`` recorded
     in ``ctx.written``. The one emit path of both job trios: ``ctx`` is
     a :class:`JobContext` or a ``sis_jobs.SisJobContext``."""
-    path = write_gzip_csv(df, ctx.out_root, key, order_by=order_by)
+    _publish(ctx, write_gzip_csv(df, ctx.out_root, key, order_by=order_by), key)
+
+
+def _publish(ctx, path: str, key: str) -> None:
     MultiTargetSink(ctx.targets).upload(path, f"{daily_prefix(ctx.run_date)}/{key}")
     ctx.written.append(key)
 
@@ -94,8 +99,9 @@ def upload_advisors(ctx: JobContext) -> None:
 
 
 def upload_snapshot(ctx: JobContext) -> None:
-    """Full snapshot: attributes once + per-term course/enrollment
-    extracts (``jonesy/jobs.py:50-63``)."""
+    """Full snapshot: attributes once + per-term enrollment extracts
+    (``jonesy/jobs.py:50-63``). All current terms come from one scan
+    of the lineitem-orders join, written in one partitioned pass."""
     q = all_queries()
     emit(
         ctx,
@@ -103,28 +109,28 @@ def upload_snapshot(ctx: JobContext) -> None:
         "sis-data/basic-attributes.csv.gz",
         order_by=[F.col("custkey")],
     )
-    for term in _current_term_ids(ctx):
-        cat = Catalog(ctx.spark, ctx.sf_dir)
-        enroll = (
-            cat.lineitem.join(
-                cat.orders, F.col("l_orderkey") == F.col("o_orderkey")
-            )
-            .filter(F.date_format("o_orderdate", "yyyy-MM") == term)
-            .select(
-                F.col("l_orderkey").alias("section_id"),
-                F.col("o_custkey").alias("ldap_uid"),
-                F.col("l_quantity").alias("units_taken"),
-                F.col("l_returnflag").alias("enroll_status"),
-                F.col("l_shipdate").alias("last_updated"),
-            )
-            .distinct()
+    terms = _current_term_ids(ctx)
+    cat = Catalog(ctx.spark, ctx.sf_dir)
+    term = F.date_format("o_orderdate", "yyyy-MM")
+    enroll = (
+        cat.lineitem.join(cat.orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .filter(term.isin(terms))
+        .select(
+            F.col("l_orderkey").alias("section_id"),
+            F.col("o_custkey").alias("ldap_uid"),
+            F.col("l_quantity").alias("units_taken"),
+            F.col("l_returnflag").alias("enroll_status"),
+            F.col("l_shipdate").alias("last_updated"),
+            term.alias("term"),
         )
-        emit(
-            ctx,
-            enroll,
-            f"sis-data/enrollments-{term}.csv.gz",
-            order_by=[F.col("section_id"), F.col("ldap_uid")],
-        )
+        .distinct()
+    )
+    keys = {t: f"sis-data/enrollments-{t}.csv.gz" for t in terms}
+    paths = write_gzip_csv_by(
+        enroll, ctx.out_root, "term", keys, order_by=["section_id", "ldap_uid"]
+    )
+    for t in terms:
+        _publish(ctx, paths[t], keys[t])
 
 
 def upload_recent_refresh(ctx: JobContext) -> None:

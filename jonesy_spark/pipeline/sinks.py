@@ -14,9 +14,12 @@ Contract being reproduced (reference ``jonesy/jobs.py``):
     (``jobs.py:116-132``) — write once, copy driver-side, errors contained
 
 Scale notes: every extract is ONE gzip object, the reference's
-one-object-per-extract contract (global order + coalesce(1)) — a
-deliberate serial tail for byte-compat extracts. Lake-scale outputs
-go through ``write_partitioned_parquet`` instead.
+one-object-per-extract contract — a deliberate serial tail for
+byte-compat extracts. An ordered extract is sorted inside its single
+partition (``repartition(1).sortWithinPartitions``), an unordered one
+is ``coalesce(1)``; a per-term fan-out is one partitioned pass
+(``write_gzip_csv_by``) whose part files become the per-term objects.
+Lake-scale outputs go through ``write_partitioned_parquet`` instead.
 """
 
 from __future__ import annotations
@@ -25,10 +28,13 @@ import glob
 import hashlib
 import os
 import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import date
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -107,34 +113,104 @@ def daily_prefix(day: date) -> str:
     return f"daily/{hashlib.md5(iso.encode()).hexdigest()}-{iso}"
 
 
-def write_gzip_csv(
-    df: DataFrame,
-    out_dir: str,
-    name: str,
-    order_by: list[Column] | None = None,
-) -> str:
-    """Write a headerless gzip CSV extract as one object, the
-    reference's one-object contract (with file-wide ordering, O1/O4
-    semantics); returns the object path.
-    """
-    staged = f"{out_dir}/__stage__{name}"
-    to_write = serialize_for_csv(df)
-    if order_by is not None:
-        to_write = to_write.orderBy(*order_by)
+#: the 20-byte empty gzip member Spark's CSV writer lands for an empty
+#: extract: Hadoop's header (mtime 0, no flags, OS byte 0), an empty
+#: deflate block, a zero CRC and a zero length
+_EMPTY_GZIP = bytes.fromhex("1f8b0800000000000000" "0300" "00000000" "00000000")
+
+
+@contextmanager
+def _staging(out_dir: str) -> Iterator[str]:
+    """A fresh directory under ``out_dir`` for Spark's write; it is
+    removed afterwards with everything the write left in it."""
+    os.makedirs(out_dir, exist_ok=True)
+    root = tempfile.mkdtemp(prefix="__stage__", dir=out_dir)
+    try:
+        yield f"{root}/csv"
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _write_csv(writer: DataFrameWriter, staged: str) -> None:
     (
-        to_write.coalesce(1)
-        .write.mode("overwrite")
+        writer.mode("overwrite")
         .option("header", "false")
         .option("compression", "gzip")
         .option("emptyValue", "")
         .csv(staged)
     )
-    part = glob.glob(f"{staged}/part-*.csv.gz")[0]
+
+
+def _land(part_dir: str, out_dir: str, name: str) -> str:
+    """Move the one part file under ``part_dir`` to ``out_dir/name``;
+    with no part file (no rows) land an empty gzip object instead."""
     final = os.path.join(out_dir, name)
     os.makedirs(os.path.dirname(final), exist_ok=True)
-    shutil.move(part, final)
-    shutil.rmtree(staged, ignore_errors=True)
+    parts = glob.glob(f"{part_dir}/part-*.csv.gz")
+    if parts:
+        shutil.move(parts[0], final)
+    else:
+        with open(final, "wb") as fh:
+            fh.write(_EMPTY_GZIP)
     return final
+
+
+def write_gzip_csv(
+    df: DataFrame,
+    out_dir: str,
+    name: str,
+    order_by: list[Column | str] | None = None,
+) -> str:
+    """Write a headerless gzip CSV extract as one object, the
+    reference's one-object contract (with file-wide ordering, O1/O4
+    semantics); returns the object path.
+
+    An ordered extract is sorted inside its single partition
+    (``repartition(1).sortWithinPartitions``): a global ``orderBy``
+    would pay a range-sampling job and a range exchange only to send
+    every row to one task. An unordered one is ``coalesce(1)``.
+    """
+    to_write = serialize_for_csv(df)
+    if order_by is None:
+        to_write = to_write.coalesce(1)
+    else:
+        to_write = to_write.repartition(1).sortWithinPartitions(*order_by)
+    with _staging(out_dir) as staged:
+        _write_csv(to_write.write, staged)
+        return _land(staged, out_dir, name)
+
+
+def write_gzip_csv_by(
+    df: DataFrame,
+    out_dir: str,
+    by: str,
+    names: dict[str, str],
+    order_by: list[Column | str],
+) -> dict[str, str]:
+    """Write one headerless gzip CSV extract per value of column ``by``
+    in one partitioned pass (SURVEY.md §1.4's ``partitionBy("term_id")``
+    mapping), ``by`` itself left out of the rows; returns value ->
+    object path.
+
+    ``names`` maps each wanted value to its object name. Each value's
+    rows go to one task (``repartition(by)``), sorted there by
+    ``order_by``, so its directory holds one part file, moved to its
+    name. A value with no rows (it writes no directory) lands an empty
+    gzip object, so every name in ``names`` gets one. Values must be
+    strings that Spark writes unescaped into a directory name (such as
+    ``2001-06``).
+    """
+    to_write = (
+        serialize_for_csv(df)
+        .repartition(by)
+        .sortWithinPartitions(by, *order_by)
+    )
+    with _staging(out_dir) as staged:
+        _write_csv(to_write.write.partitionBy(by), staged)
+        return {
+            value: _land(f"{staged}/{by}={value}", out_dir, name)
+            for value, name in names.items()
+        }
 
 
 def write_partitioned_parquet(

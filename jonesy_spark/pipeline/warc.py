@@ -268,7 +268,7 @@ def write_fixture_archives(
             "archive tree instead of scaling the seed path"
         )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         recs = [
             (
                 f"https://fixture.invalid/doc/{int(d)}",

@@ -1692,7 +1692,7 @@ def _kmv_ledger_dir(spark: SparkSession, sf_dir: str) -> str:
 )
 def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per (event_type, day), answered from the KMV
-    sketch LEDGER (operators.stats.kmv_*) — family member #8, the
+    sketch LEDGER (operators.stats.kmv_*) — an index family member, the
     oracle-able twin of the HLL profile tier. The events table lands
     as TWO sketch-partial batches (even/odd event_id) under a
     session-memoized ledger; the driver row folds the ledger,

@@ -1672,8 +1672,6 @@ def warc_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipeline.warc.warc_text_records) and recover every document's
     bytes exactly. Two Arrow hops (pack, walk) — the crawl-corpus
     front door's codec boundary, closed-form checkable as identity."""
-    from collections.abc import Iterator
-
     import pandas as pd
 
     from ..pipeline import warc as W

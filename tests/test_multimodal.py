@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 from jonesy_spark.caching import cache_scope

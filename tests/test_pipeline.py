@@ -121,6 +121,43 @@ def test_multi_target_isolation(tmp_path):
     assert bad in sink.errors  # error captured, not raised
 
 
+#: Spark jobs each SIS cron job may run at sf0.001, counted by job
+#: group: 30 for the trio. A global sort per ordered extract and a
+#: re-planned scan per term ran 7 + 30 + 9 = 46.
+JOB_BUDGET = {"upload_advisors": 7, "upload_snapshot": 14, "upload_recent_refresh": 9}
+assert sum(JOB_BUDGET.values()) <= 30
+
+
+def _run_counted(spark, job, ctx):
+    """Run ``job``; return how many Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"test_pipeline:{ctx.out_root}"
+    sc.setJobGroup(group, group)
+    try:
+        run_job(job, ctx)
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _tree(root):
+    """Every file and directory under ``root``, relative to it."""
+    return {
+        os.path.relpath(os.path.join(d, x), root)
+        for d, dirs, files in os.walk(root)
+        for x in dirs + files
+    }
+
+
+def _keys_and_parents(keys):
+    out = set()
+    for k in keys:
+        while k:
+            out.add(k)
+            k = os.path.dirname(k)
+    return out
+
+
 @pytest.mark.parametrize("job", ["upload_advisors", "upload_recent_refresh"])
 def test_jobs_end_to_end(spark, tmp_path, job):
     targets = [str(tmp_path / "bucket-a"), str(tmp_path / "bucket-b")]
@@ -131,8 +168,10 @@ def test_jobs_end_to_end(spark, tmp_path, job):
         targets=targets,
         run_date=date(2026, 8, 13),
     )
-    run_job(job, ctx)
+    assert _run_counted(spark, job, ctx) <= JOB_BUDGET[job]
     assert ctx.written
+    # the staging directories are gone: only the extracts remain
+    assert _tree(ctx.out_root) == _keys_and_parents(ctx.written)
     prefix = daily_prefix(date(2026, 8, 13))
     for key in ctx.written:
         for t in targets:
@@ -141,17 +180,37 @@ def test_jobs_end_to_end(spark, tmp_path, job):
             assert _read_gzip_csv(obj)  # non-empty, parseable
 
 
-def test_snapshot_job_fans_out_terms(spark, tmp_path):
+def test_snapshot_job_fans_out_terms(spark, tmp_path, monkeypatch):
+    """One enrollment extract per current term, in every target. A
+    term with no enrollments (here a month with no orders) writes no
+    partition, yet still lands one empty gzip object."""
+    from jonesy_spark.pipeline import jobs
+
+    top3 = jobs._current_term_ids
+    monkeypatch.setattr(jobs, "_current_term_ids", lambda ctx: top3(ctx) + ["1900-01"])
+    targets = [str(tmp_path / "bucket-a"), str(tmp_path / "bucket-b")]
     ctx = JobContext(
         spark=spark,
         sf_dir=SF_DIR,
         out_root=str(tmp_path / "out"),
-        targets=[str(tmp_path / "bucket")],
+        targets=targets,
         run_date=date(2026, 8, 13),
     )
-    run_job("upload_snapshot", ctx)
+    assert _run_counted(spark, "upload_snapshot", ctx) <= JOB_BUDGET["upload_snapshot"]
+    assert _tree(ctx.out_root) == _keys_and_parents(ctx.written)
     term_files = [k for k in ctx.written if "enrollments-" in k]
-    assert len(term_files) == 3  # top-3 current terms (O3 contract)
+    *current, empty = term_files
+    assert len(current) == 3  # top-3 current terms (O3 contract)
+    assert empty == "sis-data/enrollments-1900-01.csv.gz"
+    prefix = daily_prefix(date(2026, 8, 13))
+    for key in current:
+        keys = [(int(r[0]), int(r[1])) for r in _read_gzip_csv(os.path.join(ctx.out_root, key))]
+        assert keys and keys == sorted(keys)  # ordered by (section_id, ldap_uid)
+    for t in targets:
+        for key in term_files:
+            assert os.path.isfile(os.path.join(t, prefix, key)), key
+        with open(os.path.join(t, prefix, empty), "rb") as fh:
+            assert gzip.decompress(fh.read()) == b""
 
 
 def test_csv_extract_round_trip(spark, tmp_path):
